@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Durable, versioned edge store — the Spark re-expression of the
   * reference's LSM shard machinery (reference GraphChiDatabase.scala:622-795
@@ -179,179 +182,85 @@ class DurableStore(val spark: SparkSession, val root: String,
     * launch + codegen floor a job at ~100 ms even when manifest pruning
     * routes to one file. This path never leaves the driver: the manifest
     * routes by [srcMin, srcMax] (the reference's interval→shard
-    * selection), then parquet-mr reads the hit files with a src = key
+    * selection), then [[servedScan]] reads the hit files with a src = key
     * predicate — row groups whose footer stats exclude the key are
     * skipped (the same min/max a Spark scan would use), dictionary and
-    * record filtering drop the rest. Returns rows in the store schema's
-    * column order.
+    * page filtering drop the rest. Rows carry the Spark external types of
+    * the manifest schema, in manifest column order: the values and
+    * classes `read(v).collect()` returns for the same rows (Byte for
+    * TINYINT, BigDecimal for DECIMAL, Date, Timestamp, …).
     *
     * A SERVING shortcut, not a query operator: results are pinned equal
-    * to readForSrc(v, key).filter(src = key) by DurableStoreSpec, and
-    * the routing work is manifest-sized. Single-key lookups only — scans
-    * and joins stay on the distributed read paths.
+    * to readForSrc(v, key).filter(src = key) by ServedReadSpec and
+    * PropertySpec, and the routing work is manifest-sized. Single-key
+    * lookups only — scans and joins stay on the distributed read paths.
     *
     * FAILURE MODE (ADVICE r12): unlike the Option-returning served hops
     * ([[servedOutNeighbors]] etc., which REFUSE with None), this returns
-    * bare rows and therefore THROWS (IllegalArgumentException from the
-    * [[DurableStore.ServeTombRowBudget]] gate) on a store carrying more
-    * live tombstone rows than the driver index budget — serving clients
-    * must catch it or keep the store compacted (see
-    * [[compactIfPressured]]). Same contract on [[pointReadLocalDst]]
-    * and [[updateEdgeDelta]]. */
+    * bare rows and therefore THROWS (IllegalArgumentException from
+    * [[route]]) on a store carrying more live tombstone rows than
+    * [[DurableStore.ServeTombRowBudget]] — serving clients must catch it
+    * or keep the store compacted (see [[compactIfPressured]]). Same
+    * contract on [[pointReadLocalDst]] and [[updateEdgeDelta]]. */
   def pointReadLocal(v: Int, srcKey: Long): Seq[Seq[Any]] =
-    pointReadLocalM(manifest(v), srcKey)
-
-  private def pointReadLocalM(m: Manifest, srcKey: Long): Seq[Seq[Any]] =
-    localPointRead(m.files.filter(f => srcKey >= f.srcMin && srcKey <= f.srcMax),
-      "src", Array(srcKey), cachedTombIndexM(m))
+    pointRowsM(manifest(v), srcKey, out = true)
 
   /** The dst-keyed twin of [[pointReadLocal]], served by the in-edge
     * mirror's dst-tight file stats plus covering deltas — the same
-    * sub-100 ms class for single-DESTINATION lookups. Requires the
-    * in-edge index (callers fall back to the distributed
-    * [[readForDst]] on unindexed stores, where a driver-side read
-    * would degenerate to a local full scan). */
+    * sub-100 ms class and the same typed rows for single-DESTINATION
+    * lookups. Requires the in-edge index (throws on unindexed stores —
+    * callers fall back to the distributed [[readForDst]], where a
+    * driver-side read would degenerate to a local full scan). */
   def pointReadLocalDst(v: Int, dstKey: Long): Seq[Seq[Any]] =
-    pointReadLocalDstM(manifest(v), dstKey)
+    pointRowsM(manifest(v), dstKey, out = false)
 
-  private def pointReadLocalDstM(m: Manifest, dstKey: Long): Seq[Seq[Any]] = {
-    require(m.mbounds.nonEmpty,
-      "pointReadLocalDst needs the in-edge mirror (buildInEdgeIndex)")
-    localPointRead((m.mirror ++ m.files.filterNot(_.sorted))
-      .filter(f => dstKey >= f.dstMin && dstKey <= f.dstMax), "dst",
-      Array(dstKey), cachedTombIndexM(m))
-  }
-
-  /** Driver-side parquet-mr read of `hit` files with `column ∈ keys`
-    * pushed as a row-group/page filter against the CACHED footer
-    * ([[DurableStore.cachedFooter]] — min/max + dictionary skip, then
-    * column-index page pruning), the record-level membership applied on
-    * the assembled row (covering pages may hold non-matching rows;
-    * binary search on the sorted key array). Rows come back in the file
-    * schema's column order. Delta entries are DIRECTORIES of part files,
-    * expanded via [[DurableStore.partPaths]]. Rows deleted by a
-    * tombstone newer than the row's file are excluded record-level —
-    * the served form of the [[readStore]] anti-join. `keys` MUST be
-    * sorted. Unlike [[localReadLongsMulti]] this decodes FULL rows
-    * (boxed Group materializer) — the value-join serving read, not the
-    * id-hop hot path. */
-  private def localPointRead(hit: Seq[StoreFile], column: String,
-                             keys: Array[Long], tombs: Seq[TombEntry]): Seq[Seq[Any]] = {
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    if (hit.isEmpty || keys.isEmpty) return Nil
-    val keySet = new java.util.HashSet[java.lang.Long](keys.length * 2)
-    keys.foreach(k => keySet.add(java.lang.Long.valueOf(k)))
-    val pred = FilterCompat.get(
-      if (keys.length == 1)
-        FilterApi.eq(FilterApi.longColumn(column), java.lang.Long.valueOf(keys(0)))
-      else FilterApi.in(FilterApi.longColumn(column), keySet))
-    val out = Seq.newBuilder[Seq[Any]]
-    hit.foreach { f =>
-      val excl = tombChecker(tombs, f.seq)
-      partPaths(f.path).foreach { fPath =>
-      val path = new org.apache.hadoop.fs.Path(fPath)
-      val footer = cachedFooter(serveConf, path)
-      val schema = footer.getFileMetaData.getSchema
-      val options = org.apache.parquet.HadoopReadOptions
-        .builder(serveConf, path).withRecordFilter(pred).build()
-      val reader = new org.apache.parquet.hadoop.ParquetFileReader(
-        serveConf, path, footer, options)
-      try {
-        val cio = new org.apache.parquet.io.ColumnIOFactory()
-          .getColumnIO(schema)
-        val mat = new org.apache.parquet.example.data.simple.convert
-          .GroupRecordConverter(schema)
-        val keyIdx = schema.getFieldIndex(column)
-        // tombstones name (src, dst) endpoints — only edge-shaped files
-        // carry them; vertex side-table reads pass tombs = Nil and their
-        // schema need not have the endpoint columns at all
-        val srcIdx = if (excl == null) -1 else schema.getFieldIndex("src")
-        val dstIdx = if (excl == null) -1 else schema.getFieldIndex("dst")
-        var pages = reader.readNextFilteredRowGroup()
-        while (pages != null) {
-          val rr = cio.getRecordReader(pages, mat)
-          val n = pages.getRowCount
-          var i = 0L
-          while (i < n) {
-            val g = rr.read()
-            if (g != null && g.getFieldRepetitionCount(keyIdx) > 0 &&
-                java.util.Arrays.binarySearch(keys, g.getLong(keyIdx, 0)) >= 0 &&
-                (excl == null ||
-                  !excl(g.getLong(srcIdx, 0), g.getLong(dstIdx, 0)))) {
-              val t = g.getType
-              out += (0 until t.getFieldCount).map { j =>
-                if (g.getFieldRepetitionCount(j) == 0) null
-                else t.getType(j).asPrimitiveType().getPrimitiveTypeName match {
-                  case INT64   => g.getLong(j, 0)
-                  case INT32   => g.getInteger(j, 0)
-                  case DOUBLE  => g.getDouble(j, 0)
-                  case FLOAT   => g.getFloat(j, 0)
-                  case BOOLEAN => g.getBoolean(j, 0)
-                  case _       => g.getValueToString(j, 0)
-                }
-              }
-            }
-            i += 1
-          }
-          pages = reader.readNextFilteredRowGroup()
-        }
-      } finally reader.close()
-      }
+  /** The point reads: one key, no file or delta-row budget, a refusal
+    * thrown rather than returned. */
+  private def pointRowsM(m: Manifest, key: Long, out: Boolean): Seq[Seq[Any]] = {
+    val keys = Array(key)
+    route(m, keys, out, !out) match {
+      case Left(reason) => throw new IllegalArgumentException(reason)
+      case Right(r) => scanRows(r.tasks, keys, r.tombs, m.schemaDDL)
     }
-    out.result()
   }
 
-  /** Driver-resident tombstone index of version `m` — loaded once per
-    * (root, version) into [[DurableStore.tombIndexCache]] (manifests are
-    * immutable). Tombstone files are point-delete sized; callers that
-    * must stay in the millisecond class gate on
-    * [[DurableStore.ServeTombRowBudget]] BEFORE loading. */
-  private def cachedTombIndexM(m: Manifest): Seq[TombEntry] = {
-    if (m.tombs.isEmpty) return Nil
-    // loud, not slow (review r12): the driver point paths return rows,
-    // not Option, so they cannot fall back — past the budget the store
-    // has earned a compact() (which reclaims the tombstones) or the
-    // distributed read, and silently loading millions of tombstone rows
-    // here would break the sub-100 ms serving contract instead
-    require(m.tombs.map(_.rows).sum <= ServeTombRowBudget,
-      s"$root v${m.version}: ${m.tombs.map(_.rows).sum} live tombstone rows " +
-        s"exceed the driver serving budget ($ServeTombRowBudget) — " +
-        "compact() to reclaim them, or read through the distributed paths")
+  /** Driver-resident tombstone index of version `m` — edge tombstones, or
+    * with `vertex` the vertex-ROW tombstones of [[Manifest.vtombs]] —
+    * loaded once per (root, version, kind) into
+    * [[DurableStore.tombIndexCache]] (manifests are immutable) through
+    * the long sink of [[servedScan]]. Tombstone files are point-delete
+    * sized; [[route]] gates [[DurableStore.ServeTombRowBudget]] BEFORE
+    * loading. */
+  private def tombIndex(m: Manifest, vertex: Boolean): Seq[TombEntry] = {
+    val tombs = if (vertex) m.vtombs else m.tombs
+    if (tombs.isEmpty) return Nil
     // the manifest file's mtime is a store-INSTANCE nonce (ADVICE r12): a
     // root deleted and recreated reuses version numbers, and a bare
     // (root, version) key would then serve the DEAD store's tombstone
     // index — silently changing delete visibility. One stat call per
     // serving call is microseconds; the index load it guards is not.
-    val key = s"$root@${m.version}@" +
+    // The `vt@` prefix keeps the two kinds from aliasing.
+    val key = s"${if (vertex) "vt@" else ""}$root@${m.version}@" +
       Files.getLastModifiedTime(manifestPath(root, m.version)).toMillis
     val hit = tombIndexCache.get(key)
     if (hit != null) return hit
-    val entries = loadTombEntries(m.tombs)
-    tombIndexCache.put(key, entries)
-    entries
-  }
-
-  /** Vertex-ROW tombstone index (the serving twin of
-    * [[cachedTombIndexM]] for [[Manifest.vtombs]]) — same cache, keyed
-    * with a `vt@` prefix so the two kinds never alias. Callers gate on
-    * the tombstone-row budget BEFORE loading (Option paths refuse). */
-  private def cachedVTombIndexM(m: Manifest): Seq[TombEntry] = {
-    if (m.vtombs.isEmpty) return Nil
-    // same loud gate as the edge index: the throwing point paths
-    // (setVertexProp's first-touch read) must not silently absorb a
-    // multi-million-row index load — past the budget the store has
-    // earned a compact()
-    require(m.vtombs.map(_.rows).sum <= ServeTombRowBudget,
-      s"$root v${m.version}: ${m.vtombs.map(_.rows).sum} live vertex-row " +
-        s"tombstones exceed the driver serving budget ($ServeTombRowBudget) — " +
-        "compact() to reclaim them, or read through readVertices")
-    val key = s"vt@$root@${m.version}@" +
-      Files.getLastModifiedTime(manifestPath(root, m.version)).toMillis
-    val hit = tombIndexCache.get(key)
-    if (hit != null) return hit
-    val entries = loadTombEntries(m.vtombs)
+    val entries = tombs.map { t =>
+      // the tombstone file read whole: no key filter, no exclusion
+      val f = StoreFile(-1, t.path, t.srcMin, t.srcMax, t.dstMin, t.dstMax,
+        sorted = false, t.rows, t.seq)
+      if (t.vertex)
+        TombEntry(t.seq, vertex = true,
+          scanLongs(Seq(ScanTask(f, "v", "v")), null, Nil)._2.sorted, null)
+      else {
+        val (srcs, dsts) = scanLongs(Seq(ScanTask(f, "src", "dst")), null, Nil,
+          pairs = true)
+        val by = new java.util.HashMap[java.lang.Long, Array[Long]]()
+        srcs.indices.groupBy(srcs(_)).foreach { case (s, is) =>
+          by.put(s, is.map(dsts(_)).toArray.sorted)
+        }
+        TombEntry(t.seq, vertex = false, null, by)
+      }
+    }
     tombIndexCache.put(key, entries)
     entries
   }
@@ -366,176 +275,211 @@ class DurableStore(val spark: SparkSession, val root: String,
       else acc
     }
 
-  private def loadTombEntries(tombFiles: Seq[TombFile]): Seq[TombEntry] = {
-    val entries = tombFiles.map { t =>
-      val pairs = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      partPaths(t.path).foreach { fPath =>
-        val path = new org.apache.hadoop.fs.Path(fPath)
-        val footer = cachedFooter(serveConf, path)
-        val schema = footer.getFileMetaData.getSchema
-        val options = org.apache.parquet.HadoopReadOptions
-          .builder(serveConf, path).build()
-        val reader = new org.apache.parquet.hadoop.ParquetFileReader(
-          serveConf, path, footer, options)
-        try {
-          val cio = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
-          val mat = new org.apache.parquet.example.data.simple.convert
-            .GroupRecordConverter(schema)
-          val si = if (t.vertex) schema.getFieldIndex("v") else schema.getFieldIndex("src")
-          val di = if (t.vertex) si else schema.getFieldIndex("dst")
-          var pages = reader.readNextRowGroup()
-          while (pages != null) {
-            val rr = cio.getRecordReader(pages, mat)
-            val n = pages.getRowCount
-            var i = 0L
-            while (i < n) {
-              val g = rr.read()
-              pairs += ((g.getLong(si, 0), g.getLong(di, 0)))
-              i += 1
-            }
-            pages = reader.readNextRowGroup()
-          }
-        } finally reader.close()
-      }
-      if (t.vertex)
-        TombEntry(t.seq, vertex = true, pairs.map(_._1).toArray.sorted, null)
-      else {
-        val by = new java.util.HashMap[java.lang.Long, Array[Long]]()
-        pairs.groupBy(_._1).foreach { case (s, ps) =>
-          by.put(s, ps.map(_._2).toArray.sorted)
-        }
-        TombEntry(t.seq, vertex = false, null, by)
-      }
+  /** THE routing-and-budget core of every served read. The sorted `keys`
+    * route to the primary files whose [srcMin, srcMax] covers one of them
+    * (`out`, read src → dst) and/or to the in-edge mirror plus the
+    * unsorted deltas whose [dstMin, dstMax] does (`in`, read dst → src);
+    * with `vertex`, to the vertex side-table files covering them on `id`
+    * instead. Refused — Left, with the reason — when that side has no
+    * manifest schema, an `in` read has no mirror, that side's live
+    * tombstone rows pass [[DurableStore.ServeTombRowBudget]], or the
+    * routed SORTED files pass `fileBudget` (each costs an open plus its
+    * key-covering pages) or the routed DELTA rows pass `deltaRowBudget`
+    * (unsorted, a delta decodes in full; one in both directions counts
+    * twice). Otherwise the scan tasks and that side's driver tombstone
+    * index. Option paths turn a refusal into None, the point reads throw
+    * it; the budgets default to none (FoF hop 1 and the point reads). */
+  private def route(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean,
+                    fileBudget: Int = Int.MaxValue,
+                    deltaRowBudget: Long = Long.MaxValue,
+                    vertex: Boolean = false): Either[String, Routed] = {
+    val at = s"$root v${m.version}"
+    val tombRows = (if (vertex) m.vtombs else m.tombs).map(_.rows).sum
+    if ((if (vertex) m.vschemaDDL else m.schemaDDL).isEmpty)
+      Left(s"$at: no ${if (vertex) "vertex side-table" else "manifest schema"}")
+    else if (in && !vertex && m.mbounds.isEmpty)
+      Left(s"$at: the in-edge read needs the mirror (buildInEdgeIndex)")
+    else if (tombRows > ServeTombRowBudget)
+      // loud on the throwing paths, not slow (review r12): past the
+      // budget the store has earned a compact() (which reclaims the
+      // tombstones) or the distributed read — silently loading millions
+      // of tombstone rows here would break the sub-100 ms contract
+      Left(s"$at: $tombRows live ${if (vertex) "vertex-row " else ""}tombstone " +
+        s"rows exceed the driver serving budget ($ServeTombRowBudget) — " +
+        "compact() to reclaim them, or read through the distributed paths")
+    else {
+      val tasks =
+        if (vertex)
+          m.vfiles.filter(coversAny(keys, _.srcMin, _.srcMax)).map(ScanTask(_, "id", "id"))
+        else
+          (if (out) m.files.filter(coversAny(keys, _.srcMin, _.srcMax))
+             .map(ScanTask(_, "src", "dst")) else Nil) ++
+          (if (in) (m.mirror ++ m.files.filterNot(_.sorted))
+             .filter(coversAny(keys, _.dstMin, _.dstMax))
+             .map(ScanTask(_, "dst", "src")) else Nil)
+      val files = tasks.map(_.file)
+      if (files.count(_.sorted) > fileBudget ||
+          files.filterNot(_.sorted).map(_.rows).sum > deltaRowBudget)
+        Left(s"$at: the routed read passes the serving budgets " +
+          s"($fileBudget sorted files, $deltaRowBudget delta rows)")
+      else Right(Routed(tasks, tombIndex(m, vertex)))
     }
-    entries
   }
 
-  /** Driver-side MULTI-KEY long-column read for the serving path: rows
-    * with `filterCol ∈ keys` from `hit` files, returning the `outCol`
-    * value of each matching row (repeats kept — 2-hop path multiplicity
-    * is count semantics). Three things keep this in the millisecond
-    * class where [[localPointRead]]'s shape would not:
-    *
-    *  - the key set is pushed as ONE parquet `in` predicate per file —
-    *    row groups, then PAGES (column-index min/max: the files are
-    *    sorted on `filterCol`, so page stats are tight), then records
-    *    are pruned inside parquet-mr, never in this loop;
-    *  - a 2-column PROJECTION + primitive materializer
-    *    ([[DurableStore.LongColumnReadSupport]], projection built from
-    *    each file's OWN schema so repetitions match any writer) — only
-    *    the filter and output columns decode, no Group/box allocation
-    *    per record, the store schema's other columns never materialize;
-    *  - files read CONCURRENTLY on a bounded daemon pool — wall time is
-    *    the slowest file, not the sum of opens.
-    *
-    * Unsorted delta files are served by the same predicate but cannot
-    * page-prune (no sort order) — callers budget them by rows
-    * ([[servedFof]]'s fallback guard). */
-  private def localReadLongs(hit: Seq[StoreFile], filterCol: String,
-                             keys: Array[Long], outCol: String): Array[Long] =
-    localReadLongsMulti(hit.map((_, filterCol, outCol)), keys, Nil)
-
-  /** The general form of [[localReadLongs]]: each task is one (file,
-    * filterCol, outCol) read against the SAME key set — the served
-    * FoF's out direction (primary files, src→dst) and in direction
-    * (mirror + deltas, dst→src) flatten into ONE pool round, so the
-    * wall time of a hop is the slowest single file across BOTH
-    * directions, not out-wall + in-wall. */
-  private[graft] def localReadLongsMulti(tasks: Seq[(StoreFile, String, String)],
-                                  keys: Array[Long],
-                                  tombs: Seq[TombEntry] = Nil,
-                                  pairs: Boolean = false): Array[Long] = {
+  /** THE driver-side read behind every served path — no Spark job. Each
+    * routed task's file (a delta DIRECTORY expands to its part files via
+    * [[DurableStore.partPaths]], so each part is its own concurrent task
+    * and the footer cache keys on real files) is read with its
+    * `filterCol ∈ keys` pushed as ONE parquet `in` predicate against the
+    * CACHED footer ([[DurableStore.cachedFooter]]): row groups by min/max
+    * and dictionary, then column-index page ranges — the files are
+    * sorted on the filter column, so page stats are tight. Files run
+    * concurrently on the bounded [[DurableStore.serveEc]] pool, so the
+    * wall time is the slowest single file. `keys` MUST be sorted (the
+    * sinks test record membership by binary search); `null` reads every
+    * row. Each file's sink gets the (src, dst) tombstone checker of
+    * [[DurableStore.tombChecker]] for its seq — null, the common case,
+    * costs nothing — and applies it record-level: the served form of the
+    * [[readStore]] anti-join. Unsorted delta files are served by the same
+    * predicate but cannot page-prune — [[route]] budgets them by rows.
+    * Results come back per part file, in task order. */
+  private def servedScan[R](tasks: Seq[ScanTask], keys: Array[Long],
+                            tombs: Seq[TombEntry], conf: Configuration = serveConf)(
+      sink: (ScanFile, ScanTask, (Long, Long) => Boolean) => R): Seq[(ScanTask, R)] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
     import scala.concurrent.duration._
-    if (tasks.isEmpty || keys.isEmpty) return Array.emptyLongArray
-    val sortedKeys = keys.sorted
-    val keySet = new java.util.HashSet[java.lang.Long](keys.length * 2)
-    keys.foreach(k => keySet.add(java.lang.Long.valueOf(k)))
-    // a delta StoreFile's path is a DIRECTORY (one flushed micro-batch,
-    // possibly several part files); expand to part files BEFORE the pool
-    // round so each file is its own concurrent task, and so the footer
-    // cache keys on real files (one readdir per delta task per call —
-    // delta dirs are small and the listing is a metadata op).
-    // Each task carries its file's tombstone exclusion checker,
-    // DIRECTION-ADJUSTED so the materializer probes (src, dst) whichever
-    // column is the filter side; null (the common case) costs nothing.
-    val fileTasks: Seq[(String, String, String, (Long, Long) => Boolean)] =
-      tasks.flatMap { case (f, fc, oc) =>
-        val chk = tombChecker(tombs, f.seq)
-        val excl: (Long, Long) => Boolean =
-          if (chk == null) null
-          else if (fc == "src") chk
-          else (fv, ov) => chk(ov, fv)
-        partPaths(f.path).map((_, fc, oc, excl))
+    val filters: Map[String, FilterCompat.Filter] =
+      if (keys == null) Map.empty.withDefaultValue(FilterCompat.NOOP)
+      else {
+        val keySet = new java.util.HashSet[java.lang.Long](keys.length * 2)
+        keys.foreach(k => keySet.add(java.lang.Long.valueOf(k)))
+        tasks.map(_.filterCol).distinct.map(c =>
+          c -> FilterCompat.get(FilterApi.in(FilterApi.longColumn(c), keySet))).toMap
       }
-    def readOne(t: (String, String, String, (Long, Long) => Boolean)): Array[Long] = {
-      val (fPath, filterCol, outCol, excl) = t
-      val path = new org.apache.hadoop.fs.Path(fPath)
-      // footer from the shared cache (files are immutable — see
-      // [[DurableStore.cachedFooter]]): the reader below starts at the
-      // first page read instead of re-reading + thrift-parsing the
-      // footer per call. The `in` predicate still prunes row groups
-      // (stats + dictionary, applied against the cached footer in the
-      // reader constructor) and column-index page ranges; RECORD-level
-      // filtering is done by the materializer itself (binary search on
-      // the sorted key array — no per-record boxing, no
-      // filtering-wrapper assembly), so no assembly-level filter is
-      // passed to the record reader — the same useRecordFilter(false)
-      // discipline the previous ParquetReader-based path had.
-      val footer = cachedFooter(serveConf, path)
-      val fileSchema = footer.getFileMetaData.getSchema
-      // projection from the file's OWN schema: create() writes columns
-      // `required`, delta appends from nullable frames write `optional` —
-      // a fixed projection string fails parquet's containment check on
-      // one or the other
-      val requested = new org.apache.parquet.schema.MessageType("graft_serve",
-        Seq(filterCol, outCol)
-          .map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*)
-      val options = org.apache.parquet.HadoopReadOptions.builder(serveConf, path)
-        .withRecordFilter(FilterCompat.get(
-          FilterApi.in(FilterApi.longColumn(filterCol), keySet)))
-        .build()
-      val reader = new org.apache.parquet.hadoop.ParquetFileReader(
-        serveConf, path, footer, options)
-      val mat = new LongsMaterializer(requested, outCol, sortedKeys, excl, pairs)
-      try {
-        reader.setRequestedSchema(requested)
-        val cio = new org.apache.parquet.io.ColumnIOFactory()
-          .getColumnIO(requested, fileSchema)
-        var pages = reader.readNextFilteredRowGroup()
-        while (pages != null) {
-          val rr = cio.getRecordReader(pages, mat)
-          val n = pages.getRowCount
-          var i = 0L
-          while (i < n) { rr.read(); i += 1 }
-          pages = reader.readNextFilteredRowGroup()
-        }
-      } finally reader.close()
-      mat.result()
+    val parts = tasks.flatMap { t =>
+      val excl = tombChecker(tombs, t.file.seq)
+      partPaths(t.file.path).map(p => (p, t, excl))
     }
-    if (fileTasks.isEmpty) Array.emptyLongArray
-    else if (fileTasks.size == 1) readOne(fileTasks.head)
+    def one(p: (String, ScanTask, (Long, Long) => Boolean)): (ScanTask, R) =
+      (p._2, sink(new ScanFile(conf, p._1, filters(p._2.filterCol)), p._2, p._3))
+    if (parts.size <= 1) parts.map(one)
     else {
       implicit val ec: scala.concurrent.ExecutionContext = serveEc
-      // concat keeps the values UNBOXED end to end (a Seq flatten would
-      // box every long on the serving path)
-      Array.concat(scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(fileTasks)(t =>
-          scala.concurrent.Future(readOne(t))), 120.seconds): _*)
+      scala.concurrent.Await.result(scala.concurrent.Future.traverse(parts)(p =>
+        scala.concurrent.Future(one(p))), 120.seconds)
     }
   }
 
+  /** The UNBOXED long sink of [[servedScan]] — the id-hop hot path (hop,
+    * FoF, SSSP, shortest path, degrees) and tombstone loading: a
+    * projection of each task's (filterCol, outCol), decoded by
+    * [[DurableStore.LongsMaterializer]] with no per-record allocation.
+    * Returns the `outCol` value of every matching record (repeats kept —
+    * 2-hop path multiplicity is count semantics) and, with `pairs`, the
+    * parallel `filterCol` values (empty otherwise), concatenated across
+    * files with no boxing. */
+  private def scanLongs(tasks: Seq[ScanTask], keys: Array[Long],
+                        tombs: Seq[TombEntry],
+                        pairs: Boolean = false): (Array[Long], Array[Long]) = {
+    val parts = servedScan(tasks, keys, tombs)(longSink(keys, pairs)).map(_._2)
+    (Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*))
+  }
+
+  private def longSink(keys: Array[Long], pairs: Boolean)(
+      f: ScanFile, t: ScanTask, excl: (Long, Long) => Boolean): (Array[Long], Array[Long]) = {
+    // projection from the file's OWN schema: create() writes columns
+    // `required`, delta appends from nullable frames write `optional` — a
+    // fixed projection string fails parquet's containment check on one or
+    // the other
+    val requested = new org.apache.parquet.schema.MessageType("graft_serve",
+      Seq(t.filterCol, t.outCol).distinct
+        .map(c => f.schema.getType(f.schema.getFieldIndex(c))): _*)
+    // the materializer sees (filter, out): flip the checker's (src, dst)
+    // for dst-filtered reads
+    val ex: (Long, Long) => Boolean =
+      if (excl == null || t.filterCol == "src") excl else (fv, ov) => excl(ov, fv)
+    val mat = new LongsMaterializer(requested, t.filterCol, t.outCol, keys, ex, pairs)
+    f.foreach(requested, mat)(_ => ())
+    mat.result()
+  }
+
+  /** The TYPED row sink of [[servedScan]] — the value-join reads (point
+    * reads, served rows, vertex rows). Decodes through Spark's own
+    * parquet→Catalyst conversion, the record materializer of Spark's
+    * parquet-mr read path (`ParquetReadSupport`), requested at the manifest
+    * schema `ddl` — columns resolve BY NAME, a column a file lacks reads
+    * as null — then converts with `CatalystTypeConverters`. Rows carry
+    * the values, classes and column order `read(v).collect()` returns for
+    * the same rows. Membership and tombstones are tested on the Catalyst
+    * row before conversion. */
+  private def scanRows(tasks: Seq[ScanTask], keys: Array[Long],
+                       tombs: Seq[TombEntry], ddl: String): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    val (schema, conf) = rowRead(ddl)
+    // built on the calling thread, so the session's java8 datetime
+    // setting picks the same external classes a collect would
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val srcIdx = schema.fieldNames.indexOf("src")
+    val dstIdx = schema.fieldNames.indexOf("dst")
+    servedScan(tasks, keys, tombs, conf) { (f, t, excl) =>
+      val kv = f.footer.getFileMetaData.getKeyValueMetaData
+      // the rebase specs Spark derives per file from its writer metadata
+      val rs = new ParquetReadSupport(None, false,
+        DataSourceUtils.datetimeRebaseSpec(kv.get(_),
+          conf.get(SQLConf.PARQUET_REBASE_MODE_IN_READ.key)),
+        DataSourceUtils.int96RebaseSpec(kv.get(_),
+          conf.get(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+      val ctx = rs.init(new org.apache.parquet.hadoop.api.InitContext(conf,
+        kv.asScala.map { case (k, v) => k -> java.util.Collections.singleton(v) }.asJava,
+        f.schema))
+      val keyIdx = schema.fieldIndex(t.filterCol)
+      val rows = Seq.newBuilder[Seq[Any]]
+      f.foreach(ctx.getRequestedSchema, rs.prepareForRead(conf, kv, f.schema, ctx)) { r =>
+        if (!r.isNullAt(keyIdx) &&
+            java.util.Arrays.binarySearch(keys, r.getLong(keyIdx)) >= 0 &&
+            (excl == null || !excl(r.getLong(srcIdx), r.getLong(dstIdx))))
+          rows += toScala(r).asInstanceOf[org.apache.spark.sql.Row].toSeq
+      }
+      rows.result()
+    }.flatMap(_._2)
+  }
+
+  /** Per manifest schema DDL: the parsed schema and the Hadoop conf
+    * Spark's parquet reader sets up for a read of it (ParquetFileFormat's
+    * reader setup, from this session's SQL conf) — built once per store
+    * handle; parsing DDL per serving call is measurable. */
+  private def rowRead(ddl: String): (StructType, Configuration) =
+    rowReads.computeIfAbsent(ddl, _ => {
+      val schema = StructType.fromDDL(ddl)
+      val sql = spark.sessionState.conf
+      val c = new Configuration(serveConf)
+      c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+        .SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+      c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+      Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+          SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+          SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED,
+          SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+          SQLConf.PARQUET_REBASE_MODE_IN_READ, SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ)
+        .foreach(e => c.set(e.key, sql.getConfString(e.key)))
+      (schema, c)
+    })
+  private val rowReads =
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, Configuration)]()
+
   /** Hadoop conf built once per store handle — building one per serving
-    * call costs more than the read it configures. Copied (never mutated)
-    * by each [[localReadLongs]] call. */
+    * call costs more than the read it configures. Read (never mutated)
+    * by every [[servedScan]]. */
   private lazy val serveConf = spark.sessionState.newHadoopConf()
 
   /** Normalize a mutation batch to the manifest schema: manifest column
-    * ORDER (the driver-local served reads decode positionally per file —
-    * a same-typed reordered batch would silently swap columns) and
-    * manifest TYPES (a same-named narrower column would fork the parquet
-    * schema across delta files and crash the positional decode). Only
+    * ORDER (every file of a version carries one layout) and manifest
+    * TYPES (a same-named narrower column would fork the parquet schema
+    * across delta files — the multi-file Spark read and the served
+    * reads both expect one physical type per column). Only
     * LOSSLESS casts are applied — a batch whose column cannot up-cast
     * (long where the store says int, string where it says long) fails
     * loudly here instead of committing silently wrapped/nulled values
@@ -640,7 +584,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * Spark job, the reference's mmap-lookup latency class). Hop 2
     * follows the same discipline for low-fanout vertices (VERDICT r10
     * next #1): the mids push as one `in` predicate into the routed
-    * primary + mirror file sets ([[localReadLongs]] — page-pruned by
+    * primary + mirror file sets ([[servedScan]] — page-pruned by
     * sort order, 2-column projection, concurrent per-file reads) and
     * the count/top-k runs in a driver hash map — the WHOLE query then
     * runs ZERO Spark jobs, end to end in the reference's native
@@ -734,46 +678,36 @@ class DurableStore(val spark: SparkSession, val root: String,
     servedHopM(manifest(v), keys, out = true, in = true,
       localFileBudget, localDeltaRowBudget)
 
-  /** Shared core of the served hop family: route `keys` into the primary
-    * (src side) and/or mirror + deltas (dst side), budget-gate, read with
-    * one pushed `in` predicate per file. The wall time of a hop is the
+  /** Shared core of the served hop family: [[route]] `keys` into the
+    * primary (src side) and/or mirror + deltas (dst side), read with one
+    * pushed `in` predicate per file. The wall time of a hop is the
     * slowest single file across both directions. */
   private def servedHopM(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean,
                          localFileBudget: Int, localDeltaRowBudget: Long)
       : Option[Array[Long]] = {
     if (keys.isEmpty) return Some(Array.emptyLongArray)
-    if (m.schemaDDL.isEmpty) return None
-    if (m.tombs.map(_.rows).sum > ServeTombRowBudget) return None
     val sorted = keys.sorted
-    val outHit =
-      if (out) m.files.filter(coversAny(sorted, _.srcMin, _.srcMax)) else Nil
-    val inHit =
-      if (!in) Nil
-      else if (m.mbounds.isEmpty) return None
-      else (m.mirror ++ m.files.filterNot(_.sorted))
-        .filter(coversAny(sorted, _.dstMin, _.dstMax))
-    val all = outHit ++ inHit
-    if (all.count(_.sorted) > localFileBudget ||
-        all.filterNot(_.sorted).map(_.rows).sum > localDeltaRowBudget) None
-    else Some(localReadLongsMulti(
-      outHit.map((_, "src", "dst")) ++ inHit.map((_, "dst", "src")),
-      sorted, cachedTombIndexM(m)))
+    route(m, sorted, out, in, localFileBudget, localDeltaRowBudget).toOption
+      .map(r => scanLongs(r.tasks, sorted, r.tombs)._2)
   }
 
   /** N4 SERVED (VERDICT r12 missing #3): the multi-key hop WITH edge
-    * values — FULL rows (store-schema column order) of every edge with
-    * src ∈ `keys`, decoded on the driver from the manifest-routed
-    * primary files, ZERO Spark jobs. The reference's
-    * `QueryResult.join(column)` (QueryResult.scala:44-69) resolves
-    * neighbor results against edge value columns; here the values live
-    * in the edge row, so the served value join IS the full-row read —
-    * a client gets (dst, weight, …) without falling back to the one-job
-    * `readForSrcs ⋈ select` form. Repeats kept. Budget discipline of
-    * [[servedOutNeighbors]] (None past the budgets — never wrong, only
-    * refused); tombstones excluded record-level. Row-equal to
+    * values — FULL rows of every edge with src ∈ `keys`, decoded on the
+    * driver from the manifest-routed primary files, ZERO Spark jobs. The
+    * reference's `QueryResult.join(column)` (QueryResult.scala:44-69)
+    * resolves neighbor results against edge value columns; here the
+    * values live in the edge row, so the served value join IS the
+    * full-row read — a client gets (dst, weight, …) without falling back
+    * to the one-job `readForSrcs ⋈ select` form. Rows carry the Spark
+    * external types of the manifest schema, in manifest column order —
+    * the values and classes `read(v).collect()` returns for the same
+    * rows. Repeats kept. Budget discipline of [[servedOutNeighbors]]
+    * (None past the budgets — never wrong, only refused); tombstones
+    * excluded record-level. Row-equal to
     * `readForSrcs(v, keys).filter(src isin keys)` — oracle-pinned by
-    * `n4s_join_served`. Decodes boxed full rows, so it serves VALUE
-    * joins; pure id hops stay on the unboxed [[servedOutNeighbors]]. */
+    * `n4s_join_served`, whole-row and class-equal by PropertySpec.
+    * Decodes boxed full rows, so it serves VALUE joins; pure id hops stay
+    * on the unboxed [[servedOutNeighbors]]. */
   def servedOutRows(v: Int, keys: Array[Long],
                     localFileBudget: Int = ServeLocalFileBudget,
                     localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
@@ -782,8 +716,9 @@ class DurableStore(val spark: SparkSession, val root: String,
       localDeltaRowBudget)
 
   /** The in-direction twin of [[servedOutRows]]: full rows with
-    * dst ∈ `keys`, served by the mirror + covering deltas. `None` on
-    * unindexed stores or past the budgets. */
+    * dst ∈ `keys`, served by the mirror + covering deltas, with the same
+    * typed values in manifest column order. `None` on unindexed stores
+    * or past the budgets. */
   def servedInRows(v: Int, keys: Array[Long],
                    localFileBudget: Int = ServeLocalFileBudget,
                    localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
@@ -795,18 +730,9 @@ class DurableStore(val spark: SparkSession, val root: String,
                           localFileBudget: Int, localDeltaRowBudget: Long)
       : Option[Seq[Seq[Any]]] = {
     if (keys.isEmpty) return Some(Nil)
-    if (m.schemaDDL.isEmpty) return None
-    if (m.tombs.map(_.rows).sum > ServeTombRowBudget) return None
     val sorted = keys.distinct.sorted
-    val hit =
-      if (out) m.files.filter(coversAny(sorted, _.srcMin, _.srcMax))
-      else if (m.mbounds.isEmpty) return None
-      else (m.mirror ++ m.files.filterNot(_.sorted))
-        .filter(coversAny(sorted, _.dstMin, _.dstMax))
-    if (hit.count(_.sorted) > localFileBudget ||
-        hit.filterNot(_.sorted).map(_.rows).sum > localDeltaRowBudget) None
-    else Some(localPointRead(hit, if (out) "src" else "dst", sorted,
-      cachedTombIndexM(m)))
+    route(m, sorted, out, !out, localFileBudget, localDeltaRowBudget).toOption
+      .map(r => scanRows(r.tasks, sorted, r.tombs, m.schemaDDL))
   }
 
   /** N6 SERVED: (out-degree, in-degree) per requested id, ZERO Spark
@@ -826,49 +752,25 @@ class DurableStore(val spark: SparkSession, val root: String,
                     localFileBudget: Int = ServeLocalFileBudget,
                     localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
       : Option[Seq[(Long, Long, Long)]] = {
-    val m = manifest(v)
     if (keys.isEmpty) return Some(Nil)
-    if (m.schemaDDL.isEmpty) return None
-    if (m.tombs.map(_.rows).sum > ServeTombRowBudget) return None
-    if (m.mbounds.isEmpty) return None
     val sorted = keys.distinct.sorted
-    val outHit = m.files.filter(coversAny(sorted, _.srcMin, _.srcMax))
-    val inHit = (m.mirror ++ m.files.filterNot(_.sorted))
-      .filter(coversAny(sorted, _.dstMin, _.dstMax))
-    val all = outHit ++ inHit
-    if (all.count(_.sorted) > localFileBudget ||
-        all.filterNot(_.sorted).map(_.rows).sum > localDeltaRowBudget)
-      return None
-    val tombs = cachedTombIndexM(m)
-    // PAIR form per direction: each matching record contributes its
-    // FILTER-column value, so counting those values per key is the
-    // degree (the projection needs two DISTINCT columns — filter + out —
-    // which the pair reader already carries). The out round runs on a
-    // sidecar thread so BOTH directions submit to the shared serving
-    // pool together — wall time is the slowest file across both, not
-    // out-wall + in-wall (the one-round discipline of servedHopM,
-    // review r13).
-    val outF = new java.util.concurrent.FutureTask(
-      new java.util.concurrent.Callable[(Array[Long], Array[Long])] {
-        def call(): (Array[Long], Array[Long]) =
-          localReadPairsMulti(outHit.map((_, "src", "dst")), sorted, tombs)
-      })
-    locally { val t = new Thread(outF, "graft-serve-degrees"); t.setDaemon(true); t.start() }
-    val (ins, _) = localReadPairsMulti(inHit.map((_, "dst", "src")), sorted, tombs)
-    val (outs, _) = outF.get()
-    // unboxed counting: binary-search each match into the sorted key
-    // array (a groupBy would box every long on the serving path)
-    def countPer(vals: Array[Long]): Array[Long] = {
-      val c = new Array[Long](sorted.length)
-      var i = 0
-      while (i < vals.length) {
-        val j = java.util.Arrays.binarySearch(sorted, vals(i))
-        if (j >= 0) c(j) += 1
-        i += 1
-      }
-      c
+    val r = route(manifest(v), sorted, out = true, in = true, localFileBudget,
+      localDeltaRowBudget).getOrElse(return None)
+    // PAIR form, both directions in ONE pool round: each matching record
+    // contributes its FILTER-column value, so counting those values per
+    // key — into the out counts for src-filtered files, the in counts
+    // for dst-filtered ones — is the degree. Unboxed: binary-search each
+    // match into the sorted key array (a groupBy would box every long on
+    // the serving path)
+    val oc = new Array[Long](sorted.length); val ic = new Array[Long](sorted.length)
+    servedScan(r.tasks, sorted, r.tombs)(longSink(sorted, pairs = true)).foreach {
+      case (t, (fv, _)) =>
+        val c = if (t.filterCol == "src") oc else ic
+        fv.foreach { k =>
+          val j = java.util.Arrays.binarySearch(sorted, k)
+          if (j >= 0) c(j) += 1
+        }
     }
-    val oc = countPer(outs); val ic = countPer(ins)
     Some(sorted.toSeq.zipWithIndex.map { case (k, i) => (k, oc(i), ic(i)) })
   }
 
@@ -898,15 +800,15 @@ class DurableStore(val spark: SparkSession, val root: String,
 
   /** Q6 SERVED: the single-source shortest-path TREE (dist + parent per
     * reached vertex, reference Queries.scala:198-243) computed entirely
-    * on the driver — each BFS level is one [[localReadPairsMulti]] round
-    * (pushed-IN reads returning (parent, child) pairs), the parent rule
-    * is MIN predecessor at dist-1, exactly [[Traversals.ssspTree]]'s
-    * deterministic tree (level-synchronous expansion makes the per-level
-    * min equal the global min over dist-1 predecessors; property-pinned
-    * equal). Returns (id, dist, parent) rows, source parent = itself.
-    * `None` = refused (unindexed store for symmetric/in hops, budgets,
-    * or a frontier past `frontierGate`) — fall back to the distributed
-    * [[Traversals.ssspTree]]. */
+    * on the driver — each BFS level is one [[route]]d pair read of
+    * [[scanLongs]] (pushed-IN reads returning (parent, child) pairs), the
+    * parent rule is MIN predecessor at dist-1, exactly
+    * [[Traversals.ssspTree]]'s deterministic tree (level-synchronous
+    * expansion makes the per-level min equal the global min over dist-1
+    * predecessors; property-pinned equal). Returns (id, dist, parent)
+    * rows, source parent = itself. `None` = refused (unindexed store for
+    * symmetric/in hops, budgets, or a frontier past `frontierGate`) —
+    * fall back to the distributed [[Traversals.ssspTree]]. */
   def servedSsspTree(v: Int, src: Long, maxDepth: Int,
                      symmetric: Boolean = true,
                      frontierGate: Int = 1 << 16,
@@ -914,10 +816,8 @@ class DurableStore(val spark: SparkSession, val root: String,
                      localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
       : Option[Seq[(Long, Long, Long)]] = {
     val m = manifest(v)
-    if (m.schemaDDL.isEmpty) return None
-    if (symmetric && m.mbounds.isEmpty) return None
-    if (m.tombs.map(_.rows).sum > ServeTombRowBudget) return None
-    val tombs = cachedTombIndexM(m)
+    // the manifest refusals hold even when no level expands (maxDepth 0)
+    if (route(m, Array.emptyLongArray, out = true, in = symmetric).isLeft) return None
     val dist = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     dist.put(src, 0L); parent.put(src, src)
@@ -926,21 +826,12 @@ class DurableStore(val spark: SparkSession, val root: String,
     while (fr.nonEmpty && d < maxDepth) {
       d += 1
       val keys = fr.sorted
-      val outHit = m.files.filter(coversAny(keys, _.srcMin, _.srcMax))
-      val inHit =
-        if (!symmetric) Nil
-        else (m.mirror ++ m.files.filterNot(_.sorted))
-          .filter(coversAny(keys, _.dstMin, _.dstMax))
-      val all = outHit ++ inHit
-      if (all.count(_.sorted) > localFileBudget ||
-          all.filterNot(_.sorted).map(_.rows).sum > localDeltaRowBudget)
-        return None
+      val r = route(m, keys, out = true, in = symmetric, localFileBudget,
+        localDeltaRowBudget).getOrElse(return None)
       // both directions map the FILTER side to the parent: out tasks
       // filter src (parent) and emit dst (child); in tasks filter dst
       // (parent, a frontier vertex) and emit src (child)
-      val (pv, cv) = localReadPairsMulti(
-        outHit.map((_, "src", "dst")) ++ inHit.map((_, "dst", "src")),
-        keys, tombs)
+      val (pv, cv) = scanLongs(r.tasks, keys, r.tombs, pairs = true)
       val levelPar = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       var i = 0
       while (i < cv.length) {
@@ -973,22 +864,6 @@ class DurableStore(val spark: SparkSession, val root: String,
         parent.get(e.getKey).longValue()))
     }
     Some(out.result())
-  }
-
-  /** (parent, child) pair form of [[localReadLongsMulti]]: same routing,
-    * pushed `in` predicate, page pruning and tombstone exclusion, but
-    * each matching record contributes BOTH sides — the filter-column
-    * value and the out-column value — as parallel arrays. The served
-    * SSSP tree needs the edge, not just the endpoint. */
-  private def localReadPairsMulti(tasks: Seq[(StoreFile, String, String)],
-                                  keys: Array[Long],
-                                  tombs: Seq[TombEntry]): (Array[Long], Array[Long]) = {
-    val packed = localReadLongsMulti(tasks, keys, tombs, pairs = true)
-    val n = packed.length / 2
-    val fv = new Array[Long](n); val ov = new Array[Long](n)
-    var i = 0
-    while (i < n) { fv(i) = packed(2 * i); ov(i) = packed(2 * i + 1); i += 1 }
-    (fv, ov)
   }
 
   /** Q5 SERVED: bidirectional BFS distance between two vertices, driver
@@ -1067,50 +942,30 @@ class DurableStore(val spark: SparkSession, val root: String,
                               maxFanout: Int, localFileBudget: Int,
                               localDeltaRowBudget: Long)
       : (Option[Array[Long]], Option[Seq[(Long, Long)]]) = {
-    // tombstone gate: driver-resident exclusion stays in the millisecond
-    // class only while the live tombstone set is point-delete sized; a
-    // store carrying more un-compacted deletes than the budget falls back
-    // to the one-job form, whose readStore anti-joins at scale
-    if (m.tombs.map(_.rows).sum > ServeTombRowBudget) return (None, None)
-    val tombs = cachedTombIndexM(m)
-    val localHop1 =
-      if (m.mbounds.isEmpty || m.schemaDDL.isEmpty) None
-      else {
-        val v0a = Array(v0)
-        val outHit = m.files.filter(f => v0 >= f.srcMin && v0 <= f.srcMax)
-        val inHit = (m.mirror ++ m.files.filterNot(_.sorted))
-          .filter(f => v0 >= f.dstMin && v0 <= f.dstMax)
-        Some(localReadLongsMulti(
-          outHit.map((_, "src", "dst")) ++ inHit.map((_, "dst", "src")),
-          v0a, tombs).distinct)
-      }
+    // hop 1 is one key and not budget-gated; a refusal — unindexed store,
+    // or more live tombstones than the driver index holds in the
+    // millisecond class — leaves both hops to the job forms, whose
+    // readStore anti-joins at scale
+    val v0a = Array(v0)
+    val localHop1 = route(m, v0a, out = true, in = true).toOption
+      .map(r => scanLongs(r.tasks, v0a, r.tombs)._2.distinct)
     // hop 2 DRIVER-LOCAL (VERDICT r10 next #1) — the last Spark job on
     // the serving path, removed for low-fanout vertices: push the mids
     // as one parquet `in` predicate into the manifest-routed primary
     // (src side) and mirror (dst side) file sets, count and top-k on
     // the driver. Engaged only when the routed read is provably in the
-    // millisecond class: sorted hit files ≤ localFileBudget (each file
-    // costs an open + the key-covering pages; pages are tight by sort
-    // order) and covering DELTA rows ≤ localDeltaRowBudget (unsorted —
-    // a delta decodes in full). Past either budget, fall through to the
-    // one-job aggregate, which that regime belongs to. Row-equal to the
-    // job form by construction ([[Queries.fofTopKLocal]] is the same
-    // aggregate), property-pinned in PropertySpec.
+    // millisecond class ([[route]]'s file and delta-row budgets); past
+    // either budget, fall through to the one-job aggregate, which that
+    // regime belongs to. Row-equal to the job form by construction
+    // ([[Queries.fofTopKLocal]] is the same aggregate), property-pinned
+    // in PropertySpec.
     val localTopK = localHop1.filter(_.length <= maxFanout).flatMap { mids =>
       if (mids.isEmpty) Some(Nil)
       else {
         val keys = mids.sorted
-        val outHit = m.files.filter(coversAny(keys, _.srcMin, _.srcMax))
-        val inHit = (m.mirror ++ m.files.filterNot(_.sorted))
-          .filter(coversAny(keys, _.dstMin, _.dstMax))
-        val sortedFiles = (outHit ++ inHit).count(_.sorted)
-        val deltaRows = (outHit ++ inHit).filterNot(_.sorted).map(_.rows).sum
-        if (sortedFiles > localFileBudget || deltaRows > localDeltaRowBudget) None
-        else Some(Queries.fofTopKLocal(
-          localReadLongsMulti(
-            outHit.map((_, "src", "dst")) ++ inHit.map((_, "dst", "src")),
-            keys, tombs),
-          v0, topK))
+        route(m, keys, out = true, in = true, localFileBudget, localDeltaRowBudget)
+          .toOption.map(r =>
+            Queries.fofTopKLocal(scanLongs(r.tasks, keys, r.tombs)._2, v0, topK))
       }
     }
     (localHop1, localTopK)
@@ -1297,8 +1152,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     * is FIRST-TOUCH auto-filled from the defaults (reference
     * GraphChiDatabase.scala:888-899: auto-fill on first touch), which
     * then requires every non-id column to carry a default. Shares
-    * [[updateEdgeDelta]]'s primitive-schema guard (the driver point read
-    * decodes primitive leaves only). */
+    * [[updateEdgeDelta]]'s primitive-schema guard; lifting the two
+    * together is a separate change. */
   def setVertexProp(fromV: Int, id: Long, column: String, value: Column): Int =
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       require(m.vschemaDDL.nonEmpty,
@@ -1355,7 +1210,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * files are probed newest-first so a resolved id never touches older
     * files' pages). Absent ids are omitted (the reference's getMany
     * returns present values, Column.scala:59-66). Returns rows in
-    * ascending id order, store vertex-schema column order; None past the
+    * ascending id order; rows carry the Spark external types of the
+    * manifest vertex schema, in its column order — the values and classes
+    * `readVertices(v).collect()` returns for the same ids. None past the
     * serving budgets or on a store without a vertex table. */
   def servedVertexRows(v: Int, ids: Array[Long],
                        localFileBudget: Int = ServeLocalFileBudget,
@@ -1367,27 +1224,25 @@ class DurableStore(val spark: SparkSession, val root: String,
                                 localFileBudget: Int,
                                 localDeltaRowBudget: Long)
       : Option[Seq[Seq[Any]]] = {
-    if (m.vschemaDDL.isEmpty) return None
-    if (ids.isEmpty) return Some(Nil)
-    if (m.vtombs.map(_.rows).sum > ServeTombRowBudget) return None
+    if (ids.isEmpty) return if (m.vschemaDDL.isEmpty) None else Some(Nil)
     val sorted = ids.distinct.sorted
-    val hit = m.vfiles.filter(coversAny(sorted, _.srcMin, _.srcMax))
-    if (hit.count(_.sorted) > localFileBudget ||
-        hit.filterNot(_.sorted).map(_.rows).sum > localDeltaRowBudget) return None
-    val idIdx = org.apache.spark.sql.types.StructType
-      .fromDDL(m.vschemaDDL).fieldNames.indexOf("id")
-    val floor = vTombKillFloor(cachedVTombIndexM(m))
+    val r = route(m, sorted, out = true, in = false, localFileBudget,
+      localDeltaRowBudget, vertex = true).getOrElse(return None)
+    val idIdx = rowRead(m.vschemaDDL)._1.fieldNames.indexOf("id")
+    val floor = vTombKillFloor(r.tombs)
     val out = scala.collection.mutable.Map[Long, Seq[Any]]()
     val remaining = scala.collection.mutable.SortedSet[Long](sorted.toIndexedSeq: _*)
-    hit.groupBy(_.seq).toSeq.sortBy(-_._1).foreach { case (sq, fs) =>
+    r.tasks.groupBy(_.file.seq).toSeq.sortBy(-_._1).foreach { case (sq, ts) =>
       // ids whose kill floor out-sequences this (and every older) group
       // are RESOLVED-ABSENT: the tombstone deleted every older row, and
       // any newer row would already have been found (groups descend)
       remaining --= remaining.toSeq.filter(floor(_) > sq)
       if (remaining.nonEmpty) {
         val rem = remaining.toArray
-        localPointRead(fs.filter(coversAny(rem, _.srcMin, _.srcMax)),
-          "id", rem, Nil).foreach { row =>
+        // vertex-row tombstones apply through the kill floor, not as
+        // (src, dst) record exclusion
+        scanRows(ts.filter(t => coversAny(rem, _.srcMin, _.srcMax)(t.file)),
+          rem, Nil, m.vschemaDDL).foreach { row =>
           val rid = row(idIdx).asInstanceOf[Long]
           if (remaining.contains(rid)) { out(rid) = row; remaining -= rid }
         }
@@ -1397,7 +1252,7 @@ class DurableStore(val spark: SparkSession, val root: String,
   }
 
   /** Single-id convenience of [[servedVertexRows]]: the vertex point GET
-    * of P6 in the serving class. */
+    * of P6 in the serving class, with the same typed row. */
   def servedVertexRow(v: Int, id: Long): Option[Seq[Any]] =
     servedVertexRowM(manifest(v), id)
 
@@ -1469,17 +1324,15 @@ class DurableStore(val spark: SparkSession, val root: String,
   }
 
   private def servedVertexRowM(m: Manifest, id: Long): Option[Seq[Any]] = {
-    if (m.vschemaDDL.isEmpty) return None
     // Option contract: REFUSE (never throw) past the tombstone-row
     // budget, like every other served path — callers that must
     // distinguish "absent row" from "refused" gate the budget first
-    // (setVertexProp does, loudly)
-    if (m.vtombs.map(_.rows).sum > ServeTombRowBudget) return None
-    val floor = vTombKillFloor(cachedVTombIndexM(m)).apply(id)
-    val hit = m.vfiles.filter(f => id >= f.srcMin && id <= f.srcMax &&
-      f.seq >= floor)
-    hit.groupBy(_.seq).toSeq.sortBy(-_._1).iterator
-      .map { case (_, fs) => localPointRead(fs, "id", Array(id), Nil) }
+    // (setVertexProp does, loudly). One id: no file budget.
+    val ids = Array(id)
+    val r = route(m, ids, out = true, in = false, vertex = true).getOrElse(return None)
+    val floor = vTombKillFloor(r.tombs).apply(id)
+    r.tasks.filter(_.file.seq >= floor).groupBy(_.file.seq).toSeq.sortBy(-_._1)
+      .iterator.map { case (_, ts) => scanRows(ts, ids, Nil, m.vschemaDDL) }
       .collectFirst { case rows if rows.nonEmpty => rows.head }
   }
 
@@ -1570,16 +1423,9 @@ class DurableStore(val spark: SparkSession, val root: String,
       .repartitionByRange(nParts, col("_b"), col("id"))
       .sortWithinPartitions("_b", "id")
       .write.mode(SaveMode.Overwrite).partitionBy("_b").parquet(dir)
-    // footer-based per-file stats (r15) — see statsForDir; the vertex
-    // ranges carry the id envelope on both StoreFile sides
-    val fs = statsFromFooters(spark, dir, "id", "id").getOrElse {
-      spark.read.parquet(dir)
-        .groupBy(col("_b").cast("int").as("b"), input_file_name().as("path"))
-        .agg(min("id").as("i0"), max("id").as("i1"), count(lit(1)).as("n"))
-        .collect().toSeq
-        .map(r => StoreFile(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(2), r.getLong(3), sorted = true, r.getLong(4)))
-    }.map(_.copy(seq = seq)).sortBy(f => (f.bucket, f.srcMin))
+    // per-file stats (see statsForDir); the vertex ranges carry the id
+    // envelope on both StoreFile sides
+    val fs = statsForDir(spark, dir, "id", "id").map(_.copy(seq = seq))
     (bounds, fs)
   }
 
@@ -1602,13 +1448,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       if (batchId >= 0 && m.lastBatch >= batchId) None
       else {
-        // normalize the batch to MANIFEST column order before writing
-        // the delta (ADVICE r10): distributed parquet reads are by-name,
-        // but the driver-local serving reads ([[localPointRead]]) decode
-        // rows positionally per file — a same-typed reordered batch
-        // (dst, src) would silently swap endpoints on that path — and
-        // cast to manifest TYPES with the lossless-only guard (see
-        // [[normalizeBatch]])
+        // normalize the batch to MANIFEST column order and TYPES before
+        // writing the delta (ADVICE r10), with the lossless-only guard
+        // (see [[normalizeBatch]])
         val ordered =
           if (m.schemaDDL.isEmpty) batch
           else normalizeBatch(batch, m.schemaDDL, "append")
@@ -1779,9 +1621,12 @@ class DurableStore(val spark: SparkSession, val root: String,
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       require(m.schemaDDL.nonEmpty, "updateEdgeDelta needs a manifest schema")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDDL)
-      // the driver point read decodes primitive leaves only — a schema
-      // with decimals/timestamps/arrays must take the COW path (loud,
-      // not a silent mis-decode)
+      // primitive columns only — not for the read, which (pointRowsM)
+      // decodes every atomic type: lifting the guard turns perfbench
+      // serve_mixed's `update` ops (a TINYINT schema) from a ~3 ms
+      // refusal into a commit plus compactIfPressured, which lowers that
+      // workload's ops_per_s by design — a separate change with a
+      // re-measured baseline
       locally {
         import org.apache.spark.sql.types._
         val bad = schema.fields.filterNot(f => f.dataType match {
@@ -1794,7 +1639,7 @@ class DurableStore(val spark: SparkSession, val root: String,
           s"${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}" +
           " — use the copy-on-write updateEdges for this schema")
       }
-      val rows = pointReadLocalM(m, src)
+      val rows = pointRowsM(m, src, out = true)
       val dstIdx = schema.fieldNames.indexOf("dst")
       val hit = rows.filter(r => r(dstIdx).asInstanceOf[Long] == dst)
       if (hit.isEmpty) None
@@ -1998,14 +1843,13 @@ class DurableStore(val spark: SparkSession, val root: String,
     val rewrite = (if (pulled.isEmpty) merged
       else merged.unionByName(rd(pulled)
         .withColumn("_b", bucketCol(key, bounds0))))
-    // the rewrite's row count is already exact on the driver: merged rows
-    // from the per-bucket aggregate, pulled rows from manifest stats (a
-    // pulled file is outside every tombstone's envelope by construction —
-    // tombstone-hit buckets are forced into `hit` — so readClean drops
-    // nothing from it). Passing it spares writeBuckets its own
-    // checkpoint+count copy of the rewrite (r15): merged's blocks are
-    // resident, and the re-bucket projection over them is cheap for
-    // repartitionByRange's two consumptions (sample + shuffle).
+    // no `preMaterialized` count is passed, so writeBuckets runs its own
+    // checkpoint+count copy of the rewrite. The count is already exact on
+    // the driver — merged rows from the per-bucket aggregate, pulled rows
+    // from manifest stats (a pulled file is outside every tombstone's
+    // envelope by construction: tombstone-hit buckets are forced into
+    // `hit`, so readClean drops nothing from it) — and passing it would
+    // spare that copy; it is not wired in or measured yet.
     val out = writeBuckets(spark,
       (if (splits.isEmpty && removed.isEmpty) rewrite
        else rewrite.drop("_b").withColumn("_b", bucketCol(key, bounds))),
@@ -2398,42 +2242,85 @@ object DurableStore {
     org.apache.spark.sql.types.StructField("paths",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Serving-read materializer: projects (filterCol, outCol) — each
-    * field with the repetition the FILE declares (store files mix
-    * writers: create() writes non-nullable columns `required`, delta
-    * appends from nullable frames write `optional`; a fixed projection
-    * string fails parquet's containment check on one or the other) —
-    * and materializes each record as the bare `outCol` long. No Group
-    * allocation, no boxing of dropped rows: the example GroupReadSupport
-    * allocates a SimpleGroup + boxed values for EVERY record in a hit
-    * page, which measured as the bulk of the serving wall time when the
-    * probe keys scatter across all pages (no page left to prune).
-    * Driven directly over [[org.apache.parquet.hadoop.ParquetFileReader]]
-    * page stores (one instance per file read, so no synchronization). */
+  /** One routed read of [[DurableStore.servedScan]]: `file` (a delta
+    * entry is a DIRECTORY of part files) read with `filterCol ∈ keys`;
+    * the long sink emits `outCol`. */
+  private final case class ScanTask(file: StoreFile, filterCol: String, outCol: String)
+
+  /** [[DurableStore.route]]'s answer: the scan tasks and the routed
+    * side's driver tombstone index. */
+  private final case class Routed(tasks: Seq[ScanTask], tombs: Seq[TombEntry])
+
+  /** One part file opened for a served read: its CACHED footer (the
+    * reader starts at the first page read instead of re-reading and
+    * thrift-parsing the footer per call), and the pushed `in` filter,
+    * which prunes row groups (stats + dictionary, against that footer)
+    * and column-index page ranges. RECORD-level membership is the sink's
+    * test (binary search on the sorted keys — no per-record boxing), so
+    * no assembly-level filter is passed to the record reader. */
+  private final class ScanFile(conf: Configuration, path: String,
+                               filter: org.apache.parquet.filter2.compat.FilterCompat.Filter) {
+    private val p = new org.apache.hadoop.fs.Path(path)
+    val footer: org.apache.parquet.hadoop.metadata.ParquetMetadata = cachedFooter(conf, p)
+    def schema: org.apache.parquet.schema.MessageType = footer.getFileMetaData.getSchema
+
+    /** Assemble every record of the surviving pages, projected to
+      * `requested`, through `mat`, handing each record to `each`. */
+    def foreach[T](requested: org.apache.parquet.schema.MessageType,
+                   mat: org.apache.parquet.io.api.RecordMaterializer[T])(each: T => Unit): Unit = {
+      val reader = new org.apache.parquet.hadoop.ParquetFileReader(conf, p, footer,
+        org.apache.parquet.HadoopReadOptions.builder(conf, p).withRecordFilter(filter).build())
+      try {
+        reader.setRequestedSchema(requested)
+        val cio = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested, schema)
+        var pages = reader.readNextFilteredRowGroup()
+        while (pages != null) {
+          val rr = cio.getRecordReader(pages, mat)
+          val n = pages.getRowCount
+          var i = 0L
+          while (i < n) { each(rr.read()); i += 1 }
+          pages = reader.readNextFilteredRowGroup()
+        }
+      } finally reader.close()
+    }
+  }
+
+  /** Serving-read materializer of the long sink: projects (filterCol,
+    * outCol) — one column when they are the same — each field with the
+    * repetition the FILE declares, and collects the `outCol` value (with
+    * `pairs`, also the `filterCol` value) of every record whose filter
+    * value is in `sortedKeys` (null: every record) and that `excl` does
+    * not exclude. No Group allocation, no boxing of dropped rows: the
+    * example GroupReadSupport allocates a SimpleGroup + boxed values for
+    * EVERY record in a hit page, which measured as the bulk of the
+    * serving wall time when the probe keys scatter across all pages (no
+    * page left to prune). One instance per file read, so no
+    * synchronization. */
   private final class LongsMaterializer(
       requested: org.apache.parquet.schema.MessageType,
-      outCol: String, sortedKeys: Array[Long],
-      excl: (Long, Long) => Boolean = null,
-      pairs: Boolean = false)
+      filterCol: String, outCol: String, sortedKeys: Array[Long],
+      excl: (Long, Long) => Boolean, pairs: Boolean)
       extends org.apache.parquet.io.api.RecordMaterializer[java.lang.Long] {
     import org.apache.parquet.io.api._
-    // matching outCol values, collected UNBOXED
-    private val matches = new scala.collection.mutable.ArrayBuilder.ofLong
-    def result(): Array[Long] = matches.result()
+    // matching values, collected UNBOXED
+    private val fvs = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val ovs = new scala.collection.mutable.ArrayBuilder.ofLong
+    def result(): (Array[Long], Array[Long]) = (fvs.result(), ovs.result())
     private var fv = 0L
     private var ov = 0L
     private var hasF = false
     private var hasO = false
     private val root = new GroupConverter {
       private val convs = (0 until requested.getFieldCount).map { i =>
-        if (requested.getType(i).getName == outCol)
-          new PrimitiveConverter {
-            override def addLong(v: Long): Unit = { ov = v; hasO = true }
+        val name = requested.getType(i).getName
+        val isF = name == filterCol
+        val isO = name == outCol
+        new PrimitiveConverter {
+          override def addLong(v: Long): Unit = {
+            if (isF) { fv = v; hasF = true }
+            if (isO) { ov = v; hasO = true }
           }
-        else
-          new PrimitiveConverter {
-            override def addLong(v: Long): Unit = { fv = v; hasF = true }
-          }
+        }
       }
       def getConverter(i: Int): Converter = convs(i)
       def start(): Unit = { hasF = false; hasO = false }
@@ -2442,14 +2329,14 @@ object DurableStore {
       // no per-record allocation
       def end(): Unit =
         if (hasF && hasO &&
-            java.util.Arrays.binarySearch(sortedKeys, fv) >= 0 &&
+            (sortedKeys == null || java.util.Arrays.binarySearch(sortedKeys, fv) >= 0) &&
             (excl == null || !excl(fv, ov))) {
-          if (pairs) matches += fv
-          matches += ov
+          if (pairs) fvs += fv
+          ovs += ov
         }
     }
     // NEVER null (a null record means end-of-input to callers); the
-    // returned record is a dummy — results accumulate in `matches`
+    // returned record is a dummy — results accumulate in the builders
     def getCurrentRecord: java.lang.Long = LongsMaterializer.Dummy
     def getRootConverter: GroupConverter = root
   }
@@ -2645,26 +2532,10 @@ object DurableStore {
                       .PrimitiveTypeName.INT64,
                 s"adopt: $p needs an INT64 $c column")
             }
-            var (s0, s1) = (Long.MaxValue, Long.MinValue)
-            var (d0, d1) = (Long.MaxValue, Long.MinValue)
-            var n = 0L
-            footer.getBlocks.forEach { b =>
-              n += b.getRowCount
-              b.getColumns.forEach { c =>
-                val name = c.getPath.toDotString
-                if (name == "src" || name == "dst") {
-                  val st = c.getStatistics
-                  require(st != null && st.hasNonNullValue,
-                    s"adopt: $p has no $name column statistics")
-                  val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-                  val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                  if (name == "src") { s0 = math.min(s0, lo); s1 = math.max(s1, hi) }
-                  else { d0 = math.min(d0, lo); d1 = math.max(d1, hi) }
-                }
-              }
-            }
-            require(s0 != Long.MaxValue && d0 != Long.MaxValue,
-              s"adopt: $p lacks src/dst columns")
+            val st = footerStats(footer, "src", "dst")
+            require(st.exists(_._1 > 0),
+              s"adopt: $p has no rows with src/dst column statistics")
+            val (n, s0, s1, d0, d1) = st.get
             StoreFile(0, p, s0, s1, d0, d1, sorted = assumeSorted, n)
           }
         }, 600.seconds)
@@ -2863,7 +2734,7 @@ object DurableStore {
     * tasks, sort within each task, write hive-partitioned by bucket.
     * Each task's slice of a bucket lands as one (key, sec)-sorted file
     * covering a disjoint key sub-range — a multi-file sorted bucket —
-    * and per-file stats come back from ONE grouped scan of the output.
+    * and per-file stats come back from [[statsForDir]].
     * (key, sec) = ("src", "dst") for the primary, ("dst", "src") for the
     * in-edge mirror. */
   private def writeBuckets(spark: SparkSession, eb: DataFrame, dir: String,
@@ -2889,98 +2760,88 @@ object DurableStore {
     statsForDir(spark, dir)
   }
 
-  /** Per-file stats of a freshly written bucket dir from parquet
-    * FOOTERS — a DRIVER-SIDE metadata read (r15, guide §5/§6) replacing
-    * the full Spark read-back scan of the just-written output: at
-    * bulk-load scale the read-back was a second complete pass over the
-    * store (and one more per compaction). min/max/rows per file
-    * aggregate exactly from each footer's per-row-group INT64
-    * statistics, which parquet-mr records unconditionally for the
-    * integer key columns these stores sort by. Falls back to the
-    * original grouped scan if any footer lacks a usable statistic. */
-  private def statsForDir(spark: SparkSession, dir: String): Seq[StoreFile] =
-    statsFromFooters(spark, dir, "src", "dst")
-      .getOrElse(statsForDirScan(spark, dir))
+  /** Per-file stats of a freshly written `_b=N`-partitioned dir: the
+    * (c0, c1) min/max and row count of every data file, as StoreFile
+    * (src*, dst*) ranges. From the parquet FOOTERS ([[statsFromFooters]],
+    * r15 — a driver-side metadata read replacing a full Spark read-back
+    * scan of the output), or from one grouped scan when the footers
+    * cannot answer. */
+  private[graft] def statsForDir(spark: SparkSession, dir: String,
+                                 c0: String = "src", c1: String = "dst"): Seq[StoreFile] =
+    statsFromFooters(spark, dir, c0, c1).getOrElse(
+      spark.read.parquet(dir)
+        .groupBy(col("_b").cast("int").as("b"), input_file_name().as("path"))
+        .agg(min(c0), max(c0), min(c1), max(c1), count(lit(1)))
+        .collect().toSeq
+        .map(r => StoreFile(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), sorted = true, r.getLong(6)))
+        .sortBy(f => (f.bucket, f.srcMin)))
 
-  private def statsForDirScan(spark: SparkSession, dir: String): Seq[StoreFile] =
-    spark.read.parquet(dir)
-      .groupBy(col("_b").cast("int").as("b"), input_file_name().as("path"))
-      .agg(min("src").as("s0"), max("src").as("s1"),
-           min("dst").as("d0"), max("dst").as("d1"), count(lit(1)).as("n"))
-      .collect().toSeq
-      .map(r => StoreFile(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), sorted = true, r.getLong(6)))
-      .sortBy(f => (f.bucket, f.srcMin))
-
-  /** Footer-statistics walk behind [[statsForDir]]/[[writeVertexSide]]:
-    * per `_b=N` partition dir, per data file, the (c0, c1) min/max and
-    * row count summed over row groups. None when a populated file lacks
-    * stats for either column (caller then runs the scan form). Paths are
-    * emitted as `file:` URIs — the same scheme input_file_name produced,
-    * so manifests stay consumable by the same readers either way. */
+  /** The footer form of [[statsForDir]]: per `_b=N` partition dir, per
+    * data file, [[footerStats]]; files holding no rows are dropped. None
+    * when a populated row group lacks a usable statistic, or when `dir`
+    * is not a directory this JVM's filesystem sees (a non-local URI) —
+    * the caller's scan then reads it through Hadoop, or fails loudly,
+    * instead of committing a manifest with no files. Paths are emitted
+    * as `file:` URIs — the same scheme input_file_name produces, so
+    * manifests stay consumable by the same readers either way. */
   private def statsFromFooters(spark: SparkSession, dir: String,
                                c0: String, c1: String): Option[Seq[StoreFile]] = {
-    val conf = spark.sessionState.newHadoopConf()
     val rootP = Paths.get(dir)
-    if (!Files.isDirectory(rootP)) return Some(Nil)
+    if (!Files.isDirectory(rootP)) return None
+    val conf = spark.sessionState.newHadoopConf()
     val partDirs = {
       val s = Files.list(rootP)
       try s.iterator().asScala.filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("_b=")).toSeq
       finally s.close()
     }
-    try {
-      val out = partDirs.flatMap { pd =>
-        val b = pd.getFileName.toString.stripPrefix("_b=").toInt
-        dataFilesIn(pd.toString).map { fp =>
-          val footer = {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(Paths.get(fp).toUri), conf))
-            try r.getFooter finally r.close()
-          }
-          var rows = 0L
-          var s0 = Long.MaxValue; var s1 = Long.MinValue
-          var d0 = Long.MaxValue; var d1 = Long.MinValue
-          footer.getBlocks.asScala.foreach { blk =>
-            if (blk.getRowCount > 0) {
-              rows += blk.getRowCount
-              def mm(name: String): (Long, Long) = {
-                val cc = blk.getColumns.asScala
-                  .find(_.getPath.toDotString == name)
-                  .getOrElse(throw MissingFooterStats)
-                val st = cc.getStatistics
-                if (st == null || st.isEmpty || !st.hasNonNullValue)
-                  throw MissingFooterStats
-                (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                  st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-              }
-              val (a0, a1) = mm(c0); val (b0, b1) = mm(c1)
-              s0 = math.min(s0, a0); s1 = math.max(s1, a1)
-              d0 = math.min(d0, b0); d1 = math.max(d1, b1)
-            }
-          }
-          (rows, StoreFile(b, Paths.get(fp).toUri.toString, s0, s1, d0, d1,
-            sorted = true, rows))
-        }.collect { case (rows, f) if rows > 0 => f }
+    val files = partDirs.flatMap { pd =>
+      val b = pd.getFileName.toString.stripPrefix("_b=").toInt
+      partPaths(pd.toString).map { fp =>
+        val footer = {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(Paths.get(fp).toUri), conf))
+          try r.getFooter finally r.close()
+        }
+        footerStats(footer, c0, c1).map { case (rows, a0, a1, b0, b1) =>
+          StoreFile(b, Paths.get(fp).toUri.toString, a0, a1, b0, b1,
+            sorted = true, rows)
+        }
       }
-      Some(out.sortBy(f => (f.bucket, f.srcMin)))
-    } catch { case MissingFooterStats => None }
+    }
+    if (files.exists(_.isEmpty)) None
+    else Some(files.flatten.filter(_.rows > 0).sortBy(f => (f.bucket, f.srcMin)))
   }
 
-  private object MissingFooterStats extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  /** Data files (no `_`/`.` side files) directly under a dir. */
-  private def dataFilesIn(dir: String): Seq[String] = {
-    val s = Files.list(Paths.get(dir))
-    try s.iterator().asScala.map(_.toString)
-      .filter { n =>
-        val base = n.substring(n.lastIndexOf('/') + 1)
-        base.endsWith(".parquet") && !base.startsWith("_") && !base.startsWith(".")
-      }.toSeq.sorted
-    finally s.close()
+  /** THE footer-statistics walk, shared by [[adopt]] and
+    * [[statsFromFooters]]: a file's row count and its (c0, c1) min/max,
+    * aggregated exactly over its populated row groups from the INT64
+    * statistics parquet-mr records for the integer key columns. None
+    * when a populated row group lacks a usable statistic for either
+    * column. */
+  private def footerStats(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+                          c0: String, c1: String): Option[(Long, Long, Long, Long, Long)] = {
+    var rows = 0L
+    var a0 = Long.MaxValue; var a1 = Long.MinValue
+    var b0 = Long.MaxValue; var b1 = Long.MinValue
+    footer.getBlocks.asScala.filter(_.getRowCount > 0).foreach { blk =>
+      def mm(name: String): Option[(Long, Long)] =
+        blk.getColumns.asScala.find(_.getPath.toDotString == name)
+          .map(_.getStatistics)
+          .filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
+          .map(st => (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+      (mm(c0), mm(c1)) match {
+        case (Some((x0, x1)), Some((y0, y1))) =>
+          rows += blk.getRowCount
+          a0 = math.min(a0, x0); a1 = math.max(a1, x1)
+          b0 = math.min(b0, y0); b1 = math.max(b1, y1)
+        case _ => return None
+      }
+    }
+    Some((rows, a0, a1, b0, b1))
   }
 
   /** Write one unsorted delta file set with its stats (bucket = -1). */

@@ -9,9 +9,10 @@ import org.apache.spark.sql.SparkSession
   * sf0.1/sf1). Times each phase over N iterations and prints medians:
   *
   *   manifest   manifest file read + parse
-  *   hop1       single-key primary+mirror driver read (both directions,
-  *              one pool round)
-  *   hop2       multi-key IN-pred driver read (both directions)
+  *   hop1       single-key servedNeighbors: manifest load + routing +
+  *              primary+mirror driver read (both directions, one pool
+  *              round)
+  *   hop2       multi-key servedNeighbors over the mids (both directions)
   *   topk       driver hash-map count + top-k
   *   result     LocalRelation createDataFrame + collect
   *   total      one whole servedFof call
@@ -62,21 +63,11 @@ object ServeLatencyProbe {
       tMan(i) = System.nanoTime() - t0
 
       t0 = System.nanoTime()
-      val v0a = Array(v0)
-      val out1 = m.files.filter(f => v0 >= f.srcMin && v0 <= f.srcMax)
-      val in1 = (m.mirror ++ m.files.filterNot(_.sorted))
-        .filter(f => v0 >= f.dstMin && v0 <= f.dstMax)
-      val mids = st.localReadLongsMulti(
-        out1.map((_, "src", "dst")) ++ in1.map((_, "dst", "src")), v0a).distinct
+      val mids = st.servedNeighbors(vm, Array(v0)).get.distinct
       tH1(i) = System.nanoTime() - t0
 
       t0 = System.nanoTime()
-      val keys = mids.toArray.sorted
-      val out2 = m.files.filter(f => keys.exists(k => k >= f.srcMin && k <= f.srcMax))
-      val in2 = (m.mirror ++ m.files.filterNot(_.sorted))
-        .filter(f => keys.exists(k => k >= f.dstMin && k <= f.dstMax))
-      val hop2 = st.localReadLongsMulti(
-        out2.map((_, "src", "dst")) ++ in2.map((_, "dst", "src")), keys)
+      val hop2 = st.servedNeighbors(vm, mids).get
       tH2(i) = System.nanoTime() - t0
 
       t0 = System.nanoTime()

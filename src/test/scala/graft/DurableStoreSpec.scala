@@ -82,39 +82,6 @@ class DurableStoreSpec extends AnyFunSuite {
       rowSet(edges(base: _*)).filter(_._1 == 1L).map(identity))
   }
 
-  test("pointReadLocal (driver serving path) == readForSrc distributed read") {
-    val st = fresh(base: _*)
-    val served = st.pointReadLocal(1, 1L)
-      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-        r(3).asInstanceOf[Long])).toSet
-    assert(served == rowSet(st.readForSrc(1, 1L).filter(col("src") === 1L)))
-    assert(served == rowSet(edges(base: _*)).filter(_._1 == 1L).map(identity))
-    // a key outside every file range serves empty without touching parquet
-    assert(st.pointReadLocal(1, 999999L).isEmpty)
-  }
-
-  test("pointReadLocalDst (driver in-edge serving) == readForDst distributed read, deltas included") {
-    val st = freshMirrored(base: _*)
-    def servedDst(v: Int, k: Long) = st.pointReadLocalDst(v, k)
-      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-        r(3).asInstanceOf[Long])).toSet
-    assert(servedDst(1, 10L) ==
-      rowSet(st.readForDst(1, 10L).filter(col("dst") === 10L)))
-    assert(servedDst(1, 10L) == rowSet(edges(base: _*)).filter(_._2 == 10L))
-    // an appended (unsorted) DELTA covering the key must be served too —
-    // the mirror ∪ deltas union readForDst reads
-    val v2 = st.append(1, edges((30L, 10L)))
-    assert(servedDst(v2, 10L) ==
-      rowSet(st.readForDst(v2, 10L).filter(col("dst") === 10L)))
-    assert(servedDst(v2, 10L).contains((30L, 10L, 310L)))
-    // outside every mirror/delta range: empty without touching parquet
-    assert(st.pointReadLocalDst(v2, 999999L).isEmpty)
-    // unindexed store: the driver dst read is refused (it would be a
-    // local full scan) — callers fall back to the distributed path
-    val plain = fresh(base: _*)
-    intercept[IllegalArgumentException](plain.pointReadLocalDst(1, 10L))
-  }
-
   test("servedFof driver-local hop 2 serves appended DELTAS in both hops, row-equal to the scan form") {
     // the zero-job serving path must see unsorted delta files on BOTH
     // directions (they can't page-prune, so they ride the delta-row
@@ -199,18 +166,15 @@ class DurableStoreSpec extends AnyFunSuite {
   }
 
   test("append normalizes batch column order to the manifest schema (driver reads stay positional-safe)") {
-    // ADVICE r10: distributed parquet reads are by-name, but the driver
-    // serving path (localPointRead) decodes positionally per file — a
-    // same-typed batch with (dst, src) swapped in column ORDER must not
-    // swap endpoints there. Append a reordered batch, then read it back
-    // through BOTH paths.
+    // ADVICE r10: a same-typed batch with (dst, src) swapped in column
+    // ORDER must not swap endpoints on any read path. Append a reordered
+    // batch, then read it back through BOTH paths.
     val st = freshMirrored(base: _*)
     val reordered = edges((41L, 10L)).select("w", "dst", "etype", "src")
     val v2 = st.append(1, reordered)
     // distributed read: by-name, correct either way
     assert(rowSet(st.read(v2)) == rowSet(edges(base: _*)) + ((41L, 10L, 420L)))
-    // driver-local reads decode the delta positionally — endpoints must
-    // NOT be swapped (pre-fix this returned (10, 41))
+    // driver-local reads — endpoints must NOT be swapped
     val served = st.pointReadLocal(v2, 41L)
       .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).toSet
     assert(served == Set((41L, 10L)))
@@ -781,6 +745,22 @@ class DurableStoreSpec extends AnyFunSuite {
     intercept[DurableStore.CommitConflictException] {
       DurableStore.LocalFsCommit.casPointer(st.root, expect = 1, v = 99)
     }
+  }
+
+  test("statsForDir: a dir java.nio cannot see takes the scan fallback, never an empty file list") {
+    // a freshly written bucket dir named by a `file:` URI is not a
+    // directory to java.nio. Reporting no files for it would commit a
+    // manifest that silently drops every row; the Spark scan must report
+    // the same stats as the footer walk does for the plain path.
+    val dir = Files.createTempDirectory("graft-stats").toString + "/out"
+    edges(base: _*).withColumn("_b", (col("src") % 2).cast("int"))
+      .write.partitionBy("_b").parquet(dir)
+    def stats(fs: Seq[DurableStore.StoreFile]) = fs.map(f =>
+      (f.bucket, new java.net.URI(f.path).getPath, f.srcMin, f.srcMax, f.dstMin,
+        f.dstMax, f.rows)).toSet
+    val local = DurableStore.statsForDir(spark, dir)
+    assert(local.map(_.rows).sum == base.size)
+    assert(stats(DurableStore.statsForDir(spark, "file://" + dir)) == stats(local))
   }
 
   test("degenerate creates: empty table rejected; all-equal srcs collapse to one bucket") {

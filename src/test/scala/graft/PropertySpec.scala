@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 /** Property tests (FIXTURES.md §2 plan): operator results on random small
   * graphs must equal brute-force Scala reference computations. */
@@ -86,6 +87,112 @@ class PropertySpec extends AnyFunSuite {
       v0 == (es.map(_._1) ++ es.map(_._2)).min &&
         served == scan && servedJob == scan && served2 == scan
     })
+  }
+
+  test("served rows equal the Spark read whole-row and class-equal over every atomic type") {
+    // the driver-served row reads (point reads, served rows, vertex rows,
+    // the served vertex join) must return what read(v)/readVertices(v)
+    // collect for the same keys — values, classes and column order —
+    // for schemas over every atomic Spark type with nulls, in random
+    // column order, across appended deltas, edge tombstones, vertex
+    // upserts and vertex-row tombstones
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val atomic: List[DataType] = List(ByteType, ShortType, IntegerType, LongType,
+      FloatType, DoubleType, DecimalType(10, 2), StringType, BinaryType,
+      BooleanType, DateType, TimestampType, TimestampNTZType)
+    // 1901..2096: inside the range every date/timestamp encoding stores
+    // without calendar rebasing
+    val genSec = Gen.choose(-2000000000L, 4000000000L)
+    def genCell(dt: DataType): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> (dt match {
+      case ByteType => Gen.choose(Byte.MinValue, Byte.MaxValue).map(java.lang.Byte.valueOf)
+      case ShortType => Gen.choose(Short.MinValue, Short.MaxValue).map(java.lang.Short.valueOf)
+      case IntegerType => Gen.choose(Int.MinValue, Int.MaxValue).map(Int.box)
+      case LongType => Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box)
+      case FloatType => Gen.choose(-1e6f, 1e6f).map(Float.box)
+      case DoubleType => Gen.choose(-1e12, 1e12).map(Double.box)
+      case _: DecimalType => Gen.choose(-99999999L, 99999999L).map(java.math.BigDecimal.valueOf(_, 2))
+      case StringType => Gen.alphaNumStr.map(_.take(6))
+      case BinaryType => Gen.listOfN(3, Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+      case BooleanType => Gen.oneOf(true, false).map(Boolean.box)
+      case DateType => Gen.choose(-25000L, 46000L)
+        .map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)))
+      case TimestampType => for (s <- genSec; us <- Gen.choose(0, 999999))
+        yield java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s, us * 1000L))
+      case TimestampNTZType => for (s <- genSec; us <- Gen.choose(0, 999999))
+        yield java.time.LocalDateTime.ofEpochSecond(s, us * 1000, java.time.ZoneOffset.UTC)
+      case other => sys.error(s"no generator for $other")
+    }))
+    def shuffled[A](xs: List[A]): Gen[List[A]] =
+      Gen.listOfN(xs.size, Gen.choose(0, 1 << 20)).map(ws => xs.zip(ws).sortBy(_._2).map(_._1))
+    // key columns over a small id range, so keys collide across files
+    def genRow(schema: StructType): Gen[Row] =
+      schema.fields.toList.foldRight(Gen.const(List.empty[Any])) { (f, acc) =>
+        for {
+          h <- if (Set("src", "dst", "id")(f.name)) Gen.choose(0L, 5L).map(Long.box)
+               else genCell(f.dataType)
+          t <- acc
+        } yield h :: t
+      }.map(Row.fromSeq)
+    def uniqueIds(rows: List[Row], s: StructType): List[Row] =
+      rows.groupBy(_.getLong(s.fieldIndex("id"))).values.map(_.head).toList
+    val genCase = for {
+      eFields <- shuffled(StructField("src", LongType) :: StructField("dst", LongType) ::
+        atomic.zipWithIndex.map { case (t, i) => StructField(s"e$i", t) })
+      vn <- Gen.choose(1, atomic.size)
+      vFields <- shuffled(atomic.zipWithIndex.map { case (t, i) => StructField(s"p$i", t) })
+        .flatMap(fs => shuffled(StructField("id", LongType) :: fs.take(vn)))
+      es = StructType(eFields); vs = StructType(vFields)
+      base <- Gen.choose(4, 10).flatMap(Gen.listOfN(_, genRow(es)))
+      delta1 <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, genRow(es)))
+      tombN <- Gen.choose(0, 2)
+      delta2 <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, genRow(es)))
+      vBase <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genRow(vs)))
+      vDelta <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, genRow(vs)))
+      vTomb <- Gen.option(Gen.choose(0L, 5L))
+      keys <- Gen.nonEmptyListOf(Gen.choose(0L, 6L))
+    } yield (es, vs, base, delta1, tombN, delta2, uniqueIds(vBase, vs),
+      uniqueIds(vDelta, vs), vTomb, keys.distinct.toArray)
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(3).withMaxSize(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261017L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genCase) {
+      case (es, vs, base, delta1, tombN, delta2, vBase, vDelta, vTomb, keys) =>
+        def df(rows: List[Row], s: StructType) = spark.createDataFrame(rows.asJava, s)
+        val root = java.nio.file.Files.createTempDirectory("graft-prop-typed").toString
+        val st = DurableStore.create(spark, df(base, es), root, numBuckets = 2,
+          withInEdgeIndex = true)
+        var v = 1
+        if (delta1.nonEmpty) v = st.append(v, df(delta1, es))
+        val pairs = (base ++ delta1)
+          .map(r => (r.getLong(es.fieldIndex("src")), r.getLong(es.fieldIndex("dst"))))
+        if (tombN > 0) v = st.deleteEdgesTombstone(v, pairs.take(tombN))
+        if (delta2.nonEmpty) v = st.append(v, df(delta2, es))
+        v = st.setVertexTable(v, df(vBase, vs))
+        if (vDelta.nonEmpty) v = st.upsertVertices(v, df(vDelta, vs))
+        vTomb.foreach(x => v = st.deleteVertexTombstone(v, x))
+        val edges = st.read(v).collect().map(_.toSeq).toSeq
+        val verts = st.readVertices(v).collect().map(_.toSeq).toSeq
+        val (si, di) = (es.fieldIndex("src"), es.fieldIndex("dst"))
+        val vi = vs.fieldIndex("id")
+        def on(i: Int, ks: Seq[Long]) = edges.filter(r => ks.exists(_ == r(i)))
+        val ids = 0L to 6L
+        val vcols = vs.fieldNames.filterNot(_ == "id")
+        val vmap = verts.map(r => r(vi) -> r).toMap
+        val joined = on(si, keys.toSeq).map(r => r ++ vmap.get(r(di)).fold(vcols.toSeq.map(_ => null: Any))(
+          vr => vcols.toSeq.map(c => vr(vs.fieldIndex(c)))))
+        import TestSpark.sameTypedRows
+        Prop.all(
+          ids.forall(k => sameTypedRows(st.pointReadLocal(v, k), on(si, Seq(k)))) :| "pointReadLocal",
+          ids.forall(k => sameTypedRows(st.pointReadLocalDst(v, k), on(di, Seq(k)))) :| "pointReadLocalDst",
+          sameTypedRows(st.servedOutRows(v, keys).get, on(si, keys.toSeq)) :| "servedOutRows",
+          sameTypedRows(st.servedInRows(v, keys).get, on(di, keys.toSeq)) :| "servedInRows",
+          (st.servedVertexRows(v, keys).get.map(TestSpark.typedKey(_)) ==
+            verts.filter(r => keys.exists(_ == r(vi))).sortBy(_(vi).asInstanceOf[Long])
+              .map(TestSpark.typedKey(_))) :| "servedVertexRows",
+          sameTypedRows(st.servedOutRowsWithVertex(v, keys).get, joined) :| "servedOutRowsWithVertex")
+    })
+    assert(res.passed, res.status.toString)
   }
 
   test("fofTopKLocal equals a naive count on large random multisets (table-growth path)") {

@@ -238,33 +238,6 @@ class Round13Spec extends AnyFunSuite {
     assert(re.manifest(v6).vdefaults == Seq("label" -> "'x'", "score" -> "0"))
   }
 
-  test("servedOutRows/servedInRows (value join) == routed distributed reads, " +
-       "deltas + tombstones crossed") {
-    val base = (1L to 20L).map(i => (i, 400L + i % 4))
-    val st = DurableStore.create(spark, edges(base: _*),
-      Files.createTempDirectory("graft-r13-n4s").toString, numBuckets = 2,
-      withInEdgeIndex = true)
-    var v = st.append(1, edges((2L, 404L), (21L, 400L)))
-    v = st.deleteEdgeTombstone(v, 3L, 403L)
-    val keys = Array(2L, 3L, 21L)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq.sorted
-    val servedOut = st.servedOutRows(v, keys).get
-      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-        r(3).asInstanceOf[Long])).sorted
-    assert(servedOut ==
-      rowsOf(st.readForSrcs(v, keys.toSeq).filter(col("src").isin(keys.toSeq: _*))))
-    assert(servedOut.nonEmpty && !servedOut.exists(r => r._1 == 3L && r._2 == 403L))
-    val inKeys = Array(400L, 404L)
-    val servedIn = st.servedInRows(v, inKeys).get
-      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-        r(3).asInstanceOf[Long])).sorted
-    assert(servedIn ==
-      rowsOf(st.readForDsts(v, inKeys.toSeq).filter(col("dst").isin(inKeys.toSeq: _*))))
-    // budget refusal, never a wrong answer
-    assert(st.servedOutRows(v, keys, localFileBudget = 0).isEmpty)
-  }
-
   test("many live tombstone files coalesce into one anti-join per kind " +
        "(plan depth constant in tombstone-file count)") {
     val base = (1L to 30L).map(i => (i, 300L + i % 3))
@@ -284,29 +257,6 @@ class Round13Spec extends AnyFunSuite {
       (2L to 5L).map(i => (i, 300L + i % 3)) --
       base.filter(p => p._1 == 10L || p._1 == 11L || p._2 == 10L || p._2 == 11L)
     assert(pairSet(df) == expect)
-  }
-
-  test("servedDegrees == distributed counts across deltas + tombstones, " +
-       "(0,0) for absent ids, refusal past budget") {
-    val base = (1L to 12L).map(i => (i, 200L + i % 3))
-    val st = DurableStore.create(spark, edges(base: _*),
-      Files.createTempDirectory("graft-r13-deg").toString, numBuckets = 2,
-      withInEdgeIndex = true)
-    var v = st.append(1, edges((1L, 205L), (200L, 1L)))
-    v = st.deleteEdgeTombstone(v, 1L, 200L + 1 % 3)
-    val keys = Array(1L, 200L, 201L, 999L)
-    val got = st.servedDegrees(v, keys).get
-    val df = st.read(v)
-    def deg(c: String, k: Long): Long = df.filter(col(c) === k).count()
-    assert(got == keys.sorted.toSeq.map(k => (k, deg("src", k), deg("dst", k))))
-    assert(got.find(_._1 == 999L).get == ((999L, 0L, 0L)))
-    // the deleted edge and the delta rows are both reflected
-    assert(got.find(_._1 == 1L).get == ((1L, 1L, 1L))) // base del'd, delta +1 out, +1 in
-    assert(st.servedDegrees(v, keys, localFileBudget = 0).isEmpty)
-    // unindexed store (no mirror) refuses rather than undercounting in-degree
-    val st2 = DurableStore.create(spark, edges((1L, 2L)),
-      Files.createTempDirectory("graft-r13-deg2").toString, numBuckets = 1)
-    assert(st2.servedDegrees(1, Array(1L)).isEmpty)
   }
 
   test("upsertVertices batchId watermark: replay is a no-op, survives " +

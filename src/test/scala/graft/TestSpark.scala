@@ -29,6 +29,18 @@ object TestSpark {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** A row as `class:value` cells (binary by content): two rows are
+    * whole-row, class-equal iff their keys are equal. */
+  def typedKey(r: Seq[Any]): String = r.map {
+    case null => "null"
+    case b: Array[Byte] => "[B:" + b.mkString(",")
+    case x => s"${x.getClass.getName}:$x"
+  }.mkString("|")
+
+  /** Multiset equality of row sets under [[typedKey]]. */
+  def sameTypedRows(got: Seq[Seq[Any]], want: Seq[Seq[Any]]): Boolean =
+    got.map(typedKey).sorted == want.map(typedKey).sorted
+
   /** Collect a two-column (id-ish, value-ish) frame into a sorted map. */
   def toMap2(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
