@@ -200,8 +200,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * bare rows and therefore THROWS (IllegalArgumentException from
     * [[route]]) on a store carrying more live tombstone rows than
     * [[DurableStore.ServeTombRowBudget]] — serving clients must catch it
-    * or keep the store compacted (see [[compactIfPressured]]). Same
-    * contract on [[pointReadLocalDst]] and [[updateEdgeDelta]]. */
+    * and read through [[readForSrc]], or keep the store compacted (see
+    * [[compactIfPressured]]). Same contract on [[pointReadLocalDst]],
+    * [[updateEdgeDelta]] and [[setVertexProp]]. */
   def pointReadLocal(v: Int, srcKey: Long): Seq[Seq[Any]] =
     pointRowsM(manifest(v), srcKey, out = true)
 
@@ -218,7 +219,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * thrown rather than returned. */
   private def pointRowsM(m: Manifest, key: Long, out: Boolean): Seq[Seq[Any]] = {
     val keys = Array(key)
-    route(m, keys, out, !out) match {
+    route(m, keys, out, !out, gated = false) match {
       case Left(reason) => throw new IllegalArgumentException(reason)
       case Right(r) => scanRows(r.tasks, keys, r.tombs, m.schemaDDL)
     }
@@ -275,6 +276,14 @@ class DurableStore(val spark: SparkSession, val root: String,
       else acc
     }
 
+  /** The serving budgets of this handle, fixed — [[route]] is their only
+    * reader: [[DurableStore.ServeLocalFileBudget]] sorted files,
+    * [[DurableStore.ServeLocalDeltaRowBudget]] delta rows and
+    * [[DurableStore.ServeTombRowBudget]] live tombstone rows. Overridable
+    * inside the package only, so a spec can open a handle on the same
+    * root that refuses. */
+  private[graft] def serveBudget: ServeBudget = DefaultServeBudget
+
   /** THE routing-and-budget core of every served read. The sorted `keys`
     * route to the primary files whose [srcMin, srcMax] covers one of them
     * (`out`, read src → dst) and/or to the in-edge mirror plus the
@@ -282,30 +291,31 @@ class DurableStore(val spark: SparkSession, val root: String,
     * with `vertex`, to the vertex side-table files covering them on `id`
     * instead. Refused — Left, with the reason — when that side has no
     * manifest schema, an `in` read has no mirror, that side's live
-    * tombstone rows pass [[DurableStore.ServeTombRowBudget]], or the
-    * routed SORTED files pass `fileBudget` (each costs an open plus its
-    * key-covering pages) or the routed DELTA rows pass `deltaRowBudget`
-    * (unsorted, a delta decodes in full; one in both directions counts
-    * twice). Otherwise the scan tasks and that side's driver tombstone
-    * index. Option paths turn a refusal into None, the point reads throw
-    * it; the budgets default to none (FoF hop 1 and the point reads). */
+    * tombstone rows pass the tombstone-row budget, or — `gated` — the
+    * routed SORTED files pass the file budget (each costs an open plus
+    * its key-covering pages) or the routed DELTA rows pass the delta-row
+    * budget (unsorted, a delta decodes in full; one in both directions
+    * counts twice). Otherwise the scan tasks and that side's driver
+    * tombstone index. The budgets are the handle's [[serveBudget]], read
+    * here and nowhere else. Option paths turn a refusal into None, the
+    * point reads and [[setVertexProp]] throw it; the single-key reads
+    * (point reads, FoF hop 1, the vertex point get) are not `gated`. */
   private def route(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean,
-                    fileBudget: Int = Int.MaxValue,
-                    deltaRowBudget: Long = Long.MaxValue,
-                    vertex: Boolean = false): Either[String, Routed] = {
+                    gated: Boolean, vertex: Boolean = false): Either[String, Routed] = {
     val at = s"$root v${m.version}"
+    val budget = serveBudget
     val tombRows = (if (vertex) m.vtombs else m.tombs).map(_.rows).sum
     if ((if (vertex) m.vschemaDDL else m.schemaDDL).isEmpty)
       Left(s"$at: no ${if (vertex) "vertex side-table" else "manifest schema"}")
     else if (in && !vertex && m.mbounds.isEmpty)
       Left(s"$at: the in-edge read needs the mirror (buildInEdgeIndex)")
-    else if (tombRows > ServeTombRowBudget)
+    else if (tombRows > budget.tombRows)
       // loud on the throwing paths, not slow (review r12): past the
       // budget the store has earned a compact() (which reclaims the
       // tombstones) or the distributed read — silently loading millions
       // of tombstone rows here would break the sub-100 ms contract
       Left(s"$at: $tombRows live ${if (vertex) "vertex-row " else ""}tombstone " +
-        s"rows exceed the driver serving budget ($ServeTombRowBudget) — " +
+        s"rows exceed the driver serving budget (${budget.tombRows}) — " +
         "compact() to reclaim them, or read through the distributed paths")
     else {
       val tasks =
@@ -318,10 +328,11 @@ class DurableStore(val spark: SparkSession, val root: String,
              .filter(coversAny(keys, _.dstMin, _.dstMax))
              .map(ScanTask(_, "dst", "src")) else Nil)
       val files = tasks.map(_.file)
-      if (files.count(_.sorted) > fileBudget ||
-          files.filterNot(_.sorted).map(_.rows).sum > deltaRowBudget)
+      if (gated && (files.count(_.sorted) > budget.files ||
+          files.filterNot(_.sorted).map(_.rows).sum > budget.deltaRows))
         Left(s"$at: the routed read passes the serving budgets " +
-          s"($fileBudget sorted files, $deltaRowBudget delta rows)")
+          s"(${budget.files} sorted files, ${budget.deltaRows} delta rows) — " +
+          "compact() to fold the deltas, or read through the distributed paths")
       else Right(Routed(tasks, tombIndex(m, vertex)))
     }
   }
@@ -588,14 +599,13 @@ class DurableStore(val spark: SparkSession, val root: String,
     * sort order, 2-column projection, concurrent per-file reads) and
     * the count/top-k runs in a driver hash map — the WHOLE query then
     * runs ZERO Spark jobs, end to end in the reference's native
-    * latency class (QueryShard.java:207-253). Past the file/delta-row
-    * budgets the hop-2 aggregate falls back to the one-job form, which
-    * that regime belongs to. Unindexed stores keep the two-job form (a
-    * driver-side dst read would degenerate to a local full scan). */
-  def servedFof(v: Int, v0: Long, topK: Int = 20,
-                maxFanout: Int = 1 << 20,
-                localFileBudget: Int = ServeLocalFileBudget,
-                localDeltaRowBudget: Long = ServeLocalDeltaRowBudget): DataFrame = {
+    * latency class (QueryShard.java:207-253). Past the store's fixed
+    * serving budgets (file, delta-row, key) the hop-2 aggregate falls
+    * back to the one-job form, which that regime belongs to — `compact()`
+    * brings a delta-heavy store back under them. Unindexed stores keep
+    * the two-job form (a driver-side dst read would degenerate to a
+    * local full scan; `buildInEdgeIndex` indexes them). */
+  def servedFof(v: Int, v0: Long, topK: Int = 20): DataFrame = {
     // ONE manifest load per serving call, threaded through every hop
     // (manifests are immutable per version; re-parsing the file per
     // reader would put file-count-proportional driver I/O on the
@@ -606,10 +616,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     // millisecond class); past it the ONE-JOB form takes over, whose
     // readers bridge literal-IN → broadcast-semi-join by mid count
     // ([[Queries.keyFilter]] — VERDICT r12 next #6), so the scan cliff
-    // only starts at maxFanout itself
-    val (localHop1, localTopK) =
-      servedFofLocalM(m, v0, topK, math.min(maxFanout, ServeLocalKeyBudget),
-        localFileBudget, localDeltaRowBudget)
+    // only starts at [[Queries.servedFofFrom]]'s own fanout cap
+    val (localHop1, localTopK) = servedFofLocalM(m, v0, topK)
     localTopK match {
       case Some(top) =>
         // LocalRelation result — ZERO Spark jobs on this serving path
@@ -623,8 +631,7 @@ class DurableStore(val spark: SparkSession, val root: String,
             .select("src", "dst"),
           in = keys => Queries.keyFilter(readForDstsM(m, keys), "dst", keys)
             .select("src", "dst"),
-          v0 = v0, topK = topK, maxFanout = maxFanout,
-          hop1 = localHop1.map(_.toSeq))
+          v0 = v0, topK = topK, hop1 = localHop1.map(_.toSeq))
     }
   }
 
@@ -632,15 +639,11 @@ class DurableStore(val spark: SparkSession, val root: String,
     * pairs, no DataFrame, no Spark involvement at all: THE online-client
     * entry (the reference's query API returns vertex ids, not frames —
     * VertexQuery.java wraps long arrays). `None` when the store is
-    * unindexed or the routed read exceeds the local budgets — that
-    * regime belongs to the one-job form, i.e. collect [[servedFof]]. */
-  def servedFofRows(v: Int, v0: Long, topK: Int = 20,
-                    maxFanout: Int = 1 << 16,
-                    localFileBudget: Int = ServeLocalFileBudget,
-                    localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[(Long, Long)]] =
-    servedFofLocalM(manifest(v), v0, topK, maxFanout, localFileBudget,
-      localDeltaRowBudget)._2
+    * unindexed (`buildInEdgeIndex`) or the routed read is past the
+    * store's fixed serving budgets (`compact()`) — that regime belongs to
+    * the one-job form, i.e. collect [[servedFof]]. */
+  def servedFofRows(v: Int, v0: Long, topK: Int = 20): Option[Seq[(Long, Long)]] =
+    servedFofLocalM(manifest(v), v0, topK)._2
 
   /** N3 SERVED (VERDICT r11 next #7): the multi-key driver read behind
     * [[servedFof]]'s hop 2, exposed as a public frontier-hop primitive —
@@ -650,44 +653,33 @@ class DurableStore(val spark: SparkSession, val root: String,
     * per-file reads, tombstones excluded record-level. Repeats kept —
     * path-multiplicity semantics, row-equal to
     * `readForSrcs(v, keys).filter(src isin keys).select(dst)`
-    * (spec-pinned). `None` past the local budgets (that regime belongs
-    * to the distributed read) — never wrong, only refused. */
-  def servedOutNeighbors(v: Int, keys: Array[Long],
-                         localFileBudget: Int = ServeLocalFileBudget,
-                         localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Array[Long]] =
-    servedHopM(manifest(v), keys, out = true, in = false,
-      localFileBudget, localDeltaRowBudget)
+    * (spec-pinned). `None` past the store's fixed serving budgets — never
+    * wrong, only refused: `compact()` folds deltas and tombstones back
+    * under them, and the distributed read answers meanwhile. */
+  def servedOutNeighbors(v: Int, keys: Array[Long]): Option[Array[Long]] =
+    servedHopM(manifest(v), keys, out = true, in = false)
 
   /** The in-direction twin of [[servedOutNeighbors]]: src values of every
     * row with dst ∈ `keys`, served by the mirror + covering deltas.
-    * `None` on unindexed stores or past the budgets. */
-  def servedInNeighbors(v: Int, keys: Array[Long],
-                        localFileBudget: Int = ServeLocalFileBudget,
-                        localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Array[Long]] =
-    servedHopM(manifest(v), keys, out = false, in = true,
-      localFileBudget, localDeltaRowBudget)
+    * `None` on unindexed stores (`buildInEdgeIndex`) or past the
+    * budgets. */
+  def servedInNeighbors(v: Int, keys: Array[Long]): Option[Array[Long]] =
+    servedHopM(manifest(v), keys, out = false, in = true)
 
   /** Both directions in ONE pool round (the symmetric-view frontier hop:
     * out-neighbors ∪ in-neighbors, repeats kept). */
-  def servedNeighbors(v: Int, keys: Array[Long],
-                      localFileBudget: Int = ServeLocalFileBudget,
-                      localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Array[Long]] =
-    servedHopM(manifest(v), keys, out = true, in = true,
-      localFileBudget, localDeltaRowBudget)
+  def servedNeighbors(v: Int, keys: Array[Long]): Option[Array[Long]] =
+    servedHopM(manifest(v), keys, out = true, in = true)
 
   /** Shared core of the served hop family: [[route]] `keys` into the
     * primary (src side) and/or mirror + deltas (dst side), read with one
     * pushed `in` predicate per file. The wall time of a hop is the
     * slowest single file across both directions. */
-  private def servedHopM(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean,
-                         localFileBudget: Int, localDeltaRowBudget: Long)
+  private def servedHopM(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean)
       : Option[Array[Long]] = {
     if (keys.isEmpty) return Some(Array.emptyLongArray)
     val sorted = keys.sorted
-    route(m, sorted, out, in, localFileBudget, localDeltaRowBudget).toOption
+    route(m, sorted, out, in, gated = true).toOption
       .map(r => scanLongs(r.tasks, sorted, r.tombs)._2)
   }
 
@@ -702,36 +694,27 @@ class DurableStore(val spark: SparkSession, val root: String,
     * external types of the manifest schema, in manifest column order —
     * the values and classes `read(v).collect()` returns for the same
     * rows. Repeats kept. Budget discipline of [[servedOutNeighbors]]
-    * (None past the budgets — never wrong, only refused); tombstones
+    * (None past the store's budgets — never wrong, only refused); tombstones
     * excluded record-level. Row-equal to
     * `readForSrcs(v, keys).filter(src isin keys)` — oracle-pinned by
     * `n4s_join_served`, whole-row and class-equal by PropertySpec.
     * Decodes boxed full rows, so it serves VALUE joins; pure id hops stay
     * on the unboxed [[servedOutNeighbors]]. */
-  def servedOutRows(v: Int, keys: Array[Long],
-                    localFileBudget: Int = ServeLocalFileBudget,
-                    localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[Seq[Any]]] =
-    servedRowsM(manifest(v), keys, out = true, localFileBudget,
-      localDeltaRowBudget)
+  def servedOutRows(v: Int, keys: Array[Long]): Option[Seq[Seq[Any]]] =
+    servedRowsM(manifest(v), keys, out = true)
 
   /** The in-direction twin of [[servedOutRows]]: full rows with
     * dst ∈ `keys`, served by the mirror + covering deltas, with the same
     * typed values in manifest column order. `None` on unindexed stores
-    * or past the budgets. */
-  def servedInRows(v: Int, keys: Array[Long],
-                   localFileBudget: Int = ServeLocalFileBudget,
-                   localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[Seq[Any]]] =
-    servedRowsM(manifest(v), keys, out = false, localFileBudget,
-      localDeltaRowBudget)
+    * (`buildInEdgeIndex`) or past the budgets. */
+  def servedInRows(v: Int, keys: Array[Long]): Option[Seq[Seq[Any]]] =
+    servedRowsM(manifest(v), keys, out = false)
 
-  private def servedRowsM(m: Manifest, keys: Array[Long], out: Boolean,
-                          localFileBudget: Int, localDeltaRowBudget: Long)
+  private def servedRowsM(m: Manifest, keys: Array[Long], out: Boolean)
       : Option[Seq[Seq[Any]]] = {
     if (keys.isEmpty) return Some(Nil)
     val sorted = keys.distinct.sorted
-    route(m, sorted, out, !out, localFileBudget, localDeltaRowBudget).toOption
+    route(m, sorted, out, !out, gated = true).toOption
       .map(r => scanRows(r.tasks, sorted, r.tombs, m.schemaDDL))
   }
 
@@ -745,17 +728,14 @@ class DurableStore(val spark: SparkSession, val root: String,
     * excluded record-level, no counter to keep consistent with the
     * tombstone/delta machinery. An id with no edges reports (0, 0) (the
     * reference's untouched-vertex degree). Returns (id, outDeg, inDeg)
-    * ascending by id, one row per requested id; `None` past the serving
-    * budgets or on stores without the in-edge mirror — never wrong,
-    * only refused. */
-  def servedDegrees(v: Int, keys: Array[Long],
-                    localFileBudget: Int = ServeLocalFileBudget,
-                    localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[(Long, Long, Long)]] = {
+    * ascending by id, one row per requested id; `None` past the store's
+    * serving budgets (`compact()`) or on stores without the in-edge
+    * mirror (`buildInEdgeIndex`) — never wrong, only refused. */
+  def servedDegrees(v: Int, keys: Array[Long]): Option[Seq[(Long, Long, Long)]] = {
     if (keys.isEmpty) return Some(Nil)
     val sorted = keys.distinct.sorted
-    val r = route(manifest(v), sorted, out = true, in = true, localFileBudget,
-      localDeltaRowBudget).getOrElse(return None)
+    val r = route(manifest(v), sorted, out = true, in = true, gated = true)
+      .getOrElse(return None)
     // PAIR form, both directions in ONE pool round: each matching record
     // contributes its FILTER-column value, so counting those values per
     // key — into the out counts for src-filtered files, the in counts
@@ -806,18 +786,17 @@ class DurableStore(val spark: SparkSession, val root: String,
     * [[Traversals.ssspTree]]'s deterministic tree (level-synchronous
     * expansion makes the per-level min equal the global min over dist-1
     * predecessors; property-pinned equal). Returns (id, dist, parent)
-    * rows, source parent = itself. `None` = refused (unindexed store for
-    * symmetric/in hops, budgets, or a frontier past `frontierGate`) —
-    * fall back to the distributed [[Traversals.ssspTree]]. */
+    * rows, source parent = itself. `None` = refused: an unindexed store
+    * for symmetric/in hops (`buildInEdgeIndex`), a level past the store's
+    * fixed serving budgets (`compact()`), or a frontier past
+    * [[DurableStore.ServeLocalKeyBudget]] — fall back to the distributed
+    * [[Traversals.ssspTree]]. */
   def servedSsspTree(v: Int, src: Long, maxDepth: Int,
-                     symmetric: Boolean = true,
-                     frontierGate: Int = 1 << 16,
-                     localFileBudget: Int = ServeLocalFileBudget,
-                     localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[(Long, Long, Long)]] = {
+                     symmetric: Boolean = true): Option[Seq[(Long, Long, Long)]] = {
     val m = manifest(v)
     // the manifest refusals hold even when no level expands (maxDepth 0)
-    if (route(m, Array.emptyLongArray, out = true, in = symmetric).isLeft) return None
+    if (route(m, Array.emptyLongArray, out = true, in = symmetric, gated = false).isLeft)
+      return None
     val dist = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     dist.put(src, 0L); parent.put(src, src)
@@ -826,8 +805,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     while (fr.nonEmpty && d < maxDepth) {
       d += 1
       val keys = fr.sorted
-      val r = route(m, keys, out = true, in = symmetric, localFileBudget,
-        localDeltaRowBudget).getOrElse(return None)
+      val r = route(m, keys, out = true, in = symmetric, gated = true)
+        .getOrElse(return None)
       // both directions map the FILTER side to the parent: out tasks
       // filter src (parent) and emit dst (child); in tasks filter dst
       // (parent, a frontier vertex) and emit src (child)
@@ -843,7 +822,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         }
         i += 1
       }
-      if (levelPar.size > frontierGate) return None
+      if (levelPar.size > ServeLocalKeyBudget) return None
       val next = new Array[Long](levelPar.size)
       var j = 0
       val it = levelPar.entrySet().iterator()
@@ -875,18 +854,16 @@ class DurableStore(val spark: SparkSession, val root: String,
     * backward side in-edges (same semantics as
     * [[Traversals.bidirectionalDist]], property-pinned equal).
     *
-    * Outer None = REFUSED, not unreachable: unindexed store, a hop past
-    * the file/delta/tombstone budgets, or a frontier outgrowing
-    * `frontierGate` (the pushed-IN key list and driver maps must stay
-    * serving-sized — a hub-scale frontier belongs to the distributed
-    * [[Traversals.bidirectionalDist]], the documented fallback). Inner
-    * Some(d) = exact distance; inner None = no path within `maxDepth`. */
+    * Outer None = REFUSED, not unreachable: unindexed store
+    * (`buildInEdgeIndex`), a hop past the store's fixed file/delta/
+    * tombstone budgets (`compact()`), or a frontier outgrowing
+    * [[DurableStore.ServeLocalKeyBudget]] (the pushed-IN key list and
+    * driver maps must stay serving-sized — a hub-scale frontier belongs
+    * to the distributed [[Traversals.bidirectionalDist]], the documented
+    * fallback). Inner Some(d) = exact distance; inner None = no path
+    * within `maxDepth`. */
   def servedShortestPath(v: Int, from: Long, to: Long, maxDepth: Int = 6,
-                         symmetric: Boolean = true,
-                         frontierGate: Int = 1 << 16,
-                         localFileBudget: Int = ServeLocalFileBudget,
-                         localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Option[Long]] = {
+                         symmetric: Boolean = true): Option[Option[Long]] = {
     val m = manifest(v)
     if (m.mbounds.isEmpty) return None // backward / symmetric hops need the mirror
     if (from == to) return Some(Some(0L))
@@ -908,8 +885,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         if (expandA) { dA += 1; (frA, visA, visB, dA) }
         else { dB += 1; (frB, visB, visA, dB) }
       val raw = servedHopM(m, fr,
-        out = symmetric || expandA, in = symmetric || !expandA,
-        localFileBudget, localDeltaRowBudget) match {
+        out = symmetric || expandA, in = symmetric || !expandA) match {
         case None => return None // budget refusal → distributed fallback
         case Some(a) => a
       }
@@ -917,7 +893,7 @@ class DurableStore(val spark: SparkSession, val root: String,
       // MIN meet across the whole new level (first level with any meet
       // yields the exact distance — same argument as bidirectionalDist)
       val next = raw.distinct.filterNot(vis.containsKey(_))
-      if (next.length > frontierGate) return None
+      if (next.length > ServeLocalKeyBudget) return None
       var best = Long.MaxValue
       next.foreach { n =>
         vis.put(n, java.lang.Long.valueOf(d))
@@ -934,20 +910,19 @@ class DurableStore(val spark: SparkSession, val root: String,
   }
 
   /** The driver-local legs of the served FoF: hop 1's neighbor ids (when
-    * the store is indexed) and, when the hop-2 routed read fits the
-    * local budgets, the full driver-computed top-k. Shared by
+    * the store is indexed) and, when the mids fit
+    * [[DurableStore.ServeLocalKeyBudget]] and the hop-2 routed read fits
+    * the serving budgets, the full driver-computed top-k. Shared by
     * [[servedFof]] (wraps as a LocalRelation / falls back to the one-job
     * form) and [[servedFofRows]] (returns the rows bare). */
-  private def servedFofLocalM(m: Manifest, v0: Long, topK: Int,
-                              maxFanout: Int, localFileBudget: Int,
-                              localDeltaRowBudget: Long)
+  private def servedFofLocalM(m: Manifest, v0: Long, topK: Int)
       : (Option[Array[Long]], Option[Seq[(Long, Long)]]) = {
     // hop 1 is one key and not budget-gated; a refusal — unindexed store,
     // or more live tombstones than the driver index holds in the
     // millisecond class — leaves both hops to the job forms, whose
     // readStore anti-joins at scale
     val v0a = Array(v0)
-    val localHop1 = route(m, v0a, out = true, in = true).toOption
+    val localHop1 = route(m, v0a, out = true, in = true, gated = false).toOption
       .map(r => scanLongs(r.tasks, v0a, r.tombs)._2.distinct)
     // hop 2 DRIVER-LOCAL (VERDICT r10 next #1) — the last Spark job on
     // the serving path, removed for low-fanout vertices: push the mids
@@ -959,12 +934,11 @@ class DurableStore(val spark: SparkSession, val root: String,
     // regime belongs to. Row-equal to the job form by construction
     // ([[Queries.fofTopKLocal]] is the same aggregate), property-pinned
     // in PropertySpec.
-    val localTopK = localHop1.filter(_.length <= maxFanout).flatMap { mids =>
+    val localTopK = localHop1.filter(_.length <= ServeLocalKeyBudget).flatMap { mids =>
       if (mids.isEmpty) Some(Nil)
       else {
         val keys = mids.sorted
-        route(m, keys, out = true, in = true, localFileBudget, localDeltaRowBudget)
-          .toOption.map(r =>
+        route(m, keys, out = true, in = true, gated = true).toOption.map(r =>
             Queries.fofTopKLocal(scanLongs(r.tasks, keys, r.tombs)._2, v0, topK))
       }
     }
@@ -1152,8 +1126,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * is FIRST-TOUCH auto-filled from the defaults (reference
     * GraphChiDatabase.scala:888-899: auto-fill on first touch), which
     * then requires every non-id column to carry a default. Shares
-    * [[updateEdgeDelta]]'s primitive-schema guard; lifting the two
-    * together is a separate change. */
+    * [[updateEdgeDelta]]'s primitive-schema guard ([[requirePrimitive]]).
+    * Throws [[route]]'s refusal (IllegalArgumentException) past the
+    * vertex-row tombstone budget — `compact()` first. */
   def setVertexProp(fromV: Int, id: Long, column: String, value: Column): Int =
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       require(m.vschemaDDL.nonEmpty,
@@ -1161,31 +1136,17 @@ class DurableStore(val spark: SparkSession, val root: String,
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.vschemaDDL)
       require(schema.fieldNames.contains(column),
         s"setVertexProp: no column '$column' in ${schema.fieldNames.mkString(", ")}")
-      locally {
-        import org.apache.spark.sql.types._
-        val bad = schema.fields.filterNot(f => f.dataType match {
-          case LongType | IntegerType | DoubleType | FloatType |
-               BooleanType | StringType => true
-          case _ => false
-        })
-        require(bad.isEmpty, "setVertexProp supports primitive " +
-          s"long/int/double/float/boolean/string columns; unsupported: " +
-          s"${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}" +
-          " — use updateAllVertices (copy-on-write) for this schema")
-      }
-      // LOUD budget gate (not the served path's silent None): past it,
-      // servedVertexRowM's refusal would read as "vertex absent" and
-      // first-touch would overwrite a live row with defaults
-      require(m.vtombs.map(_.rows).sum <= ServeTombRowBudget,
-        s"$root v${m.version}: ${m.vtombs.map(_.rows).sum} live vertex-row " +
-          s"tombstones exceed the serving budget ($ServeTombRowBudget) — " +
-          "compact() before point-setting vertex properties")
-      val baseDf = servedVertexRowM(m, id) match {
-        case Some(row) =>
+      requirePrimitive(schema, "setVertexProp", "updateAllVertices (copy-on-write)")
+      // LOUD refusal (not the served path's silent None): read as
+      // "vertex absent", first-touch would overwrite a live row with
+      // defaults
+      val baseDf = servedVertexRowsM(m, Array(id), gated = false) match {
+        case Left(reason) => throw new IllegalArgumentException(reason)
+        case Right(Seq(row)) =>
           import scala.jdk.CollectionConverters._
           spark.createDataFrame(
             Seq(org.apache.spark.sql.Row.fromSeq(row)).asJava, schema)
-        case None =>
+        case Right(_) =>
           val defMap = m.vdefaults.toMap
           val missing = schema.fieldNames
             .filter(c => c != "id" && !defMap.contains(c))
@@ -1213,21 +1174,20 @@ class DurableStore(val spark: SparkSession, val root: String,
     * ascending id order; rows carry the Spark external types of the
     * manifest vertex schema, in its column order — the values and classes
     * `readVertices(v).collect()` returns for the same ids. None past the
-    * serving budgets or on a store without a vertex table. */
-  def servedVertexRows(v: Int, ids: Array[Long],
-                       localFileBudget: Int = ServeLocalFileBudget,
-                       localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
-      : Option[Seq[Seq[Any]]] =
-    servedVertexRowsM(manifest(v), ids, localFileBudget, localDeltaRowBudget)
+    * store's fixed serving budgets (`compact()` folds the upserts and
+    * row tombstones) or on a store without a vertex table. */
+  def servedVertexRows(v: Int, ids: Array[Long]): Option[Seq[Seq[Any]]] =
+    servedVertexRowsM(manifest(v), ids, gated = true).toOption
 
-  private def servedVertexRowsM(m: Manifest, ids: Array[Long],
-                                localFileBudget: Int,
-                                localDeltaRowBudget: Long)
-      : Option[Seq[Seq[Any]]] = {
-    if (ids.isEmpty) return if (m.vschemaDDL.isEmpty) None else Some(Nil)
+  /** The vertex reads: [[route]]'s refusal, or the present rows. The kill
+    * floor resolves ids deleted by a vertex-row tombstone; `gated` is off
+    * for the single-id get, which no file or delta-row budget bounds. */
+  private def servedVertexRowsM(m: Manifest, ids: Array[Long], gated: Boolean)
+      : Either[String, Seq[Seq[Any]]] = {
+    if (ids.isEmpty && m.vschemaDDL.nonEmpty) return Right(Nil)
     val sorted = ids.distinct.sorted
-    val r = route(m, sorted, out = true, in = false, localFileBudget,
-      localDeltaRowBudget, vertex = true).getOrElse(return None)
+    val r = route(m, sorted, out = true, in = false, gated, vertex = true)
+      .fold(reason => return Left(reason), identity)
     val idIdx = rowRead(m.vschemaDDL)._1.fieldNames.indexOf("id")
     val floor = vTombKillFloor(r.tombs)
     val out = scala.collection.mutable.Map[Long, Seq[Any]]()
@@ -1248,13 +1208,15 @@ class DurableStore(val spark: SparkSession, val root: String,
         }
       }
     }
-    Some(sorted.toSeq.flatMap(out.get))
+    Right(sorted.toSeq.flatMap(out.get))
   }
 
-  /** Single-id convenience of [[servedVertexRows]]: the vertex point GET
-    * of P6 in the serving class, with the same typed row. */
+  /** Single-id form of [[servedVertexRows]]: the vertex point GET of P6
+    * in the serving class, with the same typed row. No file or delta-row
+    * budget; None when the id is absent or past the vertex-row tombstone
+    * budget. */
   def servedVertexRow(v: Int, id: Long): Option[Seq[Any]] =
-    servedVertexRowM(manifest(v), id)
+    servedVertexRowsM(manifest(v), Array(id), gated = false).toOption.flatMap(_.headOption)
 
   /** N4 SERVED ⋈ VERTEX COLUMNS (VERDICT r13 missing #3): the composed
     * serving join the reference's `QueryResult.join(vertexColumn)`
@@ -1272,10 +1234,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * expected deployment; a non-foldable default refuses with None and
     * the one-job join takes over). `vcols` empty selects every non-id
     * vertex column. Budget discipline of both constituent reads. */
-  def servedOutRowsWithVertex(v: Int, keys: Array[Long],
-                              vcols: Seq[String] = Nil,
-                              localFileBudget: Int = ServeLocalFileBudget,
-                              localDeltaRowBudget: Long = ServeLocalDeltaRowBudget)
+  def servedOutRowsWithVertex(v: Int, keys: Array[Long], vcols: Seq[String] = Nil)
       : Option[Seq[Seq[Any]]] = {
     val m = manifest(v)
     if (m.schemaDDL.isEmpty || m.vschemaDDL.isEmpty) return None
@@ -1303,13 +1262,11 @@ class DurableStore(val spark: SparkSession, val root: String,
         } catch { case scala.util.control.NonFatal(_) => return None }
       }
     }
-    val edgeRows = servedRowsM(m, keys, out = true, localFileBudget,
-      localDeltaRowBudget).getOrElse(return None)
+    val edgeRows = servedRowsM(m, keys, out = true).getOrElse(return None)
     val eschema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDDL)
     val dstIdx = eschema.fieldNames.indexOf("dst")
     val dsts = edgeRows.map(_(dstIdx).asInstanceOf[Long]).distinct.toArray
-    val vrows = servedVertexRowsM(m, dsts, localFileBudget,
-      localDeltaRowBudget).getOrElse(return None)
+    val vrows = servedVertexRowsM(m, dsts, gated = true).getOrElse(return None)
     val vIdIdx = vschema.fieldNames.indexOf("id")
     val vmap = vrows.iterator.map(r => r(vIdIdx).asInstanceOf[Long] -> r).toMap
     val colIdx = cols.map(c => vschema.fieldNames.indexOf(c))
@@ -1321,19 +1278,6 @@ class DurableStore(val spark: SparkSession, val root: String,
         case None => er ++ cols.map(_ => null)
       }
     })
-  }
-
-  private def servedVertexRowM(m: Manifest, id: Long): Option[Seq[Any]] = {
-    // Option contract: REFUSE (never throw) past the tombstone-row
-    // budget, like every other served path — callers that must
-    // distinguish "absent row" from "refused" gate the budget first
-    // (setVertexProp does, loudly). One id: no file budget.
-    val ids = Array(id)
-    val r = route(m, ids, out = true, in = false, vertex = true).getOrElse(return None)
-    val floor = vTombKillFloor(r.tombs).apply(id)
-    r.tasks.filter(_.file.seq >= floor).groupBy(_.file.seq).toSeq.sortBy(-_._1)
-      .iterator.map { case (_, ts) => scanRows(ts, ids, Nil, m.vschemaDDL) }
-      .collectFirst { case rows if rows.nonEmpty => rows.head }
   }
 
   /** P9 on the durable substrate: rewrite every vertex's `column` with
@@ -1621,24 +1565,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       require(m.schemaDDL.nonEmpty, "updateEdgeDelta needs a manifest schema")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDDL)
-      // primitive columns only — not for the read, which (pointRowsM)
-      // decodes every atomic type: lifting the guard turns perfbench
-      // serve_mixed's `update` ops (a TINYINT schema) from a ~3 ms
-      // refusal into a commit plus compactIfPressured, which lowers that
-      // workload's ops_per_s by design — a separate change with a
-      // re-measured baseline
-      locally {
-        import org.apache.spark.sql.types._
-        val bad = schema.fields.filterNot(f => f.dataType match {
-          case LongType | IntegerType | DoubleType | FloatType |
-               BooleanType | StringType => true
-          case _ => false
-        })
-        require(bad.isEmpty, "updateEdgeDelta supports primitive " +
-          s"long/int/double/float/boolean/string columns; unsupported: " +
-          s"${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}" +
-          " — use the copy-on-write updateEdges for this schema")
-      }
+      requirePrimitive(schema, "updateEdgeDelta", "the copy-on-write updateEdges")
       val rows = pointRowsM(m, src, out = true)
       val dstIdx = schema.fieldNames.indexOf("dst")
       val hit = rows.filter(r => r(dstIdx).asInstanceOf[Long] == dst)
@@ -1669,6 +1596,27 @@ class DurableStore(val spark: SparkSession, val root: String,
             src, src, dst, dst, 1)))
       }
     })
+
+  /** The primitive-schema guard of the driver-side point mutations
+    * [[updateEdgeDelta]] and [[setVertexProp]]: every column long, int,
+    * double, float, boolean or string, else `op` refuses and names its
+    * copy-on-write `alternative`. Not needed by the read, which decodes
+    * every atomic type: lifting it turns perfbench serve_mixed's `update`
+    * ops (a TINYINT schema) from a ~3 ms refusal into a commit plus
+    * compactIfPressured, which lowers that workload's ops_per_s by
+    * design — a separate change with a re-measured baseline. */
+  private def requirePrimitive(schema: StructType, op: String, alternative: String): Unit = {
+    import org.apache.spark.sql.types._
+    val bad = schema.fields.filterNot(f => f.dataType match {
+      case LongType | IntegerType | DoubleType | FloatType |
+           BooleanType | StringType => true
+      case _ => false
+    })
+    require(bad.isEmpty, s"$op supports primitive " +
+      s"long/int/double/float/boolean/string columns; unsupported: " +
+      s"${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}" +
+      s" — use $alternative for this schema")
+  }
 
   /** LSM compaction: route delta rows to their buckets, merge each hit
     * bucket's files with its delta rows into fresh (src, dst)-sorted
@@ -2218,20 +2166,26 @@ object DurableStore {
   /** Target rows per written file: rewrite parallelism = rows / this. */
   val DefaultTargetFileRows: Long = 1L << 20
 
-  /** Driver-local hop-2 budgets ([[DurableStore.servedFof]]): a local
-    * read costs one open per hit file plus the key-covering PAGES
+  /** The store's FIXED serving budgets for a multi-key driver read — no
+    * served method takes them as arguments; [[DurableStore.route]] reads
+    * them (through the handle's `serveBudget`) and refuses past them. A
+    * local read costs one open per hit file plus the key-covering PAGES
     * (sorted files page-prune by column index), so the honest budget is
     * the file count — not rows, which page pruning makes irrelevant on
     * sorted files. Unsorted deltas can't page-prune and decode in full,
     * so they budget by rows. 256 files ≈ a few hundred ms worst case on
-    * the bounded pool; past that the one-job form wins. */
+    * the bounded pool. Past either budget a served read answers None (the
+    * registry arms and [[DurableStore.servedFof]] fall to the one-job
+    * distributed read); `compact()` folds deltas and small files back
+    * under them. */
   val ServeLocalFileBudget: Int = 256
   val ServeLocalDeltaRowBudget: Long = 1L << 20
-  /** Key-count cap for the ZERO-JOB driver hop-2 regime: up to this many
-    * mids travel as one pushed parquet `in` predicate per routed file
-    * (the r11 envelope); past it the one-job form with
-    * [[graft.Queries.keyFilter]]'s broadcast-semi-join middle regime
-    * takes over. */
+  /** Key-count cap of the ZERO-JOB driver regime: up to this many FoF mids
+    * or BFS frontier ids travel as one pushed parquet `in` predicate per
+    * routed file (the r11 envelope). Past it the served FoF takes the
+    * one-job form with [[graft.Queries.keyFilter]]'s broadcast-semi-join
+    * middle regime, and the served shortest path / SSSP tree refuse to
+    * their distributed forms. */
   val ServeLocalKeyBudget: Int = 1 << 16
 
   /** Result schema of the served FoF — built once; schema construction
@@ -2350,7 +2304,7 @@ object DurableStore {
     * would otherwise re-pay every footer parse at once, a p99 latency
     * sawtooth). Values are immutable; a racing duplicate load is
     * harmless, so the lock is only held for the map operation itself. */
-  private final class LruCache[V](cap: Int) {
+  private[graft] final class LruCache[V](cap: Int) {
     // STRIPED 16 ways (review r12): access-ordered gets mutate LRU state,
     // so even cache hits need the stripe lock — one global lock would
     // serialize every concurrent serving client on the hottest path.
@@ -2380,19 +2334,24 @@ object DurableStore {
     * and with pages OS-cached that fixed cost IS most of a hop's wall.
     * Entries for vacuumed files age out of the LRU naturally — they are
     * simply never routed to again. */
-  /** Sized via `-Dgraft.footerCacheMax` so the overflow probe
-    * (ServeLatencyProbe `overflow`) can force eviction pressure without
-    * an 8k-file fixture; production default 8192. */
-  private val FooterCacheMax: Int =
-    Integer.getInteger("graft.footerCacheMax", 8192)
+  private val FooterCacheMax: Int = 8192
   private val footerCache =
     new LruCache[org.apache.parquet.hadoop.metadata.ParquetMetadata](FooterCacheMax)
 
-  /** Serving-side budget for driver-resident tombstones: past this many
-    * live tombstone rows the zero-job serving paths fall back to the
-    * distributed form (which anti-joins at scale) — a store carrying a
-    * million un-compacted point deletes has earned a job. */
+  /** Serving-side budget for driver-resident tombstones, fixed like the
+    * file and delta-row budgets: past this many live tombstone rows of a
+    * side, every served read of that side — single-key ones included —
+    * refuses: the Option paths answer None, the point reads and
+    * [[DurableStore.setVertexProp]] throw. A store carrying a million
+    * un-compacted point deletes has earned a `compact()` (which reclaims
+    * them) or the distributed read (which anti-joins at scale). */
   val ServeTombRowBudget: Long = 1L << 20
+
+  /** The three budgets [[DurableStore.route]] gates on: sorted files,
+    * delta rows, live tombstone rows. */
+  private[graft] final case class ServeBudget(files: Int, deltaRows: Long, tombRows: Long)
+  private val DefaultServeBudget =
+    ServeBudget(ServeLocalFileBudget, ServeLocalDeltaRowBudget, ServeTombRowBudget)
 
   /** One tombstone, loaded driver-side for record-level serving
     * exclusion: vertex tombstones as a sorted id array, edge tombstones

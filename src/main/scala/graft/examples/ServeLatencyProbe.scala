@@ -20,20 +20,10 @@ import org.apache.spark.sql.SparkSession
   *              same legs as total minus the DataFrame wrap/collect)
   *
   * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.examples.ServeLatencyProbe
-  *          [iters] [clients] [overflow]
-  * `overflow` caps the footer cache at 8 entries — far below what one
-  * serving call touches — so EVERY call runs under eviction pressure:
-  * the leg that shows the LRU's single-eldest eviction keeps p99 in
-  * class where the old clear-on-full cache paid a full re-parse cliff
-  * (VERDICT r11 wrong #3).
+  *          [iters] [clients]
   */
 object ServeLatencyProbe {
-  def main(args0: Array[String]): Unit = {
-    val overflow = args0.contains("overflow")
-    // must land before the first DurableStore touch (the cache cap is
-    // read once at object init)
-    if (overflow) System.setProperty("graft.footerCacheMax", "8")
-    val args = args0.filterNot(_ == "overflow")
+  def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = args.headOption.map(_.toInt).getOrElse(30)
     val spark = SparkSession.builder().master("local[32]")
@@ -143,8 +133,7 @@ object ServeLatencyProbe {
     val qps = clients * perClient / wallS
     println(f"[serve] concurrent $clients%d clients x $perClient: " +
       f"${qps}%.1f qps, median ${medianMs(all)}%.1f ms, " +
-      f"p99 ${p99Ms(all)}%.1f ms, empty=${bad.get()}" +
-      (if (overflow) "  [footerCacheMax=8 — permanent eviction pressure]" else ""))
+      f"p99 ${p99Ms(all)}%.1f ms, empty=${bad.get()}")
     spark.stop()
   }
 

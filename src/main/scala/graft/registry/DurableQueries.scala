@@ -117,18 +117,17 @@ object DurableQueries {
     new DurableStore(s, st.root)
 
   // ---- served-or-job arms (VERDICT r13 wrong #1): every served registry
-  // entry degrades to its routed ONE-JOB distributed form on a budget
-  // refusal instead of erroring — the q5s/q6s fallback protocol applied
-  // uniformly. The helpers take the serving budgets so Round14Spec can
-  // FORCE the refusal arm (budget 0) and pin it row-equal to the served
-  // answer; the registry entries call them with the defaults. ----
+  // entry degrades to its routed ONE-JOB distributed form when the served
+  // read refuses — past the store's fixed serving budgets (`compact()`
+  // brings it back under them) or on a store without the side it needs —
+  // instead of erroring: the q5s/q6s fallback protocol applied uniformly.
+  // ServedReadSpec forces the refusal arm with a handle whose budgets are
+  // 0 and pins it row-equal to the served answer. ----
 
   /** n3s arm: zero-job multi-key hop, else the pruned distributed read. */
   private[graft] def outNeighborsServedOrJob(s: SparkSession, st: DurableStore,
-      v: Int, keys: Array[Long],
-      fileBudget: Int = DurableStore.ServeLocalFileBudget)
-      : org.apache.spark.sql.DataFrame =
-    st.servedOutNeighbors(v, keys, localFileBudget = fileBudget) match {
+      v: Int, keys: Array[Long]): org.apache.spark.sql.DataFrame =
+    st.servedOutNeighbors(v, keys) match {
       case Some(dsts) =>
         import s.implicits._
         dsts.toSeq.toDF("dst")
@@ -140,10 +139,8 @@ object DurableQueries {
   /** n4s arm: zero-job full-row value join, else the distributed read
     * (both in store-schema column order). */
   private[graft] def outRowsServedOrJob(s: SparkSession, st: DurableStore,
-      v: Int, keys: Array[Long],
-      fileBudget: Int = DurableStore.ServeLocalFileBudget)
-      : org.apache.spark.sql.DataFrame =
-    st.servedOutRows(v, keys, localFileBudget = fileBudget) match {
+      v: Int, keys: Array[Long]): org.apache.spark.sql.DataFrame =
+    st.servedOutRows(v, keys) match {
       case Some(rows) =>
         val schema = org.apache.spark.sql.types.StructType
           .fromDDL(st.manifest(v).schemaDDL)
@@ -157,10 +154,8 @@ object DurableQueries {
   /** n6s arm: zero-job counted degrees, else one job over the pruned
     * store scan (absent ids report (0, 0) on both arms). */
   private[graft] def degreesServedOrJob(s: SparkSession, st: DurableStore,
-      v: Int, keys: Array[Long],
-      fileBudget: Int = DurableStore.ServeLocalFileBudget)
-      : org.apache.spark.sql.DataFrame =
-    st.servedDegrees(v, keys, localFileBudget = fileBudget) match {
+      v: Int, keys: Array[Long]): org.apache.spark.sql.DataFrame =
+    st.servedDegrees(v, keys) match {
       case Some(rows) =>
         import s.implicits._
         rows.toDF("id", "out_deg", "in_deg")
@@ -181,17 +176,15 @@ object DurableQueries {
     * resolved side-table (collected — the caller holds rows either
     * way). Ascending id, store vertex-schema column order on both. */
   private[graft] def vertexRowsServedOrJob(s: SparkSession, st: DurableStore,
-      v: Int, ids: Array[Long],
-      fileBudget: Int = DurableStore.ServeLocalFileBudget): Seq[Seq[Any]] =
-    st.servedVertexRows(v, ids, localFileBudget = fileBudget).getOrElse(
+      v: Int, ids: Array[Long]): Seq[Seq[Any]] =
+    st.servedVertexRows(v, ids).getOrElse(
       st.readVertices(v).filter(col("id").isin(ids.toSeq: _*))
         .orderBy("id").collect().toSeq.map(_.toSeq))
 
   /** n4sv arm: the composed zero-job (edge rows ⋈ dst vertex columns)
     * serving join, else the distributed left join it is row-equal to. */
   private[graft] def outRowsWithVertexServedOrJob(s: SparkSession,
-      st: DurableStore, v: Int, keys: Array[Long], vcols: Seq[String],
-      fileBudget: Int = DurableStore.ServeLocalFileBudget)
+      st: DurableStore, v: Int, keys: Array[Long], vcols: Seq[String])
       : org.apache.spark.sql.DataFrame = {
     val vs = org.apache.spark.sql.types.StructType
       .fromDDL(st.manifest(v).vschemaDDL)
@@ -199,8 +192,7 @@ object DurableQueries {
     // schema and the fallback projection always agree (review r14)
     val cols =
       if (vcols.nonEmpty) vcols else vs.fieldNames.filterNot(_ == "id").toSeq
-    st.servedOutRowsWithVertex(v, keys, cols,
-        localFileBudget = fileBudget) match {
+    st.servedOutRowsWithVertex(v, keys, cols) match {
       case Some(rows) =>
         val es = org.apache.spark.sql.types.StructType
           .fromDDL(st.manifest(v).schemaDDL)

@@ -633,55 +633,6 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(plain.servedOutNeighbors(1, keys).nonEmpty)
   }
 
-  test("servedShortestPath == BFS model over the symmetric (and directed) view") {
-    val st = freshMirrored(base: _*)
-    val v2 = st.append(1, edges((10L, 17L), (11L, 30L)))
-    val v3 = st.deleteEdgeTombstone(v2, 1L, 10L)
-    // model BFS on the collected edge list at v3
-    val pairs = st.read(v3).select("src", "dst").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def bfs(adj: Map[Long, Seq[Long]], from: Long, to: Long, maxD: Int): Option[Long] = {
-      var vis = Map(from -> 0L); var fr = Seq(from); var d = 0L
-      while (fr.nonEmpty && d < maxD && !vis.contains(to)) {
-        d += 1
-        val nxt = fr.flatMap(adj.getOrElse(_, Nil)).distinct.filterNot(vis.contains)
-        nxt.foreach(n => vis += n -> d); fr = nxt
-      }
-      vis.get(to)
-    }
-    val symAdj = (pairs ++ pairs.map(_.swap)).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val dirAdj = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val verts = (pairs.map(_._1) ++ pairs.map(_._2)).distinct.sorted
-    for (f <- verts; t <- verts) {
-      val served = st.servedShortestPath(v3, f, t, maxDepth = 6)
-      assert(served.isDefined, s"served BFS refused on a tiny store ($f -> $t)")
-      assert(served.get == bfs(symAdj, f, t, 6), s"sym $f -> $t")
-      val servedDir = st.servedShortestPath(v3, f, t, maxDepth = 6, symmetric = false)
-      assert(servedDir.get == bfs(dirAdj, f, t, 6), s"directed $f -> $t")
-    }
-    // unreachable within depth → inner None; unindexed store → outer None
-    assert(st.servedShortestPath(v3, verts.head, 999999L, maxDepth = 3)
-      .contains(None))
-    assert(fresh(base: _*).servedShortestPath(1, 1L, 5L).isEmpty)
-  }
-
-  test("servedSsspTree == Traversals.ssspTree (min-parent), deltas + tombstones crossed") {
-    val st = freshMirrored(base: _*)
-    val v2 = st.append(1, edges((10L, 17L), (11L, 30L)))
-    val v3 = st.deleteEdgeTombstone(v2, 1L, 10L)
-    val e = st.read(v3).select("src", "dst")
-    val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-    for (srcV <- Seq(1L, 9L, 30L); depth <- Seq(1, 3, 6)) {
-      val served = st.servedSsspTree(v3, srcV, depth).get.toSet
-      val from = spark.range(1).select(lit(srcV).as("id"))
-      val expect = Traversals.ssspTree(sym, from, depth)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(served == expect, s"src=$srcV depth=$depth")
-    }
-    // unindexed stores refuse the symmetric walk (needs the mirror)
-    assert(fresh(base: _*).servedSsspTree(1, 1L, 3).isEmpty)
-  }
-
   test("adopt rejects a wrong/stale mirrorDir by metadata alone") {
     // ADVICE r11: a subset/stale mirror silently corrupts every in-edge
     // read — adoption must refuse it from footer stats (rows + envelope)

@@ -117,9 +117,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val st = DurableStore.create(spark, edges,
       java.nio.file.Files.createTempDirectory("graft-hub").toString,
       numBuckets = 4, withInEdgeIndex = true)
-    // localFileBudget = 0 forces past the zero-job regime, so the ONE-JOB
+    // a file budget of 0 forces past the zero-job regime, so the ONE-JOB
     // middle regime is what plans (hop 1 still arrives driver-computed)
-    val served = st.servedFof(1, 1L, localFileBudget = 0)
+    val served = TestSpark.budgeted(st, files = 0).servedFof(1, 1L)
     val got = served.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val plan = collectAll(served.queryExecution.executedPlan)
     val semis = plan.collect {
@@ -150,8 +150,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // budgets forced to zero: this pins the ONE-JOB fallback form (the
     // default path on this fixture is the zero-job driver-local hop 2,
     // which has no scans to pin — see the zero-jobs test below)
-    val served = st.servedFof(vm, st.minEndpoint(vm).get,
-      localFileBudget = 0, localDeltaRowBudget = 0)
+    val served = TestSpark.budgeted(st, files = 0, deltaRows = 0)
+      .servedFof(vm, st.minEndpoint(vm).get)
     served.collect()
     val scans = collectAll(served.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec =>

@@ -75,8 +75,7 @@ class PropertySpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       // budgets forced to zero: the one-job hop-2 FALLBACK must produce
       // the same rows (the local path is a pure physical variant)
-      val servedJob = st.servedFof(1, v0,
-          localFileBudget = 0, localDeltaRowBudget = 0)
+      val servedJob = TestSpark.budgeted(st, files = 0, deltaRows = 0).servedFof(1, v0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       // unindexed store: the two-job fallback (distributed hop 1, full
       // -view reverse hop) must produce the same rows

@@ -106,29 +106,6 @@ class Round13Spec extends AnyFunSuite {
     assert(got == model.toMap)
   }
 
-  test("servedShortestPath budget refusal falls back to the distributed " +
-       "bidirectional BFS with the same answer") {
-    val base = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 4L), (1L, 9L))
-    val st = DurableStore.create(spark, edges(base: _*),
-      Files.createTempDirectory("graft-r13-q5s").toString, numBuckets = 2,
-      withInEdgeIndex = true)
-    // budget 0 forces the refusal regime (the q5s registry entry's
-    // fallback arm — VERDICT r12 wrong #1)
-    assert(st.servedShortestPath(1, 1L, 4L, maxDepth = 4,
-      localFileBudget = 0).isEmpty)
-    val served = st.servedShortestPath(1, 1L, 4L, maxDepth = 4)
-      .flatten.getOrElse(sys.error("unreachable"))
-    val e = st.read(1).select("src", "dst")
-    val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-    val s = spark
-    val dist = Traversals.bidirectionalDist(sym,
-      s.range(1).select(lit(1L).as("id")),
-      s.range(1).select(lit(4L).as("id")), maxDepth = 4)._1
-      .head().getLong(0)
-    assert(dist == served)
-    assert(served == 2L) // 1 -> 9 -> 4 beats 1 -> 2 -> 3 -> 4
-  }
-
   test("interleaved compact and CDC commits on a linearHistory store: " +
        "conflicts surface, retries win, zero lost / double-applied batches") {
     // The reference's merger takes the DB lock (GraphChiDatabase.scala:622);

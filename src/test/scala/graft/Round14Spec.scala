@@ -150,10 +150,10 @@ class Round14Spec extends AnyFunSuite {
     assert(served.toSet == expect,
       s"served $served vs distributed $expect")
     // budget 0 forces the refusal arm of the registry helper — same rows
-    assert(st.servedOutRowsWithVertex(v1, keys, Seq("name", "score"),
-      localFileBudget = 0).isEmpty)
+    val st0 = TestSpark.budgeted(st, files = 0)
+    assert(st0.servedOutRowsWithVertex(v1, keys, Seq("name", "score")).isEmpty)
     val fb = registry.DurableQueries.outRowsWithVertexServedOrJob(
-      spark, st, v1, keys, Seq("name", "score"), fileBudget = 0)
+      spark, st0, v1, keys, Seq("name", "score"))
       .collect().map(_.toSeq).toSet
     assert(fb == expect, "fallback arm disagrees with the distributed join")
     // NULL vertex cells fill from foldable defaults on both arms: vertex
@@ -166,49 +166,6 @@ class Round14Spec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(s2.toSet == d2, s"default fill mismatch: $s2 vs $d2")
     assert(s2.exists(_.last == "auto"), "NULL cell did not fill from default")
-  }
-
-  // ---- budget-refusal fallbacks for the served entries (wrong #1) ----
-
-  test("every served registry arm degrades to its one-job distributed " +
-       "form at budget 0 with row-equal results") {
-    val root = Files.createTempDirectory("graft-r14-fb").toString
-    DurableStore.create(spark,
-      edges((1L, 2L), (1L, 3L), (2L, 3L), (4L, 2L), (4L, 5L)), root,
-      numBuckets = 2, withInEdgeIndex = true)
-    val st = new DurableStore(spark, root)
-    val v = st.setVertexTable(1,
-      props((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)),
-      defaults = Map("name" -> "'auto'", "score" -> "0"))
-    val keys = Array(1L, 4L)
-    import registry.DurableQueries._
-    // n3s: dsts of the key set (repeats kept)
-    assert(st.servedOutNeighbors(v, keys, localFileBudget = 0).isEmpty)
-    val n3Served = outNeighborsServedOrJob(spark, st, v, keys)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val n3Fb = outNeighborsServedOrJob(spark, st, v, keys, fileBudget = 0)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(n3Served == Seq(2L, 2L, 3L, 5L) && n3Fb == n3Served)
-    // n4s: full edge rows
-    assert(st.servedOutRows(v, keys, localFileBudget = 0).isEmpty)
-    val n4Served = outRowsServedOrJob(spark, st, v, keys)
-      .collect().map(_.toSeq).toSet
-    val n4Fb = outRowsServedOrJob(spark, st, v, keys, fileBudget = 0)
-      .collect().map(_.toSeq).toSet
-    assert(n4Served.nonEmpty && n4Fb == n4Served)
-    // n6s: (out, in) degrees incl. an absent id reporting (0, 0)
-    assert(st.servedDegrees(v, Array(2L, 7L), localFileBudget = 0).isEmpty)
-    val n6Served = degreesServedOrJob(spark, st, v, Array(2L, 7L))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val n6Fb = degreesServedOrJob(spark, st, v, Array(2L, 7L), fileBudget = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(n6Served == Set((2L, 1L, 2L), (7L, 0L, 0L)) && n6Fb == n6Served)
-    // p6b/s22: vertex getMany rows, ascending id
-    assert(st.servedVertexRows(v, Array(1L, 3L), localFileBudget = 0).isEmpty)
-    val pServed = vertexRowsServedOrJob(spark, st, v, Array(1L, 3L))
-    val pFb = vertexRowsServedOrJob(spark, st, v, Array(1L, 3L), fileBudget = 0)
-    assert(pServed == Seq(Seq(1L, "a", 10L), Seq(3L, "c", 30L)) &&
-      pFb == pServed)
   }
 
   // ---- object-store commit protocol (VERDICT r13 missing #1) ----

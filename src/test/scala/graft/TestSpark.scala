@@ -41,6 +41,19 @@ object TestSpark {
   def sameTypedRows(got: Seq[Seq[Any]], want: Seq[Seq[Any]]): Boolean =
     got.map(typedKey).sorted == want.map(typedKey).sorted
 
+  /** A second handle on `st`'s root whose serving budgets are the given
+    * ones (each defaults to the store's fixed budget): the handle the
+    * budget-refusal specs drive, since no served method takes a budget. */
+  def budgeted(st: DurableStore,
+               files: Int = DurableStore.ServeLocalFileBudget,
+               deltaRows: Long = DurableStore.ServeLocalDeltaRowBudget,
+               tombRows: Long = DurableStore.ServeTombRowBudget): DurableStore =
+    new DurableStore(st.spark, st.root, st.commit, st.linearHistory, st.autoCompact,
+        st.autoTombRowTrigger, st.autoDeltaRowTrigger, st.autoLiveFileTrigger) {
+      override private[graft] def serveBudget =
+        DurableStore.ServeBudget(files, deltaRows, tombRows)
+    }
+
   /** Collect a two-column (id-ish, value-ish) frame into a sorted map. */
   def toMap2(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
