@@ -1098,8 +1098,19 @@ class DurableStore(val spark: SparkSession, val root: String,
     * batch is a no-op (returns `fromV`) — the vertex twin of [[append]]'s
     * streaming-replay guard, tracked separately ([[Manifest.vLastBatch]])
     * so an edge stream and a vertex stream on the same store never
-    * suppress each other's batches. */
+    * suppress each other's batches. Costs one Spark job (the delta
+    * write, [[writeDelta]]); a batch with no rows commits nothing and
+    * returns `fromV`. */
   def upsertVertices(fromV: Int, rows: DataFrame, batchId: Long = -1L): Int =
+    commitVertices(fromV, "upsertVertices", batchId)(_ => rows)
+
+  /** The vertex point-mutation commit behind [[upsertVertices]] and
+    * [[setVertexProp]]: the rows `batch` builds from the base manifest
+    * become ONE vertex upsert delta at the next vertex sequence number,
+    * with the `batchId` watermark ([[Manifest.vLastBatch]]). Commits
+    * nothing when the batch was already applied or has no rows. */
+  private def commitVertices(fromV: Int, op: String, batchId: Long)(
+      batch: Manifest => DataFrame): Int =
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       require(m.vschemaDDL.nonEmpty,
         s"$root: no vertex side-table (setVertexTable first)")
@@ -1107,15 +1118,11 @@ class DurableStore(val spark: SparkSession, val root: String,
       else {
         // normalize to manifest column ORDER and TYPES (lossless-only —
         // see [[normalizeBatch]]), same discipline as the edge delta paths
-        val ordered = normalizeBatch(rows, m.vschemaDDL, "upsertVertices")
-        val b = ordered.localCheckpoint(true)
-        if (b.isEmpty) None
-        else {
-          val vsq = m.vMaxSeq + 1
-          val f = writeVertexDelta(b, s"$root/v$nv/vdelta").map(_.copy(seq = vsq))
-          Some(m.copy(vfiles = m.vfiles ++ f,
-            vLastBatch = math.max(m.vLastBatch, batchId)))
-        }
+        val f = writeDelta(normalizeBatch(batch(m), m.vschemaDDL, op),
+          s"$root/v$nv/vdelta", "id", "id").map(_.copy(seq = m.vMaxSeq + 1))
+        if (f.isEmpty) None
+        else Some(m.copy(vfiles = m.vfiles ++ f,
+          vLastBatch = math.max(m.vLastBatch, batchId)))
       }
     })
 
@@ -1128,11 +1135,10 @@ class DurableStore(val spark: SparkSession, val root: String,
     * then requires every non-id column to carry a default. Shares
     * [[updateEdgeDelta]]'s primitive-schema guard ([[requirePrimitive]]).
     * Throws [[route]]'s refusal (IllegalArgumentException) past the
-    * vertex-row tombstone budget — `compact()` first. */
+    * vertex-row tombstone budget — `compact()` first. Costs one Spark
+    * job: the one-row upsert through [[upsertVertices]]' commit. */
   def setVertexProp(fromV: Int, id: Long, column: String, value: Column): Int =
-    maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
-      require(m.vschemaDDL.nonEmpty,
-        s"$root: no vertex side-table (setVertexTable first)")
+    commitVertices(fromV, "setVertexProp", -1L) { m =>
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.vschemaDDL)
       require(schema.fieldNames.contains(column),
         s"setVertexProp: no column '$column' in ${schema.fieldNames.mkString(", ")}")
@@ -1156,14 +1162,8 @@ class DurableStore(val spark: SparkSession, val root: String,
             (if (f.name == "id") lit(id) else expr(defMap(f.name)))
               .cast(f.dataType).as(f.name)).toSeq: _*)
       }
-      val vsq = m.vMaxSeq + 1
-      val updated = baseDf
-        .withColumn(column, value.cast(schema(column).dataType))
-        .select(schema.fieldNames.map(col).toSeq: _*)
-      val f = writeVertexDelta(updated.localCheckpoint(true),
-        s"$root/v$nv/vdelta").map(_.copy(seq = vsq))
-      Some(m.copy(vfiles = m.vfiles ++ f))
-    })
+      baseDf.withColumn(column, value.cast(schema(column).dataType))
+    }
 
   /** P6 getMany SERVED: latest row per requested id, decoded on the
     * driver from the manifest-routed vertex files — ZERO Spark jobs,
@@ -1373,40 +1373,16 @@ class DurableStore(val spark: SparkSession, val root: String,
     (bounds, fs)
   }
 
-  /** Write one unsorted vertex upsert delta with its id stats. */
-  private def writeVertexDelta(df: DataFrame, dir: String): Seq[StoreFile] = {
-    if (df.isEmpty) return Nil
-    df.write.mode(SaveMode.Overwrite).parquet(dir)
-    val st = df.agg(min("id"), max("id"), count(lit(1))).head()
-    Seq(StoreFile(-1, dir, st.getLong(0), st.getLong(1), st.getLong(0),
-      st.getLong(1), sorted = false, st.getLong(2)))
-  }
-
   /** S1 durable append: the batch becomes one delta file set (stats
     * recorded, rows untouched) — the flush of one EdgeBuffer. O(batch),
     * no base files rewritten. A non-negative `batchId` makes the append
     * IDEMPOTENT: a batch at or below the manifest's last committed id is
     * a no-op (returns `fromV`), so streaming retries / checkpoint
-    * replays cannot double-append (ADVICE r3). */
+    * replays cannot double-append (ADVICE r3). Costs one Spark job (the
+    * delta write, [[writeDelta]]); a batch with no rows commits nothing
+    * and returns `fromV`. */
   def append(fromV: Int, batch: DataFrame, batchId: Long = -1L): Int =
-    maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
-      if (batchId >= 0 && m.lastBatch >= batchId) None
-      else {
-        // normalize the batch to MANIFEST column order and TYPES before
-        // writing the delta (ADVICE r10), with the lossless-only guard
-        // (see [[normalizeBatch]])
-        val ordered =
-          if (m.schemaDDL.isEmpty) batch
-          else normalizeBatch(batch, m.schemaDDL, "append")
-        val b = ordered.localCheckpoint(true)
-        // appended rows sit ABOVE every live tombstone in mutation order:
-        // a delete-then-re-add sequence keeps the re-added edge
-        val sq = m.maxSeq + 1
-        val f = writeDelta(b, s"$root/v$nv/delta").map(_.copy(seq = sq))
-        Some(m.copy(files = m.files ++ f,
-          lastBatch = math.max(m.lastBatch, batchId)))
-      }
-    })
+    commitEdges(fromV, "append", batchId)(_ => (Some(batch), Nil))
 
   /** P3 durable updateEdge: conditional column rewrite, copy-on-write on
     * the files whose src range can contain `srcKey` (all files when no
@@ -1442,19 +1418,10 @@ class DurableStore(val spark: SparkSession, val root: String,
     * tombstone. An edge re-added by a LATER [[append]] is NOT deleted
     * (sequence-number scoping) — delete-then-re-add behaves as online
     * stores must. Use [[deleteEdges]] for arbitrary-predicate deletes;
-    * this is the point form. */
+    * this is the point form. Costs no Spark job. */
   def deleteEdgesTombstone(fromV: Int, pairs: Seq[(Long, Long)]): Int = {
     require(pairs.nonEmpty, "deleteEdgesTombstone needs at least one (src, dst) pair")
-    maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
-      val sq = m.maxSeq + 1
-      val dir = Paths.get(root, s"v$nv")
-      Files.createDirectories(dir)
-      val p = dir.resolve(tombName(vertex = false)).toString
-      writeTombParquet(serveConf, p, vertex = false, pairs)
-      Some(m.copy(tombs = m.tombs :+ TombFile(sq, vertex = false, p,
-        pairs.map(_._1).min, pairs.map(_._1).max,
-        pairs.map(_._2).min, pairs.map(_._2).max, pairs.size)))
-    })
+    commitEdges(fromV, "deleteEdgesTombstone", -1L)(_ => (None, pairs))
   }
 
   /** Single-pair convenience of [[deleteEdgesTombstone]]. */
@@ -1470,27 +1437,34 @@ class DurableStore(val spark: SparkSession, val root: String,
     * tiny driver-written tombstone in the VERTEX sequence ordering, so a
     * later [[upsertVertices]]/[[setVertexProp]] resurrects the row
     * (first-touch auto-fill, not the dead values) and [[compact]]
-    * physically reclaims both tombstone kinds. */
+    * physically reclaims both tombstone kinds. Costs no Spark job. */
   def deleteVerticesTombstone(fromV: Int, vs: Seq[Long]): Int = {
     require(vs.nonEmpty, "deleteVerticesTombstone needs at least one vertex")
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
-      val sq = m.maxSeq + 1
-      val dir = Paths.get(root, s"v$nv")
-      Files.createDirectories(dir)
-      val p = dir.resolve(tombName(vertex = true)).toString
-      writeTombParquet(serveConf, p, vertex = true, vs.map(v => (v, v)))
+      val t = writeTomb(nv, m.maxSeq + 1, vertex = true, vs.map(v => (v, v)))
       // the vertex-ROW tombstone shares the SAME parquet file (identical
       // id list) — only the manifest entry differs (vertex seq ordering);
       // vacuum's keep-path set and the kind-prefixed index cache both
       // handle the shared path
       val vt =
         if (m.vschemaDDL.isEmpty) Nil
-        else Seq(TombFile(m.vMaxSeq + 1, vertex = true, p,
-          vs.min, vs.max, vs.min, vs.max, vs.size))
-      Some(m.copy(tombs = m.tombs :+ TombFile(sq, vertex = true, p,
-        vs.min, vs.max, vs.min, vs.max, vs.size),
-        vtombs = m.vtombs ++ vt))
+        else Seq(t.copy(seq = m.vMaxSeq + 1))
+      Some(m.copy(tombs = m.tombs :+ t, vtombs = m.vtombs ++ vt))
     })
+  }
+
+  /** THE tombstone writer: one tombstone file of `rows` under `v<nv>`,
+    * written ON THE DRIVER (no Spark job), and its manifest entry at
+    * `seq` with the rows' (src, dst) envelope and count — a vertex
+    * tombstone's rows are (v, v). */
+  private def writeTomb(nv: Int, seq: Long, vertex: Boolean,
+                        rows: Seq[(Long, Long)]): TombFile = {
+    val dir = Paths.get(root, s"v$nv")
+    Files.createDirectories(dir)
+    val p = dir.resolve(tombName(vertex)).toString
+    writeTombParquet(serveConf, p, vertex, rows)
+    TombFile(seq, vertex, p, rows.map(_._1).min, rows.map(_._1).max,
+      rows.map(_._2).min, rows.map(_._2).max, rows.size)
   }
 
   /** Single-vertex convenience of [[deleteVerticesTombstone]]. */
@@ -1508,43 +1482,48 @@ class DurableStore(val spark: SparkSession, val root: String,
     * key upstream); a non-negative `batchId` at or below the manifest
     * watermark makes the WHOLE batch a no-op, so streaming replays
     * cannot double-append or re-kill a later re-insert. Delete sets are
-    * driver-resident point ops — loudly gated, not silently spilled. */
+    * driver-resident point ops — loudly gated, not silently spilled.
+    * Costs one Spark job (the delta write, [[writeDelta]]) and none for
+    * the tombstone; a batch with no rows and no deletes commits nothing
+    * and returns `fromV`. */
   def applyCdc(fromV: Int, inserts: DataFrame, deletePairs: Seq[(Long, Long)],
                batchId: Long = -1L): Int = {
     require(deletePairs.size <= (1 << 20),
       s"applyCdc: ${deletePairs.size} deletes in one batch — a bulk delete " +
         "belongs on deleteEdges (copy-on-write), not the CDC point path")
+    commitEdges(fromV, "applyCdc", batchId)(_ => (Some(inserts), deletePairs))
+  }
+
+  /** The edge point-mutation commit behind [[append]], [[applyCdc]],
+    * [[deleteEdgesTombstone]] and [[updateEdgeDelta]], with
+    * [[applyCdc]]'s semantics: `batch` builds (inserts, delete pairs)
+    * from the base manifest, and ONE commit lands at most one delta of
+    * the inserts and one tombstone of the pairs at the next sequence
+    * number, with the `batchId` watermark. Appended rows sit ABOVE every
+    * live tombstone: a delete-then-re-add sequence keeps the re-added
+    * edge. Commits nothing for a replayed batch or one with no rows and
+    * no pairs. */
+  private def commitEdges(fromV: Int, op: String, batchId: Long)(
+      batch: Manifest => (Option[DataFrame], Seq[(Long, Long)])): Int =
     maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
       if (batchId >= 0 && m.lastBatch >= batchId) None
       else {
+        val (inserts, deletes) = batch(m)
         val sq = m.maxSeq + 1
+        // normalize to MANIFEST column order and TYPES before writing the
+        // delta (ADVICE r10), with the lossless-only guard
+        // (see [[normalizeBatch]]); the delta goes first, so a refused
+        // batch has written nothing
+        val delta = inserts.toSeq.flatMap(df => writeDelta(
+          if (m.schemaDDL.isEmpty) df else normalizeBatch(df, m.schemaDDL, op),
+          s"$root/v$nv/delta").map(_.copy(seq = sq)))
         val tombs =
-          if (deletePairs.isEmpty) Nil
-          else {
-            val dir = Paths.get(root, s"v$nv")
-            Files.createDirectories(dir)
-            val p = dir.resolve(tombName(vertex = false)).toString
-            writeTombParquet(serveConf, p, vertex = false, deletePairs)
-            Seq(TombFile(sq, vertex = false, p,
-              deletePairs.map(_._1).min, deletePairs.map(_._1).max,
-              deletePairs.map(_._2).min, deletePairs.map(_._2).max,
-              deletePairs.size))
-          }
-        val delta =
-          if (inserts.isEmpty) Nil
-          else {
-            val ordered =
-              if (m.schemaDDL.isEmpty) inserts
-              else normalizeBatch(inserts, m.schemaDDL, "applyCdc")
-            writeDelta(ordered.localCheckpoint(true), s"$root/v$nv/delta")
-              .map(_.copy(seq = sq))
-          }
+          if (deletes.isEmpty) Nil else Seq(writeTomb(nv, sq, vertex = false, deletes))
         if (tombs.isEmpty && delta.isEmpty) None
         else Some(m.copy(files = m.files ++ delta, tombs = m.tombs ++ tombs,
           lastBatch = math.max(m.lastBatch, batchId)))
       }
     })
-  }
 
   /** P3 in the reference's latency class: point UPDATE as tombstone +
     * re-append in ONE atomic commit (the reference's setEdgeValue writes
@@ -1559,17 +1538,19 @@ class DurableStore(val spark: SparkSession, val root: String,
     * ever shows the edge missing. No base file is rewritten: at 1B this
     * is the append class (~1 s), where the COW [[updateEdges]] rewrites
     * multi-million-row files. Returns `fromV` unchanged when the pair
-    * has no rows. Arbitrary-predicate updates stay on [[updateEdges]]. */
+    * has no rows. Arbitrary-predicate updates stay on [[updateEdges]].
+    * Costs one Spark job (the delta write, [[writeDelta]]); the
+    * tombstone and the point read cost none. */
   def updateEdgeDelta(fromV: Int, src: Long, dst: Long,
                       column: String, value: Column): Int =
-    maybeAutoCompact(commitOpt(fromV) { (m, nv) =>
+    commitEdges(fromV, "updateEdgeDelta", -1L) { m =>
       require(m.schemaDDL.nonEmpty, "updateEdgeDelta needs a manifest schema")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDDL)
       requirePrimitive(schema, "updateEdgeDelta", "the copy-on-write updateEdges")
       val rows = pointRowsM(m, src, out = true)
       val dstIdx = schema.fieldNames.indexOf("dst")
       val hit = rows.filter(r => r(dstIdx).asInstanceOf[Long] == dst)
-      if (hit.isEmpty) None
+      if (hit.isEmpty) (None, Nil)
       else {
         import scala.jdk.CollectionConverters._
         // CAST to the column's declared type (the COW path coerces via
@@ -1582,20 +1563,11 @@ class DurableStore(val spark: SparkSession, val root: String,
         val updated = spark.createDataFrame(
           hit.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, schema)
           .withColumn(column, value.cast(schema(column).dataType))
-          .select(schema.fieldNames.map(col).toSeq: _*)
-        val sq = m.maxSeq + 1
-        val dir = Paths.get(root, s"v$nv")
-        Files.createDirectories(dir)
-        val tp = dir.resolve(tombName(vertex = false)).toString
-        writeTombParquet(serveConf, tp, vertex = false, Seq((src, dst)))
-        val delta = writeDelta(updated.localCheckpoint(true), s"$root/v$nv/delta")
-          .map(_.copy(seq = sq))
-        Some(m.copy(
-          files = m.files ++ delta,
-          tombs = m.tombs :+ TombFile(sq, vertex = false, tp,
-            src, src, dst, dst, 1)))
+        // the pair's tombstone and its updated rows share one sequence
+        // number: the tombstone kills only the older copies
+        (Some(updated), Seq((src, dst)))
       }
-    })
+    }
 
   /** The primitive-schema guard of the driver-side point mutations
     * [[updateEdgeDelta]] and [[setVertexProp]]: every column long, int,
@@ -1883,8 +1855,8 @@ class DurableStore(val spark: SparkSession, val root: String,
         s"$root/v$nv", DefaultTargetFileRows).map(_.copy(seq = sq))
     val outDelta =
       if (hitDelta.isEmpty) Nil
-      else writeDelta(f(readStore(m, hitDelta)).localCheckpoint(true),
-        s"$root/v$nv/delta").map(_.copy(seq = sq))
+      else writeDelta(f(readStore(m, hitDelta)), s"$root/v$nv/delta")
+        .map(_.copy(seq = sq))
     val (mHit, mKeep) = m.mirror.partition(touch)
     val outMirror =
       if (mHit.isEmpty) Nil
@@ -1946,11 +1918,14 @@ class DurableStore(val spark: SparkSession, val root: String,
         // the first try
         var nv = nextVersion(root)
         while (!commit.claimVersion(root, nv)) nv += 1
-        // contract: a build returning None has written NOTHING under
-        // v<nv> (all no-op paths bail before their writes) — so the
-        // claim can be handed back for the next writer to reuse
-        build(m, nv) match {
-          case None => commit.releaseVersion(root, nv); fromV
+        // a build that returned None (a no-op) or threw (a refused
+        // mutation) hands its claim back for the next writer when nothing
+        // exists under v<nv> (a zero-row delta deletes itself); one that
+        // left files behind keeps it, so the number is never reused
+        def release(): Unit = if (unusedVersionDir(nv)) commit.releaseVersion(root, nv)
+        val out = try build(m, nv) catch { case e: Throwable => release(); throw e }
+        out match {
+          case None => release(); fromV
           case Some(built) =>
             writeManifest(root, built.copy(version = nv))
             commit.casPointer(root, if (linearHistory) fromV else cur, nv)
@@ -1958,6 +1933,12 @@ class DurableStore(val spark: SparkSession, val root: String,
         }
       }
     }
+
+  /** True when nothing exists under `root/v<nv>`; an empty directory
+    * (what a zero-row delta write leaves) is removed. */
+  private def unusedVersionDir(nv: Int): Boolean =
+    try { Files.deleteIfExists(Paths.get(root, s"v$nv")); true }
+    catch { case _: java.nio.file.DirectoryNotEmptyException => false }
 }
 
 object DurableStore {
@@ -1998,9 +1979,9 @@ object DurableStore {
 
     /** Release an unused claim: called when a commit turns out to be a
       * NO-OP (build returned None — idempotent replays, empty batches)
-      * so replay-heavy streams don't leak one claim object per skipped
-      * batch. Safe because a None build writes nothing under v<N> (the
-      * commitOpt contract). Best-effort — a crash between claim and
+      * or its build threw (a refused mutation), so replay-heavy streams
+      * don't leak one claim object per skipped batch. Called only when
+      * nothing exists under v<N>. Best-effort — a crash between claim and
       * release leaks one harmless number gap. Default no-op. */
     def releaseVersion(root: String, v: Int): Unit = ()
 
@@ -2719,44 +2700,50 @@ object DurableStore {
     statsForDir(spark, dir)
   }
 
-  /** Per-file stats of a freshly written `_b=N`-partitioned dir: the
-    * (c0, c1) min/max and row count of every data file, as StoreFile
-    * (src*, dst*) ranges. From the parquet FOOTERS ([[statsFromFooters]],
-    * r15 — a driver-side metadata read replacing a full Spark read-back
-    * scan of the output), or from one grouped scan when the footers
-    * cannot answer. */
+  /** Per-file stats of a freshly written dir: the (c0, c1) min/max and
+    * row count of every data file, as StoreFile (src*, dst*) ranges —
+    * sorted bucket files of a `_b=N`-partitioned dir, or (`bucketed =
+    * false`) the unsorted part files of a delta dir, bucket -1. From the
+    * parquet FOOTERS ([[statsFromFooters]], r15 — a driver-side metadata
+    * read replacing a full Spark read-back scan of the output), or from
+    * one grouped scan when the footers cannot answer. */
   private[graft] def statsForDir(spark: SparkSession, dir: String,
-                                 c0: String = "src", c1: String = "dst"): Seq[StoreFile] =
-    statsFromFooters(spark, dir, c0, c1).getOrElse(
+                                 c0: String = "src", c1: String = "dst",
+                                 bucketed: Boolean = true): Seq[StoreFile] =
+    statsFromFooters(spark, dir, c0, c1, bucketed).getOrElse(
       spark.read.parquet(dir)
-        .groupBy(col("_b").cast("int").as("b"), input_file_name().as("path"))
+        .groupBy((if (bucketed) col("_b").cast("int") else lit(-1)).as("b"),
+          input_file_name().as("path"))
         .agg(min(c0), max(c0), min(c1), max(c1), count(lit(1)))
         .collect().toSeq
         .map(r => StoreFile(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), sorted = true, r.getLong(6)))
+          r.getLong(4), r.getLong(5), sorted = bucketed, r.getLong(6)))
         .sortBy(f => (f.bucket, f.srcMin)))
 
-  /** The footer form of [[statsForDir]]: per `_b=N` partition dir, per
-    * data file, [[footerStats]]; files holding no rows are dropped. None
+  /** The footer form of [[statsForDir]]: per `_b=N` partition dir (or
+    * `dir` itself when not `bucketed`), per data file, [[footerStats]];
+    * files holding no rows are dropped. None
     * when a populated row group lacks a usable statistic, or when `dir`
     * is not a directory this JVM's filesystem sees (a non-local URI) —
     * the caller's scan then reads it through Hadoop, or fails loudly,
     * instead of committing a manifest with no files. Paths are emitted
     * as `file:` URIs — the same scheme input_file_name produces, so
     * manifests stay consumable by the same readers either way. */
-  private def statsFromFooters(spark: SparkSession, dir: String,
-                               c0: String, c1: String): Option[Seq[StoreFile]] = {
+  private def statsFromFooters(spark: SparkSession, dir: String, c0: String,
+                               c1: String, bucketed: Boolean): Option[Seq[StoreFile]] = {
     val rootP = Paths.get(dir)
     if (!Files.isDirectory(rootP)) return None
     val conf = spark.sessionState.newHadoopConf()
-    val partDirs = {
-      val s = Files.list(rootP)
-      try s.iterator().asScala.filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("_b=")).toSeq
-      finally s.close()
-    }
-    val files = partDirs.flatMap { pd =>
-      val b = pd.getFileName.toString.stripPrefix("_b=").toInt
+    val partDirs =
+      if (!bucketed) Seq(rootP -> -1)
+      else {
+        val s = Files.list(rootP)
+        try s.iterator().asScala.filter(p => Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("_b=")).toSeq
+          .map(p => p -> p.getFileName.toString.stripPrefix("_b=").toInt)
+        finally s.close()
+      }
+    val files = partDirs.flatMap { case (pd, b) =>
       partPaths(pd.toString).map { fp =>
         val footer = {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -2766,7 +2753,7 @@ object DurableStore {
         }
         footerStats(footer, c0, c1).map { case (rows, a0, a1, b0, b1) =>
           StoreFile(b, Paths.get(fp).toUri.toString, a0, a1, b0, b1,
-            sorted = true, rows)
+            sorted = bucketed, rows)
         }
       }
     }
@@ -2803,14 +2790,21 @@ object DurableStore {
     Some((rows, a0, a1, b0, b1))
   }
 
-  /** Write one unsorted delta file set with its stats (bucket = -1). */
-  private def writeDelta(df: DataFrame, dir: String): Seq[StoreFile] = {
-    if (df.isEmpty) return Nil
+  /** Write one unsorted delta file set (bucket = -1) in ONE Spark job —
+    * the write is the frame's only consumer, so callers need no
+    * checkpoint. Its (c0, c1) ranges and row count are summed over the
+    * written part files' footers ([[statsForDir]], which scans the files
+    * when a footer lacks a usable statistic). The edge delta ranges are
+    * (src, dst); a vertex delta carries the id range on both sides
+    * (c0 = c1 = "id"). A write with no rows deletes what it wrote and
+    * returns Nil. */
+  private def writeDelta(df: DataFrame, dir: String,
+                         c0: String = "src", c1: String = "dst"): Seq[StoreFile] = {
     df.write.mode(SaveMode.Overwrite).parquet(dir)
-    val st = df.agg(
-      min("src"), max("src"), min("dst"), max("dst"), count(lit(1))).head()
-    Seq(StoreFile(-1, dir, st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3),
-      sorted = false, st.getLong(4)))
+    val fs = statsForDir(df.sparkSession, dir, c0, c1, bucketed = false)
+    if (fs.isEmpty) { deletePath(dir); Nil }
+    else Seq(StoreFile(-1, dir, fs.map(_.srcMin).min, fs.map(_.srcMax).max,
+      fs.map(_.dstMin).min, fs.map(_.dstMax).max, sorted = false, fs.map(_.rows).sum))
   }
 
   private def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =

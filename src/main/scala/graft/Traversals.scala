@@ -58,7 +58,8 @@ object Traversals {
     * round re-scans storage instead.
     *
     * The gate is the summed FILE-SOURCE leaf size of the projection's
-    * plan (real parquet footer bytes — free and deterministic, unlike
+    * plan — DSv1 file relations and DSv2 file scans alike (the file
+    * bytes on disk — free and deterministic, unlike
     * join-output row estimates, which are multiplicative guesses), conf
     * `spark.graft.bfs.edgeResidencyMaxBytes`, default 16 GiB. Non-file
     * leaves (already-resident checkpoints) contribute nothing: their
@@ -75,6 +76,9 @@ object Traversals {
     val fileBytes = proj.queryExecution.optimizedPlan.collectLeaves().collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation.sizeInBytes
+      case org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
+          _, f: org.apache.spark.sql.execution.datasources.v2.FileScan, _, _, _) =>
+        f.fileIndex.sizeInBytes
     }.map(BigInt(_)).sum
     if (fileBytes <= gate) {
       val c = proj.localCheckpoint(true)

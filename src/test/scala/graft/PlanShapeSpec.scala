@@ -181,20 +181,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val vm = registry.DurableQueries.mirrorVersion(spark, dir)
     val v0 = st.minEndpoint(vm).get
     st.servedFof(vm, v0).collect() // warm classloading/footers untracked
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = st.servedFof(vm, v0).collect()
-      Thread.sleep(1000) // listener events post asynchronously
-      assert(rows.nonEmpty, "served FoF returned no rows on the fixture")
-      assert(jobs.get() == 0,
-        s"driver-local served FoF launched ${jobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, jobs) = TestSpark.jobsDuring(spark)(st.servedFof(vm, v0).collect())
+    assert(rows.nonEmpty, "served FoF returned no rows on the fixture")
+    assert(jobs == 0, s"driver-local served FoF launched $jobs Spark job(s)")
   }
 
   test("ADOPTED-store served FoF also runs ZERO Spark jobs (foreign-written footers)") {
@@ -204,19 +193,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val st = registry.DurableQueries.adoptedStore(spark, dir)
     val v0 = st.minEndpoint(1).get
     st.servedFof(1, v0).collect() // warm classloading/footers untracked
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = st.servedFof(1, v0).collect()
-      Thread.sleep(1000)
-      assert(rows.nonEmpty, "adopted served FoF returned no rows")
-      assert(jobs.get() == 0,
-        s"adopted-store served FoF launched ${jobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, jobs) = TestSpark.jobsDuring(spark)(st.servedFof(1, v0).collect())
+    assert(rows.nonEmpty, "adopted served FoF returned no rows")
+    assert(jobs == 0, s"adopted-store served FoF launched $jobs Spark job(s)")
   }
 }

@@ -236,66 +236,6 @@ class Round13Spec extends AnyFunSuite {
     assert(pairSet(df) == expect)
   }
 
-  test("upsertVertices batchId watermark: replay is a no-op, survives " +
-       "compaction, independent of the edge watermark") {
-    val s = spark; import s.implicits._
-    val st = DurableStore.create(spark, edges((1L, 10L)),
-      Files.createTempDirectory("graft-r13-vb").toString, numBuckets = 1)
-    val v1 = st.setVertexTable(1, Seq((1L, 7L)).toDF("id", "score"))
-    val v2 = st.upsertVertices(v1, Seq((1L, 8L)).toDF("id", "score"), batchId = 0L)
-    assert(v2 > v1)
-    // replay of batch 0: no new version
-    assert(st.upsertVertices(v2, Seq((1L, 999L)).toDF("id", "score"),
-      batchId = 0L) == v2)
-    // EDGE batch watermark is separate: edge append with batchId 0 still
-    // lands even though vertex batch 0 was applied (and vice versa)
-    val v3 = st.append(v2, edges((2L, 10L)), batchId = 0L)
-    assert(v3 > v2)
-    assert(st.upsertVertices(v3, Seq((1L, 9L)).toDF("id", "score"),
-      batchId = 1L) > v3)
-    val v4 = st.currentVersion
-    // compaction folds the deltas but PRESERVES the vertex watermark
-    val v5 = st.compact(v4)
-    assert(st.manifest(v5).vLastBatch == 1L)
-    assert(new DurableStore(spark, st.root).upsertVertices(v5,
-      Seq((1L, 999L)).toDF("id", "score"), batchId = 1L) == v5,
-      "replayed vertex batch re-committed after compaction + reopen")
-    assert(st.servedVertexRow(v5, 1L).get == Seq(1L, 9L))
-  }
-
-  test("append/applyCdc/upsertVertices normalize batch TYPES to the " +
-       "manifest schema — no parquet type fork on the served path") {
-    val s = spark; import s.implicits._
-    val st = DurableStore.create(spark, edges((1L, 10L)),
-      Files.createTempDirectory("graft-r13-cast").toString, numBuckets = 1)
-    // an INT-typed weight batch (narrower than the store's LONG w)
-    val intBatch = Seq((2, 10, 0, 77)).toDF("src", "dst", "etype", "w")
-    var v = st.append(1, intBatch)
-    v = st.applyCdc(v, Seq((3, 11, 0, 88)).toDF("src", "dst", "etype", "w"),
-      Nil, batchId = 5L)
-    // the served (positional, per-file-schema) decode reads both deltas
-    // as INT64 — a type fork would crash or misread here
-    assert(st.pointReadLocal(v, 2L).map(_.last) == Seq(77L))
-    assert(st.pointReadLocal(v, 3L).map(_.last) == Seq(88L))
-    assert(st.read(v).filter(col("src") >= 2L).select("w").collect()
-      .map(_.getLong(0)).toSet == Set(77L, 88L))
-    // vertex side: int ids/scores cast up to the LONG vertex schema
-    val v1 = st.setVertexTable(v, Seq((1L, 5L)).toDF("id", "score"))
-    val v2 = st.upsertVertices(v1, Seq((2, 6)).toDF("id", "score"))
-    assert(st.servedVertexRow(v2, 2L).get == Seq(2L, 6L))
-    // only LOSSLESS casts: a string-typed column where the store says
-    // long must fail loudly, not commit silently nulled values
-    val bad = Seq(("7", 10L, 0L, 1L)).toDF("src", "dst", "etype", "w")
-    assertThrows[IllegalArgumentException] { st.append(v2, bad) }
-    // downcast (long batch into an int store column) refused too
-    val intStore = DurableStore.create(spark,
-      Seq((1L, 2L, 0, 5)).toDF("src", "dst", "etype", "w"),
-      Files.createTempDirectory("graft-r13-int").toString, numBuckets = 1)
-    assertThrows[IllegalArgumentException] {
-      intStore.append(1, Seq((3L, 4L, 0, 3L)).toDF("src", "dst", "etype", "w"))
-    }
-  }
-
   test("warmServing prefetches one footer per part file (files + mirror + " +
        "vertex side + deltas + tombstones) and serving still answers") {
     val s = spark; import s.implicits._
@@ -315,21 +255,5 @@ class Round13Spec extends AnyFunSuite {
     // serving answers normally off the warmed cache
     assert(st.pointReadLocal(v, 11L).nonEmpty)
     assert(st.servedVertexRow(v, 1L).get == Seq(1L, 5L))
-  }
-
-  test("setVertexTable resets the vertex batch watermark: a replaced " +
-       "side-table accepts a fresh stream's batch 0") {
-    val s = spark; import s.implicits._
-    val st = DurableStore.create(spark, edges((1L, 10L)),
-      Files.createTempDirectory("graft-r13-vreset").toString, numBuckets = 1)
-    val v1 = st.setVertexTable(1, Seq((1L, 7L)).toDF("id", "score"))
-    val v2 = st.upsertVertices(v1, Seq((1L, 8L)).toDF("id", "score"), batchId = 3L)
-    assert(st.manifest(v2).vLastBatch == 3L)
-    // REPLACE the side-table: batch history starts over
-    val v3 = st.setVertexTable(v2, Seq((1L, 0L)).toDF("id", "score"))
-    assert(st.manifest(v3).vLastBatch == -1L)
-    val v4 = st.upsertVertices(v3, Seq((1L, 11L)).toDF("id", "score"), batchId = 0L)
-    assert(v4 > v3, "fresh stream's batch 0 swallowed as a replay")
-    assert(st.servedVertexRow(v4, 1L).get == Seq(1L, 11L))
   }
 }

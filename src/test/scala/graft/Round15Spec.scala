@@ -45,6 +45,16 @@ class Round15Spec extends AnyFunSuite {
       val (streamed, _) = Traversals.residentEdges(proj)
       assert(logicalRddLeaves(streamed) == 0,
         "above the gate: expected the plain projection (per-round re-scan)")
+      // a DSv2 parquet scan counts its file bytes as well: streamed too
+      val v1Sources = "spark.sql.sources.useV1SourceList"
+      s.conf.set(v1Sources, "")
+      try {
+        val v2proj = s.read.parquet(s"$dir/e").select(col("src"), col("dst"))
+        assert(v2proj.queryExecution.optimizedPlan.collectLeaves().exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]))
+        assert(logicalRddLeaves(Traversals.residentEdges(v2proj)._1) == 0,
+          "DSv2 scan above the gate: expected the plain projection")
+      } finally s.conf.unset(v1Sources)
       // end-to-end: the streamed sweep returns identical rows
       val src = Seq((0L, 0L)).toDF("source", "id")
       val dStreamed = Traversals.bfsDistances(proj, src, maxDepth = 30)

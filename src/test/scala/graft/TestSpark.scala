@@ -54,6 +54,27 @@ object TestSpark {
         DurableStore.ServeBudget(files, deltaRows, tombRows)
     }
 
+  /** `f`'s value and the number of Spark jobs started while it ran: a
+    * listener counts job starts, and the listener bus is drained before
+    * the listener is added (so no earlier job's event lands in the
+    * count) and after `f` (so every event of `f`'s jobs has). */
+  def jobsDuring[A](spark: SparkSession)(f: => A): (A, Int) = {
+    import org.apache.spark.graftdev.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      ListenerDrain.drain(sc)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Collect a two-column (id-ish, value-ish) frame into a sorted map. */
   def toMap2(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
