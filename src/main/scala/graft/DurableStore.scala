@@ -120,17 +120,21 @@ class DurableStore(val spark: SparkSession, val root: String,
     * tombstone scoping, so a store holding many un-compacted CDC batches
     * plans ONE edge anti-join + two vertex anti-joins total, not one
     * join per live tombstone file — plan depth stays constant while the
-    * store waits for [[compact]]. */
+    * store waits for [[compact]].
+    *
+    * Every file — data and tombstone — is read at the schema the manifest
+    * records ([[readFiles]]), so building the frame launches no Spark job:
+    * the plan is lazy until the caller's action. */
   private def readStore(m: Manifest, files: Seq[StoreFile]): DataFrame = {
     if (files.isEmpty) return emptyLike(spark, m.schemaDDL)
     val applicable = m.tombs.filter(t => files.exists(tombHits(t, _)))
-    if (applicable.isEmpty) return readFiles(spark, files.map(_.path))
+    if (applicable.isEmpty) return readFiles(spark, files.map(_.path), m.schemaDDL)
     val seqs = files.map(_.seq).distinct
     val uniform = seqs.size == 1
     val base =
-      if (uniform) readFiles(spark, files.map(_.path))
+      if (uniform) readFiles(spark, files.map(_.path), m.schemaDDL)
       else files.groupBy(_.seq).toSeq.sortBy(_._1).map { case (sq, fs) =>
-        readFiles(spark, fs.map(_.path)).withColumn("_seq", lit(sq))
+        readFiles(spark, fs.map(_.path), m.schemaDDL).withColumn("_seq", lit(sq))
       }.reduce(_ unionByName _)
     // uniform case: every applicable tombstone is NEWER than the single
     // file seq (tombHits requires f.seq < t.seq), so scoping is constant
@@ -140,7 +144,7 @@ class DurableStore(val spark: SparkSession, val root: String,
       if (eTombs.isEmpty) base
       else {
         val rel = broadcast(eTombs.map(t =>
-          readFiles(spark, partPaths(t.path))
+          readFiles(spark, partPaths(t.path), EdgeTombDDL)
             .select(col("src").as("_tsrc"), col("dst").as("_tdst"),
               lit(t.seq).as("_tseq"))).reduce(_ unionByName _))
         base.join(rel, col("src") === col("_tsrc") &&
@@ -156,7 +160,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         // BroadcastNestedLoopJoin — O(rows × tombstone-ids) on every
         // read and compaction (review r12)
         val rel = broadcast(vTombs.map(t =>
-          readFiles(spark, partPaths(t.path))
+          readFiles(spark, partPaths(t.path), VertexTombDDL)
             .select(col("v").as("_tv"), lit(t.seq).as("_tseq")))
           .reduce(_ unionByName _))
         afterEdges
@@ -982,9 +986,8 @@ class DurableStore(val spark: SparkSession, val root: String,
         // both views stay one logical multiset
         val mf =
           if (sortedF.isEmpty) Nil
-          else writeBuckets(spark,
-            readStore(m, sortedF).withColumn("_b", bucketCol("dst", mb)),
-            s"$root/v$nv/m", targetFileRows, key = "dst", sec = "src")
+          else writeBuckets(spark, readStore(m, sortedF), s"$root/v$nv/m", mb,
+            sortedF.map(_.rows).sum, targetFileRows, key = "dst", sec = "src")
             .map(_.copy(seq = m.maxSeq))
         Some(m.copy(mbounds = mb, mirror = mf))
       }
@@ -1022,8 +1025,12 @@ class DurableStore(val spark: SparkSession, val root: String,
       require(defaults.values.forall(e => !e.contains("\t") && !e.contains("\n")),
         "setVertexTable: default expressions must be tab/newline-free " +
           "(they serialize into the TSV manifest)")
-      val (vb, vf) = writeVertexSide(props, s"$root/v$nv/vp", Nil,
-        targetFileRows, 0L, numBuckets)
+      // fused materialize+count (r15): the bounds and the write read the
+      // resident copy
+      val (d, n) = Traversals.checkpointCount(props)
+      val vb = boundsFor(d, "id", numBuckets)
+      val vf = writeBuckets(spark, d, s"$root/v$nv/vp", vb, n, targetFileRows,
+        minParts = vb.size, key = "id", sec = "id")
       // a REPLACED side-table starts its batch history over: carrying the
       // old vLastBatch would silently swallow the first batches of a
       // fresh vertex stream as replays (review r13) — stream checkpoints
@@ -1057,19 +1064,19 @@ class DurableStore(val spark: SparkSession, val root: String,
       f.seq < t.seq && t.srcMin <= f.srcMax && t.srcMax >= f.srcMin))
     val seqs = m.vfiles.map(_.seq).distinct
     if (seqs.size == 1 && applicable.isEmpty)
-      return readFiles(spark, m.vfiles.map(_.path))
+      return readFiles(spark, m.vfiles.map(_.path), m.vschemaDDL)
     val tagged0 =
       if (seqs.size == 1)
-        readFiles(spark, m.vfiles.map(_.path))
+        readFiles(spark, m.vfiles.map(_.path), m.vschemaDDL)
           .withColumn("_vseq", lit(seqs.head))
       else m.vfiles.groupBy(_.seq).toSeq.sortBy(_._1).map { case (sq, fs) =>
-        readFiles(spark, fs.map(_.path)).withColumn("_vseq", lit(sq))
+        readFiles(spark, fs.map(_.path), m.vschemaDDL).withColumn("_vseq", lit(sq))
       }.reduce(_ unionByName _)
     val tagged =
       if (applicable.isEmpty) tagged0
       else {
         val rel = broadcast(applicable.map(t =>
-          readFiles(spark, partPaths(t.path))
+          readFiles(spark, partPaths(t.path), VertexTombDDL)
             .select(col("v").as("_tv"), lit(t.seq).as("_tseq")))
           .reduce(_ unionByName _))
         tagged0.join(rel,
@@ -1296,11 +1303,12 @@ class DurableStore(val spark: SparkSession, val root: String,
       val updated = readVerticesResolved(m)
         .withColumn(column, value.cast(schema(column).dataType))
         .select(schema.fieldNames.map(col).toSeq: _*)
-      val (vb, vf) = writeVertexSide(updated, s"$root/v$nv/vp", m.vbounds,
-        targetFileRows, m.vMaxSeq)
+      val vf = writeBuckets(spark, updated, s"$root/v$nv/vp", m.vbounds,
+        m.vfiles.map(_.rows).sum, targetFileRows, minParts = m.vbounds.size,
+        key = "id", sec = "id").map(_.copy(seq = m.vMaxSeq))
       // the rewrite resolved (and thereby folded) any vertex-row
       // tombstones — the fresh base carries no dead rows to re-kill
-      Some(m.copy(vbounds = vb, vfiles = vf, vtombs = Nil))
+      Some(m.copy(vfiles = vf, vtombs = Nil))
     }
 
   /** Per-bucket vertex-side compaction fold (round 14): the edge side
@@ -1309,37 +1317,34 @@ class DurableStore(val spark: SparkSession, val root: String,
     * 50k upsert delta cost a 25M-row rewrite, and the serving p99 during
     * that window showed it (WikiVertexStreamProbe). Now only buckets a
     * delta row or live vertex tombstone can touch — routed by the id
-    * RANGE stats, the tombHits discipline: no overlap proves no matching
-    * row — are latest-wins-resolved (tomb exclusion included) and
-    * rewritten at the current vMaxSeq; untouched buckets keep their
+    * RANGE stats through [[DurableStore.cover]], the tombHits
+    * discipline: no overlap proves no matching row — are
+    * latest-wins-resolved (tomb exclusion included) and rewritten at the
+    * current vMaxSeq; untouched buckets keep their
     * files byte-identical. Bounds stay fixed (the vertex table does not
     * churn like the edge log; a full re-shard remains available through
     * [[setVertexTable]]). A delta whose id range spans every bucket
     * degrades to the full rewrite — the pre-round-14 behavior. */
   private def foldVertexSide(m: Manifest, nv: Int, targetFileRows: Long)
-      : (Seq[Long], Seq[StoreFile]) = {
+      : Seq[StoreFile] = {
     val deltas = m.vfiles.filterNot(_.sorted)
-    if (deltas.isEmpty && m.vtombs.isEmpty) return (m.vbounds, m.vfiles)
+    if (deltas.isEmpty && m.vtombs.isEmpty) return m.vfiles
     val bounds = m.vbounds
-    if (bounds.isEmpty)
-      return writeVertexSide(readVerticesResolved(m), s"$root/v$nv/vp", Nil,
-        targetFileRows, m.vMaxSeq)
-    def cover(lo: Long, hi: Long): Range =
-      bounds.count(_ < lo) to math.min(bounds.count(_ < hi), bounds.size - 1)
-    val hit = scala.collection.mutable.Set[Int]()
-    deltas.foreach(f => cover(f.srcMin, f.srcMax).foreach(hit += _))
-    m.vtombs.foreach { t =>
-      if (m.vfiles.exists(_.seq < t.seq))
-        cover(t.srcMin, t.srcMax).foreach(hit += _)
-    }
+    val hit = (deltas.flatMap(f => cover(bounds, f.srcMin, f.srcMax)) ++
+      m.vtombs.filter(t => m.vfiles.exists(_.seq < t.seq))
+        .flatMap(t => cover(bounds, t.srcMin, t.srcMax))).toSet
     val (hitBase, keep) = m.vfiles.filter(_.sorted)
       .partition(f => hit.contains(f.bucket))
     // latest-wins + tombstone resolution restricted to the hit buckets'
     // base files plus every delta (delta rows route inside `hit` by
     // construction); seq scoping rides the file entries unchanged
-    val resolved = readVerticesResolved(m.copy(vfiles = hitBase ++ deltas))
-    val (_, newFiles) = writeVertexSide(resolved, s"$root/v$nv/vp", bounds,
-      targetFileRows, m.vMaxSeq)
+    val fold = hitBase ++ deltas
+    val newFiles =
+      if (fold.isEmpty) Nil
+      else writeBuckets(spark, readVerticesResolved(m.copy(vfiles = fold)),
+        s"$root/v$nv/vp", bounds, fold.map(_.rows).sum, targetFileRows,
+        minParts = bounds.size, key = "id", sec = "id")
+        .map(_.copy(seq = m.vMaxSeq))
     // restamp the kept files to the fold's seq — manifest metadata only.
     // Buckets partition ids disjointly and the kept buckets hold no
     // delta/tombstone-affected rows, so every id is unique across the
@@ -1347,30 +1352,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     // while keeping readVerticesResolved on its single-seq fast path
     // (mixed seqs would shunt every later full scan onto the
     // window/row_number shuffle forever, review r14)
-    (bounds, keep.map(_.copy(seq = m.vMaxSeq)) ++ newFiles)
-  }
-
-  /** One id-sorted bucketed write of a vertex frame + its per-file id
-    * stats (the vertex twin of the edge writeBuckets/statsForDir pair;
-    * both StoreFile ranges carry the id envelope). */
-  private def writeVertexSide(df: DataFrame, dir: String, bounds0: Seq[Long],
-                              targetFileRows: Long, seq: Long,
-                              numBuckets: Int = 8): (Seq[Long], Seq[StoreFile]) = {
-    // fused materialize+count (r15 — the r14 create discipline applied
-    // to the vertex side): one action instead of checkpoint + count
-    val (d, total) = Traversals.checkpointCount(df)
-    val bounds = if (bounds0.nonEmpty) bounds0 else boundsFor(d, "id", numBuckets)
-    if (total == 0) return (bounds, Nil)
-    val nParts = math.max(bounds.size,
-      ((total + targetFileRows - 1) / targetFileRows).toInt)
-    d.withColumn("_b", bucketCol("id", bounds))
-      .repartitionByRange(nParts, col("_b"), col("id"))
-      .sortWithinPartitions("_b", "id")
-      .write.mode(SaveMode.Overwrite).partitionBy("_b").parquet(dir)
-    // per-file stats (see statsForDir); the vertex ranges carry the id
-    // envelope on both StoreFile sides
-    val fs = statsForDir(spark, dir, "id", "id").map(_.copy(seq = seq))
-    (bounds, fs)
+    keep.map(_.copy(seq = m.vMaxSeq)) ++ newFiles
   }
 
   /** S1 durable append: the batch becomes one delta file set (stats
@@ -1590,19 +1572,35 @@ class DurableStore(val spark: SparkSession, val root: String,
       s" — use $alternative for this schema")
   }
 
-  /** LSM compaction: route delta rows to their buckets, merge each hit
-    * bucket's files with its delta rows into fresh (src, dst)-sorted
-    * files, drop all deltas. Buckets with no delta rows are reused by
-    * reference. Any merged bucket over `maxBucketRows` is SPLIT at its
-    * median src before the write (bounds grow, untouched files re-index by
-    * metadata only) — and runs of ADJACENT buckets whose combined size has
-    * fallen under `maxBucketRows/4` are MERGED back into one (the downward
-    * half of the reference's LSM re-shard, GraphChiDatabase.scala:309-420:
-    * shardSizeLimit both caps a shard and consolidates underfull ones), so
-    * a delete-heavy history shrinks the bucket count and its tiny files
-    * are physically consolidated instead of accumulating manifest entries
-    * forever. Both directions ride the SAME single shuffled multi-task
-    * write. */
+  /** LSM compaction: merge each hit bucket's files with the delta rows
+    * that fall in it into fresh (src, dst)-sorted files, drop all deltas
+    * and reclaim every live tombstone. Buckets nothing routes to are
+    * reused by reference. Any merged bucket over `maxBucketRows` is SPLIT
+    * at its median src before the write (bounds grow, untouched files
+    * re-index by metadata only) — and runs of ADJACENT buckets whose
+    * combined size has fallen under `maxBucketRows/4` are MERGED back into
+    * one (the downward half of the reference's LSM re-shard,
+    * GraphChiDatabase.scala:309-420: shardSizeLimit both caps a shard and
+    * consolidates underfull ones), so a delete-heavy history shrinks the
+    * bucket count and its tiny files are physically consolidated instead
+    * of accumulating manifest entries forever. Both directions ride the
+    * SAME single shuffled multi-task write.
+    *
+    * The manifest routes and sizes the work; Spark is asked only what the
+    * manifest cannot tell. A bucket is hit when a delta's key envelope
+    * covers it or a live tombstone can touch one of its files — routed
+    * by [[DurableStore.cover]] and [[tombHits]], never by a job over the
+    * delta rows. A bucket's rows are bounded above by its sorted files'
+    * manifest rows plus the rows of every delta whose envelope covers it;
+    * only a hit bucket whose bound passes `maxBucketRows` pays an exact
+    * count + median aggregate, so a split is decided as an exact count
+    * would decide it. Merges read the same bounds, so a merged run never
+    * passes the limit; a bucket the bound overstates merges at the first
+    * compaction where its bound fits. The delta is
+    * read and tombstone-applied once, as one lazy checkpoint both sides
+    * consume. Per side that leaves the sorted write ([[writeBuckets]]:
+    * its range sample and its shuffle) plus the tombstone broadcasts of
+    * the rows it reads; a side nothing routes to runs no job. */
   def compact(fromV: Int,
               maxBucketRows: Long = DefaultMaxBucketRows,
               targetFileRows: Long = DefaultTargetFileRows): Int = {
@@ -1620,39 +1618,24 @@ class DurableStore(val spark: SparkSession, val root: String,
             m0.mbounds.size, maxBucketRows).isEmpty))
       return fromV
     commitOpt(fromV) { (m, nv) =>
-      val (keep, deltas) = m.files.partition(_.sorted)
-      // deltas enter tombstone-APPLIED; every bucket a tombstone can
-      // still touch is FORCED into the rewrite so its matched rows are
-      // physically dropped — then the tombstones themselves are removed
-      // from the new manifest (the reference's lazy cleanup at merge,
-      // GraphChiDatabase.scala:622-795). Buckets no tombstone overlaps
-      // are untouched (tombHits is conservative: no overlap proves no
-      // matching row).
-      // no deltas → nothing to read or checkpoint (r15): the p4b-class
-      // tombstone-only compaction used to pay an empty checkpoint job
-      val dRaw =
-        if (deltas.isEmpty) emptyLike(spark, m.schemaDDL)
-        else readStore(m, deltas).localCheckpoint(true)
-      val readClean = (fs: Seq[StoreFile]) => readStore(m, fs)
-      val sq = m.maxSeq
-      val forcedP = keep.filter(f => m.tombs.exists(tombHits(_, f)))
-        .map(_.bucket).toSet
-      val (bounds, outFiles) = mergeSide(dRaw, keep, m.bounds, "src", "dst",
-        s"$root/v$nv", maxBucketRows, targetFileRows, forcedP, readClean, sq)
+      val deltas = m.files.filterNot(_.sorted)
+      // deltas enter tombstone-APPLIED, read once for both sides: the
+      // first side's write materializes the checkpoint, the second reads
+      // it back
+      val delta =
+        if (deltas.isEmpty) None else Some(readStore(m, deltas).localCheckpoint(false))
+      val (bounds, outFiles) = mergeSide(m, delta, m.files.filter(_.sorted),
+        m.bounds, "src", "dst", s"$root/v$nv", maxBucketRows, targetFileRows)
       val (mb, mf) =
         if (m.mbounds.isEmpty) (m.mbounds, m.mirror)
-        else {
-          val forcedM = m.mirror.filter(f => m.tombs.exists(tombHits(_, f)))
-            .map(_.bucket).toSet
-          mergeSide(dRaw, m.mirror, m.mbounds, "dst", "src",
-            s"$root/v$nv/m", maxBucketRows, targetFileRows, forcedM, readClean, sq)
-        }
+        else mergeSide(m, delta, m.mirror, m.mbounds, "dst", "src",
+          s"$root/v$nv/m", maxBucketRows, targetFileRows)
       // vertex side: fold upsert deltas / row tombstones into fresh
       // id-sorted files — PER HIT BUCKET (round 14), the same discipline
       // as the edge side's mergeSide: untouched buckets keep their files
-      val (vb, vf) = foldVertexSide(m, nv, targetFileRows)
       Some(Manifest(nv, bounds, outFiles, m.lastBatch, m.schemaDDL, mb, mf,
-        Nil, vb, vf, m.vschemaDDL, m.vdefaults, m.vLastBatch))
+        Nil, m.vbounds, foldVertexSide(m, nv, targetFileRows), m.vschemaDDL,
+        m.vdefaults, m.vLastBatch))
     }
   }
 
@@ -1704,49 +1687,54 @@ class DurableStore(val spark: SparkSession, val root: String,
         autoLiveFileTrigger)
     else nv
 
-  /** One side of a compaction: bucket the delta rows under this side's
-    * `key` bounds, merge each hit bucket's files with its delta rows,
-    * split any merged bucket over `maxBucketRows` at its median key
+  /** One side of a compaction, routed and sized from `m` (see
+    * [[compact]]): merge each hit bucket's files with its delta rows,
+    * split a merged bucket over `maxBucketRows` at its median key
     * (untouched files re-index by metadata only — they split on THEIR
     * next compaction), MERGE runs of adjacent buckets whose combined
     * size fell under `maxBucketRows/4` (their files — including
     * otherwise-untouched ones — are pulled into the rewrite so tiny
     * files physically consolidate), and write everything back as ONE
-    * shuffled multi-task write. Returns the side's new (bounds, file
-    * set). */
-  private def mergeSide(delta: DataFrame, sortedFiles: Seq[StoreFile],
-                        bounds0: Seq[Long], key: String, sec: String, dir: String,
-                        maxBucketRows: Long, targetFileRows: Long,
-                        forced: Set[Int] = Set.empty,
-                        readClean: Seq[StoreFile] => DataFrame = null,
-                        outSeq: Long = 0L): (Seq[Long], Seq[StoreFile]) = {
-    val rd: Seq[StoreFile] => DataFrame =
-      if (readClean == null) fs => readFiles(spark, fs.map(_.path)) else readClean
-    // LAZY checkpoints (r15): the hit-bucket collect materializes `d` and
-    // the per-bucket aggregate materializes `merged` — the eager form
-    // paid one standalone full pass for each before its first consumer
-    val d = delta.withColumn("_b", bucketCol(key, bounds0)).localCheckpoint(false)
-    val hitBuckets =
-      d.select("_b").distinct().collect().map(_.getInt(0)).toSet ++ forced
+    * shuffled multi-task write. `delta` is the store's tombstone-applied
+    * delta rows. Returns the side's new (bounds, file set). */
+  private def mergeSide(m: Manifest, delta: Option[DataFrame],
+                        sortedFiles: Seq[StoreFile], bounds0: Seq[Long],
+                        key: String, sec: String, dir: String,
+                        maxBucketRows: Long, targetFileRows: Long)
+      : (Seq[Long], Seq[StoreFile]) = {
+    val deltas = m.files.filterNot(_.sorted)
+    val deltaCover = deltas.map(f =>
+      f.rows -> (if (key == "src") cover(bounds0, f.srcMin, f.srcMax)
+                 else cover(bounds0, f.dstMin, f.dstMax)))
+    // every bucket a tombstone can still touch is FORCED into the rewrite
+    // so its matched rows are physically dropped — then the tombstones
+    // leave the manifest (the reference's lazy cleanup at merge,
+    // GraphChiDatabase.scala:622-795)
+    val hitBuckets = deltaCover.flatMap(_._2).toSet ++
+      sortedFiles.filter(f => m.tombs.exists(tombHits(_, f))).map(_.bucket)
     val (hit, untouched0) = sortedFiles.partition(f => hitBuckets.contains(f.bucket))
-    val merged = (if (hit.isEmpty) d
-      else rd(hit)
-        .withColumn("_b", bucketCol(key, bounds0)).unionByName(d))
-      .localCheckpoint(false)
-    val perBucket = merged.groupBy("_b")
-      .agg(count(lit(1)).as("n"), percentile_approx(col(key), lit(0.5), lit(1000)).as("med"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val splits = perBucket.collect { case (b, n, med)
+    // rows per bucket, bounded above by the manifest: the sorted files'
+    // rows plus every covering delta's rows (tombstones only remove).
+    // Only a hit bucket whose bound passes the cap can split, so only
+    // those are counted exactly
+    val fileRows = bucketRows(sortedFiles, bounds0.size)
+    val bound = bounds0.indices.map(b => fileRows.getOrElse(b, 0L) +
+      deltaCover.collect { case (n, bs) if bs.contains(b) => n }.sum)
+    def frame(fs: Seq[StoreFile]): DataFrame =
+      ((if (fs.isEmpty) None else Some(readStore(m, fs))) ++ delta).reduce(_ unionByName _)
+    val big = bounds0.indices.filter(b => hitBuckets.contains(b) && bound(b) > maxBucketRows)
+    val exact =
+      if (big.isEmpty) Map.empty[Int, (Long, Long)]
+      else frame(hit).withColumn("_b", bucketCol(key, bounds0))
+        .filter(col("_b").isin(big: _*)).groupBy("_b")
+        .agg(count(lit(1)), percentile_approx(col(key), lit(0.5), lit(1000)))
+        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val splits = exact.toSeq.collect { case (b, (n, med))
       if n > maxBucketRows && med > lowerBound(bounds0, b) && med < bounds0(b) =>
       (b, med)
     }.sortBy(_._1)
-    // post-delta row count per bucket: hit buckets from the merged frame,
-    // untouched ones from manifest stats — enough to find underfull runs
-    val hitRows = perBucket.map(p => p._1 -> p._2).toMap
-    val untouchedRows = bucketRows(untouched0, bounds0.size)
-    val rowsOf = (0 until bounds0.size)
-      .map(b => hitRows.getOrElse(b, untouchedRows.getOrElse(b, 0L)))
-    val groups = mergeGroups(rowsOf.zipWithIndex.map(_.swap).toMap,
+    val groups = mergeGroups(
+      bounds0.indices.map(b => b -> exact.get(b).fold(bound(b))(_._1)).toMap,
       splits.map(_._1).toSet, bounds0.size, maxBucketRows)
     // a merged run keeps only its LAST member's upper bound (so the tail
     // bound Long.MaxValue always survives)
@@ -1760,20 +1748,12 @@ class DurableStore(val spark: SparkSession, val root: String,
     val (pulled, untouched) = untouched0.partition(f => mergeBuckets.contains(f.bucket))
     val reIdx = untouched.map(f =>
       f.copy(bucket = bounds.count(_ < bounds0(f.bucket))))
-    val rewrite = (if (pulled.isEmpty) merged
-      else merged.unionByName(rd(pulled)
-        .withColumn("_b", bucketCol(key, bounds0))))
-    // no `preMaterialized` count is passed, so writeBuckets runs its own
-    // checkpoint+count copy of the rewrite. The count is already exact on
-    // the driver — merged rows from the per-bucket aggregate, pulled rows
-    // from manifest stats (a pulled file is outside every tombstone's
-    // envelope by construction: tombstone-hit buckets are forced into
-    // `hit`, so readClean drops nothing from it) — and passing it would
-    // spare that copy; it is not wired in or measured yet.
-    val out = writeBuckets(spark,
-      (if (splits.isEmpty && removed.isEmpty) rewrite
-       else rewrite.drop("_b").withColumn("_b", bucketCol(key, bounds))),
-      dir, targetFileRows, key = key, sec = sec).map(_.copy(seq = outSeq))
+    val rewrite = hit ++ pulled
+    val out =
+      if (rewrite.isEmpty && delta.isEmpty) Nil
+      else writeBuckets(spark, frame(rewrite), dir, bounds,
+        rewrite.map(_.rows).sum + deltas.map(_.rows).sum, targetFileRows,
+        key = key, sec = sec).map(_.copy(seq = m.maxSeq))
     (bounds, reIdx ++ out)
   }
 
@@ -1850,9 +1830,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     val sq = m.maxSeq
     val outSorted =
       if (hitSorted.isEmpty) Nil
-      else writeBuckets(spark,
-        f(readStore(m, hitSorted)).withColumn("_b", bucketCol("src", m.bounds)),
-        s"$root/v$nv", DefaultTargetFileRows).map(_.copy(seq = sq))
+      else writeBuckets(spark, f(readStore(m, hitSorted)), s"$root/v$nv", m.bounds,
+        hitSorted.map(_.rows).sum, DefaultTargetFileRows).map(_.copy(seq = sq))
     val outDelta =
       if (hitDelta.isEmpty) Nil
       else writeDelta(f(readStore(m, hitDelta)), s"$root/v$nv/delta")
@@ -1860,9 +1839,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     val (mHit, mKeep) = m.mirror.partition(touch)
     val outMirror =
       if (mHit.isEmpty) Nil
-      else writeBuckets(spark,
-        f(readStore(m, mHit)).withColumn("_b", bucketCol("dst", m.mbounds)),
-        s"$root/v$nv/m", DefaultTargetFileRows, key = "dst", sec = "src")
+      else writeBuckets(spark, f(readStore(m, mHit)), s"$root/v$nv/m", m.mbounds,
+        mHit.map(_.rows).sum, DefaultTargetFileRows, key = "dst", sec = "src")
         .map(_.copy(seq = sq))
     Some(m.copy(files = keep ++ outSorted ++ outDelta, mirror = mKeep ++ outMirror))
   }
@@ -2587,6 +2565,12 @@ object DurableStore {
   private def lowerBound(bounds: Seq[Long], b: Int): Long =
     if (b == 0) Long.MinValue else bounds(b - 1)
 
+  /** The buckets under upper `bounds` that a key in [lo, hi] can fall in:
+    * how compaction routes a delta or tombstone by its manifest envelope
+    * (bucketCol's `key > bound` rule applied to both ends). */
+  private def cover(bounds: Seq[Long], lo: Long, hi: Long): Range =
+    bounds.count(_ < lo) to math.min(bounds.count(_ < hi), bounds.size - 1)
+
   /** Row count per bucket from sorted-file manifest stats. */
   private def bucketRows(files: Seq[StoreFile], nBuckets: Int): Map[Int, Long] =
     files.filter(_.sorted).groupBy(_.bucket)
@@ -2645,22 +2629,19 @@ object DurableStore {
              withInEdgeIndex: Boolean = false,
              commit: CommitProtocol = LocalFsCommit): DurableStore = {
     // one materialization of the input (r14): the fused checkpoint+count
-    // replaces the eager-checkpoint + isEmpty pair, and writeBuckets is
-    // told the frame is already resident — its own checkpoint would copy
-    // the whole edge set a second time (and a third for the mirror)
+    // replaces the eager-checkpoint + isEmpty pair; the bounds and both
+    // writes read the resident copy
     val (e, nE) = Traversals.checkpointCount(edges)
     require(nE > 0, "DurableStore.create needs a non-empty edge table")
     val bounds = boundsFor(e, "src", numBuckets)
-    val files = writeBuckets(spark, e.withColumn("_b", bucketCol("src", bounds)),
-      s"$root/v1", targetFileRows, minParts = bounds.size,
-      preMaterialized = Some(nE))
+    val files = writeBuckets(spark, e, s"$root/v1", bounds, nE, targetFileRows,
+      minParts = bounds.size)
     val (mb, mf) =
       if (!withInEdgeIndex) (Nil, Nil)
       else {
         val mbounds = boundsFor(e, "dst", numBuckets)
-        (mbounds, writeBuckets(spark, e.withColumn("_b", bucketCol("dst", mbounds)),
-          s"$root/v1/m", targetFileRows, minParts = mbounds.size, key = "dst",
-          sec = "src", preMaterialized = Some(nE)))
+        (mbounds, writeBuckets(spark, e, s"$root/v1/m", mbounds, nE,
+          targetFileRows, minParts = mbounds.size, key = "dst", sec = "src"))
       }
     Files.createDirectories(Paths.get(root, "manifest"))
     writeManifest(root, Manifest(1, bounds, files, schemaDDL = e.schema.toDDL,
@@ -2669,35 +2650,32 @@ object DurableStore {
     new DurableStore(spark, root, commit)
   }
 
-  /** The one write shape every sorted rewrite uses: range-shuffle the
-    * rows by (_b, key, sec) across `max(minParts, rows/targetFileRows)`
-    * tasks, sort within each task, write hive-partitioned by bucket.
-    * Each task's slice of a bucket lands as one (key, sec)-sorted file
-    * covering a disjoint key sub-range — a multi-file sorted bucket —
-    * and per-file stats come back from [[statsForDir]].
-    * (key, sec) = ("src", "dst") for the primary, ("dst", "src") for the
-    * in-edge mirror. */
-  private def writeBuckets(spark: SparkSession, eb: DataFrame, dir: String,
-                           targetFileRows: Long, minParts: Int = 1,
-                           key: String = "src", sec: String = "dst",
-                           preMaterialized: Option[Long] = None): Seq[StoreFile] = {
-    // `preMaterialized = Some(rowCount)`: the caller already holds `eb`'s
-    // rows resident (a cheap projection over a checkpointed frame) — skip
-    // the checkpoint copy here and reuse the known count (r14). Compaction
-    // callers keep the fused checkpoint: their input is an expensive merge
-    // that repartitionByRange would otherwise evaluate twice (sampling +
-    // shuffle).
-    val (e, total) = preMaterialized match {
-      case Some(n) => (eb, n)
-      case None => Traversals.checkpointCount(eb)
-    }
-    if (total == 0) return Nil
+  /** THE sorted writer, behind every bucket write (create, compaction,
+    * copy-on-write, the mirror build, the vertex side-table): bucket the
+    * rows under `bounds` (`_b`), range-shuffle them by (_b, key, sec)
+    * across `max(minParts, rows/targetFileRows)` tasks, sort within each
+    * task, write hive-partitioned by bucket. Each task's slice of a bucket
+    * lands as one (key, sec)-sorted file covering a disjoint key sub-range
+    * — a multi-file sorted bucket — and per-file stats come back from
+    * [[statsForDir]]. (key, sec) = ("src", "dst") for the primary,
+    * ("dst", "src") for the in-edge mirror, both with (src, dst) stats;
+    * ("id", "id") for the vertex side-table, with the id range as both
+    * stats pairs. `rows` is the caller's upper bound on the frame's rows
+    * (manifest stats, or `create`'s exact count): it sizes the task count
+    * only. The writer runs no count and keeps no copy of the frame; a
+    * frame with no rows writes no data file and returns Nil. */
+  private def writeBuckets(spark: SparkSession, df: DataFrame, dir: String,
+                           bounds: Seq[Long], rows: Long, targetFileRows: Long,
+                           minParts: Int = 1, key: String = "src",
+                           sec: String = "dst"): Seq[StoreFile] = {
     val nParts = math.max(minParts,
-      ((total + targetFileRows - 1) / targetFileRows).toInt)
-    e.repartitionByRange(nParts, col("_b"), col(key), col(sec))
-      .sortWithinPartitions("_b", key, sec)
+      ((rows + targetFileRows - 1) / targetFileRows).toInt)
+    val order = "_b" +: Seq(key, sec).distinct
+    df.withColumn("_b", bucketCol(key, bounds))
+      .repartitionByRange(nParts, order.map(col): _*)
+      .sortWithinPartitions(order.map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy("_b").parquet(dir)
-    statsForDir(spark, dir)
+    if (key == sec) statsForDir(spark, dir, key, key) else statsForDir(spark, dir)
   }
 
   /** Per-file stats of a freshly written dir: the (c0, c1) min/max and
@@ -2807,8 +2785,17 @@ object DurableStore {
       fs.map(_.dstMin).min, fs.map(_.dstMax).max, sorted = false, fs.map(_.rows).sum))
   }
 
-  private def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+  /** Read store files at `ddl`, the schema the manifest records: no
+    * schema-inference job. An empty `ddl` (a manifest written before
+    * schema lines) keeps the inferred read. */
+  private def readFiles(spark: SparkSession, paths: Seq[String], ddl: String): DataFrame =
+    if (ddl.isEmpty) spark.read.parquet(paths: _*)
+    else spark.read.schema(StructType.fromDDL(ddl)).parquet(paths: _*)
+
+  /** The fixed schemas [[writeTombParquet]] writes: edge tombstones as
+    * (src, dst) pairs, vertex tombstones as single ids. */
+  private val EdgeTombDDL = "src BIGINT, dst BIGINT"
+  private val VertexTombDDL = "v BIGINT"
 
   private def emptyLike(spark: SparkSession, schemaDDL: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -19,6 +19,13 @@ class DurableStoreSpec extends AnyFunSuite {
   private def rowSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
 
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Every row of `df` as a sorted multiset of typed keys. */
+  private def rowBag(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(r => TestSpark.typedKey(r.toSeq)).toSeq.sorted
+
   private def fresh(rows: (Long, Long)*): DurableStore =
     DurableStore.create(spark, edges(rows: _*),
       Files.createTempDirectory("graft-ds").toString, numBuckets = 4)
@@ -1129,4 +1136,280 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(left.contains(s"v${stC.currentVersion}.claim"),
       "vacuum swept the LIVE version's claim")
   }
+  test("auto-compaction soak: CDC + point deletes under serving clients, " +
+       "no budget refusal, no manual compact") {
+    // The reference's background merger (GraphChiDatabase.scala:852-882
+    // trigger, :913-938 daemon) re-expressed as the post-commit pressure
+    // hook: a delete-heavy online store with autoCompact = true must keep
+    // itself under the serving budgets WITHOUT anyone calling compact().
+    // A serving client hammers the zero-job paths the whole time and
+    // records every refusal/throw; the writer issues CDC batches, point
+    // deletes, and point updates — never compact().
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val base = (1L to 40L).map(i => (i, 100L + i % 7))
+    val root = Files.createTempDirectory("graft-r13-soak").toString
+    DurableStore.create(spark, edges(base: _*), root, numBuckets = 4,
+      withInEdgeIndex = true)
+    // tiny triggers so the pressure hook fires many times at test scale
+    val st = new DurableStore(spark, root, autoCompact = true,
+      autoTombRowTrigger = 5, autoDeltaRowTrigger = 64, autoLiveFileTrigger = 6)
+    // key 1 is never deleted — the serving client's stable probe
+    @volatile var done = false
+    val refusals = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val client = Future {
+      var serves = 0
+      while (!done) {
+        val v = st.currentVersion
+        if (st.servedOutNeighbors(v, Array(1L)).isEmpty)
+          refusals.add(s"servedOutNeighbors refused at v$v")
+        try { st.pointReadLocal(v, 1L); () }
+        catch { case e: IllegalArgumentException =>
+          refusals.add(s"pointReadLocal threw at v$v: ${e.getMessage}") }
+        serves += 1
+      }
+      serves
+    }
+    val model = scala.collection.mutable.Map[(Long, Long), Long]()
+    base.foreach { case (s0, d0) => model((s0, d0)) = s0 * 10 + d0 }
+    var v = st.currentVersion
+    var batchId = 0L
+    var nextSrc = 1000L
+    val rnd = new scala.util.Random(13)
+    (0 until 18).foreach { i =>
+      i % 3 match {
+        case 0 => // CDC batch: 2 inserts + 2 deletes of existing pairs
+          val ins = Seq((nextSrc, 100L), (nextSrc + 1, 101L))
+          nextSrc += 2
+          val dels = model.keys.toSeq.sortBy(identity)
+            .filter(_._1 != 1L).take(2)
+          v = st.applyCdc(v, edges(ins: _*), dels, batchId)
+          batchId += 1
+          dels.foreach(model.remove)
+          ins.foreach { case (s0, d0) => model((s0, d0)) = s0 * 10 + d0 }
+        case 1 => // point tombstone delete
+          val candidates = model.keys.toSeq.sortBy(identity).filter(_._1 != 1L)
+          val victim = candidates(rnd.nextInt(candidates.size))
+          v = st.deleteEdgeTombstone(v, victim._1, victim._2)
+          model.remove(victim)
+        case 2 => // point update in the append class
+          val tgt = model.keys.toSeq.sortBy(identity).head
+          v = st.updateEdgeDelta(v, tgt._1, tgt._2, "w", lit(7777L))
+          model(tgt) = 7777L
+      }
+      // the pressure hook must keep live tombstones under the SERVING
+      // budget at every committed version (trigger 5 + one commit's worth
+      // of rows stays well inside ServeTombRowBudget)
+      val m = st.manifest(st.currentVersion)
+      assert(m.tombs.map(_.rows).sum <= DurableStore.ServeTombRowBudget,
+        s"live tombstones past the serving budget at v${m.version}")
+    }
+    done = true
+    val serves = Await.result(client, 120.seconds)
+    assert(refusals.isEmpty, refusals.toArray.mkString("; "))
+    assert(serves >= 10, s"serving client only completed $serves calls")
+    // auto-compaction really ran: 6 point deletes + 6 CDC tombstone
+    // commits landed, but live tombstone ROWS stay at/under the trigger
+    // region instead of accumulating all ~18
+    val mf = st.manifest(st.currentVersion)
+    assert(mf.tombs.map(_.rows).sum <= 7,
+      s"pressure hook never compacted: ${mf.tombs.map(_.rows).sum} live tombstone rows")
+    // final state == model (values included — the update must survive
+    // every interleaved compaction)
+    val got = st.readLatest().select("src", "dst", "w").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got == model.toMap)
+  }
+
+  test("interleaved compact and CDC commits on a linearHistory store: " +
+       "conflicts surface, retries win, zero lost / double-applied batches") {
+    // The reference's merger takes the DB lock (GraphChiDatabase.scala:622);
+    // here the version pointer is the lock: with linearHistory = true any
+    // commit built on a stale snapshot raises CommitConflictException
+    // instead of silently dropping the concurrent writer's rows. Both
+    // sides retry from the new head; the batchId watermark makes a
+    // replayed CDC batch a no-op.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val base = (1L to 24L).map(i => (i, 200L + i % 5))
+    val root = Files.createTempDirectory("graft-r13-cc").toString
+    DurableStore.create(spark, edges(base: _*), root, numBuckets = 4)
+    val stA = new DurableStore(spark, root, linearHistory = true)
+    val stB = new DurableStore(spark, root, linearHistory = true)
+    val nBatches = 8
+    val batches = (0 until nBatches).map { i =>
+      val ins = Seq((500L + i, 200L)) // fresh pair per batch
+      val dels = Seq((1L + i, 200L + (1 + i) % 5)) // delete one base pair
+      (ins, dels)
+    }
+    var conflicts = 0
+    val writer = Future {
+      batches.zipWithIndex.foreach { case ((ins, dels), i) =>
+        var committed = false
+        while (!committed) {
+          val v = stA.currentVersion
+          try { stA.applyCdc(v, edges(ins: _*), dels, batchId = i.toLong); committed = true }
+          catch { case _: DurableStore.CommitConflictException =>
+            conflicts += 1 }
+        }
+      }
+    }
+    val compactor = Future {
+      var compactions = 0
+      (0 until 4).foreach { _ =>
+        var done = false
+        while (!done) {
+          val v = stB.currentVersion
+          try { stB.compact(v); compactions += 1; done = true }
+          catch { case _: DurableStore.CommitConflictException => }
+        }
+        Thread.sleep(20)
+      }
+      compactions
+    }
+    Await.result(writer, 300.seconds)
+    val compactions = Await.result(compactor, 300.seconds)
+    assert(compactions == 4)
+    // zero lost commits: every batch's insert present, every delete gone
+    val expect = (base.toSet
+      -- batches.flatMap(_._2)
+      ++ batches.flatMap(_._1))
+    assert(pairSet(stA.readLatest()) == expect)
+    // zero double-applies: replaying every batch at the head is a no-op
+    batches.zipWithIndex.foreach { case ((ins, dels), i) =>
+      val v0 = stA.currentVersion
+      assert(stA.applyCdc(v0, edges(ins: _*), dels, batchId = i.toLong) == v0,
+        s"replayed batch $i re-committed")
+    }
+  }
+
+  test("many live tombstone files coalesce into one anti-join per kind " +
+       "(plan depth constant in tombstone-file count)") {
+    val base = (1L to 30L).map(i => (i, 300L + i % 3))
+    val st = DurableStore.create(spark, edges(base: _*),
+      Files.createTempDirectory("graft-r13-coal").toString, numBuckets = 2)
+    var v = 1
+    // four separate edge-tombstone commits + two vertex-tombstone commits
+    (2L to 5L).foreach { i => v = st.deleteEdgeTombstone(v, i, 300L + i % 3) }
+    Seq(10L, 11L).foreach { w => v = st.deleteVertexTombstone(v, w) }
+    val df = st.read(v)
+    val plan = df.queryExecution.executedPlan.toString
+    // ONE edge anti-join + TWO vertex anti-joins (src side, dst side) —
+    // NOT one per live tombstone file (ADVICE r12)
+    val antiJoins = "LeftAnti".r.findAllIn(plan).size
+    assert(antiJoins == 3, s"expected 3 anti-joins, got $antiJoins:\n$plan")
+    val expect = base.toSet --
+      (2L to 5L).map(i => (i, 300L + i % 3)) --
+      base.filter(p => p._1 == 10L || p._1 == 11L || p._2 == 10L || p._2 == 11L)
+    assert(pairSet(df) == expect)
+  }
+
+  test("vertex-side compaction folds only the delta/tombstone-hit " +
+       "buckets; untouched buckets keep their files byte-identical") {
+    val root = Files.createTempDirectory("graft-r14-vfold").toString
+    DurableStore.create(spark, edges((1L, 2L)), root)
+    val st = new DurableStore(spark, root)
+    val s = spark; import s.implicits._
+    val base = (1L to 1000L).map(i => (i, s"n$i", i * 2))
+    val v1 = st.setVertexTable(1, base.toDF("id", "name", "score"),
+      numBuckets = 4)
+    val m1 = st.manifest(v1)
+    assert(m1.vbounds.size == 4)
+    // a delta confined to the FIRST bucket's id range
+    val loMax = m1.vbounds.head
+    val v2 = st.upsertVertices(v1, Seq((1L, "upd", 99L)).toDF("id", "name", "score"))
+    val v3 = st.compact(v2)
+    val m3 = st.manifest(v3)
+    assert(m3.vfiles.forall(_.sorted), "fold left deltas behind")
+    // untouched buckets (ids above the first bound) kept their exact files
+    val before = m1.vfiles.filter(_.srcMin > loMax).map(_.path).toSet
+    val after = m3.vfiles.filter(_.srcMin > loMax).map(_.path).toSet
+    assert(before.nonEmpty && before == after,
+      s"untouched vertex buckets were rewritten: $before vs $after")
+    // kept files restamp to the fold's seq (manifest-only) so the full
+    // read keeps its single-seq fast path after a partial fold
+    assert(m3.vfiles.map(_.seq).distinct.size == 1,
+      s"partial fold left mixed seqs: ${m3.vfiles.map(_.seq).distinct}")
+    assert(m3.vfiles.map(_.path).toSet != m1.vfiles.map(_.path).toSet)
+    // values resolve correctly through the partial fold
+    assert(st.readVertices(v3).filter(col("id") === 1L)
+      .head().getString(1) == "upd")
+    assert(st.readVertices(v3).count() == 1000)
+    // a vertex-row tombstone in bucket 3's range: only its bucket (plus
+    // none other) rewrites, the row is physically gone post-fold
+    val tgt = 999L
+    val v4 = st.deleteVertexTombstone(v3, tgt)
+    val v5 = st.compact(v4)
+    val m5 = st.manifest(v5)
+    assert(m5.vtombs.isEmpty && m5.tombs.isEmpty)
+    val keepLow = m3.vfiles.filter(_.srcMax < tgt - 300).map(_.path).toSet
+    assert(keepLow.subsetOf(m5.vfiles.map(_.path).toSet),
+      "tombstone fold rewrote buckets the tombstone cannot touch")
+    assert(st.readVertices(v5).count() == 999)
+    assert(st.servedVertexRow(v5, tgt).isEmpty)
+  }
+
+  test("building the distributed reads launches no Spark job: every file " +
+       "is read at the manifest schema") {
+    val s = spark; import s.implicits._
+    val st = freshMirrored(base: _*)
+    var v = st.append(1, edges((2L, 12L), (3L, 11L)))
+    v = st.deleteEdgeTombstone(v, 9L, 12L)
+    v = st.setVertexTable(v, Seq((1L, 7L), (5L, 8L), (10L, 9L)).toDF("id", "score"))
+    v = st.upsertVertices(v, Seq((2L, 3L)).toDF("id", "score"))
+    v = st.deleteVertexTombstone(v, 13L)
+    val m = st.manifest(v)
+    assert(m.files.exists(!_.sorted) && m.mirror.nonEmpty && m.vfiles.exists(!_.sorted))
+    assert(m.tombs.exists(!_.vertex) && m.tombs.exists(_.vertex) && m.vtombs.nonEmpty)
+    val (frames, jobs) = TestSpark.jobsDuring(spark)(Seq(st.read(v),
+      st.readMirror(v), st.readForSrc(v, 1L), st.readForDst(v, 10L), st.readVertices(v)))
+    assert(jobs == 0, s"building the reads launched $jobs Spark jobs")
+    frames.foreach(df => assert(!df.isEmpty))
+    assert(pairSet(frames.head) ==
+      (base.toSet ++ Set((2L, 12L), (3L, 11L)) - ((9L, 12L)) - ((13L, 10L))))
+  }
+
+  test("compaction asks Spark only what the manifest cannot tell: a job " +
+       "budget, untouched buckets keep their paths on both sides") {
+    // 40 rows over 4 buckets per side; every mutation lands in the first
+    // bucket of both sides, so the other buckets are routed away by their
+    // envelopes. maxBucketRows = 24 neither splits nor merges a bucket.
+    val many = (1L to 40L).map(i => (i, 100L + i))
+    val st = freshMirrored(many: _*)
+    var v = st.append(1, edges((2L, 101L), (3L, 102L)))
+    v = st.append(v, edges((4L, 103L)))
+    v = st.deleteEdgeTombstone(v, 5L, 105L)
+    val m = st.manifest(v)
+    assert(m.bounds.head >= 5L && m.mbounds.head >= 105L && m.bounds.size == 4,
+      s"fixture: ${m.bounds} / ${m.mbounds}")
+    val (readBefore, mirrorBefore) = (rowBag(st.read(v)), rowBag(st.readMirror(v)))
+    val (vc, jobs) = TestSpark.jobsDuring(spark)(st.compact(v, maxBucketRows = 24))
+    assert(vc > v)
+    assert(jobs <= 6, s"compaction launched $jobs Spark jobs")
+    val mc = st.manifest(vc)
+    assert(mc.files.forall(_.sorted) && mc.tombs.isEmpty)
+    assert(mc.bounds == m.bounds && mc.mbounds == m.mbounds)
+    def kept(fs: Seq[DurableStore.StoreFile]) = fs.filter(_.bucket > 0).map(_.path).toSet
+    assert(kept(m.files).nonEmpty && kept(m.files) == kept(mc.files),
+      "untouched primary buckets were rewritten")
+    assert(kept(m.mirror).nonEmpty && kept(m.mirror) == kept(mc.mirror),
+      "untouched mirror buckets were rewritten")
+    assert(rowBag(st.read(vc)) == readBefore)
+    assert(rowBag(st.readMirror(vc)) == mirrorBefore)
+  }
+
+  test("a sorted rewrite left with no rows commits no file: copy-on-write " +
+       "and compaction") {
+    val st = freshMirrored(base: _*)
+    val v2 = st.deleteEdges(1, lit(true))
+    assert(st.manifest(v2).files.isEmpty && st.manifest(v2).mirror.isEmpty)
+    assert(st.read(v2).isEmpty && st.readMirror(v2).isEmpty)
+    val v4 = st.compact(st.deleteEdgesTombstone(1, base))
+    val m4 = st.manifest(v4)
+    assert(m4.files.isEmpty && m4.mirror.isEmpty && m4.tombs.isEmpty)
+    assert(st.read(v4).isEmpty && st.readMirror(v4).isEmpty)
+  }
+
 }

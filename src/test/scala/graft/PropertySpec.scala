@@ -194,6 +194,78 @@ class PropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("compaction keeps every read: random histories with splits and merges") {
+    // random histories of appends, edge tombstones, point updates and
+    // vertex upserts on a mirrored store, each compacted at a small
+    // bucket cap: after every compact, the distributed reads equal the
+    // same reads before it as row multisets, and the served rows stay
+    // class-equal
+    import org.apache.spark.sql.functions.lit
+    import TestSpark.{sameTypedRows, typedKey}
+    trait Op
+    case class Append(rows: List[(Long, Long)]) extends Op
+    case class Tomb(pick: Int) extends Op
+    case class Update(pick: Int, w: Long) extends Op
+    case class Upsert(rows: List[(Long, Long)]) extends Op
+    case class Compact(maxBucketRows: Int) extends Op
+    val genPair = for (s <- Gen.choose(0L, 40L); d <- Gen.choose(0L, 40L)) yield (s, d)
+    val genOp: Gen[Op] = Gen.frequency(
+      3 -> Gen.choose(1, 8).flatMap(Gen.listOfN(_, genPair)).map(Append(_)),
+      5 -> Gen.choose(0, 1 << 20).map(Tomb(_)),
+      1 -> (for (i <- Gen.choose(0, 1 << 20); w <- Gen.choose(0L, 99L)) yield Update(i, w)),
+      1 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, genPair)).map(Upsert(_)),
+      3 -> Gen.choose(4, 16).map(Compact(_)))
+    // random appends span every bucket, so merges (decided on manifest
+    // row bounds) happen on compactions without deltas: each history
+    // ends with a split-prone cap, a tombstone burst, and two wide caps
+    val genCase = for {
+      base <- Gen.choose(8, 20).flatMap(Gen.listOfN(_, genPair))
+      ops <- Gen.listOfN(14, genOp)
+      tombs <- Gen.listOfN(6, Gen.choose(0, 1 << 20).map(Tomb(_)))
+    } yield (base, ops ++ (Compact(4) :: tombs) ++ List(Compact(16), Compact(16)))
+    var (splits, merges) = (0, 0)
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(3).withMaxSize(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261018L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genCase) { case (base, ops) =>
+      val s = spark; import s.implicits._
+      def edges(ps: Seq[(Long, Long)]) = ps.map { case (a, b) => (a, b, a * 100 + b) }
+        .toDF("src", "dst", "w")
+      val st = DurableStore.create(spark, edges(base),
+        java.nio.file.Files.createTempDirectory("graft-prop-compact").toString,
+        numBuckets = 4, withInEdgeIndex = true)
+      var v = st.setVertexTable(1, (0L to 40L by 3).map(i => (i, i)).toDF("id", "score"))
+      var live = base.toSet
+      val ids = (0L to 40L).toArray
+      def pick(i: Int) = { val ps = live.toSeq.sorted; ps(i % ps.size) }
+      def bag(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => typedKey(r.toSeq)).toSeq.sorted
+      def snapshot(at: Int) = (bag(st.read(at)), bag(st.readMirror(at)),
+        bag(st.readVertices(at)), st.servedOutRows(at, ids).get,
+        st.servedVertexRows(at, ids).get)
+      val checks = ops.map {
+        case Append(rows) => v = st.append(v, edges(rows)); live ++= rows; true
+        case Tomb(i) if live.nonEmpty =>
+          val (a, b) = pick(i); v = st.deleteEdgeTombstone(v, a, b); live -= ((a, b)); true
+        case Update(i, w) if live.nonEmpty =>
+          val (a, b) = pick(i); v = st.updateEdgeDelta(v, a, b, "w", lit(w)); true
+        case Upsert(rows) =>
+          v = st.upsertVertices(v, rows.toMap.toSeq.toDF("id", "score")); true
+        case Compact(cap) =>
+          val (before, m0) = (snapshot(v), st.manifest(v))
+          v = st.compact(v, maxBucketRows = cap)
+          val (after, m1) = (snapshot(v), st.manifest(v))
+          if (m1.bounds.exists(!m0.bounds.contains(_))) splits += 1
+          if (m0.bounds.exists(!m1.bounds.contains(_))) merges += 1
+          before._1 == after._1 && before._2 == after._2 && before._3 == after._3 &&
+            sameTypedRows(after._4, before._4) && sameTypedRows(after._5, before._5)
+        case _ => true
+      }
+      checks.forall(identity) :| s"reads changed across a compact: $ops"
+    })
+    assert(res.passed, res.status.toString)
+    assert(splits > 0 && merges > 0, s"splits $splits, merges $merges")
+  }
+
   test("fofTopKLocal equals a naive count on large random multisets (table-growth path)") {
     // the serving top-k's open-addressed counter starts at 4096 slots
     // and doubles past 50% load — fixture graphs never push it there,

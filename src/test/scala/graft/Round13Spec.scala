@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Round-13 serving-tier hardening (VERDICT r12 next #1/#4/#7 + ADVICE):
-  * pressure-triggered auto-compaction under serving clients, the q5s
-  * budget-refusal fallback, compact-vs-CDC commit interleaving, and the
-  * coalesced tombstone anti-join plan shape. */
+/** Round-13 serving-tier additions: the vertex property side-table and
+  * footer prefetch. The auto-compaction soak, compact-vs-CDC commit
+  * interleaving and the coalesced tombstone anti-join plan shape are in
+  * DurableStoreSpec. */
 class Round13Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -15,158 +15,6 @@ class Round13Spec extends AnyFunSuite {
     val s = spark; import s.implicits._
     rows.toDF("src", "dst").select(col("src"), col("dst"),
       lit(0).as("etype"), (col("src") * 10 + col("dst")).as("w"))
-  }
-
-  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-    df.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  test("auto-compaction soak: CDC + point deletes under serving clients, " +
-       "no budget refusal, no manual compact") {
-    // The reference's background merger (GraphChiDatabase.scala:852-882
-    // trigger, :913-938 daemon) re-expressed as the post-commit pressure
-    // hook: a delete-heavy online store with autoCompact = true must keep
-    // itself under the serving budgets WITHOUT anyone calling compact().
-    // A serving client hammers the zero-job paths the whole time and
-    // records every refusal/throw; the writer issues CDC batches, point
-    // deletes, and point updates — never compact().
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val base = (1L to 40L).map(i => (i, 100L + i % 7))
-    val root = Files.createTempDirectory("graft-r13-soak").toString
-    DurableStore.create(spark, edges(base: _*), root, numBuckets = 4,
-      withInEdgeIndex = true)
-    // tiny triggers so the pressure hook fires many times at test scale
-    val st = new DurableStore(spark, root, autoCompact = true,
-      autoTombRowTrigger = 5, autoDeltaRowTrigger = 64, autoLiveFileTrigger = 6)
-    // key 1 is never deleted — the serving client's stable probe
-    @volatile var done = false
-    val refusals = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val client = Future {
-      var serves = 0
-      while (!done) {
-        val v = st.currentVersion
-        if (st.servedOutNeighbors(v, Array(1L)).isEmpty)
-          refusals.add(s"servedOutNeighbors refused at v$v")
-        try { st.pointReadLocal(v, 1L); () }
-        catch { case e: IllegalArgumentException =>
-          refusals.add(s"pointReadLocal threw at v$v: ${e.getMessage}") }
-        serves += 1
-      }
-      serves
-    }
-    val model = scala.collection.mutable.Map[(Long, Long), Long]()
-    base.foreach { case (s0, d0) => model((s0, d0)) = s0 * 10 + d0 }
-    var v = st.currentVersion
-    var batchId = 0L
-    var nextSrc = 1000L
-    val rnd = new scala.util.Random(13)
-    (0 until 18).foreach { i =>
-      i % 3 match {
-        case 0 => // CDC batch: 2 inserts + 2 deletes of existing pairs
-          val ins = Seq((nextSrc, 100L), (nextSrc + 1, 101L))
-          nextSrc += 2
-          val dels = model.keys.toSeq.sortBy(identity)
-            .filter(_._1 != 1L).take(2)
-          v = st.applyCdc(v, edges(ins: _*), dels, batchId)
-          batchId += 1
-          dels.foreach(model.remove)
-          ins.foreach { case (s0, d0) => model((s0, d0)) = s0 * 10 + d0 }
-        case 1 => // point tombstone delete
-          val candidates = model.keys.toSeq.sortBy(identity).filter(_._1 != 1L)
-          val victim = candidates(rnd.nextInt(candidates.size))
-          v = st.deleteEdgeTombstone(v, victim._1, victim._2)
-          model.remove(victim)
-        case 2 => // point update in the append class
-          val tgt = model.keys.toSeq.sortBy(identity).head
-          v = st.updateEdgeDelta(v, tgt._1, tgt._2, "w", lit(7777L))
-          model(tgt) = 7777L
-      }
-      // the pressure hook must keep live tombstones under the SERVING
-      // budget at every committed version (trigger 5 + one commit's worth
-      // of rows stays well inside ServeTombRowBudget)
-      val m = st.manifest(st.currentVersion)
-      assert(m.tombs.map(_.rows).sum <= DurableStore.ServeTombRowBudget,
-        s"live tombstones past the serving budget at v${m.version}")
-    }
-    done = true
-    val serves = Await.result(client, 120.seconds)
-    assert(refusals.isEmpty, refusals.toArray.mkString("; "))
-    assert(serves >= 10, s"serving client only completed $serves calls")
-    // auto-compaction really ran: 6 point deletes + 6 CDC tombstone
-    // commits landed, but live tombstone ROWS stay at/under the trigger
-    // region instead of accumulating all ~18
-    val mf = st.manifest(st.currentVersion)
-    assert(mf.tombs.map(_.rows).sum <= 7,
-      s"pressure hook never compacted: ${mf.tombs.map(_.rows).sum} live tombstone rows")
-    // final state == model (values included — the update must survive
-    // every interleaved compaction)
-    val got = st.readLatest().select("src", "dst", "w").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(got == model.toMap)
-  }
-
-  test("interleaved compact and CDC commits on a linearHistory store: " +
-       "conflicts surface, retries win, zero lost / double-applied batches") {
-    // The reference's merger takes the DB lock (GraphChiDatabase.scala:622);
-    // here the version pointer is the lock: with linearHistory = true any
-    // commit built on a stale snapshot raises CommitConflictException
-    // instead of silently dropping the concurrent writer's rows. Both
-    // sides retry from the new head; the batchId watermark makes a
-    // replayed CDC batch a no-op.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val base = (1L to 24L).map(i => (i, 200L + i % 5))
-    val root = Files.createTempDirectory("graft-r13-cc").toString
-    DurableStore.create(spark, edges(base: _*), root, numBuckets = 4)
-    val stA = new DurableStore(spark, root, linearHistory = true)
-    val stB = new DurableStore(spark, root, linearHistory = true)
-    val nBatches = 8
-    val batches = (0 until nBatches).map { i =>
-      val ins = Seq((500L + i, 200L)) // fresh pair per batch
-      val dels = Seq((1L + i, 200L + (1 + i) % 5)) // delete one base pair
-      (ins, dels)
-    }
-    var conflicts = 0
-    val writer = Future {
-      batches.zipWithIndex.foreach { case ((ins, dels), i) =>
-        var committed = false
-        while (!committed) {
-          val v = stA.currentVersion
-          try { stA.applyCdc(v, edges(ins: _*), dels, batchId = i.toLong); committed = true }
-          catch { case _: DurableStore.CommitConflictException =>
-            conflicts += 1 }
-        }
-      }
-    }
-    val compactor = Future {
-      var compactions = 0
-      (0 until 4).foreach { _ =>
-        var done = false
-        while (!done) {
-          val v = stB.currentVersion
-          try { stB.compact(v); compactions += 1; done = true }
-          catch { case _: DurableStore.CommitConflictException => }
-        }
-        Thread.sleep(20)
-      }
-      compactions
-    }
-    Await.result(writer, 300.seconds)
-    val compactions = Await.result(compactor, 300.seconds)
-    assert(compactions == 4)
-    // zero lost commits: every batch's insert present, every delete gone
-    val expect = (base.toSet
-      -- batches.flatMap(_._2)
-      ++ batches.flatMap(_._1))
-    assert(pairSet(stA.readLatest()) == expect)
-    // zero double-applies: replaying every batch at the head is a no-op
-    batches.zipWithIndex.foreach { case ((ins, dels), i) =>
-      val v0 = stA.currentVersion
-      assert(stA.applyCdc(v0, edges(ins: _*), dels, batchId = i.toLong) == v0,
-        s"replayed batch $i re-committed")
-    }
   }
 
   test("vertex property side-table: set/point-set/first-touch autofill/" +
@@ -213,27 +61,6 @@ class Round13Spec extends AnyFunSuite {
     val re = new DurableStore(spark, st.root)
     assert(re.servedVertexRow(v6, 5L).get == Seq(5L, "b2", 26L))
     assert(re.manifest(v6).vdefaults == Seq("label" -> "'x'", "score" -> "0"))
-  }
-
-  test("many live tombstone files coalesce into one anti-join per kind " +
-       "(plan depth constant in tombstone-file count)") {
-    val base = (1L to 30L).map(i => (i, 300L + i % 3))
-    val st = DurableStore.create(spark, edges(base: _*),
-      Files.createTempDirectory("graft-r13-coal").toString, numBuckets = 2)
-    var v = 1
-    // four separate edge-tombstone commits + two vertex-tombstone commits
-    (2L to 5L).foreach { i => v = st.deleteEdgeTombstone(v, i, 300L + i % 3) }
-    Seq(10L, 11L).foreach { w => v = st.deleteVertexTombstone(v, w) }
-    val df = st.read(v)
-    val plan = df.queryExecution.executedPlan.toString
-    // ONE edge anti-join + TWO vertex anti-joins (src side, dst side) —
-    // NOT one per live tombstone file (ADVICE r12)
-    val antiJoins = "LeftAnti".r.findAllIn(plan).size
-    assert(antiJoins == 3, s"expected 3 anti-joins, got $antiJoins:\n$plan")
-    val expect = base.toSet --
-      (2L to 5L).map(i => (i, 300L + i % 3)) --
-      base.filter(p => p._1 == 10L || p._1 == 11L || p._2 == 10L || p._2 == 11L)
-    assert(pairSet(df) == expect)
   }
 
   test("warmServing prefetches one footer per part file (files + mirror + " +

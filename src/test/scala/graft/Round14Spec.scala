@@ -7,7 +7,8 @@ import java.nio.file.Files
 /** Round-14 serving seams (VERDICT r13): vertex-row tombstones
   * (missing #2) and the composed served vertex-column join (missing #3).
   * The budget-refusal fallbacks are in ServedReadSpec, the lock-free
-  * object-store commit protocol in DurableStoreSpec. */
+  * object-store commit protocol and the vertex-side compaction fold in
+  * DurableStoreSpec. */
 class Round14Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -84,51 +85,6 @@ class Round14Spec extends AnyFunSuite {
     val v3 = low.compactIfPressured(v2, tombRowTrigger = 0)
     assert(v3 > v2, "vtomb rows did not pressure compactIfPressured")
     assert(low.manifest(v3).vtombs.isEmpty)
-  }
-
-  test("vertex-side compaction folds only the delta/tombstone-hit " +
-       "buckets; untouched buckets keep their files byte-identical") {
-    val root = Files.createTempDirectory("graft-r14-vfold").toString
-    DurableStore.create(spark, edges((1L, 2L)), root)
-    val st = new DurableStore(spark, root)
-    val s = spark; import s.implicits._
-    val base = (1L to 1000L).map(i => (i, s"n$i", i * 2))
-    val v1 = st.setVertexTable(1, base.toDF("id", "name", "score"),
-      numBuckets = 4)
-    val m1 = st.manifest(v1)
-    assert(m1.vbounds.size == 4)
-    // a delta confined to the FIRST bucket's id range
-    val loMax = m1.vbounds.head
-    val v2 = st.upsertVertices(v1, Seq((1L, "upd", 99L)).toDF("id", "name", "score"))
-    val v3 = st.compact(v2)
-    val m3 = st.manifest(v3)
-    assert(m3.vfiles.forall(_.sorted), "fold left deltas behind")
-    // untouched buckets (ids above the first bound) kept their exact files
-    val before = m1.vfiles.filter(_.srcMin > loMax).map(_.path).toSet
-    val after = m3.vfiles.filter(_.srcMin > loMax).map(_.path).toSet
-    assert(before.nonEmpty && before == after,
-      s"untouched vertex buckets were rewritten: $before vs $after")
-    // kept files restamp to the fold's seq (manifest-only) so the full
-    // read keeps its single-seq fast path after a partial fold
-    assert(m3.vfiles.map(_.seq).distinct.size == 1,
-      s"partial fold left mixed seqs: ${m3.vfiles.map(_.seq).distinct}")
-    assert(m3.vfiles.map(_.path).toSet != m1.vfiles.map(_.path).toSet)
-    // values resolve correctly through the partial fold
-    assert(st.readVertices(v3).filter(col("id") === 1L)
-      .head().getString(1) == "upd")
-    assert(st.readVertices(v3).count() == 1000)
-    // a vertex-row tombstone in bucket 3's range: only its bucket (plus
-    // none other) rewrites, the row is physically gone post-fold
-    val tgt = 999L
-    val v4 = st.deleteVertexTombstone(v3, tgt)
-    val v5 = st.compact(v4)
-    val m5 = st.manifest(v5)
-    assert(m5.vtombs.isEmpty && m5.tombs.isEmpty)
-    val keepLow = m3.vfiles.filter(_.srcMax < tgt - 300).map(_.path).toSet
-    assert(keepLow.subsetOf(m5.vfiles.map(_.path).toSet),
-      "tombstone fold rewrote buckets the tombstone cannot touch")
-    assert(st.readVertices(v5).count() == 999)
-    assert(st.servedVertexRow(v5, tgt).isEmpty)
   }
 
   // ---- composed served vertex-column join (VERDICT r13 missing #3) ----
