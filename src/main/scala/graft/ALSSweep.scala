@@ -183,8 +183,9 @@ object ALSSweep {
       col("item").cast("int").as("item"), col("rating").cast("double").as("rating"))
       .persist()
     // persist the per-side frames, NOT localCheckpoint: checkpointed
-    // frames report UnknownPartitioning (CheckpointPartitioningProbe),
-    // which would put the per-sweep exchange right back
+    // frames report UnknownPartitioning (pinned by PlanShapeSpec; see
+    // PERF_ARCHIVE.md's round-8 log), which would put the per-sweep
+    // exchange right back
     val byUser = typed.repartition(col("user")).persist()
     val byItem = typed.repartition(col("item")).persist()
     byUser.count() // materialize both clusterings off one cached build,

@@ -1802,9 +1802,6 @@ class DurableStore(val spark: SparkSession, val root: String,
     removed
   }
 
-  def asGraph(vertices: DataFrame, v: Int): GraphDB =
-    new GraphDB(spark, read(v), vertices)
-
   // ---- internals ----
 
   private def touches(srcKey: Option[Long], dstKey: Option[Long])(f: StoreFile): Boolean =

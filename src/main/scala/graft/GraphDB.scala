@@ -172,15 +172,6 @@ object GraphDB {
   def orderGraphStored(spark: SparkSession, dir: String): GraphDB =
     openStore(spark, Tables.edgeStorePath(spark, dir), Tables.vertices(spark, dir))
 
-  /** Open over a [[DurableStore]] version (latest when unspecified) — the
-    * durable, mutable substrate: queries read the committed manifest's
-    * files, mutations go through the store's copy-on-write API. */
-  def openDurable(spark: SparkSession, root: String, vertices: DataFrame,
-                  version: Option[Int] = None): GraphDB = {
-    val st = new DurableStore(spark, root)
-    new GraphDB(spark, st.read(version.getOrElse(st.currentVersion)), vertices)
-  }
-
   def socialGraph(spark: SparkSession, dir: String): GraphDB =
     new GraphDB(spark, Tables.socialEdges(spark, dir), Tables.vertices(spark, dir))
 

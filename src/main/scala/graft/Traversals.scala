@@ -1368,9 +1368,9 @@ object Traversals {
     val spark = edges.sparkSession
     import spark.implicits._
     // ONE exchange keyed on dst up front (the hop join's key), persisted —
-    // NOT checkpointed, which would erase the partitioning
-    // (CheckpointPartitioningProbe) and put an E-sized reshuffle back into
-    // every hop. distinct() after the repartition plans exchange-free:
+    // NOT checkpointed, which would erase the partitioning (PlanShapeSpec
+    // pins this; measured in PERF_ARCHIVE.md's round-8 log) and put an
+    // E-sized reshuffle back into every hop. distinct() after the repartition plans exchange-free:
     // HashPartitioning(dst) satisfies the dedup's {src,dst} clustering.
     val e = edges.select("src", "dst").repartition(col("dst")).distinct()
       .persist()

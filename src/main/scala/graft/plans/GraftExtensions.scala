@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` on a cluster.
   * This is the packaged-deploy form of what the registry does per-session
   * with `experimental.extraOptimizations` / `createOrReplaceTempFunction`
-  * (see `examples.ExtensionsDemo` for a self-contained run).
+  * (RuleSpec builds such a session and runs the rule and the functions).
   *
   * ==Overflow caveat (read before deploying session-wide)==
   * [[OffsetComparisonRewrite]] turns `x + C cmp K` into `x cmp K - C`. It

@@ -106,7 +106,8 @@ object VectorQueries {
 
   // E12 product-quantization shape, shared by the Scala call and the
   // oracle SQL below so a parameter change re-derives both sides
-  // pinned from examples.PqProbe's recall sweep (re-run after the r11
+  // pinned from a recall sweep (PERF_ARCHIVE.md, round-11 log, "e12
+  // codebook pool size gate"; re-run after the r11
   // size-gated pool — full-corpus pick under PqFullPickBelow, 1/8
   // stratum above, ADVICE r10 #4): recall@10 = 7/10 (sf0.001,
   // deliberately-weak planted pairs — tiny-fixture codebook lottery;

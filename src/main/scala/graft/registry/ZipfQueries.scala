@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skew CORRECTNESS entries (VERDICT r4 missing #4): every other oracle
-  * runs on uniform TPC-H-derived fixtures; the r4 ScaleProbe only TIMES
-  * operators under power-law skew. These entries pin graph-operator
+  * runs on uniform TPC-H-derived fixtures; the r4 skew probe (its
+  * timings are in PERF_ARCHIVE.md) only TIMED operators under power-law
+  * skew. These entries pin graph-operator
   * results on a deterministic heavy-tailed graph with DuckDB oracles.
   *
   * The fixture is derived from the events table by pure integer/md5

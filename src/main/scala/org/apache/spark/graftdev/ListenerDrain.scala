@@ -2,12 +2,13 @@ package org.apache.spark.graftdev
 
 import org.apache.spark.SparkContext
 
-/** Dev-tool accessor (ADVICE r14 #3): PerfProbe resets its per-rep
-  * listener counters on the main thread while the async listener bus may
-  * still be draining the previous rep's events; a fixed sleep is a
-  * heuristic. `LiveListenerBus.waitUntilEmpty` is the deterministic
-  * drain but is private[spark], hence this shim package. Used only by
-  * graft.examples probes, never by a registry entry. */
+/** Listener-bus drain for code that counts Spark events: a counter read
+  * or reset on the main thread while the async listener bus is still
+  * delivering earlier events miscounts, and a fixed sleep is a heuristic.
+  * `LiveListenerBus.waitUntilEmpty` is the deterministic drain but is
+  * private[spark], hence this shim package. Used by the test suite's job
+  * counter (`TestSpark.jobsDuring`) and the benchmark's trace, never by a
+  * registry entry. */
 object ListenerDrain {
   def drain(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)

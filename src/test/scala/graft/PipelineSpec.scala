@@ -471,4 +471,120 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.getLong(1) == 2L)      // docs 1 (keeper of {1,2}) and 3
     assert(r.getLong(3) == 1L + 3L) // id_sum proves WHICH docs survived
   }
+
+  def emb(rows: (Long, Seq[Float])*) = {
+    val s = spark; import s.implicits._
+    rows.map { case (id, v) => (id, v.toArray) }.toDF("vec_id", "embedding")
+  }
+
+  test("urlCanonicalDedup collapses tracking/case/www variants") {
+    val s = spark; import s.implicits._
+    val d = Seq((0L, "x", "src0"), (50L, "y", "src0"), (1L, "z", "src0"))
+      .toDF("doc_id", "text", "source")
+    val r = Dedup.urlCanonicalDedup(d).collect()
+      .map(x => (x.getString(0), x.getLong(1), x.getLong(2)))
+    // doc 0 and doc 50 share doc_id mod 50 and source -> same canonical
+    val c0 = r.find(_._3 == 0L).get
+    assert(c0._1 == "https://src0.example.com/p/0/?id=0" && c0._2 == 2L)
+    assert(r.find(_._3 == 1L).get._1 == "https://src0.example.com/p/1/?id=1")
+  }
+
+  test("array-intersect Jaccard == exploded-routing Jaccard, row for row") {
+    val s = spark; import s.implicits._
+    // texts with exact dups, near-dups, disjoint docs, and a <3-token doc
+    val docs = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog again and again",
+      2L -> "the quick brown fox jumps over the lazy dog again and again",
+      3L -> "the quick brown fox jumps over the lazy cat again and again",
+      4L -> "a completely different document about spark physical plans",
+      5L -> "tiny doc",
+      6L -> "the quick brown fox jumps over the lazy dog once more today"
+    ).toDF("doc_id", "text")
+    val sh = Dedup.shingles(docs).localCheckpoint(true)
+    // all ordered pairs as candidates — covers zero-intersection pairs
+    val ids = docs.select($"doc_id".as("a"))
+    val cand = ids.crossJoin(docs.select($"doc_id".as("b")))
+      .filter($"a" < $"b").localCheckpoint(true)
+    val legacy = Dedup.jaccardVerifyCandidatesExploded(sh, cand)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val viaSh = Dedup.jaccardVerifyCandidates(sh, cand)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val viaSets = Dedup.jaccardVerifyCandidatesArr(Dedup.shingleSets(docs), cand)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(viaSh == legacy, "sh-derived array form diverged from the exploded reference")
+    assert(viaSets == legacy, "shingleSets form diverged from the exploded reference")
+    assert(legacy((1L, 2L)) == 100L) // exact dup pair sanity
+  }
+
+  test("shingleSets matches the exploded distinct shingle multiset per doc") {
+    val s = spark; import s.implicits._
+    val docs = Seq(1L -> "a b c a b c a b", 2L -> "xy").toDF("doc_id", "text")
+    val exploded = Dedup.shingles(docs).collect()
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSet).toMap
+    val sets = Dedup.shingleSets(docs).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    assert(sets == exploded)
+  }
+
+  test("blockHash: payload edits flip only the touched blocks' bits") {
+    implicit val s = spark; import s.implicits._
+    // 120 bytes -> 2 bytes per block; doc 2 perturbs ONE region of doc 1,
+    // doc 3 is structurally different
+    val base = ("ab" * 30) + ("zy" * 30) // low half then high half
+    val edit = ("ab" * 30) + ("zy" * 27) + "aa" + ("zy" * 2)
+    val other = ("az" * 60)
+    val media = Seq((1L, base), (2L, edit), (3L, other))
+      .toDF("doc_id", "text")
+    val h = Multimodal.blockHash(Multimodal.asMedia(media)).collect()
+      .map(r => r.doc_id -> r.simhash).toMap
+    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
+    assert(ham(h(1L), h(2L)) <= 3)       // local edit stays near
+    assert(ham(h(1L), h(3L)) > 3)        // different structure lands far
+    // determinism: recompute equals
+    val h2 = Multimodal.blockHash(Multimodal.asMedia(media)).collect()
+      .map(r => r.doc_id -> r.simhash).toMap
+    assert(h == h2)
+  }
+
+  test("phash near-dup pairs obey the pigeonhole radius") {
+    implicit val s = spark; import s.implicits._
+    val base = ("ab" * 30) + ("zy" * 30)
+    val edit = ("ab" * 30) + ("zy" * 27) + "aa" + ("zy" * 2)
+    val media = Seq((1L, base), (2L, edit), (3L, "az" * 60))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.hammingPairsFrom(
+      Multimodal.blockHash(Multimodal.asMedia(media)).toDF(), radius = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)))
+    assert(pairs.head._3 <= 3)
+  }
+
+  test("hardNegatives keeps only the band below the positive bar") {
+    // query = vec 0; vec 1 is a near-dup (cos ~ 1), vec 2 orthogonal,
+    // vec 3 at cos = 0.1 (in band), vec 4 opposite
+    val e = emb(
+      0L -> Seq(1f, 0f), 1L -> Seq(1f, 0.001f), 2L -> Seq(0f, 1f),
+      3L -> Seq(0.1f, 0.99498743710662f), 4L -> Seq(-1f, 0f))
+    val r = Similarity.hardNegatives(e, k = 5, lo = 50000L, hi = 150000L)
+      .collect().map(_.getLong(0)).toSeq
+    assert(r == Seq(3L))
+  }
+
+  test("rrfFusion blends the two rankings with 1e6 div (60 + rank)") {
+    // cosine ranks by direction; MIPS rewards norm: vec 2 is a huge
+    // off-direction vector that MIPS ranks first but cosine ranks last
+    val e = emb(
+      0L -> Seq(1f, 0f),
+      1L -> Seq(2f, 0.02f),
+      2L -> Seq(10f, 30f),
+      3L -> Seq(0.9f, 0.1f))
+    val r = Similarity.rrfFusion(e, k = 3, n = 3)
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+    // cosine order: 1, 3, 2 ; mips order: 2, 1, 3
+    val byId = r.map(x => x._1 -> x._2).toMap
+    assert(byId(1L) == 1000000 / 61 + 1000000 / 62)
+    assert(byId(2L) == 1000000 / 63 + 1000000 / 61)
+    assert(byId(3L) == 1000000 / 62 + 1000000 / 63)
+    assert(r.forall(_._3 == 2L)) // every candidate sits in both lists here
+  }
 }

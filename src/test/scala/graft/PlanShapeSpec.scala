@@ -70,6 +70,38 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally byUser.unpersist()
   }
 
+  test("a localCheckpoint drops the hash partitioning a persist keeps: a key " +
+       "join reshuffles only the checkpointed side") {
+    // anfHyperLogLog and the c6b sweep persist their keyed frames rather
+    // than checkpoint them because of this: the checkpoint's LogicalRDD
+    // reports UnknownPartitioning, the cached relation HashPartitioning.
+    // Broadcast joins are off in a child session so the join is a shuffle
+    // join whatever the frame sizes.
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val checkpointed = s2.range(0, 2000).select(col("id"), (col("id") % 7).as("v"))
+      .repartition(col("id")).localCheckpoint(true)
+    val persisted = s2.range(0, 2000).select(col("id"), (col("id") % 5).as("w"))
+      .repartition(col("id")).persist()
+    persisted.count()
+    try {
+      val j = checkpointed.join(persisted, "id")
+      assert(j.collect().length == 2000) // finalizes this plan's AQE stages
+      val joins = collectAll(j.queryExecution.executedPlan).collect {
+        case m: SortMergeJoinExec => m }
+      assert(joins.size == 1, j.queryExecution.executedPlan.toString)
+      def shuffles(p: SparkPlan): Int =
+        collectAll(p).count(_.isInstanceOf[ShuffleExchangeExec])
+      assert(shuffles(joins.head.left) == 1,
+        s"checkpointed side: ${joins.head.left}")
+      assert(shuffles(joins.head.right) == 0,
+        s"persisted side: ${joins.head.right}")
+    } finally persisted.unpersist()
+  }
+
   test("keyed single-aggregate operators run with exactly ONE shuffle") {
     val docs = Tables.documents(spark, dir)
     assert(shuffleCount(Dedup.urlCanonicalDedup(docs)) == 1, "d13 url dedup")

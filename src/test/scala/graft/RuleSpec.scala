@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,6 +66,52 @@ class RuleSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("graft_winnow"), e.getMessage)
     assert(e.getMessage.contains("3"), e.getMessage)
+  }
+
+  test("a session built withExtensions(GraftExtensions) runs the rule and " +
+       "serves the graft_* functions from SQL") {
+    // The builder hands back the active or default session unchanged (its
+    // extensions ignored), so both are cleared for the build, which then
+    // makes a session of its own on the shared SparkContext, and both are
+    // restored to the shared session before any assertion can throw.
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext =
+      try SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(ext ne spark)
+    assert(ext.sparkContext eq spark.sparkContext)
+    // the injected rule: the NATURAL dst-interval predicate reaches the
+    // parquet scan on the source column
+    val plan = Tables.orderEdges(ext, dir)
+      .filter(col("dst").between(Tables.SupplierBase, Tables.SupplierBase + 4))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("GreaterThanOrEqual(l_suppkey,0)"), plan.take(2000))
+    assert(plan.contains("LessThanOrEqual(l_suppkey,4)"), plan.take(2000))
+    // the injected functions, reached from SQL
+    assert(ext.sql("SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
+      "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))").first().getDouble(0) == 11.0)
+    // a single token votes its own bits: SimHash60 of one token is the
+    // SQL derivation of that token's hash
+    assert(ext.sql("SELECT graft_simhash60(array('hello')) = " +
+      "CAST(conv(substring(md5('hello'), 1, 15), 16, 10) AS BIGINT)").first().getBoolean(0))
+    assert(ext.sql("SELECT graft_shingles('a b c d')").first().getSeq[String](0) ==
+      Seq("a b c", "b c d"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ext.sql("SELECT graft_winnow('abc', 16, 8)").collect()
+    }
+    assert(e.getMessage.contains("graft_winnow"), e.getMessage)
+    // and the shared session is the active and default one again, still
+    // planning without the rule
+    assert(SparkSession.getActiveSession.exists(_ eq spark))
+    assert(SparkSession.getDefaultSession.exists(_ eq spark))
+    val shared = Tables.orderEdges(spark, dir)
+      .filter(col("dst").between(Tables.SupplierBase, Tables.SupplierBase + 4))
+      .queryExecution.executedPlan.toString
+    assert(!shared.contains("GreaterThanOrEqual(l_suppkey,0)"), shared.take(2000))
   }
 
   test("z-order layout clusters BOTH range dimensions; single-sort only one") {

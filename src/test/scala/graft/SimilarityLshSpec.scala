@@ -63,7 +63,7 @@ class SimilarityLshSpec extends AnyFunSuite {
     val full = Similarity.pqTopK(emb, k = 10, cand = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     assert(full == brute)
-    // production config (the registry's PqProbe-pinned shape): reranked
+    // production config (the registry's recall-pinned PqM/PqKsub): reranked
     // rows carry the exact cosine; recall floor on the deliberately-weak
     // fixture (codes are 8 bytes vs 256 — the 32x compression this
     // operator exists for)

@@ -3,8 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-7 text/dedup additions: TF-IDF top terms (t16), bigram LM
-  * scoring (t17), Hamming near-dup pairs (e9), cluster-safe split (x3). */
+/** Text operators on hand-built documents: TF-IDF top terms (t16),
+  * bigram LM scoring (t17), chunking (t22), the linear quality classifier
+  * (t23), k-anonymity (t24), curriculum buckets (x7) and RAG indexing
+  * (x8); plus Hamming near-dup pairs (e9) and the cluster-safe split (x3),
+  * which run on the same documents. */
 class TextOps2Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -151,5 +154,81 @@ class TextOps2Spec extends AnyFunSuite {
     val again = Dedup.clusterSafeSplit(c).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getString(2)))
     assert(r.sortBy(_._1).toSeq == again.sortBy(_._1).toSeq)
+  }
+
+  test("chunkDocs windows every token, overlaps, short tail, short doc") {
+    val c = docs(
+      1L -> (1 to 20).map(i => s"t$i").mkString(" "), // 20 tokens
+      2L -> "only three tokens")
+    val r = TextOps.chunkDocs(c, window = 16, stride = 8).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getString(3)))
+    val d1 = r.filter(_._1 == 1L).sortBy(_._2)
+    // starts 0, 8, 16 -> lengths 16, 12, 4
+    assert(d1.map(x => (x._2, x._3)).toSeq == Seq((0L, 16L), (1L, 12L), (2L, 4L)))
+    assert(d1(0)._4 == TestSpark.md5Hex((1 to 16).map(i => s"t$i").mkString(" ")))
+    assert(d1(2)._4 == TestSpark.md5Hex((17 to 20).map(i => s"t$i").mkString(" ")))
+    // a doc shorter than one window yields exactly one chunk
+    assert(r.filter(_._1 == 2L).toSeq == Seq((2L, 0L, 3L,
+      TestSpark.md5Hex("only three tokens"))))
+  }
+
+  test("chunkDocs drops token-free docs") {
+    val r = TextOps.chunkDocs(docs(1L -> "...", 2L -> "ok"), 4, 2).collect()
+    assert(r.map(_.getLong(0)).toSet == Set(2L))
+  }
+
+  test("linearQualityScore is the sum of per-token bucket weights") {
+    val c = docs(1L -> "alpha beta alpha", 2L -> "")
+    val r = TextOps.linearQualityScore(c, buckets = 64).collect()
+      .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
+    // reproduce the weight chain on the driver for one token
+    def h(s0: String): Long =
+      java.lang.Long.parseLong(TestSpark.md5Hex(s0).take(15), 16)
+    def w(tok: String): Long = h(s"lqw|${h(s"lq|$tok") % 64}") % 2001 - 1000
+    assert(r(1L)._1 == 3L)
+    assert(r(1L)._2 == 2 * w("alpha") + w("beta"))
+    assert(r(1L)._3 == (if (r(1L)._2 >= 0) 1L else 0L))
+    // empty doc: zero tokens, score 0, passes
+    assert(r(2L) == ((0L, 0L, 1L)))
+  }
+
+  test("curriculumBuckets: value-coherent phases ordered by difficulty") {
+    val s = spark; import s.implicits._
+    // 4 docs: two all-common (difficulty 0), two all-rare (difficulty 1000)
+    val d = Seq(
+      (1L, "x x x"), (2L, "x x"), // 'x' freq 5 > maxFreq -> 0 rare
+      (3L, "aaa bbb"), (4L, "ccc ddd")) // singletons -> all rare
+      .toDF("doc_id", "text")
+    val r = TextOps.curriculumBuckets(d, maxFreq = 2, phases = 4).collect()
+      .map(x => x.getLong(0) -> (x.getLong(2), x.getLong(3))).toMap
+    assert(r(1L) == ((0L, 0L)) && r(2L) == ((0L, 0L)))
+    // the 1000-difficulty value starts at rank 2 of 4 -> phase 4*2/4 = 2
+    assert(r(3L) == ((1000L, 2L)) && r(4L) == ((1000L, 2L)))
+  }
+
+  test("kAnonymity flags classes below k") {
+    val s = spark; import s.implicits._
+    val d = (1L to 6L).map(i => (i, "one two", "en", "s0"))
+      .toDF("doc_id", "text", "lang", "source")
+      .unionByName(Seq((7L, "one two", "fr", "s1"))
+        .toDF("doc_id", "text", "lang", "source"))
+    val r = TextOps.kAnonymity(d, k = 5).collect()
+      .map(x => (x.getString(0), x.getLong(3), x.getLong(4)))
+    assert(r.toSet == Set(("en", 6L, 1L), ("fr", 1L, 0L)))
+  }
+
+  test("ragIndexTopK scores are exact and exclude the query chunk") {
+    val s = spark; import s.implicits._
+    val docs = Seq(
+      (1L, (1 to 20).map(i => s"w$i").mkString(" ")),
+      (2L, (1 to 20).map(i => s"w$i").mkString(" ")), // duplicate text
+      (3L, "totally different words here"))
+      .toDF("doc_id", "text")
+    val r = TextOps.ragIndexTopK(docs, k = 5).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+    // query = (1, 0); doc 2 chunk 0 has the SAME fingerprint -> same
+    // embedding -> cosine exactly 1e6, ranked first
+    assert(r.head == ((2L, 0L, 1000000L)))
+    assert(!r.contains((1L, 0L, 1000000L))) // the query chunk itself is excluded
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class TraversalsSpec extends AnyFunSuite {
@@ -308,5 +309,112 @@ class TraversalsSpec extends AnyFunSuite {
     val b = VertexCentric.pregelPageRank(spark, e, iters = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(a == b)
+  }
+
+  private def logicalRddLeaves(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collectLeaves().count(
+      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  test("katzCentrality counts attenuated walks exactly") {
+    val s = spark; import s.implicits._
+    // path graph 1 -> 2 -> 3 plus a parallel edge 1 -> 2
+    val e = Seq((1L, 2L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val r = TestSpark.toMap2(Traversals.katzCentrality(e, k = 10))
+    // w1: 2->2, 3->1 ; w2: walks len2 end at 3 = 2 ; w3: none
+    // katz(2) = 4*2 = 8 ; katz(3) = 4*1 + 2*2 = 8
+    assert(r == Map(2L -> 8L, 3L -> 8L))
+  }
+
+  test("maximalMatching is a valid maximal matching") {
+    val s = spark; import s.implicits._
+    // path 1-2-3-4 plus isolated edge 5-6
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
+    val m = Traversals.maximalMatching(e).collect()
+      .map(x => (x.getLong(0), x.getLong(1)))
+    val verts = m.flatMap(p => Seq(p._1, p._2))
+    assert(verts.distinct.length == verts.length) // no vertex matched twice
+    assert(m.contains((5L, 6L))) // isolated edge must be matched (maximality)
+    // maximality on the path: at least one of the three path edges matched,
+    // and no two unmatched adjacent vertices remain
+    val mv = verts.toSet
+    val unmatchedEdges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+      .filter(p => !mv.contains(p._1) && !mv.contains(p._2))
+    assert(unmatchedEdges.isEmpty)
+  }
+
+  test("semiSupervisedLabels: seeds clamp, neighbors adopt, isolated stay -1") {
+    val s = spark; import s.implicits._
+    // seed 10 (class 1) wired to 5 and 6; seed 20 (class 2) also wired
+    // to 6 -> 6 tie-breaks to the SMALLER label; 99 is isolated
+    val e = Seq((10L, 5L), (5L, 10L), (10L, 6L), (6L, 10L),
+      (20L, 6L), (6L, 20L), (98L, 99L), (99L, 98L))
+      .toDF("src", "dst")
+    val r = TestSpark.toMap2(Traversals.semiSupervisedLabels(e, rounds = 3))
+    assert(r(10L) == 1L)  // clamped seed: class = 10 % 3 = 1
+    assert(r(20L) == 2L)  // clamped seed: class = 20 % 3 = 2
+    assert(r(5L) == 1L)
+    assert(r(6L) == 1L)   // votes {1, 2} -> count tie -> min label 1
+    assert(r(99L) == -1L) // no labeled neighbor ever
+  }
+
+  test("deep-chain bfsDistances: exact distances AND bounded union plan") {
+    val s = spark; import s.implicits._
+    val n = 70 // chain depth well past AccumFoldEvery
+    val chain = edgesDF((0L until (n - 1)).map(i => (i, i + 1, 0)))
+    val src = Seq((0L, 0L)).toDF("source", "id")
+    val visited = Traversals.bfsDistances(chain, src, maxDepth = 100)
+    // the accumulator folds every AccumFoldEvery rounds, so however deep
+    // the sweep, the returned plan holds at most K+2 flat parts (K-1
+    // unfolded rounds + the last fold + the possible empty tail part)
+    assert(logicalRddLeaves(visited) <= Traversals.AccumFoldEvery + 2,
+      s"visited union grew past the fold bound: ${visited.queryExecution.analyzed}")
+    val d = visited.collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
+    assert(d == (0L until n).map(i => i -> i).toMap)
+  }
+
+  test("edge residency gate: below = resident checkpoint, above = streamed") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-r15-gate").toString
+    (0L until 20L).map(i => (i, i + 1)).toDF("src", "dst")
+      .write.mode("overwrite").parquet(s"$dir/e")
+    val proj = s.read.parquet(s"$dir/e").select(col("src"), col("dst"))
+    val key = "spark.graft.bfs.edgeResidencyMaxBytes"
+    // default gate (16 GiB): a KB-scale parquet goes resident
+    val (resident, release) = Traversals.residentEdges(proj)
+    assert(logicalRddLeaves(resident) == 1, "below the gate: expected a checkpoint")
+    release()
+    try {
+      s.conf.set(key, "0")
+      val (streamed, _) = Traversals.residentEdges(proj)
+      assert(logicalRddLeaves(streamed) == 0,
+        "above the gate: expected the plain projection (per-round re-scan)")
+      // a DSv2 parquet scan counts its file bytes as well: streamed too
+      val v1Sources = "spark.sql.sources.useV1SourceList"
+      s.conf.set(v1Sources, "")
+      try {
+        val v2proj = s.read.parquet(s"$dir/e").select(col("src"), col("dst"))
+        assert(v2proj.queryExecution.optimizedPlan.collectLeaves().exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]))
+        assert(logicalRddLeaves(Traversals.residentEdges(v2proj)._1) == 0,
+          "DSv2 scan above the gate: expected the plain projection")
+      } finally s.conf.unset(v1Sources)
+      // end-to-end: the streamed sweep returns identical rows
+      val src = Seq((0L, 0L)).toDF("source", "id")
+      val dStreamed = Traversals.bfsDistances(proj, src, maxDepth = 30)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+      s.conf.unset(key)
+      val dResident = Traversals.bfsDistances(proj, src, maxDepth = 30)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+      assert(dStreamed == dResident && dResident.size == 21)
+    } finally s.conf.unset(key)
+  }
+
+  test("foldAccum is identity off the fold cadence and folds on it") {
+    val s = spark; import s.implicits._
+    val df = Seq((1L, 2L)).toDF("a", "b").localCheckpoint(true)
+    val u = df.union(df)
+    assert(Traversals.foldAccum(u, Traversals.AccumFoldEvery - 1) eq u)
+    assert(logicalRddLeaves(
+      Traversals.foldAccum(u, Traversals.AccumFoldEvery)) == 1)
   }
 }
