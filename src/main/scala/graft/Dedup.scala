@@ -289,7 +289,7 @@ object Dedup {
     // replaces shuffled every candidate pair's a-side shingles by
     // (b, s) and then paid a pair-keyed count-combine plus two size
     // joins. Work stays ∝ Σ_pairs |shingles| (inside the projection,
-    // not an exchange); values are identical ([[Round15Spec]] pins the
+    // not an exchange); values are identical ([[PipelineSpec]] pins the
     // two forms row-for-row, and the oracle pins the published jacc).
     val sets = shC.groupBy("doc_id").agg(collect_list(col("s")).as("ss"))
     jaccardVerifyCandidatesArr(sets, cand)
@@ -312,7 +312,7 @@ object Dedup {
         expr("(100 * i) div (na + nb - i)").as("jacc_pct"))
 
   /** The r14 pair-routed exploded intersection, kept as the REFERENCE
-    * the array form is spec-pinned against (Round15Spec). */
+    * the array form is spec-pinned against (PipelineSpec). */
   private[graft] def jaccardVerifyCandidatesExploded(sh: DataFrame,
                                                      cand: DataFrame): DataFrame = {
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))

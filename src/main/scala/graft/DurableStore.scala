@@ -61,8 +61,8 @@ import org.apache.spark.sql.types.StructType
   * rows range-bucketed by `dst` under its own bounds (`mbounds`), each
   * file (dst, src)-sorted, living under `v<N>/m/`. Deltas are shared by
   * both views (one copy, unsorted, prunable by either side's stats), so
-  * [[readForDst]] = mirror files covering the key ∪ covering deltas —
-  * file-level pruning on dst symmetric to [[readForSrc]]'s on src.
+  * [[readForDsts]] = mirror files covering the keys ∪ covering deltas —
+  * file-level pruning on dst symmetric to [[readForSrcs]]' on src.
   * Mutations rewrite hit files on BOTH sides from the same predicate
   * (the write cost of any secondary index; the reference pays it in
   * FastSharder too), and compaction merges deltas into both. Invariant:
@@ -72,9 +72,9 @@ class DurableStore(val spark: SparkSession, val root: String,
                    val commit: DurableStore.CommitProtocol = DurableStore.LocalFsCommit,
                    val linearHistory: Boolean = false,
                    val autoCompact: Boolean = false,
-                   val autoTombRowTrigger: Long = DurableStore.ServeTombRowBudget / 2,
-                   val autoDeltaRowTrigger: Long = DurableStore.ServeLocalDeltaRowBudget / 2,
-                   val autoLiveFileTrigger: Int = 64) {
+                   val autoTombRowTrigger: Long = DurableStore.PressureTombRows,
+                   val autoDeltaRowTrigger: Long = DurableStore.PressureDeltaRows,
+                   val autoLiveFileTrigger: Int = DurableStore.PressureLiveFiles) {
   import DurableStore._
 
   def currentVersion: Int =
@@ -85,9 +85,10 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** The full edge table at version `v` — union of all live files. A
     * version whose mutations deleted every row has no files; the
     * manifest's schema keeps it readable. */
-  def read(v: Int): DataFrame = readM(manifest(v))
-
-  private def readM(m: Manifest): DataFrame = readStore(m, m.files)
+  def read(v: Int): DataFrame = {
+    val m = manifest(v)
+    readStore(m, m.files)
+  }
 
   /** Does tombstone `t` possibly delete rows from file `f`? Conservative
     * (stats bounding boxes), so a `false` PROVES no row of `f` matches
@@ -105,15 +106,20 @@ class DurableStore(val spark: SparkSession, val root: String,
           t.dstMin <= f.dstMax && t.dstMax >= f.dstMin
     }
 
-  /** THE distributed read of a routed file set: union the files, then
-    * anti-join the applicable tombstones (edge tombstones on (src, dst)
-    * equality, vertex tombstones on either endpoint — both broadcast:
-    * tombstones are point-delete sized by construction). Seq scoping:
+  /** THE distributed read of a routed file set, the one tombstone-scoped
+    * read of both sides: union the files, then anti-join the applicable
+    * tombstones (edge tombstones on (src, dst) equality, vertex
+    * tombstones on either endpoint — both broadcast: tombstones are
+    * point-delete sized by construction). With `vertex`, the files are
+    * side-table files read at the vertex schema, and the vertex-row
+    * tombstones ([[Manifest.vtombs]]) anti-join on `id`. Seq scoping:
     * when the routed files span several seqs, rows are tagged with their
-    * file set's seq so each tombstone only deletes from strictly older
-    * rows — an edge re-added after its delete survives. The common case
-    * (no tombstones, or none applicable) is byte-identical to the plain
-    * multi-path parquet scan.
+    * file set's seq (`_seq`) so each tombstone only deletes from strictly
+    * older rows — an edge re-added after its delete survives. The vertex
+    * side keeps that tag for [[readVerticesResolved]]'s latest-wins
+    * window; the edge side drops it. The common case (no tombstones, or
+    * none applicable) is byte-identical to the plain multi-path parquet
+    * scan.
     *
     * Tombstone files COALESCE into one broadcast relation per kind
     * (ADVICE r12): each entry carries its own `_tseq` for exact per-
@@ -125,16 +131,19 @@ class DurableStore(val spark: SparkSession, val root: String,
     * Every file — data and tombstone — is read at the schema the manifest
     * records ([[readFiles]]), so building the frame launches no Spark job:
     * the plan is lazy until the caller's action. */
-  private def readStore(m: Manifest, files: Seq[StoreFile]): DataFrame = {
-    if (files.isEmpty) return emptyLike(spark, m.schemaDDL)
-    val applicable = m.tombs.filter(t => files.exists(tombHits(t, _)))
-    if (applicable.isEmpty) return readFiles(spark, files.map(_.path), m.schemaDDL)
-    val seqs = files.map(_.seq).distinct
-    val uniform = seqs.size == 1
+  private def readStore(m: Manifest, files: Seq[StoreFile],
+                        vertex: Boolean = false): DataFrame = {
+    val ddl = if (vertex) m.vschemaDDL else m.schemaDDL
+    if (files.isEmpty) return emptyLike(spark, ddl)
+    val applicable =
+      (if (vertex) m.vtombs else m.tombs).filter(t => files.exists(tombHits(t, _)))
+    val uniform = files.map(_.seq).distinct.size == 1
+    if (applicable.isEmpty && (uniform || !vertex))
+      return readFiles(spark, files.map(_.path), ddl)
     val base =
-      if (uniform) readFiles(spark, files.map(_.path), m.schemaDDL)
+      if (uniform) readFiles(spark, files.map(_.path), ddl)
       else files.groupBy(_.seq).toSeq.sortBy(_._1).map { case (sq, fs) =>
-        readFiles(spark, fs.map(_.path), m.schemaDDL).withColumn("_seq", lit(sq))
+        readFiles(spark, fs.map(_.path), ddl).withColumn("_seq", lit(sq))
       }.reduce(_ unionByName _)
     // uniform case: every applicable tombstone is NEWER than the single
     // file seq (tombHits requires f.seq < t.seq), so scoping is constant
@@ -153,9 +162,10 @@ class DurableStore(val spark: SparkSession, val root: String,
     val cleaned =
       if (vTombs.isEmpty) afterEdges
       else {
-        // TWO chained equi anti-joins, not one OR condition: removing
-        // rows matching (src ∈ V) ∪ (dst ∈ V) is remove-src-matches
-        // then remove-dst-matches, and each equi form stays a
+        // one equi anti-join per id column — on the edge side TWO
+        // chained, not one OR condition: removing rows matching
+        // (src ∈ V) ∪ (dst ∈ V) is remove-src-matches then
+        // remove-dst-matches, and each equi form stays a
         // BroadcastHashJoin where the OR would plan a
         // BroadcastNestedLoopJoin — O(rows × tombstone-ids) on every
         // read and compaction (review r12)
@@ -163,22 +173,14 @@ class DurableStore(val spark: SparkSession, val root: String,
           readFiles(spark, partPaths(t.path), VertexTombDDL)
             .select(col("v").as("_tv"), lit(t.seq).as("_tseq")))
           .reduce(_ unionByName _))
-        afterEdges
-          .join(rel, col("src") === col("_tv") && scope(col("_tseq")), "left_anti")
-          .join(rel, col("dst") === col("_tv") && scope(col("_tseq")), "left_anti")
+        (if (vertex) Seq("id") else Seq("src", "dst")).foldLeft(afterEdges) { (df, c) =>
+          df.join(rel, col(c) === col("_tv") && scope(col("_tseq")), "left_anti")
+        }
       }
-    if (uniform) cleaned else cleaned.drop("_seq")
+    if (uniform || vertex) cleaned else cleaned.drop("_seq")
   }
 
   def readLatest(): DataFrame = read(currentVersion)
-
-  /** Point read pruned at the FILE level via manifest stats (the
-    * interval→shard routing of reference VertexInterval.java:50-78);
-    * row-group stats inside the chosen files prune further. */
-  def readForSrc(v: Int, src: Long): DataFrame = {
-    val m = manifest(v)
-    readStore(m, m.files.filter(f => src >= f.srcMin && src <= f.srcMax))
-  }
 
   /** Sub-100 ms SERVING path for single-source point reads — the latency
     * class of the reference's mmap shard lookup (QueryShard.java:207-253),
@@ -195,7 +197,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * TINYINT, BigDecimal for DECIMAL, Date, Timestamp, …).
     *
     * A SERVING shortcut, not a query operator: results are pinned equal
-    * to readForSrc(v, key).filter(src = key) by ServedReadSpec and
+    * to readForSrcs(v, Seq(key)).filter(src = key) by ServedReadSpec and
     * PropertySpec, and the routing work is manifest-sized. Single-key
     * lookups only — scans and joins stay on the distributed read paths.
     *
@@ -204,7 +206,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * bare rows and therefore THROWS (IllegalArgumentException from
     * [[route]]) on a store carrying more live tombstone rows than
     * [[DurableStore.ServeTombRowBudget]] — serving clients must catch it
-    * and read through [[readForSrc]], or keep the store compacted (see
+    * and read through [[readForSrcs]], or keep the store compacted (see
     * [[compactIfPressured]]). Same contract on [[pointReadLocalDst]],
     * [[updateEdgeDelta]] and [[setVertexProp]]. */
   def pointReadLocal(v: Int, srcKey: Long): Seq[Seq[Any]] =
@@ -214,7 +216,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * mirror's dst-tight file stats plus covering deltas — the same
     * sub-100 ms class and the same typed rows for single-DESTINATION
     * lookups. Requires the in-edge index (throws on unindexed stores —
-    * callers fall back to the distributed [[readForDst]], where a
+    * callers fall back to the distributed [[readForDsts]], where a
     * driver-side read would degenerate to a local full scan). */
   def pointReadLocalDst(v: Int, dstKey: Long): Seq[Seq[Any]] =
     pointRowsM(manifest(v), dstKey, out = false)
@@ -288,11 +290,41 @@ class DurableStore(val spark: SparkSession, val root: String,
     * root that refuses. */
   private[graft] def serveBudget: ServeBudget = DefaultServeBudget
 
+  /** THE file-routing rule — the interval→shard selection of reference
+    * VertexInterval.java:50-78, and the only code that names a side's
+    * file set or tests a file against keys. A side is named by its key
+    * column: "src" routes the primary files by [srcMin, srcMax]; "dst"
+    * routes the in-edge mirror plus the unsorted deltas (shared by both
+    * views) by [dstMin, dstMax]; "id" routes the vertex side-table files
+    * by their id range (both stat pairs carry it). A file is routed when
+    * one of the sorted `keys` falls in its range — binary search for the
+    * first key ≥ its min, then one bound check, never keys × files — or,
+    * with `span`, when its range overlaps [keys(0), keys(1)]; null `keys`
+    * routes the whole side. An unindexed store has no in side: its "dst"
+    * routing is the whole store, unpruned ([[route]] refuses that read
+    * first). */
+  private def routeFiles(m: Manifest, key: String, keys: Array[Long],
+                         span: Boolean = false): Seq[StoreFile] = {
+    val (files, lo, hi): (Seq[StoreFile], StoreFile => Long, StoreFile => Long) =
+      key match {
+        case "src" => (m.files, _.srcMin, _.srcMax)
+        case "dst" if m.mbounds.isEmpty => return m.files
+        case "dst" => (m.mirror ++ m.files.filterNot(_.sorted), _.dstMin, _.dstMax)
+        case "id" => (m.vfiles, _.srcMin, _.srcMax)
+      }
+    if (keys == null) files
+    else if (span) files.filter(f => hi(f) >= keys(0) && lo(f) <= keys(1))
+    else files.filter { f =>
+      val i = java.util.Arrays.binarySearch(keys, lo(f))
+      val first = if (i < 0) -i - 1 else i
+      first < keys.length && keys(first) <= hi(f)
+    }
+  }
+
   /** THE routing-and-budget core of every served read. The sorted `keys`
-    * route to the primary files whose [srcMin, srcMax] covers one of them
-    * (`out`, read src → dst) and/or to the in-edge mirror plus the
-    * unsorted deltas whose [dstMin, dstMax] does (`in`, read dst → src);
-    * with `vertex`, to the vertex side-table files covering them on `id`
+    * route ([[routeFiles]]) to the primary files (`out`, read src → dst)
+    * and/or to the in-edge mirror plus the unsorted deltas (`in`, read
+    * dst → src); with `vertex`, to the vertex side-table files on `id`
     * instead. Refused — Left, with the reason — when that side has no
     * manifest schema, an `in` read has no mirror, that side's live
     * tombstone rows pass the tombstone-row budget, or — `gated` — the
@@ -323,14 +355,10 @@ class DurableStore(val spark: SparkSession, val root: String,
         "compact() to reclaim them, or read through the distributed paths")
     else {
       val tasks =
-        if (vertex)
-          m.vfiles.filter(coversAny(keys, _.srcMin, _.srcMax)).map(ScanTask(_, "id", "id"))
+        if (vertex) routeFiles(m, "id", keys).map(ScanTask(_, "id", "id"))
         else
-          (if (out) m.files.filter(coversAny(keys, _.srcMin, _.srcMax))
-             .map(ScanTask(_, "src", "dst")) else Nil) ++
-          (if (in) (m.mirror ++ m.files.filterNot(_.sorted))
-             .filter(coversAny(keys, _.dstMin, _.dstMax))
-             .map(ScanTask(_, "dst", "src")) else Nil)
+          (if (out) routeFiles(m, "src", keys).map(ScanTask(_, "src", "dst")) else Nil) ++
+          (if (in) routeFiles(m, "dst", keys).map(ScanTask(_, "dst", "src")) else Nil)
       val files = tasks.map(_.file)
       if (gated && (files.count(_.sorted) > budget.files ||
           files.filterNot(_.sorted).map(_.rows).sum > budget.deltaRows))
@@ -521,51 +549,27 @@ class DurableStore(val spark: SparkSession, val root: String,
     * the mutable store; row-group stats prune further inside hit files. */
   def readForSrcRange(v: Int, lo: Long, hi: Long): DataFrame = {
     val m = manifest(v)
-    readStore(m, m.files.filter(f => f.srcMax >= lo && f.srcMin <= hi))
+    readStore(m, routeFiles(m, "src", Array(lo, hi), span = true))
   }
 
-  /** N2 on the durable store: in-neighbor point read served by the
+  /** N1 on the durable store: the primary files whose [srcMin, srcMax]
+    * cover ANY of `keys` ([[routeFiles]]) — the file-level routing of a
+    * point read or a multi-source hop. Callers still filter
+    * `src IN keys`; row-group footer stats inside the hit src-sorted
+    * files prune the rest. */
+  def readForSrcs(v: Int, keys: Seq[Long]): DataFrame = readKeyed(manifest(v), "src", keys)
+
+  /** N2 on the durable store: the in-neighbor read served by the
     * dst-bucketed mirror (the reference's per-shard in-edge index,
-    * QueryShard.java:662-812) plus any covering deltas. Falls back to the
-    * full (correct, unpruned) view when the store has no in-edge index. */
-  def readForDst(v: Int, dst: Long): DataFrame = {
-    val m = manifest(v)
-    if (m.mbounds.isEmpty) return read(v)
-    readStore(m, (m.mirror ++ m.files.filterNot(_.sorted))
-      .filter(f => dst >= f.dstMin && dst <= f.dstMax))
-  }
-
-  /** Multi-key form of [[readForSrc]]: the union of files whose
-    * [srcMin, srcMax] cover ANY of `keys` — the file-level routing for a
-    * served multi-source hop (one manifest pass, binary search per file,
-    * never keys × files). Callers still filter `src IN keys`; row-group
-    * footer stats inside the hit src-sorted files prune the rest. */
-  def readForSrcs(v: Int, keys: Seq[Long]): DataFrame =
-    readForSrcsM(manifest(v), keys)
-
-  private def readForSrcsM(m: Manifest, keys: Seq[Long]): DataFrame =
-    readStore(m, m.files.filter(coversAny(keys.toArray.sorted, _.srcMin, _.srcMax)))
-
-  /** Multi-key form of [[readForDst]]: mirror files (dst-tight stats) ∪
+    * QueryShard.java:662-812) — mirror files (dst-tight stats) ∪
     * covering deltas for ANY of `keys`. Unindexed stores fall back to the
     * full (correct, unpruned) view — the scan-form regime. */
-  def readForDsts(v: Int, keys: Seq[Long]): DataFrame =
-    readForDstsM(manifest(v), keys)
+  def readForDsts(v: Int, keys: Seq[Long]): DataFrame = readKeyed(manifest(v), "dst", keys)
 
-  private def readForDstsM(m: Manifest, keys: Seq[Long]): DataFrame = {
-    if (m.mbounds.isEmpty) return readM(m)
-    readStore(m, (m.mirror ++ m.files.filterNot(_.sorted))
-      .filter(coversAny(keys.toArray.sorted, _.dstMin, _.dstMax)))
-  }
-
-  /** Does a file's [min, max] contain any of the (sorted) keys? Binary
-    * search for the first key ≥ min, then one bound check. */
-  private def coversAny(sorted: Array[Long], lo: StoreFile => Long,
-                        hi: StoreFile => Long)(f: StoreFile): Boolean = {
-    var idx = java.util.Arrays.binarySearch(sorted, lo(f))
-    if (idx < 0) idx = -idx - 1
-    idx < sorted.length && sorted(idx) <= hi(f)
-  }
+  /** The distributed keyed read of a side: its [[routeFiles]] set for
+    * `keys`, tombstone-scoped by [[readStore]]. */
+  private def readKeyed(m: Manifest, key: String, keys: Seq[Long]): DataFrame =
+    readStore(m, routeFiles(m, key, keys.toArray.sorted))
 
   /** Smallest vertex id on either endpoint at version `v`, from manifest
     * stats alone — a driver-side arithmetic answer (no job), exact because
@@ -631,9 +635,9 @@ class DurableStore(val spark: SparkSession, val root: String,
           FofResultSchema)
       case None =>
         Queries.servedFofFrom(
-          out = keys => Queries.keyFilter(readForSrcsM(m, keys), "src", keys)
+          out = keys => Queries.keyFilter(readKeyed(m, "src", keys), "src", keys)
             .select("src", "dst"),
-          in = keys => Queries.keyFilter(readForDstsM(m, keys), "dst", keys)
+          in = keys => Queries.keyFilter(readKeyed(m, "dst", keys), "dst", keys)
             .select("src", "dst"),
           v0 = v0, topK = topK, hop1 = localHop1.map(_.toSeq))
     }
@@ -949,22 +953,12 @@ class DurableStore(val spark: SparkSession, val root: String,
     (localHop1, localTopK)
   }
 
-  /** In-edge range sweep via the mirror's file stats (dst side of
-    * [[readForSrcRange]]). */
-  def readForDstRange(v: Int, lo: Long, hi: Long): DataFrame = {
-    val m = manifest(v)
-    if (m.mbounds.isEmpty) return read(v)
-    readStore(m, (m.mirror ++ m.files.filterNot(_.sorted))
-      .filter(f => f.dstMax >= lo && f.dstMin <= hi))
-  }
-
   /** The full table as served by the in-edge side: mirror files ∪ deltas.
     * Equal to [[read]] as a multiset whenever the index exists — the
     * cross-side consistency the spec and the p5b entry pin. */
   def readMirror(v: Int): DataFrame = {
     val m = manifest(v)
-    if (m.mbounds.isEmpty) return read(v)
-    readStore(m, m.mirror ++ m.files.filterNot(_.sorted))
+    readStore(m, routeFiles(m, "dst", null))
   }
 
   /** Index an existing store online: one shuffled write of the current
@@ -1056,38 +1050,16 @@ class DurableStore(val spark: SparkSession, val root: String,
   private def readVerticesResolved(m: Manifest): DataFrame = {
     require(m.vschemaDDL.nonEmpty,
       s"$root: no vertex side-table (setVertexTable first)")
-    if (m.vfiles.isEmpty) return emptyLike(spark, m.vschemaDDL)
-    // vertex-row tombstones apply with the same seq scoping as the edge
-    // anti-join in [[readStore]]: a tombstone kills rows from strictly
-    // OLDER files only, so an id re-upserted after its delete survives
-    val applicable = m.vtombs.filter(t => m.vfiles.exists(f =>
-      f.seq < t.seq && t.srcMin <= f.srcMax && t.srcMax >= f.srcMin))
-    val seqs = m.vfiles.map(_.seq).distinct
-    if (seqs.size == 1 && applicable.isEmpty)
-      return readFiles(spark, m.vfiles.map(_.path), m.vschemaDDL)
-    val tagged0 =
-      if (seqs.size == 1)
-        readFiles(spark, m.vfiles.map(_.path), m.vschemaDDL)
-          .withColumn("_vseq", lit(seqs.head))
-      else m.vfiles.groupBy(_.seq).toSeq.sortBy(_._1).map { case (sq, fs) =>
-        readFiles(spark, fs.map(_.path), m.vschemaDDL).withColumn("_vseq", lit(sq))
-      }.reduce(_ unionByName _)
-    val tagged =
-      if (applicable.isEmpty) tagged0
-      else {
-        val rel = broadcast(applicable.map(t =>
-          readFiles(spark, partPaths(t.path), VertexTombDDL)
-            .select(col("v").as("_tv"), lit(t.seq).as("_tseq")))
-          .reduce(_ unionByName _))
-        tagged0.join(rel,
-          col("id") === col("_tv") && col("_vseq") < col("_tseq"), "left_anti")
-      }
-    if (seqs.size == 1) tagged.drop("_vseq")
+    // vertex-row tombstones apply through the edge side's seq-scoped read:
+    // a tombstone kills rows from strictly OLDER files only, so an id
+    // re-upserted after its delete survives
+    val scoped = readStore(m, m.vfiles, vertex = true)
+    if (m.vfiles.map(_.seq).distinct.size <= 1) scoped
     else {
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("_vseq").desc)
-      tagged.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_vseq", "_rn")
+        .partitionBy("id").orderBy(col("_seq").desc)
+      scoped.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_seq", "_rn")
     }
   }
 
@@ -1208,8 +1180,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         val rem = remaining.toArray
         // vertex-row tombstones apply through the kill floor, not as
         // (src, dst) record exclusion
-        scanRows(ts.filter(t => coversAny(rem, _.srcMin, _.srcMax)(t.file)),
-          rem, Nil, m.vschemaDDL).foreach { row =>
+        scanRows(ts, rem, Nil, m.vschemaDDL).foreach { row =>
           val rid = row(idIdx).asInstanceOf[Long]
           if (remaining.contains(rid)) { out(rid) = row; remaining -= rid }
         }
@@ -1665,9 +1636,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * hook immediately runs — the CDC path gates such batches loudly
     * ([[applyCdc]]'s bulk-delete require). */
   def compactIfPressured(v: Int,
-      tombRowTrigger: Long = ServeTombRowBudget / 2,
-      deltaRowTrigger: Long = ServeLocalDeltaRowBudget / 2,
-      liveFileTrigger: Int = 64): Int = {
+      tombRowTrigger: Long = PressureTombRows,
+      deltaRowTrigger: Long = PressureDeltaRows,
+      liveFileTrigger: Int = PressureLiveFiles): Int = {
     val m = manifest(v)
     val pressured =
       (m.tombs.map(_.rows).sum + m.vtombs.map(_.rows).sum) > tombRowTrigger ||
@@ -2033,7 +2004,7 @@ object DurableStore {
     * The loser of a pointer race gets [[CommitConflictException]] with
     * its build intact as an orphan (never referenced, reclaimable) and
     * retries from the new head — zero lost commits, spec-pinned by
-    * Round14Spec's two-handle race. Local multi-PROCESS deployments
+    * DurableStoreSpec's two-handle race. Local multi-PROCESS deployments
     * should stay on [[LocalFsCommit]] (a JVM monitor cannot span
     * processes; flock can). The reference's equivalent is its global DB
     * write lock (GraphChiDatabase.scala:622) — coarser, and unavailable
@@ -2308,6 +2279,14 @@ object DurableStore {
   private[graft] final case class ServeBudget(files: Int, deltaRows: Long, tombRows: Long)
   private val DefaultServeBudget =
     ServeBudget(ServeLocalFileBudget, ServeLocalDeltaRowBudget, ServeTombRowBudget)
+
+  /** The default pressure triggers of [[DurableStore.compactIfPressured]]
+    * and of an `autoCompact` handle: live tombstone rows and
+    * un-compacted delta rows at HALF their serving budgets, and the live
+    * tombstone + delta file count. */
+  private val PressureTombRows: Long = ServeTombRowBudget / 2
+  private val PressureDeltaRows: Long = ServeLocalDeltaRowBudget / 2
+  private val PressureLiveFiles: Int = 64
 
   /** One tombstone, loaded driver-side for record-level serving
     * exclusion: vertex tombstones as a sorted id array, edge tombstones
@@ -2619,12 +2598,18 @@ object DurableStore {
     * ONE shuffled write plus one stats aggregation — not a scan per
     * bucket; this is the full-table path, it must scale like a bulk load.
     * `withInEdgeIndex` also writes the dst-bucketed mirror (a second
-    * shuffled write) so [[DurableStore.readForDst]] prunes from birth. */
+    * shuffled write) so [[DurableStore.readForDsts]] prunes from birth. */
   def create(spark: SparkSession, edges: DataFrame, root: String,
              numBuckets: Int = 8,
              targetFileRows: Long = DefaultTargetFileRows,
              withInEdgeIndex: Boolean = false,
              commit: CommitProtocol = LocalFsCommit): DurableStore = {
+    // the served reads and the footer stats decode INT64 endpoints: a
+    // narrower src/dst fails here, before anything is written
+    Seq("src", "dst").foreach { c =>
+      val t = edges.schema.find(_.name == c).fold("missing")(_.dataType.simpleString)
+      require(t == "bigint", s"DurableStore.create needs a BIGINT $c column; $c is $t")
+    }
     // one materialization of the input (r14): the fused checkpoint+count
     // replaces the eager-checkpoint + isEmpty pair; the bounds and both
     // writes read the resident copy

@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
   * anti-join, and read-your-writes holds by construction.
   */
 class GraphDB(val spark: SparkSession, val edges: DataFrame, val vertices: DataFrame) {
-  import GraphDB._
-
   // ---- cardinalities (reference GraphChiDatabase.scala:1405-1406, N8) ----
   def numEdges: DataFrame = edges.agg(count(lit(1)).as("num_edges"))
   def numVertices: DataFrame =
@@ -113,13 +111,6 @@ class GraphDB(val spark: SparkSession, val edges: DataFrame, val vertices: DataF
   def originalToInternalId(id: Column): Column = id
   def internalToOriginalId(id: Column): Column = id
 
-  /** Typed edge view (`Dataset[EdgeRow]`) where compile-time field checks
-    * help (SURVEY §1.2: Dataset[T] with case-class Encoders). */
-  def typedEdges: org.apache.spark.sql.Dataset[GraphDB.EdgeRow] =
-    edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("etype").cast("int"))
-      .as[GraphDB.EdgeRow](org.apache.spark.sql.Encoders.product[GraphDB.EdgeRow])
-
   def frontier(ids: DataFrame): Frontier = new Frontier(this, ids.toDF("id"))
   def frontierOf(ids: Long*): Frontier = {
     import spark.implicits._
@@ -128,9 +119,6 @@ class GraphDB(val spark: SparkSession, val edges: DataFrame, val vertices: DataF
 }
 
 object GraphDB {
-  /** Canonical typed edge (FIXTURES.md §1 schema core). */
-  case class EdgeRow(src: Long, dst: Long, etype: Int)
-
   /** S4 createDatabase (reference GraphChiDatabaseAdmin.createDatabase,
     * GraphChiDatabase.scala:54-82): an empty graph with the canonical
     * edge/vertex schemas — shard files/intervals/id-translate have no
@@ -172,12 +160,6 @@ object GraphDB {
   def orderGraphStored(spark: SparkSession, dir: String): GraphDB =
     openStore(spark, Tables.edgeStorePath(spark, dir), Tables.vertices(spark, dir))
 
-  def socialGraph(spark: SparkSession, dir: String): GraphDB =
-    new GraphDB(spark, Tables.socialEdges(spark, dir), Tables.vertices(spark, dir))
-
   def nationGraph(spark: SparkSession, dir: String): GraphDB =
     new GraphDB(spark, Tables.nationEdges(spark, dir), Tables.vertices(spark, dir))
-
-  def nationGraphSym(spark: SparkSession, dir: String): GraphDB =
-    new GraphDB(spark, Tables.nationEdgesSym(spark, dir), Tables.vertices(spark, dir))
 }

@@ -47,8 +47,7 @@ object Queries {
     * form takes ~110 s (PERF.md round-9 envelope table). The broadcast-
     * join form stays the right plan when the FoF is a SUBQUERY of a larger
     * plan; this is the right plan when it is THE query, served online. */
-  def friendsOfFriendsExclTop20Served(edges: DataFrame,
-                                      maxFanout: Int = 1 << 20): DataFrame = {
+  def friendsOfFriendsExclTop20Served(edges: DataFrame): DataFrame = {
     val minRow = edges.agg(min("src")).head()
     // empty edge frame: min(src) is NULL — return the scan form's empty
     // result instead of NPE-ing on the primitive get (r9 review finding)
@@ -59,8 +58,12 @@ object Queries {
     servedFofFrom(
       out = keys => keyFilter(edges, "src", keys).select("src", "dst"),
       in = _ => edges.limit(0).select("src", "dst"),
-      v0 = v0, maxFanout = maxFanout)
+      v0 = v0)
   }
+
+  /** Hop-1 fanout cap of [[servedFofFrom]]: past it per-key routing
+    * prunes nothing, and the query belongs to the scan form. */
+  private val MaxServedFanout: Int = 1 << 20
 
   /** Literal-IN width cap for served key pushes: up to this many keys a
     * hop travels as `col.isin(keys)` (Catalyst InSet — footer/page
@@ -103,7 +106,6 @@ object Queries {
     * and the envelope probes' parquet-directory pair. */
   def servedFofFrom(out: Seq[Long] => DataFrame, in: Seq[Long] => DataFrame,
                     v0: Long, topK: Int = 20,
-                    maxFanout: Int = 1 << 20,
                     hop1: Option[Seq[Long]] = None): DataFrame = {
     // `hop1`: v0's already-looked-up neighbor ids, when the caller can
     // answer the single-key first round off-engine (the store's
@@ -122,9 +124,9 @@ object Queries {
     // vertex whose 1-hop neighborhood rivals the vertex set itself —
     // where per-key routing stops pruning anything — belongs to the
     // scan form, and THAT cliff fails loudly here
-    require(mids.size <= maxFanout,
+    require(mids.size <= MaxServedFanout,
       s"fofServed: query vertex $v0 has ${mids.size} neighbors " +
-        s"(> $maxFanout) — use friendsOfFriendsExclTop20 (scan form)")
+        s"(> $MaxServedFanout) — use friendsOfFriendsExclTop20 (scan form)")
     val hop2 =
       if (mids.isEmpty) out(Seq(v0)).select(col("dst").as("id")).limit(0)
       else out(mids).select(col("dst").as("id"))

@@ -347,14 +347,14 @@ object DurableQueries {
           |FROM fin""".stripMargin))),
 
     // ---- N1 served from the durable store's manifest-pruned point-read
-    //      path (readForSrc: only files whose [srcMin, srcMax] cover the
+    //      path (readForSrcs: only files whose [srcMin, srcMax] cover the
     //      key are even listed — the interval→shard routing of the
     //      reference, file-level, before row-group pruning) ----
     ("n1_query_out_durable",
       (s: SparkSession, d: String) => {
         val st = baseStore(s, d)
         val v = minSrcVal(s, d)
-        st.readForSrc(1, v).filter(col("src") === v)
+        st.readForSrcs(1, Seq(v)).filter(col("src") === v)
           .select("src", "dst", "etype", "ets", "weight", "rating")
       },
       Some(withSql(Oracle.EDGES,
@@ -364,14 +364,14 @@ object DurableQueries {
     // ---- N2 served from the durable store's IN-EDGE mirror: the store
     //      retrofits a dst-bucketed mirror of the same multiset (the
     //      reference's in-edge linked-list index, QueryShard.java:662-812,
-    //      as a second sort order), and readForDst routes by the mirror's
+    //      as a second sort order), and readForDsts routes by the mirror's
     //      dst-tight file stats — same oracle as the plan-based n2 ----
     ("n2_query_in_durable",
       (s: SparkSession, d: String) => {
         val st = baseStore(s, d)
         val vm = mirrorVersion(s, d)
         val w = Tables.orderEdges(s, d).agg(min("dst")).head().getLong(0)
-        st.readForDst(vm, w).filter(col("dst") === w)
+        st.readForDsts(vm, Seq(w)).filter(col("dst") === w)
           .select("src", "dst", "etype", "ets", "weight", "rating")
       },
       Some(withSql(Oracle.EDGES,

@@ -9,6 +9,7 @@ import java.nio.file.Files
   * the p3/p4/p5_store and s5 registry entries. */
 class DurableStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import TestSpark.{props, vertexStore}
 
   private def edges(rows: (Long, Long)*) = {
     val s = spark; import s.implicits._
@@ -85,7 +86,7 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(m.files.size > 1, "fixture should span multiple buckets")
     val hit = m.files.filter(f => 1L >= f.srcMin && 1L <= f.srcMax)
     assert(hit.size < m.files.size, "point read must not touch every file")
-    assert(rowSet(st.readForSrc(1, 1L).filter(col("src") === 1L)) ==
+    assert(rowSet(st.readForSrcs(1, Seq(1L)).filter(col("src") === 1L)) ==
       rowSet(edges(base: _*)).filter(_._1 == 1L).map(identity))
   }
 
@@ -253,7 +254,7 @@ class DurableStoreSpec extends AnyFunSuite {
     // dst=10 must not touch every mirror file
     val hit = m.mirror.filter(f => 10L >= f.dstMin && 10L <= f.dstMax)
     assert(hit.size < m.mirror.size, "in-edge point read must not touch every mirror file")
-    assert(rowSet(st.readForDst(1, 10L).filter(col("dst") === 10L)) ==
+    assert(rowSet(st.readForDsts(1, Seq(10L)).filter(col("dst") === 10L)) ==
       rowSet(edges(base: _*)).filter(_._2 == 10L).map(identity))
     // mirror files are (dst, src)-sorted on disk
     m.mirror.foreach { f =>
@@ -263,7 +264,7 @@ class DurableStoreSpec extends AnyFunSuite {
     }
     // an unindexed store falls back to the full (correct) view
     val plain = fresh(base: _*)
-    assert(rowSet(plain.readForDst(1, 10L).filter(col("dst") === 10L)) ==
+    assert(rowSet(plain.readForDsts(1, Seq(10L)).filter(col("dst") === 10L)) ==
       rowSet(edges(base: _*)).filter(_._2 == 10L).map(identity))
   }
 
@@ -276,7 +277,7 @@ class DurableStoreSpec extends AnyFunSuite {
     // append lands ONE shared delta, visible from both sides pre-compaction
     val batch = Seq((2L, 10L), (16L, 12L))
     val v3 = st.append(1, edges(batch: _*))
-    assert(rowSet(st.readForDst(v3, 12L).filter(col("dst") === 12L)) ==
+    assert(rowSet(st.readForDsts(v3, Seq(12L)).filter(col("dst") === 12L)) ==
       rowSet(edges(base ++ batch: _*)).filter(_._2 == 12L).map(identity),
       "delta rows must be visible to the in-edge side before compaction")
     // compaction merges the delta into BOTH orders
@@ -285,7 +286,7 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(m4.files.forall(_.sorted))
     assert(rowSet(st.read(v4)) == rowSet(edges(base ++ batch: _*)))
     assert(rowSet(st.readMirror(v4)) == rowSet(st.read(v4)), "mirror diverged after compaction")
-    assert(rowSet(st.readForDstRange(v4, 11L, 12L).filter(col("dst").between(11L, 12L))) ==
+    assert(rowSet(st.readForDsts(v4, Seq(11L, 12L)).filter(col("dst").between(11L, 12L))) ==
       rowSet(edges(base ++ batch: _*)).filter(t => t._2 >= 11L && t._2 <= 12L).map(identity))
   }
 
@@ -297,7 +298,7 @@ class DurableStoreSpec extends AnyFunSuite {
     val re = new DurableStore(spark, st.root)
     assert(re.manifest(v2).mbounds.nonEmpty)
     assert(rowSet(re.readMirror(v2)) == rowSet(edges(base: _*)))
-    assert(rowSet(re.readForDst(v2, 11L).filter(col("dst") === 11L)) ==
+    assert(rowSet(re.readForDsts(v2, Seq(11L)).filter(col("dst") === 11L)) ==
       rowSet(edges(base: _*)).filter(_._2 == 11L).map(identity))
     // indexing an already-indexed version is a no-op
     assert(re.buildInEdgeIndex(v2) == v2)
@@ -414,7 +415,7 @@ class DurableStoreSpec extends AnyFunSuite {
     }
     assert(rowSet(st.read(v)) == rowSet(edges(base ++ big: _*)))
     // point reads through the re-indexed manifest still prune and match
-    assert(rowSet(st.readForSrc(v, 17L).filter(col("src") === 17L)) ==
+    assert(rowSet(st.readForSrcs(v, Seq(17L)).filter(col("src") === 17L)) ==
       rowSet(edges(base: _*)).filter(_._1 == 17L).map(identity))
   }
 
@@ -439,7 +440,7 @@ class DurableStoreSpec extends AnyFunSuite {
       "tiny files must physically consolidate")
     assert(rowSet(st.read(vC)) == rowSet(edges(survivors: _*)))
     // reads through the merged layout stay exact
-    assert(rowSet(st.readForSrc(vC, 30L).filter(col("src") === 30L)) ==
+    assert(rowSet(st.readForSrcs(vC, Seq(30L)).filter(col("src") === 30L)) ==
       rowSet(edges(survivors: _*)).filter(_._1 == 30L).map(identity))
     // an already-merged store is a no-op again
     assert(st.compact(vC, maxBucketRows = 40) == vC)
@@ -461,7 +462,7 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(rowSet(st.read(vC)) == rowSet(edges(survivors: _*)))
     // dst-side point read through the merged mirror stays exact
     val dst = 100L + (10 % 7)
-    assert(rowSet(st.readForDst(vC, dst).filter(col("dst") === dst)) ==
+    assert(rowSet(st.readForDsts(vC, Seq(dst)).filter(col("dst") === dst)) ==
       rowSet(edges(survivors: _*)).filter(_._2 == dst).map(identity))
   }
 
@@ -816,6 +817,18 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(rowSet(st.read(st.compact(v2))) == rowSet(edges(same :+ (7L, 13L): _*)))
   }
 
+  test("create rejects a non-BIGINT endpoint by name before writing anything") {
+    // the served reads and the footer stats decode INT64 endpoints
+    val root = Files.createTempDirectory("graft-ds-int").resolve("store")
+    val narrow = edges(base: _*).withColumn("src", col("src").cast("int"))
+    val err = intercept[IllegalArgumentException] {
+      DurableStore.create(spark, narrow, root.toString, numBuckets = 4)
+    }
+    assert(err.getMessage.contains("BIGINT src") && err.getMessage.contains("src is int"),
+      err.getMessage)
+    assert(!Files.exists(root), "create wrote under the root before refusing")
+  }
+
   test("append with a batchId at or below the manifest watermark is a no-op (idempotent replay)") {
     val st = fresh(base: _*)
     val v2 = st.append(1, edges(Seq((2L, 10L)): _*), batchId = 0L)
@@ -885,7 +898,7 @@ class DurableStoreSpec extends AnyFunSuite {
     appended.zipWithIndex.foreach { case ((s0, d0), i) =>
       v = st.append(v, edges(Seq((s0, d0)): _*), batchId = i.toLong)
       // read-your-writes on the committed version, via manifest pruning
-      assert(st.readForSrc(v, s0).filter(col("src") === s0).count() == 1L,
+      assert(st.readForSrcs(v, Seq(s0)).filter(col("src") === s0).count() == 1L,
         s"batch $i not visible at v$v")
       assert(st.read(v).count() == (base.size + i + 1).toLong)
       // mid-soak compaction must be invisible to concurrent readers
@@ -1364,7 +1377,7 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(m.files.exists(!_.sorted) && m.mirror.nonEmpty && m.vfiles.exists(!_.sorted))
     assert(m.tombs.exists(!_.vertex) && m.tombs.exists(_.vertex) && m.vtombs.nonEmpty)
     val (frames, jobs) = TestSpark.jobsDuring(spark)(Seq(st.read(v),
-      st.readMirror(v), st.readForSrc(v, 1L), st.readForDst(v, 10L), st.readVertices(v)))
+      st.readMirror(v), st.readForSrcs(v, Seq(1L)), st.readForDsts(v, Seq(10L)), st.readVertices(v)))
     assert(jobs == 0, s"building the reads launched $jobs Spark jobs")
     frames.foreach(df => assert(!df.isEmpty))
     assert(pairSet(frames.head) ==
@@ -1412,4 +1425,99 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(st.read(v4).isEmpty && st.readMirror(v4).isEmpty)
   }
 
+  // ---- the vertex property side-table and its row tombstones ----
+
+  test("vertex property side-table: set/point-set/first-touch autofill/" +
+       "upsert/updateAll/compact, served == distributed, time travel intact") {
+    val s = spark; import s.implicits._
+    val st = DurableStore.create(spark, edges((1L, 10L), (5L, 10L), (9L, 11L)),
+      Files.createTempDirectory("graft-r13-vp").toString, numBuckets = 2)
+    val props = Seq((1L, "a", 10L), (5L, "b", 20L)).toDF("id", "label", "score")
+    val v1 = st.setVertexTable(1, props,
+      defaults = Map("label" -> "'x'", "score" -> "0"))
+    // point SET on an existing vertex (append class: no base rewrite)
+    val baseFiles = st.manifest(v1).vfiles.toSet
+    val v2 = st.setVertexProp(v1, 1L, "score", lit(99L))
+    assert(st.manifest(v2).vfiles.filter(_.sorted).toSet == baseFiles,
+      "point set rewrote base vertex files")
+    // FIRST TOUCH on an absent vertex: defaults materialize, then the set
+    val v3 = st.setVertexProp(v2, 7L, "score", lit(7L))
+    // served point reads (zero-job) == the distributed resolved view
+    assert(st.servedVertexRow(v3, 1L).get == Seq(1L, "a", 99L))
+    assert(st.servedVertexRow(v3, 7L).get == Seq(7L, "x", 7L))
+    assert(st.servedVertexRow(v3, 42L).isEmpty)
+    val distRows = st.readVertices(v3).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(distRows == Set((1L, "a", 99L), (5L, "b", 20L), (7L, "x", 7L)))
+    // getMany: ascending-id order, absent ids omitted
+    assert(st.servedVertexRows(v3, Array(7L, 1L, 42L)).get ==
+      Seq(Seq(1L, "a", 99L), Seq(7L, "x", 7L)))
+    // bulk upsert rides a delta; compact folds every vertex delta into
+    // fresh sorted files with values preserved
+    val v4 = st.upsertVertices(v3, Seq((5L, "b2", 21L)).toDF("id", "label", "score"))
+    val v5 = st.compact(v4)
+    assert(st.manifest(v5).vfiles.nonEmpty &&
+      st.manifest(v5).vfiles.forall(_.sorted), "compact left vertex deltas")
+    assert(st.servedVertexRow(v5, 5L).get == Seq(5L, "b2", 21L))
+    assert(st.servedVertexRow(v5, 1L).get == Seq(1L, "a", 99L))
+    // updateAll (P9): f(id, old) over every vertex, copy-on-write
+    val v6 = st.updateAllVertices(v5, "score", col("score") + col("id"))
+    assert(st.readVertices(v6).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap ==
+      Map(1L -> 100L, 5L -> 26L, 7L -> 14L))
+    // time travel: the pre-update version still serves old values
+    assert(st.servedVertexRow(v5, 1L).get == Seq(1L, "a", 99L))
+    // reopen from disk: the manifest round-trips the vertex side-table
+    val re = new DurableStore(spark, st.root)
+    assert(re.servedVertexRow(v6, 5L).get == Seq(5L, "b2", 26L))
+    assert(re.manifest(v6).vdefaults == Seq("label" -> "'x'", "score" -> "0"))
+  }
+
+  test("deleteVertex tombstones the vertex property row: served absent, " +
+       "distributed absent, compact reclaims, upsert resurrects") {
+    val (st, v1) = vertexStore("graft-r14-vtomb")
+    assert(st.servedVertexRow(v1, 2L).nonEmpty)
+    val v2 = st.deleteVertexTombstone(v1, 2L)
+    // the deleted vertex's property row is gone on EVERY read path...
+    assert(st.servedVertexRow(v2, 2L).isEmpty,
+      "served point get still returns the deleted vertex's row")
+    assert(st.servedVertexRows(v2, Array(1L, 2L, 3L)).get.map(_.head) ==
+      Seq(1L, 3L), "served getMany still returns the deleted row")
+    assert(st.readVertices(v2).filter(col("id") === 2L).isEmpty,
+      "distributed read still returns the deleted row")
+    // ...edges touching it are gone too (the pre-existing P5 behavior)...
+    assert(st.read(v2).filter(col("src") === 2L || col("dst") === 2L).isEmpty)
+    // ...and the PRE-delete version is untouched (copy-on-write)
+    assert(st.servedVertexRow(v1, 2L).nonEmpty)
+    // compact physically reclaims the row and both tombstone kinds
+    val v3 = st.compact(v2)
+    val m3 = new DurableStore(spark, st.root).manifest(v3)
+    assert(m3.tombs.isEmpty && m3.vtombs.isEmpty, "compact left tombstones")
+    assert(st.servedVertexRow(v3, 2L).isEmpty, "compact resurrected the row")
+    assert(st.readVertices(v3).filter(col("id") === 2L).isEmpty)
+    // a LATER upsert out-sequences the tombstone and resurrects the id
+    val v4 = st.upsertVertices(st.deleteVertexTombstone(v1, 2L),
+      props((2L, "back", 99L)))
+    assert(st.servedVertexRow(v4, 2L).get == Seq(2L, "back", 99L),
+      "upsert after delete did not resurrect the row")
+    // first-touch point set on the compacted branch re-creates from the
+    // auto-fill defaults, never the dead values
+    val v5 = st.setVertexProp(v3, 2L, "score", lit(7L))
+    assert(st.servedVertexRow(v5, 2L).get == Seq(2L, "auto", 7L),
+      "first-touch after delete leaked stale values instead of defaults")
+  }
+
+  test("vertex-row tombstone survives a reopen (manifest round-trip) and " +
+       "pressures the auto-compaction hook") {
+    val (st, v1) = vertexStore("graft-r14-vtomb2")
+    val v2 = st.deleteVertexTombstone(v1, 3L)
+    val re = new DurableStore(spark, st.root)
+    assert(re.manifest(v2).vtombs.map(_.rows).sum == 1)
+    assert(re.servedVertexRow(v2, 3L).isEmpty)
+    // the pressure check counts vertex-row tombstones
+    val low = new DurableStore(spark, st.root)
+    val v3 = low.compactIfPressured(v2, tombRowTrigger = 0)
+    assert(v3 > v2, "vtomb rows did not pressure compactIfPressured")
+    assert(low.manifest(v3).vtombs.isEmpty)
+  }
 }

@@ -120,4 +120,28 @@ class GraphDBSpec extends AnyFunSuite {
     assert(f.hasVertex(0L) && !f.hasVertex(3L))
     assert(f.limit(1).ids.collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
+
+  test("frontier groupByCountOut and hasAnyVertex on tiny_diamond / tiny_typed") {
+    // tiny_diamond 0→{1,2}, {1,2}→3, 3→4: the reference's
+    // queryVertex(0) → traverseOut(t) → selectOut(t, groupByCount, cond)
+    val d = db((0L, 1L, 0), (0L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0), (3L, 4L, 0))
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val mids = d.frontierOf(0L).traverseOut(Some(0))
+    assert(counts(mids.groupByCountOut(Some(0), col("dst") =!= 4L)) == Map(3L -> 2L))
+    assert(counts(mids.groupByCountOut(Some(0), col("dst") =!= 3L)).isEmpty)
+    assert(counts(d.frontierOf(0L, 1L).groupByCountOut()) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(mids.hasAnyVertex(d.frontierOf(2L, 7L)))
+    assert(!mids.hasAnyVertex(d.frontierOf(3L, 4L)))
+    // tiny_typed: parallel typed edges count per etype
+    val t = db((1L, 2L, 0), (1L, 2L, 1), (1L, 3L, 1))
+    val one = t.frontierOf(1L)
+    assert(counts(one.groupByCountOut()) == Map(2L -> 2L, 3L -> 1L))
+    assert(counts(one.groupByCountOut(Some(1))) == Map(2L -> 1L, 3L -> 1L))
+    assert(counts(one.groupByCountOut(Some(0))) == Map(2L -> 1L))
+    assert(counts(one.groupByCountOut(Some(1), col("dst") === 3L)) == Map(3L -> 1L))
+    assert(one.traverseOut(Some(1)).hasAnyVertex(t.frontierOf(3L)))
+    assert(!one.traverseOut(Some(0)).hasAnyVertex(t.frontierOf(3L)))
+  }
 }

@@ -587,4 +587,44 @@ class PipelineSpec extends AnyFunSuite {
     assert(byId(3L) == 1000000 / 62 + 1000000 / 63)
     assert(r.forall(_._3 == 2L)) // every candidate sits in both lists here
   }
+
+  test("containment is asymmetric: a quote inside a superset scores ~1 one way") {
+    // doc 2 contains doc 1's text verbatim plus more: C(1->2) = 1,
+    // C(2->1) < 1. Texts share enough shingles to be d2 candidates.
+    val small = "alpha beta gamma delta epsilon zeta eta theta"
+    val big = small + " iota kappa"
+    val r = Dedup.containmentVerify(docs(1L -> small, 2L -> big)).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(4),
+        x.getLong(5), x.getLong(6)))
+    assert(r.length == 1)
+    val (a, b, inter, cab, cba) = r.head
+    assert((a, b) == ((1L, 2L)))
+    assert(cab == 1000000L)        // every shingle of the small doc is in the big
+    assert(cba < 1000000L && cba > 0L)
+    assert(inter == 6L)            // 8 tokens -> 6 3-shingles
+  }
+
+  test("dedupWeights: cluster mass sums to ~1e6 per distinct text") {
+    val r = Dedup.dedupWeights(docs(
+      1L -> "same text", 2L -> "same text", 3L -> "same text",
+      4L -> "unique")).collect()
+      .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2))).toMap
+    assert(r(1L) == ((3L, 333333L)) && r(2L) == r(1L) && r(3L) == r(1L))
+    assert(r(4L) == ((1L, 1000000L)))
+  }
+
+  test("prefix-truncated cosine equals full cosine when tails are zero") {
+    val s = spark; import s.implicits._
+    val e = Seq(
+      (0L, Array(1f, 0f, 0f, 0f)),
+      (1L, Array(0.8f, 0.6f, 0f, 0f)),
+      (2L, Array(0f, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val full = Similarity.bruteForceTopK(e, 2).collect()
+      .map(x => (x.getLong(0), x.getLong(1)))
+    val tr = Similarity.bruteForceTopK(
+      e.select(col("vec_id"), expr("slice(embedding, 1, 2)").as("embedding")), 2)
+      .collect().map(x => (x.getLong(0), x.getLong(1)))
+    assert(full.toSeq == tr.toSeq) // zero tails -> identical geometry
+  }
 }

@@ -266,6 +266,69 @@ class PropertySpec extends AnyFunSuite {
     assert(splits > 0 && merges > 0, s"splits $splits, merges $merges")
   }
 
+  test("vertex reads follow a latest-wins model across upserts, row deletes, " +
+       "re-upserts and compaction") {
+    // random histories of vertex upsert batches (one row per id), vertex-
+    // row tombstones, re-upserts of deleted ids and compactions: after
+    // every op the distributed and the served vertex reads equal a
+    // latest-wins model — a deleted id stays absent until it is upserted
+    // again, and then carries its new row
+    import TestSpark.sameTypedRows
+    trait Op
+    case class Upsert(rows: List[(Long, Long)]) extends Op
+    case class Delete(pick: Int) extends Op
+    case class Reupsert(pick: Int, score: Long) extends Op
+    case object Compact extends Op
+    val genRow = for (id <- Gen.choose(0L, 15L); sc <- Gen.choose(0L, 99L)) yield (id, sc)
+    val genOp: Gen[Op] = Gen.frequency(
+      3 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, genRow)).map(Upsert(_)),
+      3 -> Gen.choose(0, 1 << 20).map(Delete(_)),
+      2 -> (for (i <- Gen.choose(0, 1 << 20); sc <- Gen.choose(100L, 199L))
+        yield Reupsert(i, sc)),
+      1 -> Gen.const(Compact))
+    // each history ends deleting, re-upserting and compacting, so every
+    // case crosses a live row tombstone on files of several seqs and a
+    // re-upsert that out-sequences one
+    val genCase = Gen.listOfN(12, genOp).map(_ ++
+      List(Delete(0), Delete(1), Reupsert(0, 200L), Compact, Delete(2)))
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(3).withMaxSize(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genCase) { ops =>
+      val s = spark; import s.implicits._
+      def rows(rs: Seq[(Long, Long)]) =
+        rs.map { case (id, sc) => (id, sc, s"n$sc") }.toDF("id", "score", "name")
+      val st = DurableStore.create(spark, Seq((0L, 1L)).toDF("src", "dst"),
+        java.nio.file.Files.createTempDirectory("graft-prop-vertex").toString,
+        numBuckets = 2)
+      val base = (0L to 15L by 2).map(i => (i, i))
+      var v = st.setVertexTable(1, rows(base), numBuckets = 2)
+      val model = scala.collection.mutable.Map[Long, Long](base: _*)
+      val deleted = scala.collection.mutable.SortedSet[Long]()
+      val ids = (0L to 15L).toArray
+      def step(op: Op): Boolean = {
+        op match {
+          case Upsert(rs) =>
+            val one = rs.toMap.toSeq
+            v = st.upsertVertices(v, rows(one)); model ++= one; deleted --= one.map(_._1)
+          case Delete(i) =>
+            val id = ids(i % ids.length)
+            v = st.deleteVertexTombstone(v, id); model -= id; deleted += id
+          case Reupsert(i, sc) if deleted.nonEmpty =>
+            val id = deleted.toSeq(i % deleted.size)
+            v = st.upsertVertices(v, rows(Seq(id -> sc))); model(id) = sc; deleted -= id
+          case Compact => v = st.compact(v)
+          case _ =>
+        }
+        val want = model.toSeq.map { case (id, sc) => Seq[Any](id, sc, s"n$sc") }
+        sameTypedRows(st.readVertices(v).collect().map(_.toSeq).toSeq, want) &&
+          sameTypedRows(st.servedVertexRows(v, ids).get, want)
+      }
+      val bad = ops.indexWhere(op => !step(op))
+      (bad < 0) :| s"vertex reads left the model after op $bad of $ops"
+    })
+    assert(res.passed, res.status.toString)
+  }
+
   test("fofTopKLocal equals a naive count on large random multisets (table-growth path)") {
     // the serving top-k's open-addressed counter starts at 4096 slots
     // and doubles past 50% load — fixture graphs never push it there,

@@ -14,16 +14,12 @@ import java.nio.file.Files
   * PropertySpec. */
 class ServedReadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import TestSpark.{props, vertexStore}
 
   private def edges(rows: (Long, Long)*) = {
     val s = spark; import s.implicits._
     rows.toDF("src", "dst").select(col("src"), col("dst"),
       lit(0).as("etype"), (col("src") * 10 + col("dst")).as("w"))
-  }
-
-  private def props(rows: (Long, String, Long)*) = {
-    val s = spark; import s.implicits._
-    rows.toDF("id", "name", "score")
   }
 
   private def rowSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -45,7 +41,7 @@ class ServedReadSpec extends AnyFunSuite {
     val served = st.pointReadLocal(1, 1L)
       .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
         r(3).asInstanceOf[Long])).toSet
-    assert(served == rowSet(st.readForSrc(1, 1L).filter(col("src") === 1L)))
+    assert(served == rowSet(st.readForSrcs(1, Seq(1L)).filter(col("src") === 1L)))
     assert(served == rowSet(edges(base: _*)).filter(_._1 == 1L).map(identity))
     // a key outside every file range serves empty without touching parquet
     assert(st.pointReadLocal(1, 999999L).isEmpty)
@@ -57,13 +53,13 @@ class ServedReadSpec extends AnyFunSuite {
       .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
         r(3).asInstanceOf[Long])).toSet
     assert(servedDst(1, 10L) ==
-      rowSet(st.readForDst(1, 10L).filter(col("dst") === 10L)))
+      rowSet(st.readForDsts(1, Seq(10L)).filter(col("dst") === 10L)))
     assert(servedDst(1, 10L) == rowSet(edges(base: _*)).filter(_._2 == 10L))
     // an appended (unsorted) DELTA covering the key must be served too —
-    // the mirror ∪ deltas union readForDst reads
+    // the mirror ∪ deltas union readForDsts reads
     val v2 = st.append(1, edges((30L, 10L)))
     assert(servedDst(v2, 10L) ==
-      rowSet(st.readForDst(v2, 10L).filter(col("dst") === 10L)))
+      rowSet(st.readForDsts(v2, Seq(10L)).filter(col("dst") === 10L)))
     assert(servedDst(v2, 10L).contains((30L, 10L, 310L)))
     // outside every mirror/delta range: empty without touching parquet
     assert(st.pointReadLocalDst(v2, 999999L).isEmpty)
@@ -283,5 +279,61 @@ class ServedReadSpec extends AnyFunSuite {
     cache.put(d, d)
     assert(cache.get(a) == null && cache.get(c) == c && cache.get(d) == d)
     assert(others.forall(k => cache.get(k) == k))
+  }
+
+  test("warmServing prefetches one footer per part file (files + mirror + " +
+       "vertex side + deltas + tombstones) and serving still answers") {
+    val s = spark; import s.implicits._
+    val st = DurableStore.create(spark, edges((1L to 10L).map(i => (i, 100L + i)): _*),
+      Files.createTempDirectory("graft-r13-warm").toString, numBuckets = 2,
+      withInEdgeIndex = true)
+    var v = st.append(1, edges((11L, 100L)))
+    v = st.deleteEdgeTombstone(v, 2L, 102L)
+    v = st.setVertexTable(v, Seq((1L, 5L)).toDF("id", "score"))
+    val m = st.manifest(v)
+    val expected = (m.files.size - m.files.count(!_.sorted)) // sorted primaries: 1 file each
+    val warmed = st.warmServing(v)
+    // every manifest-listed part file warmed exactly once: sorted files
+    // are single parquet files; the delta dir expands to its part files
+    assert(warmed >= m.files.size + m.mirror.size + m.vfiles.size + m.tombs.size - 1,
+      s"warmed $warmed of ${m.files.size}+${m.mirror.size}+${m.vfiles.size}+${m.tombs.size} entries (expected $expected+)")
+    // serving answers normally off the warmed cache
+    assert(st.pointReadLocal(v, 11L).nonEmpty)
+    assert(st.servedVertexRow(v, 1L).get == Seq(1L, 5L))
+  }
+
+  test("servedOutRowsWithVertex equals the distributed hop-join, zero " +
+       "jobs on the served arm, refusal degrades to the same rows") {
+    val (st, v1) = vertexStore("graft-r14-n4sv")
+    val keys = Array(1L, 4L)
+    // dst 2 and 3 have side-table rows; every edge row extends with
+    // (name, score) of its dst
+    val served = st.servedOutRowsWithVertex(v1, keys, Seq("name", "score"))
+      .getOrElse(sys.error("served join refused on a 4-row store"))
+    val expect = st.readForSrcs(v1, keys)
+      .filter(col("src").isin(1L, 4L))
+      .join(st.readVertices(v1).select(col("id"), col("name"), col("score")),
+        col("dst") === col("id"), "left")
+      .drop("id")
+      .collect().map(_.toSeq).toSet
+    assert(served.toSet == expect,
+      s"served $served vs distributed $expect")
+    // budget 0 forces the refusal arm of the registry helper — same rows
+    val st0 = TestSpark.budgeted(st, files = 0)
+    assert(st0.servedOutRowsWithVertex(v1, keys, Seq("name", "score")).isEmpty)
+    val fb = registry.DurableQueries.outRowsWithVertexServedOrJob(
+      spark, st0, v1, keys, Seq("name", "score"))
+      .collect().map(_.toSeq).toSet
+    assert(fb == expect, "fallback arm disagrees with the distributed join")
+    // NULL vertex cells fill from foldable defaults on both arms: vertex
+    // 9 is absent (left-join NULLs), a present row with a NULL cell fills
+    val v2 = st.upsertVertices(v1, props((2L, null, 20L)))
+    val s2 = st.servedOutRowsWithVertex(v2, Array(1L), Seq("name")).get
+    val d2 = st.readForSrcs(v2, Array(1L)).filter(col("src") === 1L)
+      .join(st.readVertices(v2).select(col("id"), col("name")),
+        col("dst") === col("id"), "left").drop("id")
+      .collect().map(_.toSeq).toSet
+    assert(s2.toSet == d2, s"default fill mismatch: $s2 vs $d2")
+    assert(s2.exists(_.last == "auto"), "NULL cell did not fill from default")
   }
 }

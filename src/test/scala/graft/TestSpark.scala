@@ -75,6 +75,33 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Vertex side-table rows (id, name, score). */
+  def props(rows: (Long, String, Long)*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("id", "name", "score")
+  }
+
+  /** A mirrored store of four (src, dst, w) edges carrying a vertex
+    * side-table of ids 1–3 with auto-fill defaults for `name` and
+    * `score` — the start of the vertex-row tombstone and served
+    * vertex-join specs. Returns the handle and the side-table's version. */
+  def vertexStore(prefix: String): (DurableStore, Int) = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    DurableStore.create(spark,
+      Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 2L)).toDF("src", "dst")
+        .select(col("src"), col("dst"), (col("src") * 10 + col("dst")).as("w")),
+      root, numBuckets = 2, withInEdgeIndex = true)
+    val st = new DurableStore(spark, root)
+    val v = st.setVertexTable(st.currentVersion,
+      props((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)),
+      defaults = Map("name" -> "'auto'", "score" -> "0"))
+    (st, v)
+  }
+
   /** Collect a two-column (id-ish, value-ish) frame into a sorted map. */
   def toMap2(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
