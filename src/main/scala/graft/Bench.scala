@@ -212,15 +212,13 @@ object Bench {
       // when this round's first-pass shifts pushed them over the retime
       // floor): g18 memoizes its exact neighborhood function
       // (GraphQueries.anfExact — the r14 baseline published a 0.048 s
-      // map-hit retime for a 2-3 s computation), the two c1 pregel
-      // entries share a memoized GraphX graph build
-      // (VertexCentric.toGraphCached — the r13/r14-baseline artifacts
-      // published 0.46-0.80 s cache-hit retimes for 1.6-1.9 s honest
-      // first passes), p4b memoizes its tombstone-compact lifecycle
-      // values, and p5b re-MUTATES the shared vertex-store lifecycle per
-      // invocation (the s5 class: a retime times a different store
-      // state). All now report their honest first sample.
-      "g18_neighborhood_fn", "c1_pregel_cc", "c1_pregel_pagerank",
+      // map-hit retime for a 2-3 s computation), p4b memoizes its
+      // tombstone-compact lifecycle values, and p5b re-MUTATES the shared
+      // vertex-store lifecycle per invocation (the s5 class: a retime
+      // times a different store state). All now report their honest
+      // first sample. (The c1 pregel pair builds its GraphX graph per
+      // call, so a retime of either is an honest second pass.)
+      "g18_neighborhood_fn",
       "p4b_delete_tombstone_compact", "p5b_delete_vertex_props")
     val retimed = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val queryFns = SparkEntry.queries

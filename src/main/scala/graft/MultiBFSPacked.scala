@@ -73,11 +73,8 @@ object MultiBFSPacked {
     // otherwise re-plans and re-scans the full derivation every round
     // (r14 — the bfsDistances discipline). Size-gated (r15,
     // Traversals.residentEdges): past the gate the projection streams
-    // per depth instead of pinning an edge-sized resident copy. The
-    // release thunk is deliberately NOT called: the returned state is a
-    // chain of lazy checkpoints that only materializes at the caller's
-    // first action, which still reads the edge copy.
-    val (e2, _) = Traversals.residentEdges(
+    // per depth instead of pinning an edge-sized resident copy.
+    val (e2, release) = Traversals.residentEdges(
       edges.select(col("src").cast("long").as("s"),
         col("dst").cast("long").as("t")))
 
@@ -95,7 +92,7 @@ object MultiBFSPacked {
         }
       // gather: pointwise-min merge of proposals into the state
       // lazy: lineage truncates at plan level; the next round's (or the
-      // final flatMap's) action materializes the persisted state (r14 —
+      // final count's) action materializes the persisted state (r14 —
       // drops one full vertex-state pass per superstep)
       state = state.union(proposals)
         .groupByKey(_.id)
@@ -103,6 +100,11 @@ object MultiBFSPacked {
         .map { case (id, dist) => VState(id, dist) }
         .localCheckpoint(false)
     }
+    // the state is a chain of lazy checkpoints: one fused count
+    // materializes every depth's, after which nothing reads the edge copy
+    // and the returned frame reads checkpointed blocks only
+    state.queryExecution.toRdd.count()
+    release()
     state.flatMap(vs => vs.dist.zipWithIndex.collect {
       case (dist, i) if dist >= 0 => (sources(i), vs.id, dist.toLong)
     }).toDF("source", "id", "dist")

@@ -379,23 +379,17 @@ object Queries {
   /** G13: k-truss — the maximal subgraph where every edge closes at least
     * k−2 triangles (Cohen '08), the standard cohesive-community refinement
     * of the k-core: iterative edge peeling with triangle support recomputed
-    * each round until fixpoint. Each round is one [[triangleList]] (wedge
-    * generation bounded by oriented out-degree — the hub contributes
-    * nothing) + one partial-combining support count + one edge semi-join;
+    * each round until fixpoint ([[Traversals.peelToFixpoint]]). Each
+    * round is one [[triangleList]] (wedge generation bounded by oriented
+    * out-degree — the hub contributes nothing) + one partial-combining
+    * support count + one edge semi-join;
     * the truss is unique, so the fixed-point edge set is engine-exact.
     * Throws if `maxIter` rounds don't converge (the oracle unrolls the
     * same bound and errors loudly, the g3/g4 discipline). */
   def kTruss(canon: DataFrame, k: Int, maxIter: Int = 8): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    // fused materialize+count per peel round (r14, Traversals discipline):
-    // 2 jobs/round → 1
-    val (e0, n0) = Traversals.checkpointCount(canon.select("src", "dst"))
-    var e = e0
-    var n = n0
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 1
+    Traversals.peelToFixpoint(canon.select("src", "dst"), maxIter,
+        s"kTruss(k=$k) did not reach a fixpoint within maxIter=$maxIter peel rounds") { e =>
       val tri = triangleList(e)
       val sup = tri.select(least(col("a"), col("b")).as("src"),
           greatest(col("a"), col("b")).as("dst"))
@@ -404,17 +398,10 @@ object Queries {
         .unionByName(tri.select(least(col("b"), col("c")).as("src"),
           greatest(col("b"), col("c")).as("dst")))
         .groupBy("src", "dst").agg(count(lit(1)).as("sup"))
-      val (e2, n2) = Traversals.checkpointCount(
-        e.join(sup, Seq("src", "dst"), "left")
-          .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-          .select("src", "dst"))
-      e = e2
-      converged = n2 == n
-      n = n2
+      e.join(sup, Seq("src", "dst"), "left")
+        .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
+        .select("src", "dst")
     }
-    if (!converged) throw new IllegalStateException(
-      s"kTruss(k=$k) did not reach a fixpoint within maxIter=$maxIter peel rounds")
-    e
   }
 
   /** Per-vertex triangle participation + local clustering coefficient over

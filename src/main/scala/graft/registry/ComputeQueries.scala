@@ -14,7 +14,7 @@ object ComputeQueries {
     // ---- C1: GraphX Pregel adapter running CC — same oracle as c4 ----
     ("c1_pregel_cc",
       (s: SparkSession, d: String) =>
-        VertexCentric.pregelCC(s, Tables.nationEdgesSym(s, d), cacheKey = Some(s"nsym|$d")),
+        VertexCentric.pregelCC(s, Tables.nationEdgesSym(s, d)),
       Some(withSql(Oracle.NEDGES_SYM,
         """, verts AS (SELECT src AS id FROM nsym UNION SELECT dst FROM nsym),
           |reach(id, r) AS (
@@ -26,7 +26,7 @@ object ComputeQueries {
     // ---- C1/C3: Pregel PageRank, scaled-int — same oracle as c3 ----
     ("c1_pregel_pagerank",
       (s: SparkSession, d: String) =>
-        VertexCentric.pregelPageRank(s, Tables.orderEdges(s, d), iters = 3, cacheKey = Some(s"edges|$d")),
+        VertexCentric.pregelPageRank(s, Tables.orderEdges(s, d), iters = 3),
       Some(PageRank.oracleSql(3))),
 
     // ---- C5: MultiBFS — simultaneous BFS from 3 seeds ----

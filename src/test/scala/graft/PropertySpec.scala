@@ -9,9 +9,10 @@ import org.scalacheck.Prop.propBoolean
 class PropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def check(p: Prop): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(5).withMaxSize(30), p)
+  /** `seed` fixes the generator, so a case runs the same graphs every run. */
+  private def check(p: Prop, seed: Option[Long] = None): Unit = {
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(5).withMaxSize(30)
+    val res = SCTest.check(seed.fold(params)(params.withInitialSeed), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -724,5 +725,79 @@ class PropertySpec extends AnyFunSuite {
         est >= exact && counts.get(t).contains(exact)
       }
     })
+  }
+
+  /** Level-by-level brute-force BFS over the distinct directed edges:
+    * (dist, sigma) per reached vertex, sigma the number of shortest paths. */
+  private def bruteSigma(es: List[(Long, Long)], src: Long): Map[Long, (Long, Long)] = {
+    val adj = es.distinct.groupMap(_._1)(_._2)
+    var out = Map(src -> ((0L, 1L)))
+    var frontier = Map(src -> 1L)
+    var d = 0L
+    while (frontier.nonEmpty) {
+      d += 1
+      val next = frontier.toSeq
+        .flatMap { case (u, g) => adj.getOrElse(u, Nil).map(_ -> g) }
+        .filterNot(p => out.contains(p._1))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      next.foreach { case (v, g) => out += v -> ((d, g)) }
+      frontier = next
+    }
+    out
+  }
+
+  test("bfsSigma path counts equal brute-force shortest-path counts") {
+    check(Prop.forAll(genEdges) { es =>
+      val s = spark; import s.implicits._
+      val edges = TestSpark.edgesDF(es.map { case (a, b) => (a, b, 0) })
+      val src = es.map(_._1).min
+      val got = Traversals.bfsSigma(edges, Seq((src, src)).toDF("source", "id"), 15)
+        .collect().map(r => r.getLong(1) -> ((r.getLong(2), r.getLong(3)))).toMap
+      got == bruteSigma(es, src)
+    }, seed = Some(41L))
+  }
+
+  test("maximalIndependentSet is independent and maximal on random graphs") {
+    check(Prop.forAll(genEdges) { es =>
+      val canonPairs = es.map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      val canon = TestSpark.edgesDF(canonPairs.map { case (a, b) => (a, b, 0) })
+        .select("src", "dst")
+      val mis = Traversals.maximalIndependentSet(canon).collect().map(_.getLong(0)).toSet
+      val verts = canonPairs.flatMap(e => Seq(e._1, e._2)).toSet
+      val adj = (canonPairs ++ canonPairs.map(_.swap)).groupMap(_._1)(_._2)
+      val independent = !canonPairs.exists { case (a, b) => mis(a) && mis(b) }
+      val maximal = (verts -- mis).forall(v => adj(v).exists(mis))
+      independent && maximal && mis.subsetOf(verts)
+    }, seed = Some(42L))
+  }
+
+  test("shortestPathNodes and pathTo walk the min-parent edge path of BFS length") {
+    check(Prop.forAll(genEdges) { es =>
+      val s = spark; import s.implicits._
+      val edges = TestSpark.edgesDF(es.map { case (a, b) => (a, b, 0) })
+      val from = es.map(_._1).min
+      val to = es.map(_._2).max
+      val dist = bruteSigma(es, from).view.mapValues(_._1).toMap
+      // min parent: the smallest predecessor one level closer to the source
+      val minParent = es.distinct.filter { case (u, v) =>
+          dist.contains(u) && dist.get(v).contains(dist(u) + 1) }
+        .groupMapReduce(_._2)(_._1)(math.min)
+      val nodes = Traversals.shortestPathNodes(edges, Seq(from).toDF("id"),
+          Seq(to).toDF("tid"), maxDepth = 15)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).map(_._2).toSeq
+      val tree = Traversals.ssspTree(edges, Seq(from).toDF("id"), maxDepth = 15)
+      val walk = Traversals.pathTo(tree, from, to)
+      val edgeSet = es.toSet
+      val valid = dist.get(to) match {
+        case None => nodes.isEmpty
+        case Some(d) =>
+          nodes.head == from && nodes.last == to && nodes.length == d + 1 &&
+            nodes.sliding(2).forall {
+              case Seq(u, v) => edgeSet((u, v)) && minParent(v) == u
+              case _ => true
+            }
+      }
+      valid && walk == nodes
+    }, seed = Some(43L))
   }
 }

@@ -417,4 +417,101 @@ class TraversalsSpec extends AnyFunSuite {
     assert(logicalRddLeaves(
       Traversals.foldAccum(u, Traversals.AccumFoldEvery)) == 1)
   }
+
+  val star = edgesDF((1L to 5L).map(i => (0L, i, 0)))
+  /** `df` as a canonical undirected edge set (src < dst, distinct). */
+  def canon(df: org.apache.spark.sql.DataFrame) =
+    df.select(least(col("src"), col("dst")).as("src"),
+      greatest(col("src"), col("dst")).as("dst")).distinct()
+
+  test("each superstep loop runs a pinned number of Spark jobs") {
+    val s = spark; import s.implicits._
+    def jobs(f: => Any): Int = TestSpark.jobsDuring(spark)(f)._2
+    val seed0 = Seq((0L, 0L)).toDF("source", "id")
+    val tree = Traversals.ssspTree(chain, Seq(0L).toDF("id"), maxDepth = 10)
+      .localCheckpoint(true)
+    // AQE off: under AQE a query stage that a runtime re-plan makes
+    // redundant (an empty join side) may or may not have started its job,
+    // so bfsDistances and ssspTree counts vary by one from run to run;
+    // without it a count is the actions and broadcasts alone, every run
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    // each algorithm plus one action on its result: the counts are the
+    // "one action per superstep" contract, so a change that adds a job
+    // to any loop shows here
+    val got = try Seq(
+      "bfsDistances" -> jobs(Traversals.bfsDistances(chain, seed0, 10).collect()),
+      "bfsSigma" -> jobs(Traversals.bfsSigma(sym(star), seed0, 4).collect()),
+      "expandUntil" -> jobs(Traversals.expandUntil(chain, Seq(0L).toDF("id"), 10)(
+        f => !f.filter(col("id") === 3L).isEmpty).visited.collect()),
+      "weightedSSSP" -> jobs(Traversals.weightedSSSP(
+        chain.withColumn("rating", col("src") % 3 + 1)).collect()),
+      "temporalReachFrom" -> jobs(Traversals.temporalReachFrom(
+        chain.withColumn("ets", col("src")), Seq(0L).toDF("v"), 4).collect()),
+      "kCore" -> jobs(Traversals.kCore(canon(twoComps), k = 2).collect()),
+      "kTruss" -> jobs(Queries.kTruss(canon(twoComps), k = 3).collect()),
+      "maximalIndependentSet" -> jobs(
+        Traversals.maximalIndependentSet(canon(twoComps)).collect()),
+      "maximalMatching" -> jobs(Traversals.maximalMatching(canon(twoComps)).collect()),
+      "shortestPathNodes" -> jobs(Traversals.shortestPathNodes(chain,
+        Seq(0L).toDF("id"), Seq(4L).toDF("tid"), 10).collect()),
+      "pathTo" -> jobs(Traversals.pathTo(tree, 0L, 4L)),
+      "MultiBFSPacked.run" -> jobs(
+        MultiBFSPacked.run(spark, sym(twoComps), Seq(0L, 10L), 5).collect()))
+    finally spark.conf.set(aqe, aqeWas)
+    // MultiBFSPacked.run's 8 includes the fused count that materializes
+    // its state before it releases the edge copy
+    assert(got == Seq("bfsDistances" -> 17, "bfsSigma" -> 9, "expandUntil" -> 16,
+      "weightedSSSP" -> 16, "temporalReachFrom" -> 14, "kCore" -> 18, "kTruss" -> 54,
+      "maximalIndependentSet" -> 13, "maximalMatching" -> 7, "shortestPathNodes" -> 27,
+      "pathTo" -> 8, "MultiBFSPacked.run" -> 8), got.mkString(", "))
+  }
+
+  test("MultiBFSPacked.run releases its resident edge copy and matches bfsDistances") {
+    val s = spark; import s.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val g = sym(twoComps)
+    val packed = MultiBFSPacked.run(spark, g, Seq(0L, 10L), maxDepth = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // what the run leaves persisted is its per-depth vertex state: none of
+    // it holds the 16 rows of the edge copy
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
+    assert(left.nonEmpty && left.forall(_.count() < g.count()),
+      s"an edge-sized RDD is still persisted: ${left.map(_.count())}")
+    val rows = Traversals.bfsDistances(g, Seq((0L, 0L), (10L, 10L)).toDF("source", "id"), 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(packed == rows)
+  }
+
+  test("kCore throws past maxIter with its own message") {
+    // the chain 10-11-12-13 peels one end pair per round: two rounds
+    val e = intercept[IllegalStateException](
+      Traversals.kCore(canon(twoComps), k = 2, maxIter = 1).collect())
+    assert(e.getMessage == "kCore(k=2) did not reach a fixpoint within maxIter=1 peel rounds")
+  }
+
+  test("kTruss throws past maxIter with its own message") {
+    // no triangles: every edge peels in round 1, and a second round would
+    // see the count hold
+    val e = intercept[IllegalStateException](
+      Queries.kTruss(canon(twoComps), k = 3, maxIter = 1).collect())
+    assert(e.getMessage == "kTruss(k=3) did not reach a fixpoint within maxIter=1 peel rounds")
+  }
+
+  test("maximalIndependentSet throws past maxIter with its own message") {
+    val path = edgesDF((0L until 30L).map(i => (i, i + 1, 0))).select("src", "dst")
+    val e = intercept[IllegalStateException](
+      Traversals.maximalIndependentSet(path, maxIter = 1).collect())
+    assert(e.getMessage ==
+      "maximalIndependentSet did not decide all vertices within maxIter=1 rounds")
+  }
+
+  test("maximalMatching throws past maxIter with its own message") {
+    val path = edgesDF((0L until 30L).map(i => (i, i + 1, 0))).select("src", "dst")
+    val e = intercept[IllegalStateException](
+      Traversals.maximalMatching(path, maxIter = 1).collect())
+    assert(e.getMessage == "maximalMatching did not retire all edges within maxIter=1 rounds")
+  }
 }
