@@ -188,10 +188,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * launch + codegen floor a job at ~100 ms even when manifest pruning
     * routes to one file. This path never leaves the driver: the manifest
     * routes by [srcMin, srcMax] (the reference's interval→shard
-    * selection), then [[servedScan]] reads the hit files with a src = key
-    * predicate — row groups whose footer stats exclude the key are
-    * skipped (the same min/max a Spark scan would use), dictionary and
-    * page filtering drop the rest. Rows carry the Spark external types of
+    * selection), then [[servedScan]] decodes only the row groups and
+    * pages of the hit files whose src range holds the key (footer
+    * min/max, then the column index). Rows carry the Spark external types of
     * the manifest schema, in manifest column order: the values and
     * classes `read(v).collect()` returns for the same rows (Byte for
     * TINYINT, BigDecimal for DECIMAL, Date, Timestamp, …).
@@ -297,12 +296,12 @@ class DurableStore(val spark: SparkSession, val root: String,
     * routes the in-edge mirror plus the unsorted deltas (shared by both
     * views) by [dstMin, dstMax]; "id" routes the vertex side-table files
     * by their id range (both stat pairs carry it). A file is routed when
-    * one of the sorted `keys` falls in its range — binary search for the
-    * first key ≥ its min, then one bound check, never keys × files — or,
-    * with `span`, when its range overlaps [keys(0), keys(1)]; null `keys`
-    * routes the whole side. An unindexed store has no in side: its "dst"
-    * routing is the whole store, unpruned ([[route]] refuses that read
-    * first). */
+    * one of the sorted `keys` falls in its range ([[DurableStore.covers]],
+    * the rule [[servedScan]] then applies to the row groups and pages
+    * inside each routed file) or, with `span`, when its range overlaps
+    * [keys(0), keys(1)]; null `keys` routes the whole side. An unindexed
+    * store has no in side: its "dst" routing is the whole store, unpruned
+    * ([[route]] refuses that read first). */
   private def routeFiles(m: Manifest, key: String, keys: Array[Long],
                          span: Boolean = false): Seq[StoreFile] = {
     val (files, lo, hi): (Seq[StoreFile], StoreFile => Long, StoreFile => Long) =
@@ -314,11 +313,7 @@ class DurableStore(val spark: SparkSession, val root: String,
       }
     if (keys == null) files
     else if (span) files.filter(f => hi(f) >= keys(0) && lo(f) <= keys(1))
-    else files.filter { f =>
-      val i = java.util.Arrays.binarySearch(keys, lo(f))
-      val first = if (i < 0) -i - 1 else i
-      first < keys.length && keys(first) <= hi(f)
-    }
+    else files.filter(f => covers(keys, lo(f), hi(f)))
   }
 
   /** THE routing-and-budget core of every served read. The sorted `keys`
@@ -372,40 +367,31 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** THE driver-side read behind every served path — no Spark job. Each
     * routed task's file (a delta DIRECTORY expands to its part files via
     * [[DurableStore.partPaths]], so each part is its own concurrent task
-    * and the footer cache keys on real files) is read with its
-    * `filterCol ∈ keys` pushed as ONE parquet `in` predicate against the
-    * CACHED footer ([[DurableStore.cachedFooter]]): row groups by min/max
-    * and dictionary, then column-index page ranges — the files are
-    * sorted on the filter column, so page stats are tight. Files run
-    * concurrently on the bounded [[DurableStore.serveEc]] pool, so the
-    * wall time is the slowest single file. `keys` MUST be sorted (the
-    * sinks test record membership by binary search); `null` reads every
-    * row. Each file's sink gets the (src, dst) tombstone checker of
-    * [[DurableStore.tombChecker]] for its seq — null, the common case,
-    * costs nothing — and applies it record-level: the served form of the
-    * [[readStore]] anti-join. Unsorted delta files are served by the same
-    * predicate but cannot page-prune — [[route]] budgets them by rows.
-    * Results come back per part file, in task order. */
+    * and the footer cache keys on real files) is opened on its CACHED
+    * footer ([[DurableStore.cachedFooter]]) and decodes only the row
+    * groups and pages whose `filterCol` range holds one of `keys`
+    * ([[ScanFile]]): per key, not by the keys' envelope, so keys spread
+    * across a sorted file read their own pages and none between. Files
+    * run concurrently on the bounded [[DurableStore.serveEc]] pool, so
+    * the wall time is the slowest single file. `keys` MUST be sorted (the
+    * page rule and the sinks' record membership binary-search them);
+    * `null` reads every row. Each file's sink gets the (src, dst)
+    * tombstone checker of [[DurableStore.tombChecker]] for its seq —
+    * null, the common case, costs nothing — and applies it record-level:
+    * the served form of the [[readStore]] anti-join. Unsorted delta
+    * files take the same page rule, but their pages span the whole key
+    * range — [[route]] budgets them by rows. Results come back per part
+    * file, in task order. */
   private def servedScan[R](tasks: Seq[ScanTask], keys: Array[Long],
                             tombs: Seq[TombEntry], conf: Configuration = serveConf)(
       sink: (ScanFile, ScanTask, (Long, Long) => Boolean) => R): Seq[(ScanTask, R)] = {
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
     import scala.concurrent.duration._
-    val filters: Map[String, FilterCompat.Filter] =
-      if (keys == null) Map.empty.withDefaultValue(FilterCompat.NOOP)
-      else {
-        val keySet = new java.util.HashSet[java.lang.Long](keys.length * 2)
-        keys.foreach(k => keySet.add(java.lang.Long.valueOf(k)))
-        tasks.map(_.filterCol).distinct.map(c =>
-          c -> FilterCompat.get(FilterApi.in(FilterApi.longColumn(c), keySet))).toMap
-      }
     val parts = tasks.flatMap { t =>
       val excl = tombChecker(tombs, t.file.seq)
       partPaths(t.file.path).map(p => (p, t, excl))
     }
     def one(p: (String, ScanTask, (Long, Long) => Boolean)): (ScanTask, R) =
-      (p._2, sink(new ScanFile(conf, p._1, filters(p._2.filterCol)), p._2, p._3))
+      (p._2, sink(new ScanFile(conf, p._1, p._2.filterCol, keys), p._2, p._3))
     if (parts.size <= 1) parts.map(one)
     else {
       implicit val ec: scala.concurrent.ExecutionContext = serveEc
@@ -602,9 +588,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * is answered on the DRIVER (manifest-routed parquet-mr reads, no
     * Spark job, the reference's mmap-lookup latency class). Hop 2
     * follows the same discipline for low-fanout vertices (VERDICT r10
-    * next #1): the mids push as one `in` predicate into the routed
-    * primary + mirror file sets ([[servedScan]] — page-pruned by
-    * sort order, 2-column projection, concurrent per-file reads) and
+    * next #1): the mids route into the primary + mirror file sets
+    * ([[servedScan]] — only the pages holding a mid, 2-column
+    * projection, concurrent per-file reads) and
     * the count/top-k runs in a driver hash map — the WHOLE query then
     * runs ZERO Spark jobs, end to end in the reference's native
     * latency class (QueryShard.java:207-253). Past the store's fixed
@@ -619,9 +605,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     // reader would put file-count-proportional driver I/O on the
     // serving path — review r10)
     val m = manifest(v)
-    // the zero-job DRIVER regime stays capped at the pushed-IN key
-    // budget (a million-key parquet-mr `in` predicate is not the
-    // millisecond class); past it the ONE-JOB form takes over, whose
+    // the zero-job DRIVER regime stays capped at the served key
+    // budget (a million-key driver read is not the millisecond
+    // class); past it the ONE-JOB form takes over, whose
     // readers bridge literal-IN → broadcast-semi-join by mid count
     // ([[Queries.keyFilter]] — VERDICT r12 next #6), so the scan cliff
     // only starts at [[Queries.servedFofFrom]]'s own fanout cap
@@ -656,8 +642,8 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** N3 SERVED (VERDICT r11 next #7): the multi-key driver read behind
     * [[servedFof]]'s hop 2, exposed as a public frontier-hop primitive —
     * dst values of every row with src ∈ `keys`, ZERO Spark jobs. Routed
-    * by manifest stats, pushed as ONE parquet `in` predicate per file
-    * (page-pruned by sort order), 2-column projection, concurrent
+    * by manifest stats, decoding only the pages whose key range holds
+    * a key ([[servedScan]]), 2-column projection, concurrent
     * per-file reads, tombstones excluded record-level. Repeats kept —
     * path-multiplicity semantics, row-equal to
     * `readForSrcs(v, keys).filter(src isin keys).select(dst)`
@@ -680,8 +666,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     servedHopM(manifest(v), keys, out = true, in = true)
 
   /** Shared core of the served hop family: [[route]] `keys` into the
-    * primary (src side) and/or mirror + deltas (dst side), read with one
-    * pushed `in` predicate per file. The wall time of a hop is the
+    * primary (src side) and/or mirror + deltas (dst side), each file
+    * read at the pages that hold a key. The wall time of a hop is the
     * slowest single file across both directions. */
   private def servedHopM(m: Manifest, keys: Array[Long], out: Boolean, in: Boolean)
       : Option[Array[Long]] = {
@@ -730,7 +716,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * jobs — the reference maintains a degree COLUMN for O(1) degree
     * reads (GraphChiDatabase.scala:1759-1833 degree bookkeeping, zeroed
     * on deleteVertex :1331, served by `degree(v)`); here the degrees
-    * are COUNTED at serve time from the manifest-routed files (pushed-IN
+    * are COUNTED at serve time from the manifest-routed files (keyed
     * reads of the key column only), so they are transactional with every
     * mutation for free — read-your-writes through deltas, tombstones
     * excluded record-level, no counter to keep consistent with the
@@ -789,7 +775,7 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** Q6 SERVED: the single-source shortest-path TREE (dist + parent per
     * reached vertex, reference Queries.scala:198-243) computed entirely
     * on the driver — each BFS level is one [[route]]d pair read of
-    * [[scanLongs]] (pushed-IN reads returning (parent, child) pairs), the
+    * [[scanLongs]] (keyed reads returning (parent, child) pairs), the
     * parent rule is MIN predecessor at dist-1, exactly
     * [[Traversals.ssspTree]]'s deterministic tree (level-synchronous
     * expansion makes the per-level min equal the global min over dist-1
@@ -865,7 +851,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * Outer None = REFUSED, not unreachable: unindexed store
     * (`buildInEdgeIndex`), a hop past the store's fixed file/delta/
     * tombstone budgets (`compact()`), or a frontier outgrowing
-    * [[DurableStore.ServeLocalKeyBudget]] (the pushed-IN key list and
+    * [[DurableStore.ServeLocalKeyBudget]] (the served key list and
     * driver maps must stay serving-sized — a hub-scale frontier belongs
     * to the distributed [[Traversals.bidirectionalDist]], the documented
     * fallback). Inner Some(d) = exact distance; inner None = no path
@@ -933,9 +919,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     val localHop1 = route(m, v0a, out = true, in = true, gated = false).toOption
       .map(r => scanLongs(r.tasks, v0a, r.tombs)._2.distinct)
     // hop 2 DRIVER-LOCAL (VERDICT r10 next #1) — the last Spark job on
-    // the serving path, removed for low-fanout vertices: push the mids
-    // as one parquet `in` predicate into the manifest-routed primary
-    // (src side) and mirror (dst side) file sets, count and top-k on
+    // the serving path, removed for low-fanout vertices: read the mids
+    // from the manifest-routed primary (src side) and mirror (dst side)
+    // file sets at the pages that hold them, count and top-k on
     // the driver. Engaged only when the routed read is provably in the
     // millisecond class ([[route]]'s file and delta-row budgets); past
     // either budget, fall through to the one-job aggregate, which that
@@ -2092,15 +2078,36 @@ object DurableStore {
   val DefaultMaxBucketRows: Long = 4L << 20
   /** Target rows per written file: rewrite parallelism = rows / this. */
   val DefaultTargetFileRows: Long = 1L << 20
+  /** Rows per parquet page of every sorted file [[writeBuckets]] writes
+    * (parquet's own limit is 20,000): the unit a served read decodes per
+    * requested key ([[ScanFile]]), at ~1% more store bytes than 20,000. */
+  private[graft] val PageRows: Int = 4096
+
+  /** THE key-coverage rule, of files ([[DurableStore.routeFiles]]) and of
+    * the row groups and pages inside them ([[ScanFile]]): some key of the
+    * sorted `keys` lies in [lo, hi] — binary search for the first key
+    * ≥ lo, then one bound check, never keys × ranges. */
+  private[graft] def covers(keys: Array[Long], lo: Long, hi: Long): Boolean = {
+    val i = java.util.Arrays.binarySearch(keys, lo)
+    val first = if (i < 0) -i - 1 else i
+    first < keys.length && keys(first) <= hi
+  }
+
+  /** The pages, by ordinal, whose [mins(j), maxs(j)] range [[covers]] one
+    * of the sorted `keys`. */
+  private[graft] def coveredPages(keys: Array[Long], mins: Array[Long],
+                                  maxs: Array[Long]): Array[Int] =
+    mins.indices.filter(j => covers(keys, mins(j), maxs(j))).toArray
 
   /** The store's FIXED serving budgets for a multi-key driver read — no
     * served method takes them as arguments; [[DurableStore.route]] reads
     * them (through the handle's `serveBudget`) and refuses past them. A
-    * local read costs one open per hit file plus the key-covering PAGES
-    * (sorted files page-prune by column index), so the honest budget is
-    * the file count — not rows, which page pruning makes irrelevant on
-    * sorted files. Unsorted deltas can't page-prune and decode in full,
-    * so they budget by rows. 256 files ≈ a few hundred ms worst case on
+    * local read costs one open per hit file plus the pages whose key
+    * range holds a key ([[DurableStore.servedScan]]), so the honest
+    * budget is the file count — not rows, which page selection makes
+    * irrelevant on sorted files. The pages of an unsorted delta span
+    * its whole key range, so a delta decodes in full and budgets by
+    * rows. 256 files ≈ a few hundred ms worst case on
     * the bounded pool. Past either budget a served read answers None (the
     * registry arms and [[DurableStore.servedFof]] fall to the one-job
     * distributed read); `compact()` folds deltas and small files back
@@ -2108,8 +2115,8 @@ object DurableStore {
   val ServeLocalFileBudget: Int = 256
   val ServeLocalDeltaRowBudget: Long = 1L << 20
   /** Key-count cap of the ZERO-JOB driver regime: up to this many FoF mids
-    * or BFS frontier ids travel as one pushed parquet `in` predicate per
-    * routed file (the r11 envelope). Past it the served FoF takes the
+    * or BFS frontier ids are read on the driver, each routed file at the
+    * pages that hold one (the r11 envelope). Past it the served FoF takes the
     * one-job form with [[graft.Queries.keyFilter]]'s broadcast-semi-join
     * middle regime, and the served shortest path / SSSP tree refuse to
     * their distributed forms. */
@@ -2134,35 +2141,79 @@ object DurableStore {
 
   /** One part file opened for a served read: its CACHED footer (the
     * reader starts at the first page read instead of re-reading and
-    * thrift-parsing the footer per call), and the pushed `in` filter,
-    * which prunes row groups (stats + dictionary, against that footer)
-    * and column-index page ranges. RECORD-level membership is the sink's
-    * test (binary search on the sorted keys — no per-record boxing), so
-    * no assembly-level filter is passed to the record reader. */
+    * thrift-parsing the footer per call) and the sorted `keys` its
+    * `keyCol` is read for (null: every row). [[foreach]] decodes only the
+    * row groups and pages that can hold a key, each by [[covers]]: a row
+    * group by its footer min/max, a page by its min/max in the file's
+    * column index ([[coveredPages]]), its rows located by the offset
+    * index. Where that evidence is missing — no statistics, no column
+    * index — every page is read. A
+    * selected page still holds rows of other keys: RECORD-level
+    * membership is the sink's test (binary search on the sorted keys —
+    * no per-record boxing). */
   private final class ScanFile(conf: Configuration, path: String,
-                               filter: org.apache.parquet.filter2.compat.FilterCompat.Filter) {
+                               keyCol: String, keys: Array[Long]) {
+    import org.apache.parquet.column.page.PageReadStore
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.BlockMetaData
     private val p = new org.apache.hadoop.fs.Path(path)
     val footer: org.apache.parquet.hadoop.metadata.ParquetMetadata = cachedFooter(conf, p)
     def schema: org.apache.parquet.schema.MessageType = footer.getFileMetaData.getSchema
 
-    /** Assemble every record of the surviving pages, projected to
+    /** Assemble every record of the selected pages, projected to
       * `requested`, through `mat`, handing each record to `each`. */
     def foreach[T](requested: org.apache.parquet.schema.MessageType,
                    mat: org.apache.parquet.io.api.RecordMaterializer[T])(each: T => Unit): Unit = {
-      val reader = new org.apache.parquet.hadoop.ParquetFileReader(conf, p, footer,
-        org.apache.parquet.HadoopReadOptions.builder(conf, p).withRecordFilter(filter).build())
+      val reader = new ParquetFileReader(conf, p, footer,
+        org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
       try {
         reader.setRequestedSchema(requested)
         val cio = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested, schema)
-        var pages = reader.readNextFilteredRowGroup()
-        while (pages != null) {
-          val rr = cio.getRecordReader(pages, mat)
-          val n = pages.getRowCount
-          var i = 0L
-          while (i < n) { each(rr.read()); i += 1 }
-          pages = reader.readNextFilteredRowGroup()
+        val blocks = reader.getRowGroups
+        var b = 0
+        while (b < blocks.size) {
+          val pages = selected(reader, b, blocks.get(b))
+          if (pages != null) {
+            val rr = cio.getRecordReader(pages, mat)
+            val n = pages.getRowCount
+            var i = 0L
+            while (i < n) { each(rr.read()); i += 1 }
+          }
+          b += 1
         }
       } finally reader.close()
+    }
+
+    /** Row group `b` cut to the pages whose key range holds a key — the
+      * whole group when every page does or the evidence is missing — or
+      * null when none does. */
+    private def selected(reader: ParquetFileReader, b: Int, block: BlockMetaData): PageReadStore = {
+      if (block.getRowCount == 0) return null
+      val chunk = block.getColumns.asScala.find(_.getPath.toDotString == keyCol).orNull
+      if (keys == null || chunk == null) return reader.readRowGroup(b)
+      val st: org.apache.parquet.column.statistics.Statistics[_] = chunk.getStatistics
+      if (st != null && st.hasNonNullValue &&
+          !covers(keys, st.genericGetMin.asInstanceOf[java.lang.Long],
+            st.genericGetMax.asInstanceOf[java.lang.Long])) return null
+      // the reader's index store for the group: readFilteredRowGroup
+      // reuses it, so each index is read from the file once
+      val indexes = reader.getColumnIndexStore(b)
+      val ci = indexes.getColumnIndex(chunk.getPath)
+      if (ci == null) return reader.readRowGroup(b)
+      val nulls = ci.getNullPages
+      // an all-null page is the empty range [MaxValue, MinValue]
+      def bounds(v: java.util.List[java.nio.ByteBuffer], ifNull: Long) =
+        Array.tabulate(nulls.size) { j =>
+          val bb = v.get(j)
+          if (nulls.get(j)) ifNull
+          else bb.duplicate().order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(bb.position())
+        }
+      val hit = coveredPages(keys, bounds(ci.getMinValues, Long.MaxValue),
+        bounds(ci.getMaxValues, Long.MinValue))
+      // no page selected reads as null, every page as the whole group
+      reader.readFilteredRowGroup(b,
+        org.apache.parquet.internal.filter2.columnindex.RowRanges.create(block.getRowCount,
+          java.util.Arrays.stream(hit).iterator(), indexes.getOffsetIndex(chunk.getPath)))
     }
   }
 
@@ -2414,8 +2465,8 @@ object DurableStore {
           scala.concurrent.Future {
             val footer = cachedFooter(conf, new org.apache.hadoop.fs.Path(p))
             val schema = footer.getFileMetaData.getSchema
-            // the serving reads decode long endpoints (FilterApi
-            // .longColumn + addLong) — a non-INT64 src/dst must fail
+            // the serving reads decode long endpoints (INT64 page
+            // bounds + addLong) — a non-INT64 src/dst must fail
             // HERE with the file named, not as a ClassCastException off
             // the stats pool (review, round-11 continuation)
             Seq("src", "dst").foreach { c =>
@@ -2638,7 +2689,8 @@ object DurableStore {
     * across `max(minParts, rows/targetFileRows)` tasks, sort within each
     * task, write hive-partitioned by bucket. Each task's slice of a bucket
     * lands as one (key, sec)-sorted file covering a disjoint key sub-range
-    * — a multi-file sorted bucket — and per-file stats come back from
+    * — a multi-file sorted bucket — in pages of [[PageRows]] rows, and
+    * per-file stats come back from
     * [[statsForDir]]. (key, sec) = ("src", "dst") for the primary,
     * ("dst", "src") for the in-edge mirror, both with (src, dst) stats;
     * ("id", "id") for the vertex side-table, with the id range as both
@@ -2656,7 +2708,9 @@ object DurableStore {
     df.withColumn("_b", bucketCol(key, bounds))
       .repartitionByRange(nParts, order.map(col): _*)
       .sortWithinPartitions(order.map(col): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("_b").parquet(dir)
+      .write.mode(SaveMode.Overwrite)
+      .option(org.apache.parquet.hadoop.ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT, PageRows)
+      .partitionBy("_b").parquet(dir)
     if (key == sec) statsForDir(spark, dir, key, key) else statsForDir(spark, dir)
   }
 
@@ -2756,11 +2810,16 @@ object DurableStore {
     * written part files' footers ([[statsForDir]], which scans the files
     * when a footer lacks a usable statistic). The edge delta ranges are
     * (src, dst); a vertex delta carries the id range on both sides
-    * (c0 = c1 = "id"). A write with no rows deletes what it wrote and
-    * returns Nil. */
+    * (c0 = c1 = "id"). A frame whose optimized plan is a LocalRelation
+    * (a client's point batch) is written as ONE part file: split across
+    * the default parallelism, a 16-row batch would cost every served
+    * read of the delta one file open per part. A write with no rows
+    * deletes what it wrote and returns Nil. */
   private def writeDelta(df: DataFrame, dir: String,
                          c0: String = "src", c1: String = "dst"): Seq[StoreFile] = {
-    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    val local = df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (if (local) df.coalesce(1) else df).write.mode(SaveMode.Overwrite).parquet(dir)
     val fs = statsForDir(df.sparkSession, dir, c0, c1, bucketed = false)
     if (fs.isEmpty) { deletePath(dir); Nil }
     else Seq(StoreFile(-1, dir, fs.map(_.srcMin).min, fs.map(_.srcMax).max,

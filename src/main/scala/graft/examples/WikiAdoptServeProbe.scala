@@ -207,7 +207,7 @@ object WikiAdoptServeProbe {
       .exists(_(wIdx) != 0.5), "time travel broken: v3 shows the update")
 
     // ---- SERVED TRAVERSAL at 1B (VERDICT r11 next #3): bidirectional
-    // BFS entirely on the driver — frontier hops as pushed-IN reads
+    // BFS entirely on the driver — frontier hops as keyed served reads
     // against the adopted primary + mirror (the servedFof mechanism
     // generalized one level, reference Queries.scala:107-194). Three
     // legs: a 2-hop meet, a same-copy far vertex, and a CROSS-COPY pair

@@ -380,7 +380,7 @@ object DurableQueries {
 
     // ---- N3 SERVED (VERDICT r11 next #7): the multi-key frontier hop
     //      as a ZERO-JOB driver read — dst values of every src in the
-    //      key set, pushed as one parquet `in` predicate per routed
+    //      key set, read at the key-holding pages of each routed
     //      file, row-equal to the distributed readForSrcs form ----
     ("n3s_query_out_multiple_served",
       (s: SparkSession, d: String) => {
@@ -394,7 +394,7 @@ object DurableQueries {
           |  SELECT src FROM (SELECT DISTINCT src FROM edges ORDER BY src LIMIT 2))""".stripMargin))),
 
     // ---- Q5 SERVED (VERDICT r11 next #3 mechanism): bidirectional BFS
-    //      distance entirely on the driver — frontier hops as pushed-IN
+    //      distance entirely on the driver — frontier hops as keyed
     //      served reads against primary + mirror, min meet over the
     //      completed level (reference Queries.scala:107-194). The oracle
     //      is the same recursive walk the q5 family uses, over the
@@ -440,7 +440,7 @@ object DurableQueries {
 
     // ---- Q6 SERVED: the single-source shortest-path TREE (dist +
     //      min-parent, reference Queries.scala:198-243) computed on the
-    //      driver — one pushed-IN pair read per BFS level, zero Spark
+    //      driver — one keyed pair read per BFS level, zero Spark
     //      jobs at serving scale; past the frontier gate it falls back
     //      to the distributed Traversals.ssspTree (same tree — the
     //      min-parent rule is level-order-independent) ----

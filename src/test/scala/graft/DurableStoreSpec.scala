@@ -1520,4 +1520,111 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(v3 > v2, "vtomb rows did not pressure compactIfPressured")
     assert(low.manifest(v3).vtombs.isEmpty)
   }
+
+  /** `f` over a parquet-mr reader of the file at `path`. */
+  private def withReader[A](path: String)(f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+    try f(r) finally r.close()
+  }
+
+  /** Per row group of the parquet file at `path`: the row count of each
+    * page of column `c`, read from its offset index. */
+  private def pageRowCounts(path: String, c: String): Seq[Seq[Long]] = withReader(path) { r =>
+    import scala.jdk.CollectionConverters._
+    r.getFooter.getBlocks.asScala.toSeq.map { b =>
+      val oi = r.readOffsetIndex(b.getColumns.asScala.find(_.getPath.toDotString == c).get)
+      (0 until oi.getPageCount).map(j =>
+        oi.getLastRowIndex(j, b.getRowCount) - oi.getFirstRowIndex(j) + 1)
+    }
+  }
+
+  /** `n` (src, dst, w) edges over even ids below 2 * `ids`, seeded. */
+  private def spreadEdges(n: Int, ids: Int, seed: Long) = {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)((2L * rnd.nextInt(ids), 2L * rnd.nextInt(ids))).toDF("src", "dst")
+      .select(col("src"), col("dst"), (col("src") * 10 + col("dst")).as("w"))
+  }
+
+  test("every sorted file is written in pages of PageRows rows: create, " +
+       "buildInEdgeIndex, setVertexTable and compact") {
+    val s = spark; import s.implicits._
+    val st = DurableStore.create(spark, spreadEdges(24000, 4000, 7L),
+      Files.createTempDirectory("graft-pages").toString, numBuckets = 2)
+    val v2 = st.buildInEdgeIndex(1, numBuckets = 2)
+    val v3 = st.setVertexTable(v2, (0L until 9000L).map(i => (i, i * 3)).toDF("id", "score"),
+      numBuckets = 2)
+    val v4 = st.append(v3, edges((2L, 4L), (6L, 8L), (10L, 12L)))
+    val v5 = st.compact(v4)
+    // every sorted file of every version, each with its key column
+    val files = (1 to v5).map(st.manifest).flatMap { m =>
+      m.files.filter(_.sorted).map(_.path -> "src") ++ m.mirror.map(_.path -> "dst") ++
+        m.vfiles.filter(_.sorted).map(_.path -> "id")
+    }.distinct
+    val compacted = st.manifest(v5).files.map(_.path).toSet -- st.manifest(v4).files.map(_.path)
+    assert(compacted.nonEmpty, "compact rewrote no file")
+    val groups = files.flatMap { case (p, c) => pageRowCounts(p, c).map(p -> _) }
+    groups.foreach { case (p, pages) =>
+      assert(pages.init.forall(_ == DurableStore.PageRows) &&
+        pages.last > 0 && pages.last <= DurableStore.PageRows, s"$p pages $pages")
+    }
+    // not vacuous: primary, mirror and compacted files span several pages
+    assert(groups.exists { case (p, g) => compacted(p) && g.size >= 3 })
+    assert(groups.count(_._2.size >= 3) >= 4, groups.map(_._2.size))
+  }
+
+  test("a store written with no column index or statistics serves equal answers") {
+    import scala.jdk.CollectionConverters._
+    val e = spreadEdges(20000, 3000, 11L)
+    def store(prefix: String) = DurableStore.create(spark, e,
+      Files.createTempDirectory(prefix).toString, numBuckets = 2, withInEdgeIndex = true)
+    val indexed = store("graft-ci")
+    val key = "parquet.column.statistics.enabled"
+    spark.conf.set(key, "false")
+    val bare = try store("graft-noci") finally spark.conf.unset(key)
+    val m = bare.manifest(1)
+    (m.files ++ m.mirror).foreach(f => withReader(f.path) { r =>
+      r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).foreach { c =>
+        assert(r.readColumnIndex(c) == null, s"${f.path} ${c.getPath} has a column index")
+      }
+    })
+    val rnd = new scala.util.Random(3L)
+    Seq.fill(12)(Array.fill(1 + rnd.nextInt(6))(rnd.nextInt(6200).toLong - 100)).foreach { ks =>
+      def answers(st: DurableStore) = (
+        st.servedOutRows(1, ks).get.map(TestSpark.typedKey).sorted,
+        st.servedInRows(1, ks).get.map(TestSpark.typedKey).sorted,
+        st.servedNeighbors(1, ks).get.sorted.toSeq,
+        st.servedDegrees(1, ks).get,
+        st.pointReadLocal(1, ks.head).map(TestSpark.typedKey).sorted)
+      assert(answers(bare) == answers(indexed), ks.mkString(","))
+    }
+  }
+
+  test("a local point batch commits one part file; a distributed batch " +
+       "still writes in parallel") {
+    import scala.jdk.CollectionConverters._
+    val st = fresh(base: _*)
+    // the part files of the one delta commit `v` added over `from`
+    def parts(from: Int, v: Int): Int = {
+      val d = st.manifest(v).files.filterNot(f => st.manifest(from).files.exists(_.path == f.path))
+      assert(d.size == 1 && !d.head.sorted, s"expected one delta, got $d")
+      val s = Files.list(java.nio.file.Paths.get(d.head.path))
+      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+    val local = edges((0L until 16L).map(i => (100L + i, 200L + i)): _*)
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val v2 = st.append(1, local)
+    assert(parts(1, v2) == 1, "16-row local append")
+    val v3 = st.updateEdgeDelta(v2, 5L, 10L, "w", lit(77L))
+    assert(parts(v2, v3) == 1, "updateEdgeDelta")
+    val spread = spark.range(0, 64, 1, 4).select(col("id").as("src"),
+      (col("id") + 1).as("dst"), lit(0).as("etype"), (col("id") * 10).as("w"))
+    val v4 = st.append(v3, spread)
+    assert(parts(v3, v4) >= 2, "4-partition distributed append")
+    assert(st.read(v4).count() == base.size + 16 + 64)
+  }
 }

@@ -800,4 +800,110 @@ class PropertySpec extends AnyFunSuite {
       valid && walk == nodes
     }, seed = Some(43L))
   }
+
+  test("served reads select parquet pages per key: equal to the distributed " +
+       "reads on multi-page files across deltas and tombstones") {
+    // one store whose sorted primary and mirror file each span seven
+    // pages, with live deltas, tombstones and an update; random key sets
+    // — one key, keys spread across pages, page-boundary keys, absent
+    // keys, keys outside every file — read through the page-selecting
+    // served paths must equal the distributed reads
+    import org.apache.spark.sql.functions.{col, lit}
+    import scala.jdk.CollectionConverters._
+    import TestSpark.sameTypedRows
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    // even ids only: every odd id inside a file's range is an absent key
+    val ids = 3000
+    def pair() = (2L * rnd.nextInt(ids), 2L * rnd.nextInt(ids))
+    def frame(ps: Seq[(Long, Long)]) = ps.toDF("src", "dst").select(col("src"), col("dst"),
+      (col("src") % 15).cast("int").as("etype"), (col("src") * 31 + col("dst")).as("ts"),
+      (col("dst") / 7.0).cast("float").as("weight"))
+    val base = Seq.fill(28000)(pair())
+    val st = DurableStore.create(spark, frame(base),
+      java.nio.file.Files.createTempDirectory("graft-prop-pages").toString,
+      numBuckets = 1, withInEdgeIndex = true)
+    var v = st.append(1, frame(Seq.fill(16)(pair())))
+    v = st.deleteEdgesTombstone(v, rnd.shuffle(base).take(40))
+    v = st.updateEdgeDelta(v, base(7)._1, base(7)._2, "weight", lit(0.5f))
+    v = st.append(v, frame(Seq.fill(16)(pair())))
+    val m = st.manifest(v)
+    assert(m.tombs.nonEmpty && m.files.count(!_.sorted) == 3, m)
+    // each sorted file's key-column page bounds, from its column index
+    def pageBounds(path: String, c: String): Seq[(Long, Long)] = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+      def long(b: java.nio.ByteBuffer) =
+        b.duplicate().order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(b.position())
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+        val ci = r.readColumnIndex(b.getColumns.asScala.find(_.getPath.toDotString == c).get)
+        ci.getMinValues.asScala.map(long).zip(ci.getMaxValues.asScala.map(long))
+      } finally r.close()
+    }
+    val pages = m.files.filter(_.sorted).map(f => pageBounds(f.path, "src")) ++
+      m.mirror.map(f => pageBounds(f.path, "dst"))
+    assert(pages.size == 2 && pages.forall(_.size >= 3), pages.map(_.size))
+    val boundary = pages.flatten.flatMap { case (lo, hi) => Seq(lo - 1, lo, hi, hi + 1) }.distinct
+    val edges = st.read(v).collect().map(_.toSeq).toSeq
+    val (si, di) = (0, 1)
+    val genKey: Gen[Long] = Gen.frequency(
+      3 -> Gen.choose(0L, 2L * ids),
+      3 -> Gen.oneOf(boundary),
+      1 -> Gen.oneOf(Gen.choose(-50L, -1L), Gen.choose(2L * ids + 1, 2L * ids + 50)))
+    val genKeys = Gen.oneOf(genKey.map(List(_)), Gen.choose(2, 12).flatMap(Gen.listOfN(_, genKey)))
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genKeys) { ks =>
+      val keys = ks.toArray
+      val set = ks.toSet
+      def on(i: Int) = edges.filter(r => set(r(i).asInstanceOf[Long]))
+      def count(i: Int, k: Long) = edges.count(_(i) == k).toLong
+      val (outs, ins) = (on(si), on(di))
+      Prop.all(
+        sameTypedRows(st.servedOutRows(v, keys).get, outs) :| "servedOutRows",
+        sameTypedRows(st.servedInRows(v, keys).get, ins) :| "servedInRows",
+        (st.servedNeighbors(v, keys).get.sorted.toSeq ==
+          (outs.map(_(di)) ++ ins.map(_(si))).map(_.asInstanceOf[Long]).sorted) :| "servedNeighbors",
+        (st.servedDegrees(v, keys).get ==
+          ks.distinct.sorted.map(k => (k, count(si, k), count(di, k)))) :| "servedDegrees")
+    })
+    assert(res.passed, res.status.toString)
+    // FoF against its distributed job form: a hub, page-boundary keys, an
+    // absent key and a key outside every file
+    val hub = edges.groupBy(_(si)).maxBy(_._2.size)._1.asInstanceOf[Long]
+    (Seq(hub, -7L, 2L * ids + 9, 1L) ++ boundary.take(3)).foreach { v0 =>
+      val job = Queries.servedFofFrom(
+        out = ks => Queries.keyFilter(st.readForSrcs(v, ks), "src", ks).select("src", "dst"),
+        in = ks => Queries.keyFilter(st.readForDsts(v, ks), "dst", ks).select("src", "dst"),
+        v0 = v0).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(st.servedFofRows(v, v0).get == job, s"servedFofRows($v0)")
+    }
+  }
+
+  test("the page-selection rule equals a brute-force scan over random page bounds") {
+    // page ranges in any order, overlapping, empty (min > max, the
+    // encoding of an all-null page) and at the long extremes
+    val genBound = Gen.frequency(
+      8 -> (for (a <- Gen.choose(-60L, 60L); w <- Gen.choose(-3L, 25L)) yield (a, a + w)),
+      1 -> Gen.const((Long.MaxValue, Long.MinValue)),
+      1 -> Gen.oneOf((Long.MinValue, -40L), (40L, Long.MaxValue)))
+    val genKey = Gen.frequency(9 -> Gen.choose(-70L, 70L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue))
+    val genCase = for {
+      bounds <- Gen.choose(0, 40).flatMap(Gen.listOfN(_, genBound))
+      keys <- Gen.choose(0, 12).flatMap(Gen.listOfN(_, genKey))
+    } yield (bounds, keys.toArray.sorted)
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(500)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261021L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genCase) { case (bounds, keys) =>
+      val got = DurableStore.coveredPages(keys, bounds.map(_._1).toArray,
+        bounds.map(_._2).toArray).toSeq
+      val want = bounds.indices.filter { j =>
+        val (lo, hi) = bounds(j); keys.exists(k => lo <= k && k <= hi)
+      }
+      (got == want) :| s"got $got, want $want"
+    })
+    assert(res.passed, res.status.toString)
+  }
 }
