@@ -7,6 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.hadoop.mapreduce.TaskAttemptContext
 
 /** Durable, versioned edge store — the Spark re-expression of the
   * reference's LSM shard machinery (reference GraphChiDatabase.scala:622-795
@@ -476,10 +479,10 @@ class DurableStore(val spark: SparkSession, val root: String,
     }.flatMap(_._2)
   }
 
-  /** Per manifest schema DDL: the parsed schema and the Hadoop conf
-    * Spark's parquet reader sets up for a read of it (ParquetFileFormat's
-    * reader setup, from this session's SQL conf) — built once per store
-    * handle; parsing DDL per serving call is measurable. */
+  /** Per schema DDL (a manifest's or a tombstone's): the parsed schema
+    * and the Hadoop conf Spark's parquet reader sets up for a read of it
+    * (ParquetFileFormat's reader setup, from this session's SQL conf) —
+    * built once per store handle; parsing DDL per call is measurable. */
   private def rowRead(ddl: String): (StructType, Configuration) =
     rowReads.computeIfAbsent(ddl, _ => {
       val schema = StructType.fromDDL(ddl)
@@ -498,6 +501,51 @@ class DurableStore(val spark: SparkSession, val root: String,
     })
   private val rowReads =
     new java.util.concurrent.ConcurrentHashMap[String, (StructType, Configuration)]()
+
+  /** Write `rows` at `schema` as ONE parquet file at `path` on the driver
+    * (no Spark job), through the `OutputWriter` a Spark parquet write task
+    * runs: physical types, logical annotations, footer metadata and codec
+    * are the ones `df.write.parquet` gives the same rows. Its factory and
+    * task context (`ParquetUtils.prepareWrite` from this session's SQL
+    * conf) are built once per schema per handle, the twin of [[rowRead]]. */
+  private def writeLocal(path: String, schema: StructType, rows: Iterator[InternalRow]): Unit = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val (factory, ctx) = rowWrites.computeIfAbsent(schema, _ => {
+      val sql = spark.sessionState.conf
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(new Configuration(serveConf))
+      (ParquetUtils.prepareWrite(sql, job, schema, new ParquetOptions(Map.empty[String, String], sql)),
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    })
+    val w = factory.newInstance(path, schema, ctx)
+    try rows.foreach(w.write) finally w.close()
+  }
+  private val rowWrites = new java.util.concurrent.ConcurrentHashMap[
+    StructType, (OutputWriterFactory, TaskAttemptContext)]()
+
+  /** Write one unsorted delta file set (bucket = -1): its entry carries the
+    * (c0, c1) ranges and rows of the written files' footers
+    * ([[statsForDir]]) — (src, dst) for an edge delta, the id range twice
+    * for a vertex one. A frame whose optimized plan is a LocalRelation (a
+    * client's point batch, the rows a point update builds) is written on
+    * the driver as ONE part file ([[writeLocal]]) into `dir` cleared as
+    * SaveMode.Overwrite clears it; any other in ONE Spark job, its only
+    * consumer. A write with no rows deletes what it wrote and returns Nil. */
+  private def writeDelta(df: DataFrame, dir: String,
+                         c0: String = "src", c1: String = "dst"): Seq[StoreFile] = {
+    df.queryExecution.optimizedPlan match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        deletePath(dir)
+        Files.createDirectories(Paths.get(dir))
+        writeLocal(s"$dir/part-00000-${java.util.UUID.randomUUID}.parquet",
+          df.schema, local.data.iterator)
+      case _ => df.write.mode(SaveMode.Overwrite).parquet(dir)
+    }
+    val fs = statsForDir(spark, dir, c0, c1, bucketed = false)
+    if (fs.isEmpty) { deletePath(dir); Nil }
+    else Seq(StoreFile(-1, dir, fs.map(_.srcMin).min, fs.map(_.srcMax).max,
+      fs.map(_.dstMin).min, fs.map(_.dstMax).max, sorted = false, fs.map(_.rows).sum))
+  }
 
   /** Hadoop conf built once per store handle — building one per serving
     * call costs more than the read it configures. Read (never mutated)
@@ -1063,9 +1111,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     * batch is a no-op (returns `fromV`) — the vertex twin of [[append]]'s
     * streaming-replay guard, tracked separately ([[Manifest.vLastBatch]])
     * so an edge stream and a vertex stream on the same store never
-    * suppress each other's batches. Costs one Spark job (the delta
-    * write, [[writeDelta]]); a batch with no rows commits nothing and
-    * returns `fromV`. */
+    * suppress each other's batches. No Spark job for a local batch, one
+    * for a distributed frame ([[writeDelta]]); no rows commit nothing. */
   def upsertVertices(fromV: Int, rows: DataFrame, batchId: Long = -1L): Int =
     commitVertices(fromV, "upsertVertices", batchId)(_ => rows)
 
@@ -1100,8 +1147,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     * then requires every non-id column to carry a default. Shares
     * [[updateEdgeDelta]]'s primitive-schema guard ([[requirePrimitive]]).
     * Throws [[route]]'s refusal (IllegalArgumentException) past the
-    * vertex-row tombstone budget — `compact()` first. Costs one Spark
-    * job: the one-row upsert through [[upsertVertices]]' commit. */
+    * vertex-row tombstone budget — `compact()` first. No Spark job when
+    * `value` and the defaults fold to a LocalRelation ([[writeDelta]]). */
   def setVertexProp(fromV: Int, id: Long, column: String, value: Column): Int =
     commitVertices(fromV, "setVertexProp", -1L) { m =>
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.vschemaDDL)
@@ -1123,9 +1170,11 @@ class DurableStore(val spark: SparkSession, val root: String,
             .filter(c => c != "id" && !defMap.contains(c))
           require(missing.isEmpty, s"setVertexProp($id): vertex absent and " +
             s"no auto-fill default for: ${missing.mkString(", ")}")
-          spark.range(1).select(schema.fields.map(f =>
-            (if (f.name == "id") lit(id) else expr(defMap(f.name)))
-              .cast(f.dataType).as(f.name)).toSeq: _*)
+          // over a one-row LocalRelation, which folded defaults keep local
+          spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(id)),
+            StructType.fromDDL("id BIGINT")).select(schema.fields.map(f =>
+              (if (f.name == "id") col("id") else expr(defMap(f.name)))
+                .cast(f.dataType).as(f.name)).toSeq: _*)
       }
       baseDf.withColumn(column, value.cast(schema(column).dataType))
     }
@@ -1317,9 +1366,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * no base files rewritten. A non-negative `batchId` makes the append
     * IDEMPOTENT: a batch at or below the manifest's last committed id is
     * a no-op (returns `fromV`), so streaming retries / checkpoint
-    * replays cannot double-append (ADVICE r3). Costs one Spark job (the
-    * delta write, [[writeDelta]]); a batch with no rows commits nothing
-    * and returns `fromV`. */
+    * replays cannot double-append (ADVICE r3). No Spark job for a local
+    * batch, one for a distributed frame ([[writeDelta]]); a batch with no
+    * rows commits nothing and returns `fromV`. */
   def append(fromV: Int, batch: DataFrame, batchId: Long = -1L): Int =
     commitEdges(fromV, "append", batchId)(_ => (Some(batch), Nil))
 
@@ -1393,15 +1442,16 @@ class DurableStore(val spark: SparkSession, val root: String,
   }
 
   /** THE tombstone writer: one tombstone file of `rows` under `v<nv>`,
-    * written ON THE DRIVER (no Spark job), and its manifest entry at
-    * `seq` with the rows' (src, dst) envelope and count — a vertex
-    * tombstone's rows are (v, v). */
+    * written on the driver ([[writeLocal]]) at [[DurableStore.EdgeTombDDL]]
+    * or, keeping `v` of each (v, v) row, [[DurableStore.VertexTombDDL]];
+    * and its manifest entry at `seq` with the rows' envelope and count. */
   private def writeTomb(nv: Int, seq: Long, vertex: Boolean,
                         rows: Seq[(Long, Long)]): TombFile = {
     val dir = Paths.get(root, s"v$nv")
     Files.createDirectories(dir)
     val p = dir.resolve(tombName(vertex)).toString
-    writeTombParquet(serveConf, p, vertex, rows)
+    writeLocal(p, rowRead(if (vertex) VertexTombDDL else EdgeTombDDL)._1,
+      rows.iterator.map { case (a, b) => if (vertex) InternalRow(a) else InternalRow(a, b) })
     TombFile(seq, vertex, p, rows.map(_._1).min, rows.map(_._1).max,
       rows.map(_._2).min, rows.map(_._2).max, rows.size)
   }
@@ -1422,9 +1472,9 @@ class DurableStore(val spark: SparkSession, val root: String,
     * watermark makes the WHOLE batch a no-op, so streaming replays
     * cannot double-append or re-kill a later re-insert. Delete sets are
     * driver-resident point ops — loudly gated, not silently spilled.
-    * Costs one Spark job (the delta write, [[writeDelta]]) and none for
-    * the tombstone; a batch with no rows and no deletes commits nothing
-    * and returns `fromV`. */
+    * No Spark job for a local batch or the tombstone, one for a
+    * distributed frame ([[writeDelta]]); a batch with no rows and no
+    * deletes commits nothing and returns `fromV`. */
   def applyCdc(fromV: Int, inserts: DataFrame, deletePairs: Seq[(Long, Long)],
                batchId: Long = -1L): Int = {
     require(deletePairs.size <= (1 << 20),
@@ -1478,8 +1528,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     * is the append class (~1 s), where the COW [[updateEdges]] rewrites
     * multi-million-row files. Returns `fromV` unchanged when the pair
     * has no rows. Arbitrary-predicate updates stay on [[updateEdges]].
-    * Costs one Spark job (the delta write, [[writeDelta]]); the
-    * tombstone and the point read cost none. */
+    * No Spark job when `value` folds into the updated rows'
+    * LocalRelation ([[writeDelta]]); the tombstone and read cost none. */
   def updateEdgeDelta(fromV: Int, src: Long, dst: Long,
                       column: String, value: Column): Int =
     commitEdges(fromV, "updateEdgeDelta", -1L) { m =>
@@ -1511,11 +1561,11 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** The primitive-schema guard of the driver-side point mutations
     * [[updateEdgeDelta]] and [[setVertexProp]]: every column long, int,
     * double, float, boolean or string, else `op` refuses and names its
-    * copy-on-write `alternative`. Not needed by the read, which decodes
-    * every atomic type: lifting it turns perfbench serve_mixed's `update`
-    * ops (a TINYINT schema) from a ~3 ms refusal into a commit plus
-    * compactIfPressured, which lowers that workload's ops_per_s by
-    * design — a separate change with a re-measured baseline. */
+    * copy-on-write `alternative`. Neither the read nor [[writeLocal]]
+    * needs it; it waits for cheaper compaction: lifted, perfbench
+    * serve_mixed's TINYINT `update`s commit, but each delta + tombstone
+    * pair feeds the live-file trigger and the extra compactions lower
+    * that workload's ops_per_s. */
   private def requirePrimitive(schema: StructType, op: String, alternative: String): Unit = {
     import org.apache.spark.sql.types._
     val bad = schema.fields.filterNot(f => f.dataType match {
@@ -2035,8 +2085,9 @@ object DurableStore {
     * files with seq < this.seq; `vertex = true` → the file holds vertex
     * ids `v`, each deleting every row touching v on either endpoint.
     * For vertex tombstones the src* stats carry the id range (dst*
-    * mirrors it). Written DRIVER-SIDE (no Spark job) — a point delete
-    * is in the serving latency class, not the job class. */
+    * mirrors it). Written on the driver at [[EdgeTombDDL]] or
+    * [[VertexTombDDL]] through Spark's parquet writer (no Spark job) — a
+    * point delete is in the serving latency class, not the job class. */
   final case class TombFile(seq: Long, vertex: Boolean, path: String,
                             srcMin: Long, srcMax: Long, dstMin: Long, dstMax: Long,
                             rows: Long)
@@ -2377,35 +2428,6 @@ object DurableStore {
     (if (vertex) "tomb-verts-" else "tomb-edges-") +
       java.util.UUID.randomUUID.toString.take(8) + ".parquet"
 
-  /** Write a tombstone parquet file ON THE DRIVER (no Spark job): edge
-    * tombstones as (src, dst) INT64 pairs, vertex tombstones as single
-    * INT64 `v` ids (rows carry (v, v) in that case). */
-  private[graft] def writeTombParquet(conf: org.apache.hadoop.conf.Configuration,
-      path: String, vertex: Boolean, rows: Seq[(Long, Long)]): Unit = {
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      if (vertex) "message tomb { required int64 v; }"
-      else "message tomb { required int64 src; required int64 dst; }")
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-    // the builder sets the schema INTO the conf (GroupWriteSupport
-    // contract) — copy so the caller's shared serving conf stays immutable.
-    // OVERWRITE, like writeManifest's TRUNCATE and writeDelta's
-    // SaveMode.Overwrite: names are now UUID-unique (tombName) so a
-    // collision is effectively impossible, but a file already there could
-    // only be a crash orphan whose version was never committed — CREATE
-    // mode would wedge a retry on FileAlreadyExists (review r12)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(path))
-      .withConf(new org.apache.hadoop.conf.Configuration(conf))
-      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
-      .withType(schema).build()
-    try rows.foreach { case (a, b) =>
-      val g = gf.newGroup()
-      if (vertex) g.append("v", a) else { g.append("src", a); g.append("dst", b) }
-      w.write(g)
-    } finally w.close()
-  }
-
   /** Adopt EXISTING sorted parquet as a store — METADATA ONLY, zero
     * data movement, zero data reads: per-file (src, dst) stats come
     * from the parquet FOOTERS (read concurrently on the serving pool,
@@ -2433,7 +2455,6 @@ object DurableStore {
             mirrorDir: Option[String] = None, numBuckets: Int = 8,
             assumeSorted: Boolean = true,
             commit: CommitProtocol = LocalFsCommit): DurableStore = {
-    import scala.concurrent.duration._
     val conf = spark.sessionState.newHadoopConf()
     def stats(dir: String): Seq[StoreFile] = {
       // loud, not lossy: adoption must index the WHOLE lake or refuse.
@@ -2459,31 +2480,12 @@ object DurableStore {
           " — flatten the layout or adopt each leaf dir")
       val parts = partPaths(dir)
       require(parts.nonEmpty, s"adopt: no parquet files under $dir")
-      implicit val ec: scala.concurrent.ExecutionContext = serveEc
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(parts) { p =>
-          scala.concurrent.Future {
-            val footer = cachedFooter(conf, new org.apache.hadoop.fs.Path(p))
-            val schema = footer.getFileMetaData.getSchema
-            // the serving reads decode long endpoints (INT64 page
-            // bounds + addLong) — a non-INT64 src/dst must fail
-            // HERE with the file named, not as a ClassCastException off
-            // the stats pool (review, round-11 continuation)
-            Seq("src", "dst").foreach { c =>
-              def t = schema.getType(schema.getFieldIndex(c))
-              require(schema.containsField(c) && t.isPrimitive &&
-                  t.asPrimitiveType().getPrimitiveTypeName ==
-                    org.apache.parquet.schema.PrimitiveType
-                      .PrimitiveTypeName.INT64,
-                s"adopt: $p needs an INT64 $c column")
-            }
-            val st = footerStats(footer, "src", "dst")
-            require(st.exists(_._1 > 0),
-              s"adopt: $p has no rows with src/dst column statistics")
-            val (n, s0, s1, d0, d1) = st.get
-            StoreFile(0, p, s0, s1, d0, d1, sorted = assumeSorted, n)
-          }
-        }, 600.seconds)
+      parts.zip(footerStats(conf, parts, "src", "dst")).map { case (p, st) =>
+        require(st.exists(_._1 > 0),
+          s"adopt: $p has no rows with src/dst column statistics")
+        val (n, s0, s1, d0, d1) = st.get
+        StoreFile(0, p, s0, s1, d0, d1, sorted = assumeSorted, n)
+      }
     }
     // bounds on FILE boundaries (files arrive range-partitioned, so the
     // boundary of every numBuckets-th file is a natural bucket edge);
@@ -2736,9 +2738,9 @@ object DurableStore {
 
   /** The footer form of [[statsForDir]]: per `_b=N` partition dir (or
     * `dir` itself when not `bucketed`), per data file, [[footerStats]];
-    * files holding no rows are dropped. None
-    * when a populated row group lacks a usable statistic, or when `dir`
-    * is not a directory this JVM's filesystem sees (a non-local URI) —
+    * files holding no rows are dropped. None when a file lacks a usable
+    * statistic, or when `dir` is not a directory this JVM's filesystem
+    * sees (a non-local URI) —
     * the caller's scan then reads it through Hadoop, or fails loudly,
     * instead of committing a manifest with no files. Paths are emitted
     * as `file:` URIs — the same scheme input_file_name produces, so
@@ -2757,73 +2759,59 @@ object DurableStore {
           .map(p => p -> p.getFileName.toString.stripPrefix("_b=").toInt)
         finally s.close()
       }
-    val files = partDirs.flatMap { case (pd, b) =>
-      partPaths(pd.toString).map { fp =>
-        val footer = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(Paths.get(fp).toUri), conf))
-          try r.getFooter finally r.close()
-        }
-        footerStats(footer, c0, c1).map { case (rows, a0, a1, b0, b1) =>
-          StoreFile(b, Paths.get(fp).toUri.toString, a0, a1, b0, b1,
-            sorted = bucketed, rows)
-        }
-      }
+    val parts = partDirs.flatMap { case (pd, b) =>
+      partPaths(pd.toString).map(fp => (Paths.get(fp).toUri.toString, b))
     }
-    if (files.exists(_.isEmpty)) None
-    else Some(files.flatten.filter(_.rows > 0).sortBy(f => (f.bucket, f.srcMin)))
+    val stats = footerStats(conf, parts.map(_._1), c0, c1)
+    if (stats.exists(_.isEmpty)) None
+    else Some(parts.zip(stats.flatten).collect {
+      case ((p, b), (rows, a0, a1, b0, b1)) if rows > 0 =>
+        StoreFile(b, p, a0, a1, b0, b1, sorted = bucketed, rows)
+    }.sortBy(f => (f.bucket, f.srcMin)))
   }
 
-  /** THE footer-statistics walk, shared by [[adopt]] and
-    * [[statsFromFooters]]: a file's row count and its (c0, c1) min/max,
-    * aggregated exactly over its populated row groups from the INT64
-    * statistics parquet-mr records for the integer key columns. None
-    * when a populated row group lacks a usable statistic for either
-    * column. */
-  private def footerStats(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
-                          c0: String, c1: String): Option[(Long, Long, Long, Long, Long)] = {
-    var rows = 0L
-    var a0 = Long.MaxValue; var a1 = Long.MinValue
-    var b0 = Long.MaxValue; var b1 = Long.MinValue
-    footer.getBlocks.asScala.filter(_.getRowCount > 0).foreach { blk =>
-      def mm(name: String): Option[(Long, Long)] =
-        blk.getColumns.asScala.find(_.getPath.toDotString == name)
-          .map(_.getStatistics)
-          .filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
-          .map(st => (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-            st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-      (mm(c0), mm(c1)) match {
-        case (Some((x0, x1)), Some((y0, y1))) =>
-          rows += blk.getRowCount
-          a0 = math.min(a0, x0); a1 = math.max(a1, x1)
-          b0 = math.min(b0, y0); b1 = math.max(b1, y1)
-        case _ => return None
+  /** THE footer-statistics walk of [[adopt]] and [[statsFromFooters]]:
+    * per file of `paths`, concurrently on [[serveEc]] via [[cachedFooter]],
+    * its rows and (c0, c1) min/max over its populated row groups, from the
+    * INT64 statistics parquet-mr records; None when one lacks a usable
+    * statistic. A non-INT64 c0/c1 — the serving reads decode longs —
+    * fails here, the file named. */
+  private def footerStats(conf: Configuration, paths: Seq[String], c0: String,
+                          c1: String): Seq[Option[(Long, Long, Long, Long, Long)]] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    def one(p: String): Option[(Long, Long, Long, Long, Long)] = {
+      val footer = cachedFooter(conf, new org.apache.hadoop.fs.Path(p))
+      val schema = footer.getFileMetaData.getSchema
+      Seq(c0, c1).foreach { c =>
+        def t = schema.getType(schema.getFieldIndex(c))
+        require(schema.containsField(c) && t.isPrimitive &&
+            t.asPrimitiveType().getPrimitiveTypeName == INT64,
+          s"$p needs an INT64 $c column")
       }
+      var rows = 0L
+      var a0 = Long.MaxValue; var a1 = Long.MinValue
+      var b0 = Long.MaxValue; var b1 = Long.MinValue
+      footer.getBlocks.asScala.filter(_.getRowCount > 0).foreach { blk =>
+        def mm(name: String): Option[(Long, Long)] =
+          blk.getColumns.asScala.find(_.getPath.toDotString == name)
+            .map(_.getStatistics)
+            .filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
+            .map(st => (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+              st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+        (mm(c0), mm(c1)) match {
+          case (Some((x0, x1)), Some((y0, y1))) =>
+            rows += blk.getRowCount
+            a0 = math.min(a0, x0); a1 = math.max(a1, x1)
+            b0 = math.min(b0, y0); b1 = math.max(b1, y1)
+          case _ => return None
+        }
+      }
+      Some((rows, a0, a1, b0, b1))
     }
-    Some((rows, a0, a1, b0, b1))
-  }
-
-  /** Write one unsorted delta file set (bucket = -1) in ONE Spark job —
-    * the write is the frame's only consumer, so callers need no
-    * checkpoint. Its (c0, c1) ranges and row count are summed over the
-    * written part files' footers ([[statsForDir]], which scans the files
-    * when a footer lacks a usable statistic). The edge delta ranges are
-    * (src, dst); a vertex delta carries the id range on both sides
-    * (c0 = c1 = "id"). A frame whose optimized plan is a LocalRelation
-    * (a client's point batch) is written as ONE part file: split across
-    * the default parallelism, a 16-row batch would cost every served
-    * read of the delta one file open per part. A write with no rows
-    * deletes what it wrote and returns Nil. */
-  private def writeDelta(df: DataFrame, dir: String,
-                         c0: String = "src", c1: String = "dst"): Seq[StoreFile] = {
-    val local = df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    (if (local) df.coalesce(1) else df).write.mode(SaveMode.Overwrite).parquet(dir)
-    val fs = statsForDir(df.sparkSession, dir, c0, c1, bucketed = false)
-    if (fs.isEmpty) { deletePath(dir); Nil }
-    else Seq(StoreFile(-1, dir, fs.map(_.srcMin).min, fs.map(_.srcMax).max,
-      fs.map(_.dstMin).min, fs.map(_.dstMax).max, sorted = false, fs.map(_.rows).sum))
+    implicit val ec: scala.concurrent.ExecutionContext = serveEc
+    scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(paths)(p => scala.concurrent.Future(one(p))),
+      scala.concurrent.duration.Duration(600, "s"))
   }
 
   /** Read store files at `ddl`, the schema the manifest records: no
@@ -2833,8 +2821,8 @@ object DurableStore {
     if (ddl.isEmpty) spark.read.parquet(paths: _*)
     else spark.read.schema(StructType.fromDDL(ddl)).parquet(paths: _*)
 
-  /** The fixed schemas [[writeTombParquet]] writes: edge tombstones as
-    * (src, dst) pairs, vertex tombstones as single ids. */
+  /** The tombstone schemas, written ([[writeTomb]]) and read at: edge
+    * tombstones as (src, dst) pairs, vertex tombstones as single ids. */
   private val EdgeTombDDL = "src BIGINT, dst BIGINT"
   private val VertexTombDDL = "v BIGINT"
 

@@ -585,11 +585,13 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(rowSet(st.read(v2)) == exp77)
   }
 
-  test("point mutations: one Spark job per delta write, none per tombstone; " +
-       "delta stats equal the rows read; empty batches commit nothing") {
+  test("point mutations: a local batch writes on the driver (no Spark job), a " +
+       "distributed one in one job, a tombstone in none; delta stats equal the " +
+       "rows read; empty batches commit nothing") {
     val s = spark; import s.implicits._
     val st = fresh(base: _*)
-    var v = st.setVertexTable(1, Seq((1L, 7L), (5L, 8L)).toDF("id", "score"))
+    var v = st.setVertexTable(1, Seq((1L, 7L), (5L, 8L)).toDF("id", "score"),
+      defaults = Map("score" -> "3"))
     // each mutation from the current head: the Spark jobs it launched
     def jobs(mutate: Int => Int): Int = {
       val (nv, n) = TestSpark.jobsDuring(spark)(mutate(v))
@@ -610,25 +612,40 @@ class DurableStoreSpec extends AnyFunSuite {
     }
     val batch = edges((30L, 41L), (31L, 40L), (33L, 42L))
     var from = v
-    assert(jobs(st.append(_, batch)) == 1, "append")
+    assert(jobs(st.append(_, batch)) == 0, "append")
     assert(added(from, vertex = false) == agg(st.read(v).filter(col("src") >= 30L), "src", "dst"))
+    // the same kind of batch built from an RDD keeps the one-job Spark write
+    val local = edges((70L, 80L), (71L, 81L), (72L, 79L))
+    val distributed = spark.createDataFrame(
+      spark.sparkContext.parallelize(local.collect().toSeq, 2), local.schema)
+    from = v
+    assert(jobs(st.append(_, distributed)) == 1, "append (distributed)")
+    assert(added(from, vertex = false) == agg(st.read(v).filter(col("src") >= 70L), "src", "dst"))
     val inserts = edges((50L, 60L), (51L, 61L))
     from = v
-    assert(jobs(st.applyCdc(_, inserts, Seq((1L, 10L)))) == 1, "applyCdc")
-    assert(added(from, vertex = false) == agg(st.read(v).filter(col("src") >= 50L), "src", "dst"))
+    assert(jobs(st.applyCdc(_, inserts, Seq((1L, 10L)))) == 0, "applyCdc")
+    assert(added(from, vertex = false) ==
+      agg(st.read(v).filter(col("src") >= 50L && col("src") < 70L), "src", "dst"))
     from = v
-    assert(jobs(st.updateEdgeDelta(_, 5L, 10L, "w", lit(77L))) == 1, "updateEdgeDelta")
+    assert(jobs(st.updateEdgeDelta(_, 5L, 10L, "w", lit(77L))) == 0, "updateEdgeDelta")
     assert(added(from, vertex = false) ==
       agg(st.read(v).filter(col("src") === 5L && col("dst") === 10L), "src", "dst"))
     assert(st.read(v).filter(col("src") === 5L && col("dst") === 10L)
       .select("w").collect().map(_.getLong(0)).toSeq == Seq(77L))
     val vrows = Seq((20L, 1L), (22L, 2L)).toDF("id", "score")
     from = v
-    assert(jobs(st.upsertVertices(_, vrows)) == 1, "upsertVertices")
+    assert(jobs(st.upsertVertices(_, vrows)) == 0, "upsertVertices")
     assert(added(from, vertex = true) == agg(st.readVertices(v).filter(col("id") >= 20L), "id", "id"))
     from = v
-    assert(jobs(st.setVertexProp(_, 5L, "score", lit(9L))) == 1, "setVertexProp")
+    assert(jobs(st.setVertexProp(_, 5L, "score", lit(9L))) == 0, "setVertexProp")
     assert(added(from, vertex = true) == agg(st.readVertices(v).filter(col("id") === 5L), "id", "id"))
+    // first touch: the row is built from the defaults, still on the driver
+    from = v
+    assert(jobs(st.setVertexProp(_, 40L, "score", col("score") + 1)) == 0,
+      "setVertexProp (first touch)")
+    assert(added(from, vertex = true) == (40L, 40L, 40L, 40L, 1L))
+    assert(st.readVertices(v).filter(col("id") === 40L).select("score")
+      .collect().map(_.getLong(0)).toSeq == Seq(4L))
     assert(jobs(st.deleteEdgeTombstone(_, 9L, 12L)) == 0, "deleteEdgeTombstone")
     assert(jobs(st.deleteVertexTombstone(_, 13L)) == 0, "deleteVertexTombstone")
     // empty batches: no commit, nothing under the next version's dir

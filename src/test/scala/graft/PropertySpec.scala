@@ -89,6 +89,47 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  // every atomic Spark type, its random cells with nulls, and random rows
+  // of a schema over them: the typed-read and the writer properties
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types._
+  private val atomic: List[DataType] = List(ByteType, ShortType, IntegerType, LongType,
+    FloatType, DoubleType, DecimalType(10, 2), StringType, BinaryType,
+    BooleanType, DateType, TimestampType, TimestampNTZType)
+  // 1901..2096: inside the range every date/timestamp encoding stores
+  // without calendar rebasing
+  private val genSec = Gen.choose(-2000000000L, 4000000000L)
+  private def genCell(dt: DataType): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> (dt match {
+    case ByteType => Gen.choose(Byte.MinValue, Byte.MaxValue).map(java.lang.Byte.valueOf)
+    case ShortType => Gen.choose(Short.MinValue, Short.MaxValue).map(java.lang.Short.valueOf)
+    case IntegerType => Gen.choose(Int.MinValue, Int.MaxValue).map(Int.box)
+    case LongType => Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box)
+    case FloatType => Gen.choose(-1e6f, 1e6f).map(Float.box)
+    case DoubleType => Gen.choose(-1e12, 1e12).map(Double.box)
+    case _: DecimalType => Gen.choose(-99999999L, 99999999L).map(java.math.BigDecimal.valueOf(_, 2))
+    case StringType => Gen.alphaNumStr.map(_.take(6))
+    case BinaryType => Gen.listOfN(3, Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+    case BooleanType => Gen.oneOf(true, false).map(Boolean.box)
+    case DateType => Gen.choose(-25000L, 46000L)
+      .map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)))
+    case TimestampType => for (s <- genSec; us <- Gen.choose(0, 999999))
+      yield java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s, us * 1000L))
+    case TimestampNTZType => for (s <- genSec; us <- Gen.choose(0, 999999))
+      yield java.time.LocalDateTime.ofEpochSecond(s, us * 1000, java.time.ZoneOffset.UTC)
+    case other => sys.error(s"no generator for $other")
+  }))
+  private def shuffled[A](xs: List[A]): Gen[List[A]] =
+    Gen.listOfN(xs.size, Gen.choose(0, 1 << 20)).map(ws => xs.zip(ws).sortBy(_._2).map(_._1))
+  // key columns over a small id range, so keys collide across files
+  private def genRow(schema: StructType): Gen[Row] =
+    schema.fields.toList.foldRight(Gen.const(List.empty[Any])) { (f, acc) =>
+      for {
+        h <- if (Set("src", "dst", "id")(f.name)) Gen.choose(0L, 5L).map(Long.box)
+             else genCell(f.dataType)
+        t <- acc
+      } yield h :: t
+    }.map(Row.fromSeq)
+
   test("served rows equal the Spark read whole-row and class-equal over every atomic type") {
     // the driver-served row reads (point reads, served rows, vertex rows,
     // the served vertex join) must return what read(v)/readVertices(v)
@@ -96,45 +137,7 @@ class PropertySpec extends AnyFunSuite {
     // for schemas over every atomic Spark type with nulls, in random
     // column order, across appended deltas, edge tombstones, vertex
     // upserts and vertex-row tombstones
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    val atomic: List[DataType] = List(ByteType, ShortType, IntegerType, LongType,
-      FloatType, DoubleType, DecimalType(10, 2), StringType, BinaryType,
-      BooleanType, DateType, TimestampType, TimestampNTZType)
-    // 1901..2096: inside the range every date/timestamp encoding stores
-    // without calendar rebasing
-    val genSec = Gen.choose(-2000000000L, 4000000000L)
-    def genCell(dt: DataType): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> (dt match {
-      case ByteType => Gen.choose(Byte.MinValue, Byte.MaxValue).map(java.lang.Byte.valueOf)
-      case ShortType => Gen.choose(Short.MinValue, Short.MaxValue).map(java.lang.Short.valueOf)
-      case IntegerType => Gen.choose(Int.MinValue, Int.MaxValue).map(Int.box)
-      case LongType => Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box)
-      case FloatType => Gen.choose(-1e6f, 1e6f).map(Float.box)
-      case DoubleType => Gen.choose(-1e12, 1e12).map(Double.box)
-      case _: DecimalType => Gen.choose(-99999999L, 99999999L).map(java.math.BigDecimal.valueOf(_, 2))
-      case StringType => Gen.alphaNumStr.map(_.take(6))
-      case BinaryType => Gen.listOfN(3, Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
-      case BooleanType => Gen.oneOf(true, false).map(Boolean.box)
-      case DateType => Gen.choose(-25000L, 46000L)
-        .map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)))
-      case TimestampType => for (s <- genSec; us <- Gen.choose(0, 999999))
-        yield java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s, us * 1000L))
-      case TimestampNTZType => for (s <- genSec; us <- Gen.choose(0, 999999))
-        yield java.time.LocalDateTime.ofEpochSecond(s, us * 1000, java.time.ZoneOffset.UTC)
-      case other => sys.error(s"no generator for $other")
-    }))
-    def shuffled[A](xs: List[A]): Gen[List[A]] =
-      Gen.listOfN(xs.size, Gen.choose(0, 1 << 20)).map(ws => xs.zip(ws).sortBy(_._2).map(_._1))
-    // key columns over a small id range, so keys collide across files
-    def genRow(schema: StructType): Gen[Row] =
-      schema.fields.toList.foldRight(Gen.const(List.empty[Any])) { (f, acc) =>
-        for {
-          h <- if (Set("src", "dst", "id")(f.name)) Gen.choose(0L, 5L).map(Long.box)
-               else genCell(f.dataType)
-          t <- acc
-        } yield h :: t
-      }.map(Row.fromSeq)
     def uniqueIds(rows: List[Row], s: StructType): List[Row] =
       rows.groupBy(_.getLong(s.fieldIndex("id"))).values.map(_.head).toList
     val genCase = for {
@@ -191,6 +194,79 @@ class PropertySpec extends AnyFunSuite {
             verts.filter(r => keys.exists(_ == r(vi))).sortBy(_(vi).asInstanceOf[Long])
               .map(TestSpark.typedKey(_))) :| "servedVertexRows",
           sameTypedRows(st.servedOutRowsWithVertex(v, keys).get, joined) :| "servedOutRowsWithVertex")
+    })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("a delta the driver writes equals one a Spark task writes — footer schema, " +
+       "Spark metadata, every read — over every atomic type; tombstones read as INT64") {
+    // the same random rows appended to two equal stores: as a local batch
+    // (its optimized plan a LocalRelation, written on the driver) and as a
+    // frame built from an RDD (one Spark write task). The two part files
+    // must carry the same parquet schema (physical type, logical
+    // annotation, repetition) and key-value metadata, and the stores must
+    // read back the same rows, class for class. Tombstones go through the
+    // same driver writer and must still decode as INT64 endpoints on the
+    // served and the distributed paths.
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    import TestSpark.sameTypedRows
+    def footer(p: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val genCase = for {
+      fields <- shuffled(StructField("src", LongType) :: StructField("dst", LongType) ::
+        atomic.zipWithIndex.map { case (t, i) => StructField(s"e$i", t) })
+      es = StructType(fields)
+      base <- Gen.choose(2, 6).flatMap(Gen.listOfN(_, genRow(es)))
+      delta <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genRow(es)))
+      keys <- Gen.nonEmptyListOf(Gen.choose(0L, 6L))
+    } yield (es, base, delta, keys.distinct.sorted.toArray)
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(3).withMaxSize(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L))
+    val res = SCTest.check(params, Prop.forAllNoShrink(genCase) {
+      case (es, base, delta, keys) =>
+        def store(tag: String) = DurableStore.create(spark,
+          spark.createDataFrame(base.asJava, es),
+          java.nio.file.Files.createTempDirectory(s"graft-prop-$tag").toString, numBuckets = 2)
+        val (a, b) = (store("local"), store("task"))
+        val va = a.append(1, spark.createDataFrame(delta.asJava, es))
+        val vb = b.append(1, spark.createDataFrame(spark.sparkContext.parallelize(delta, 1), es))
+        // the delta's one part file
+        def deltaFooter(st: DurableStore, v: Int) = {
+          val dir = new java.io.File(st.manifest(v).files.filterNot(_.sorted).head.path)
+          val ps = dir.listFiles().map(_.getName)
+            .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSeq
+          assert(ps.size == 1, ps)
+          footer(new java.io.File(dir, ps.head).getPath)
+        }
+        val (fa, fb) = (deltaFooter(a, va), deltaFooter(b, vb))
+        def rows(st: DurableStore, v: Int) = st.read(v).collect().map(_.toSeq).toSeq
+        val (si, di) = (es.fieldIndex("src"), es.fieldIndex("dst"))
+        val pairs = delta.take(2).map(r => (r.getLong(si), r.getLong(di)))
+        val gone = keys.head
+        val vt = a.deleteVertexTombstone(a.deleteEdgesTombstone(va, pairs), gone)
+        def int64(p: String, cols: Seq[String]) = {
+          val s = footer(p).getSchema
+          cols.forall(c => s.getType(s.getFieldIndex(c)).asPrimitiveType.getPrimitiveTypeName == INT64)
+        }
+        val live = rows(a, vt)
+        Prop.all(
+          (fa.getSchema == fb.getSchema) :| s"footer schema:\n${fa.getSchema}\n${fb.getSchema}",
+          (fa.getKeyValueMetaData == fb.getKeyValueMetaData) :|
+            s"footer metadata:\n${fa.getKeyValueMetaData}\n${fb.getKeyValueMetaData}",
+          sameTypedRows(rows(a, va), rows(b, vb)) :| "read",
+          sameTypedRows(a.servedOutRows(va, keys).get, b.servedOutRows(vb, keys).get) :|
+            "servedOutRows",
+          a.manifest(vt).tombs.forall(t =>
+            int64(t.path, if (t.vertex) Seq("v") else Seq("src", "dst"))) :| "tombstone INT64",
+          live.forall(r => !pairs.contains((r(si), r(di))) && r(si) != gone && r(di) != gone) :|
+            "distributed read applies the tombstones",
+          sameTypedRows(a.servedOutRows(vt, keys).get,
+            live.filter(r => keys.exists(_ == r(si)))) :| "served read applies the tombstones")
     })
     assert(res.passed, res.status.toString)
   }
