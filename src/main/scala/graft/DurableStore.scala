@@ -323,8 +323,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     * route ([[routeFiles]]) to the primary files (`out`, read src → dst)
     * and/or to the in-edge mirror plus the unsorted deltas (`in`, read
     * dst → src); with `vertex`, to the vertex side-table files on `id`
-    * instead. Refused — Left, with the reason — when that side has no
-    * manifest schema, an `in` read has no mirror, that side's live
+    * instead. Refused — Left, with the reason — when a `vertex` read
+    * finds no side-table, an `in` read has no mirror, that side's live
     * tombstone rows pass the tombstone-row budget, or — `gated` — the
     * routed SORTED files pass the file budget (each costs an open plus
     * its key-covering pages) or the routed DELTA rows pass the delta-row
@@ -339,8 +339,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     val at = s"$root v${m.version}"
     val budget = serveBudget
     val tombRows = (if (vertex) m.vtombs else m.tombs).map(_.rows).sum
-    if ((if (vertex) m.vschemaDDL else m.schemaDDL).isEmpty)
-      Left(s"$at: no ${if (vertex) "vertex side-table" else "manifest schema"}")
+    if (vertex && m.vschemaDDL.isEmpty)
+      Left(s"$at: no vertex side-table")
     else if (in && !vertex && m.mbounds.isEmpty)
       Left(s"$at: the in-edge read needs the mirror (buildInEdgeIndex)")
     else if (tombRows > budget.tombRows)
@@ -1250,7 +1250,7 @@ class DurableStore(val spark: SparkSession, val root: String,
   def servedOutRowsWithVertex(v: Int, keys: Array[Long], vcols: Seq[String] = Nil)
       : Option[Seq[Seq[Any]]] = {
     val m = manifest(v)
-    if (m.schemaDDL.isEmpty || m.vschemaDDL.isEmpty) return None
+    if (m.vschemaDDL.isEmpty) return None
     val vschema = org.apache.spark.sql.types.StructType.fromDDL(m.vschemaDDL)
     val cols =
       if (vcols.nonEmpty) vcols else vschema.fieldNames.filterNot(_ == "id").toSeq
@@ -1504,7 +1504,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         // (see [[normalizeBatch]]); the delta goes first, so a refused
         // batch has written nothing
         val delta = inserts.toSeq.flatMap(df => writeDelta(
-          if (m.schemaDDL.isEmpty) df else normalizeBatch(df, m.schemaDDL, op),
+          normalizeBatch(df, m.schemaDDL, op),
           s"$root/v$nv/delta").map(_.copy(seq = sq)))
         val tombs =
           if (deletes.isEmpty) Nil else Seq(writeTomb(nv, sq, vertex = false, deletes))
@@ -1533,7 +1533,6 @@ class DurableStore(val spark: SparkSession, val root: String,
   def updateEdgeDelta(fromV: Int, src: Long, dst: Long,
                       column: String, value: Column): Int =
     commitEdges(fromV, "updateEdgeDelta", -1L) { m =>
-      require(m.schemaDDL.nonEmpty, "updateEdgeDelta needs a manifest schema")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDDL)
       requirePrimitive(schema, "updateEdgeDelta", "the copy-on-write updateEdges")
       val rows = pointRowsM(m, src, out = true)
@@ -2094,9 +2093,10 @@ object DurableStore {
 
   /** `bounds(i)` is bucket i's inclusive upper src bound (last =
     * Long.MaxValue); `lastBatch` is the highest committed streaming batch
-    * id (idempotent append watermark); `schemaDDL` keeps an all-rows-
-    * deleted version readable. `mbounds`/`mirror` are the dst-bucketed
-    * in-edge index (empty = unindexed store). `tombs` are live tombstone
+    * id (idempotent append watermark); `schemaDDL` is the edge schema
+    * every file is read at (every manifest has one, and it keeps an
+    * all-rows-deleted version readable). `mbounds`/`mirror` are the
+    * dst-bucketed in-edge index (empty = unindexed store). `tombs` are live tombstone
     * deltas, applied at read (anti-join / serving-side exclusion) and
     * physically reclaimed — rows dropped, tombstones removed — by
     * [[DurableStore.compact]]. */
@@ -2815,11 +2815,9 @@ object DurableStore {
   }
 
   /** Read store files at `ddl`, the schema the manifest records: no
-    * schema-inference job. An empty `ddl` (a manifest written before
-    * schema lines) keeps the inferred read. */
+    * schema-inference job. */
   private def readFiles(spark: SparkSession, paths: Seq[String], ddl: String): DataFrame =
-    if (ddl.isEmpty) spark.read.parquet(paths: _*)
-    else spark.read.schema(StructType.fromDDL(ddl)).parquet(paths: _*)
+    spark.read.schema(StructType.fromDDL(ddl)).parquet(paths: _*)
 
   /** The tombstone schemas, written ([[writeTomb]]) and read at: edge
     * tombstones as (src, dst) pairs, vertex tombstones as single ids. */
@@ -2850,9 +2848,7 @@ object DurableStore {
 
   private def writeManifest(root: String, m: Manifest): Unit = {
     Files.createDirectories(Paths.get(root, "manifest"))
-    // seq rides as a TRAILING column (path holds no tabs) so pre-seq
-    // manifests parse unchanged with seq = 0 — and a seq-0 store with no
-    // tomb lines behaves exactly as before the tombstone feature
+    // seq rides as the TRAILING column (path holds no tabs)
     def fileLine(tag: String)(f: StoreFile) =
       s"$tag\t${f.bucket}\t${f.sorted}\t${f.srcMin}\t${f.srcMax}\t${f.dstMin}\t${f.dstMax}\t${f.rows}\t${f.path}\t${f.seq}"
     def tombLine(t: TombFile) =
@@ -2885,12 +2881,15 @@ object DurableStore {
       StandardOpenOption.WRITE)
   }
 
+  /** Parse manifest `v`. Every manifest this store writes carries a
+    * `schema` line; one without it is refused, naming the file. */
   private def readManifest(root: String, v: Int): Manifest = {
-    val lines = new String(Files.readAllBytes(manifestPath(root, v))).split("\n")
+    val path = manifestPath(root, v)
+    val lines = new String(Files.readAllBytes(path)).split("\n")
     def parseFile(l: String): StoreFile = {
       val p = l.split("\t")
       StoreFile(p(1).toInt, p(8), p(3).toLong, p(4).toLong, p(5).toLong, p(6).toLong,
-        p(2).toBoolean, p(7).toLong, if (p.length > 9) p(9).toLong else 0L)
+        p(2).toBoolean, p(7).toLong, p(9).toLong)
     }
     def parseTomb(l: String): TombFile = {
       val p = l.split("\t")
@@ -2902,7 +2901,8 @@ object DurableStore {
     val lastBatch = lines.collectFirst { case l if l.startsWith("lastbatch\t") =>
       l.split("\t")(1).toLong }.getOrElse(-1L)
     val schemaDDL = lines.collectFirst { case l if l.startsWith("schema\t") =>
-      l.split("\t", 2)(1) }.getOrElse("")
+      l.split("\t", 2)(1) }.getOrElse(
+      throw new IllegalStateException(s"$path: manifest has no schema line"))
     val mbounds = lines.collectFirst { case l if l.startsWith("mbounds\t") =>
       l.split("\t")(1).split(",").map(_.toLong).toSeq }.getOrElse(Nil)
     val files = lines.toSeq.filter(_.startsWith("file\t")).map(parseFile)

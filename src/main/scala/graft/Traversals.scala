@@ -97,7 +97,12 @@ object Traversals {
 
   // ---- superstep loops, one per stopping rule: each owns its rounds'
   // materialization, accumulator, edge residency, round count and bound;
-  // a caller passes only its per-round relational step ----
+  // a caller passes only its per-round relational step. Six rules: the
+  // frontier empties (frontierSweep), no value improves (minRelax), no
+  // label moves (minLabelFixpoint), the fixpoint witness holds
+  // (peelToFixpoint), nothing remains (greedyRounds), a lookup finds
+  // nothing (parentWalk). Fixed-round loops (LPA, HITS, Katz) have no
+  // stopping rule to share ----
 
   /** Frontier sweep ([[bfsDistances]], [[bfsSigma]], [[expandUntil]]):
     * expand `seed` one level per superstep until the new frontier is
@@ -170,19 +175,82 @@ object Traversals {
     best
   }
 
-  /** Peel to fixpoint ([[kCore]], [[Queries.kTruss]]): apply `peel` to
-    * the materialized set until its row count stops changing; a peel
-    * only removes rows, so an unchanged count is the fixpoint. One fused
-    * materialize+count per round. Throws `failure` if `maxIter` rounds
-    * do not reach it. */
-  private[graft] def peelToFixpoint(init: DataFrame, maxIter: Int, failure: => String)
+  /** Min-label fixpoint ([[connectedComponents]],
+    * [[connectedComponentsScan]], [[sccLabels]]): each label column `c`
+    * of `sides` starts at `init`'s value and contracts to the minimum of
+    * itself and the `c` labels that side's (src, dst) edge frame carries
+    * in from src. Stops when no label moves. Past `maxIter` rounds it
+    * throws `failure`, or with none returns the labels as they stand
+    * (a bounded CC run is a caller's choice).
+    *
+    * Every side steps in LOCK-STEP on one label frame, so a round is ONE
+    * lazy checkpoint and ONE count whatever the number of sides: SCC's
+    * forward and backward propagations take max(diam_f, diam_b) rounds,
+    * not their sum, and being independent reach the same fixpoint. Each
+    * side joins the labels through `joinSide` (the scan form
+    * broadcast-hints the vertex-sized side there) and min-combines per
+    * dst; whether a label moved folds into the round's frame as a flag
+    * column, so the round's one action counts the flagged rows of its
+    * checkpoint instead of joining labels to the next ones.
+    *
+    * `gcEvery` > 0 nudges collection every that-many rounds: each
+    * round's superseded label checkpoint is unreachable but its RDD
+    * blocks are freed only by the ContextCleaner after GC, so a long
+    * fixpoint over a LARGE label table would otherwise accumulate a
+    * vertex-sized block set per round — exactly the residency the
+    * out-of-core variant exists to bound. Small label tables pass 0 (a
+    * full GC on a big heap costs more than the kilobyte-class
+    * generations it would free). */
+  private def minLabelFixpoint(init: DataFrame, sides: Seq[(DataFrame, String)], maxIter: Int,
+                               failure: Option[String] = None,
+                               joinSide: DataFrame => DataFrame = identity,
+                               gcEvery: Int = 0): DataFrame = {
+    val cols = init.columns.toSeq
+    def moved(c: String) = "_m" + c
+    var labels = init
+    var changed = 1L
+    var round = 0
+    while (changed > 0 && round < maxIter) {
+      round += 1
+      val cur = labels
+      val next = sides.foldLeft(cur) { case (acc, (e, c)) =>
+        acc.join(e.join(joinSide(cur.select(col("id").as("src"), col(c))), "src")
+          .groupBy(col("dst").as("id")).agg(min(c).as(moved(c))), Seq("id"), "left_outer")
+      }.select(cols.map(c =>
+          if (sides.exists(_._2 == c)) least(col(c), coalesce(col(moved(c)), col(c))).as(c)
+          else col(c)) :+
+        sides.map { case (_, c) => coalesce(col(moved(c)) < col(c), lit(false)) }
+          .reduce(_ || _).as("_chg"): _*)
+        .localCheckpoint(false)
+      changed = next.filter(col("_chg")).queryExecution.toRdd.count()
+      labels = next.select(cols.map(col): _*)
+      if (gcEvery > 0 && round % gcEvery == 0) System.gc()
+    }
+    if (changed > 0) failure.foreach(f => throw new IllegalStateException(f))
+    labels
+  }
+
+  /** Peel to fixpoint ([[kCore]], [[Queries.kTruss]], [[ccBigStar]]):
+    * apply `peel` to the materialized set until its `witness` stops
+    * changing. The default witness is the row count: a peel only removes
+    * rows, so an unchanged count is the fixpoint. Each round
+    * lazy-checkpoints and its witness is the ONE action that
+    * materializes it. Throws `failure` if `maxIter` rounds do not reach
+    * the fixpoint. */
+  private[graft] def peelToFixpoint(init: DataFrame, maxIter: Int, failure: => String,
+                                    witness: DataFrame => Any =
+                                      _.queryExecution.toRdd.count())
                                    (peel: DataFrame => DataFrame): DataFrame = {
-    var (cur, n) = checkpointCount(init)
+    def settle(df: DataFrame): (DataFrame, Any) = {
+      val c = df.localCheckpoint(false)
+      (c, witness(c))
+    }
+    var (cur, n) = settle(init)
     var converged = false
     var round = 0
     while (!converged && round < maxIter) {
       round += 1
-      val (next, m) = checkpointCount(peel(cur))
+      val (next, m) = settle(peel(cur))
       converged = m == n
       cur = next
       n = m
@@ -480,25 +548,18 @@ object Traversals {
     if (walk.headOption.contains(source)) walk else Seq.empty
   }
 
-  /** C4 connected components by min-label propagation to fixpoint
-    * (reference ConnectedComponentsLabelProp.scala:38-85): label(v) starts
-    * as v and contracts to min(label) over the neighborhood.
-    * PRECONDITION: labels propagate along edge direction only — pass a
-    * SYMMETRIZED edge list (e.g. [[Tables.nationEdgesSym]]) for undirected
-    * components, same as [[VertexCentric.pregelCC]].
-    * Pregel's active-set is replaced by a convergence count per superstep;
-    * the fixpoint (not the per-iteration trace) is what parity checks,
-    * per SURVEY §7.3. */
   /** Size-gated CC for STRUCTURALLY-SMALL graphs (near-dup pair graphs,
-    * contracted component graphs): below the gate one driver pass labels
-    * the components (Tarjan on the symmetrized list ≡ union-find), above
-    * it the distributed label propagation runs unchanged. Use where the
-    * input is provably bounded by duplicate/cluster structure rather
-    * than corpus size — [[connectedComponents]] itself stays the
-    * ref-exact distributed contract (c4). Input must be symmetrized,
-    * like [[connectedComponents]]. */
+    * contracted component graphs): at or below `localGate` edge rows one
+    * driver pass labels the components ([[localSccLabels]]: on a
+    * symmetric list a strongly connected component is exactly a
+    * connected component), above it the distributed label propagation
+    * runs unchanged. Use where the input is provably bounded by
+    * duplicate/cluster structure rather than corpus size —
+    * [[connectedComponents]] itself stays the ref-exact distributed
+    * contract (c4). Input must be symmetrized, like
+    * [[connectedComponents]]. */
   def connectedComponentsAuto(sym: DataFrame,
-                              localGate: Long = LocalContractRows): DataFrame = {
+                              localGate: Long = LocalSolveRows): DataFrame = {
     val e = sym.select("src", "dst").persist()
     try {
       if (e.count() <= localGate) localSccLabels(e)
@@ -506,65 +567,33 @@ object Traversals {
     } finally e.unpersist()
   }
 
+  /** C4 connected components by min-label propagation to fixpoint
+    * (reference ConnectedComponentsLabelProp.scala:38-85): label(v) starts
+    * as v and contracts to min(label) over the neighborhood, one
+    * [[minLabelFixpoint]] round per superstep; stops early at the
+    * fixpoint and returns the labels as they stand after `maxIter`.
+    * PRECONDITION: labels propagate along edge direction only — pass a
+    * SYMMETRIZED edge list (e.g. [[Tables.nationEdgesSym]]) for undirected
+    * components, same as [[VertexCentric.pregelCC]].
+    * Pregel's active-set is replaced by a convergence count per superstep;
+    * the fixpoint (not the per-iteration trace) is what parity checks,
+    * per SURVEY §7.3.
+    *
+    * The edge list is joined on src EVERY superstep, so it persists hashed
+    * on src (a checkpoint under AQE reports UnknownPartitioning) and the
+    * |E|-row side never re-exchanges: per superstep only the |V|-row label
+    * table shuffles into the join, plus the one min-combine. The frame
+    * stays cached after the call returns, and a later call over the same
+    * plan reuses it. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // the edge list is joined on src EVERY superstep: persist it hashed
-    // on src (a checkpoint under AQE reports UnknownPartitioning), so the
-    // |E|-row side never re-exchanges — per superstep only the |V|-row
-    // label table shuffles into the join plus the one unavoidable
-    // min-combine. Labels themselves keep the per-round localCheckpoint:
-    // the loop needs O(1) lineage across up-to-diameter rounds more than
-    // it needs the small side's partitioning.
     val e = edges.select("src", "dst").repartition(col("src")).persist()
     e.count()
     val labels0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
       .distinct().withColumn("label", col("id")).localCheckpoint(true)
-    ccFixpoint(e, labels0, maxIter, identity, gcEvery = 0)
+    minLabelFixpoint(labels0, Seq(e -> "label"), maxIter)
   }
 
-  /** The min-label fixpoint shared by [[connectedComponents]] (resident
-    * edge frame) and [[connectedComponentsScan]] (edges re-scanned per
-    * superstep): join labels onto the edge frame through `joinSide` (the
-    * scan form broadcast-hints the vertex-sized side there), min-combine
-    * per dst, and fold the convergence signal into the superstep result
-    * as a flag column — the count is then a scan of the checkpointed
-    * rows instead of a second labels⋈next join per superstep. One loop
-    * body: a fix to the aggregate or the convergence folding cannot
-    * silently diverge the two variants (review, round-11 continuation).
-    *
-    * `gcEvery` > 0 nudges collection every that-many supersteps: each
-    * round's superseded label checkpoint is unreachable but its RDD
-    * blocks are freed only by the ContextCleaner after GC, so a long
-    * fixpoint over a LARGE label table would otherwise accumulate a
-    * vertex-sized block set per superstep — exactly the residency the
-    * out-of-core variant exists to bound. Envelope-scale callers pass
-    * 5; sf-scale timed entries pass 0 (a full GC on a big heap costs
-    * more than the kilobyte-class generations it would free). */
-  private def ccFixpoint(e: DataFrame, labels0: DataFrame, maxIter: Int,
-                         joinSide: DataFrame => DataFrame,
-                         gcEvery: Int): DataFrame = {
-    var labels = labels0
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      val nbMin = e.join(joinSide(labels.withColumnRenamed("id", "src")), "src")
-        .groupBy(col("dst").as("id")).agg(min("label").as("nblabel"))
-      // lazy checkpoint + one counting action (r14): the changed-row
-      // count's job is what materializes the checkpoint blocks — the
-      // eager form paid a separate full |V| pass per superstep first
-      val next = labels.join(nbMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nblabel"), col("label"))).as("label"),
-          coalesce(col("nblabel") < col("label"), lit(false)).as("_chg"))
-        .localCheckpoint(false)
-      changed = next.filter(col("_chg")).queryExecution.toRdd.count()
-      labels = next.select("id", "label")
-      if (gcEvery > 0 && iter % gcEvery == 0) System.gc()
-    }
-    labels
-  }
-
-  /** C4 at OUT-OF-CORE scale: the same min-label fixpoint as
+  /** C4 at OUT-OF-CORE scale: the same [[minLabelFixpoint]] as
     * [[connectedComponents]], with the edge frame STREAMED from its
     * backing storage every superstep instead of persisted resident —
     * the Spark form of the reference's out-of-core PSW sweeps
@@ -587,7 +616,8 @@ object Traversals {
     * (one edge-sized exchange per superstep — still spill-friendly,
     * nothing resident). The same honesty gate as every broadcast in
     * this engine: vertex-sized broadcasts are only legal while they
-    * fit, and the gate is measured, not assumed. */
+    * fit, and the gate is measured, not assumed. Label tables past 2^22
+    * rows get the loop's GC nudge every 5 supersteps. */
   def connectedComponentsScan(sym: DataFrame, maxIter: Int = 50,
                               broadcastLabelsUpTo: Long = 1L << 26): DataFrame = {
     val e = sym.select("src", "dst")
@@ -595,12 +625,8 @@ object Traversals {
       .union(e.select(col("dst").as("id")))
       .distinct().withColumn("label", col("id")).localCheckpoint(true)
     val nV = labels0.count()
-    ccFixpoint(e, labels0, maxIter,
+    minLabelFixpoint(labels0, Seq(e -> "label"), maxIter,
       joinSide = l => if (nV <= broadcastLabelsUpTo) broadcast(l) else l,
-      // envelope-scale label tables get the periodic GC nudge that
-      // actually frees superseded checkpoint generations (ccFixpoint
-      // doc); small fixtures skip it — a full GC per 5 supersteps
-      // costs more than the tiny generations it frees
       gcEvery = if (nV > (1L << 22)) 5 else 0)
   }
 
@@ -621,11 +647,12 @@ object Traversals {
     *
     * The linkage edge set only contracts toward the star fixpoint
     * {(v, componentMin)}, so an unchanged (count, xxhash64-XOR) signature
-    * is the fixpoint — the same monotone-convergence witness as
-    * [[weightedSSSP]] (XOR, not sum: order-independent like sum but
-    * cannot overflow under ANSI arithmetic). Emits (id, label=component
-    * minimum), identical to [[connectedComponents]]'s fixpoint
-    * (spec-pinned).
+    * is the fixpoint: the rounds are [[peelToFixpoint]]'s, with that
+    * signature as the witness in place of the row count (XOR, not sum:
+    * order-independent like sum but cannot overflow under ANSI
+    * arithmetic). Emits (id, label=component minimum), identical to
+    * [[connectedComponents]]'s fixpoint (spec-pinned). Throws past
+    * `maxIter` rounds.
     *
     * PRECONDITION: undirected input — pass a symmetrized or canonical
     * edge list; linkage is direction-blind (both orientations are folded
@@ -634,18 +661,16 @@ object Traversals {
     val verts = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
-    var cur = edges.select(col("src").as("a"), col("dst").as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(false)
     def signature(df: DataFrame): (Long, Long) = {
       val r = df.select(xxhash64(col("a"), col("b")).as("h"))
         .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var fp = signature(cur)
-    var done = false
-    var iter = 0
-    while (!done && iter < maxIter) {
-      iter += 1
+    val stars = peelToFixpoint(
+        edges.select(col("src").as("a"), col("dst").as("b"))
+          .filter(col("a") =!= col("b")).distinct(),
+        maxIter, s"ccBigStar did not reach the star fixpoint in $maxIter rounds",
+        signature) { cur =>
       val bidir = cur.select(col("a").as("u"), col("b").as("v"))
         .unionByName(cur.select(col("b").as("u"), col("a").as("v")))
       val m1 = bidir.groupBy("u").agg(min("v").as("mv"))
@@ -658,22 +683,12 @@ object Traversals {
       val oriented = large.select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       val m2 = oriented.groupBy("u").agg(min("v").as("m"))
-      // lazy checkpoint: the signature aggregate is the one action that
-      // materializes the round's edge set (r14)
-      val small = oriented.join(m2, "u")
+      oriented.join(m2, "u")
         .select(col("v").as("a"), col("m").as("b"))
         .unionByName(m2.select(col("u").as("a"), col("m").as("b")))
         .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(false)
-      val nfp = signature(small)
-      done = nfp == fp
-      fp = nfp
-      cur = small
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"ccBigStar did not reach the star fixpoint in $maxIter rounds")
-    verts.join(cur.select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
+    verts.join(stars.select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 
@@ -948,109 +963,86 @@ object Traversals {
     * Input: canonical undirected weighted edges (src < dst, distinct,
     * integer `w`). Returns the forest edge set (src, dst, w).
     *
-    * Scale shape: per round, component labels come from [[ccBigStar]]
-    * over the forest-so-far (≤V edges, O(log) rounds, skew-robust
-    * min-combines); the cross-component restriction is two hash joins of
-    * the edge list against the label table; the per-component argmin is
-    * one partial-combining min of a (w, src, dst) struct — a hub
-    * component costs a combiner cell. The edge list persists hashed once.
-    * Fails loudly past `maxRounds`. */
-  /** Contracted-graph rows below which [[msfBoruvka]] solves the
-    * label-space CC on the driver instead of the nested distributed
-    * fixpoint. 2^18 edge rows collect as ~4 MB of longs, but the boxed
-    * HashMap union-find behind them costs ~50-100 B/entry — tens of MB
-    * on the driver, safe on any plausible heap (ADVICE r8: the old 2^20
-    * default reached hundreds of MB, not the "~16 MB" it claimed). */
-  private[graft] val LocalContractRows = 1L << 18
-
-  // maxRounds 12 (was 8): components at least halve per round, so 12
-  // rounds contract 4096× before the fail-loud throw — lowering the local
-  // gate 2^20 → 2^18 (ADVICE r8) widened the window where a slowly-
-  // contracting graph needs 1-2 extra DISTRIBUTED rounds to duck under
-  // the gate, and the old bound could now throw on inputs it used to
-  // hand to the driver solver (r9 review finding)
+    * Scale shape: per round, the cross-component restriction is two hash
+    * joins of the edge list against the label table; the per-component
+    * argmin is one partial-combining min of a (w, src, dst) struct — a
+    * hub component costs a combiner cell. The round's selected edges are
+    * the CONTRACTED component graph; its components come from the driver
+    * solver [[localSccLabels]] at or below `localGate` selected edges
+    * (symmetrized, so each strongly connected component is a connected
+    * one) and from [[ccBigStar]] above it. The edge list persists hashed
+    * once and is released before returning: the forest reads only the
+    * rounds' materialized selections. Fails loudly past `maxRounds`.
+    *
+    * maxRounds 12 (was 8): components at least halve per round, so 12
+    * rounds contract 4096× before the fail-loud throw — lowering the local
+    * gate 2^20 → 2^18 (ADVICE r8) widened the window where a slowly-
+    * contracting graph needs 1-2 extra DISTRIBUTED rounds to duck under
+    * the gate, and the old bound could now throw on inputs it used to
+    * hand to the driver solver (r9 review finding). */
   def msfBoruvka(canonWeighted: DataFrame, maxRounds: Int = 12,
-                 localGate: Long = LocalContractRows): DataFrame = {
+                 localGate: Long = LocalSolveRows): DataFrame = {
     val e = canonWeighted.select("src", "dst", "w")
       .repartition(col("src")).persist()
-    e.count()
-    var lab = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
-    var forest = e.limit(0).localCheckpoint(true)
-    var done = false
-    var round = 0
-    while (!done && round < maxRounds) {
-      round += 1
-      val cross = e
-        .join(lab.select(col("id").as("src"), col("label").as("la")), "src")
-        .join(lab.select(col("id").as("dst"), col("label").as("lb")), "dst")
-        .filter(col("la") =!= col("lb"))
-      // per-component argmin carries (la, lb) through the struct (they
-      // sort AFTER dst, so the (w, src, dst) order is untouched) — the
-      // selected edges double as the CONTRACTED component graph below
-      // fused materialize+count (r14): one action selects the round's
-      // edges; the forest accumulates as a lazy union of checkpointed
-      // selections (≤ maxRounds parts, linear plan growth)
-      val (sel, nSel) = checkpointCount(cross
-        .select(explode(array(col("la"), col("lb"))).as("c"),
-          struct(col("w"), col("src"), col("dst"), col("la"), col("lb")).as("k"))
-        .groupBy("c").agg(min("k").as("k"))
-        .select(col("k.src").as("src"), col("k.dst").as("dst"),
-          col("k.w").as("w"), col("k.la").as("la"), col("k.lb").as("lb"))
-        .distinct())
-      if (nSel == 0L) done = true
-      else {
-        forest = foldAccum(forest.unionByName(sel.select("src", "dst", "w")), round)
-        // contract in LABEL space: CC over the selected component-graph
-        // (components-sized, halving each round — never the whole
-        // forest), then compose onto the vertex labels. min-label CC of
-        // label-space ids keeps labels = component-min original ids.
-        //
-        // SIZE-GATED local solve (the AQE re-plan philosophy): the
-        // contracted graph is ≤ one edge per component and halves every
-        // round, so past the first round(s) it is provably tiny however
-        // big the input; below the gate a driver union-find replaces the
-        // nested ccBigStar fixpoint (each distributed CC round is
-        // several shuffle+checkpoint jobs — at bench scale the nested
-        // fixpoint WAS g16's cost). Above the gate (early rounds of a
-        // 100 TB forest) the distributed path runs unchanged. nSel is
-        // already on the driver — the gate costs nothing.
-        val ccc =
-          if (nSel <= localGate) {
-            val sp = sel.sparkSession
-            import sp.implicits._
-            val parent = scala.collection.mutable.HashMap[Long, Long]()
-            def find(x: Long): Long = {
-              var r = x
-              while (parent(r) != r) r = parent(r)
-              var c = x
-              while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-              r
-            }
-            sel.select("la", "lb").as[(Long, Long)].collect().foreach { case (a, b) =>
-              parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) parent(ra) = rb
-            }
-            val minOf = scala.collection.mutable.HashMap[Long, Long]()
-            parent.keys.foreach { v =>
-              val r = find(v)
-              minOf(r) = math.min(minOf.getOrElse(r, v), v)
-            }
-            parent.keys.toSeq.map(v => (v, minOf(find(v)))).toDF("label", "nl")
-          } else
-            ccBigStar(sel.select(col("la").as("src"), col("lb").as("dst")))
+    try {
+      e.count()
+      var lab = e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id"))).distinct()
+        .withColumn("label", col("id")).localCheckpoint(true)
+      var forest = e.limit(0).localCheckpoint(true)
+      var done = false
+      var round = 0
+      while (!done && round < maxRounds) {
+        round += 1
+        val cross = e
+          .join(lab.select(col("id").as("src"), col("label").as("la")), "src")
+          .join(lab.select(col("id").as("dst"), col("label").as("lb")), "dst")
+          .filter(col("la") =!= col("lb"))
+        // per-component argmin carries (la, lb) through the struct (they
+        // sort AFTER dst, so the (w, src, dst) order is untouched) — the
+        // selected edges double as the CONTRACTED component graph below
+        // fused materialize+count (r14): one action selects the round's
+        // edges; the forest accumulates as a lazy union of checkpointed
+        // selections (≤ maxRounds parts, linear plan growth)
+        val (sel, nSel) = checkpointCount(cross
+          .select(explode(array(col("la"), col("lb"))).as("c"),
+            struct(col("w"), col("src"), col("dst"), col("la"), col("lb")).as("k"))
+          .groupBy("c").agg(min("k").as("k"))
+          .select(col("k.src").as("src"), col("k.dst").as("dst"),
+            col("k.w").as("w"), col("k.la").as("la"), col("k.lb").as("lb"))
+          .distinct())
+        if (nSel == 0L) done = true
+        else {
+          forest = foldAccum(forest.unionByName(sel.select("src", "dst", "w")), round)
+          // contract in LABEL space: CC over the selected component graph
+          // (components-sized, halving each round — never the whole
+          // forest), then compose onto the vertex labels. min-label CC of
+          // label-space ids keeps labels = component-min original ids.
+          //
+          // SIZE-GATED local solve (the AQE re-plan philosophy): the
+          // contracted graph is ≤ one edge per component and halves every
+          // round, so past the first round(s) it is provably tiny however
+          // big the input; below the gate the driver solver replaces the
+          // nested ccBigStar fixpoint (each distributed CC round is
+          // several shuffle+checkpoint jobs — at bench scale the nested
+          // fixpoint WAS g16's cost). Above the gate (early rounds of a
+          // 100 TB forest) the distributed path runs unchanged. nSel is
+          // already on the driver — the gate costs nothing.
+          val pairs = sel.select(col("la").as("src"), col("lb").as("dst"))
+          val ccc =
+            (if (nSel <= localGate) localSccLabels(Tables.symmetrize(pairs, Seq("src", "dst")))
+             else ccBigStar(pairs))
               .select(col("id").as("label"), col("label").as("nl"))
-        // lazy: materialized by the next round's selection action (r14)
-        lab = lab.join(ccc, Seq("label"), "left")
-          .select(col("id"), coalesce(col("nl"), col("label")).as("label"))
-          .localCheckpoint(false)
+          // lazy: materialized by the next round's selection action (r14)
+          lab = lab.join(ccc, Seq("label"), "left")
+            .select(col("id"), coalesce(col("nl"), col("label")).as("label"))
+            .localCheckpoint(false)
+        }
       }
-    }
-    if (!done) throw new IllegalStateException(
-      s"msfBoruvka did not contract to a spanning forest within maxRounds=$maxRounds")
-    forest
+      if (!done) throw new IllegalStateException(
+        s"msfBoruvka did not contract to a spanning forest within maxRounds=$maxRounds")
+      forest
+    } finally e.unpersist()
   }
 
   /** G15: maximal independent set by Luby's algorithm (Luby '86), made
@@ -1069,76 +1061,57 @@ object Traversals {
     * Scale shape: per round one keyed min-combine over the undecided
     * edge frontier (partial combine — the hub costs a combiner cell)
     * plus two anti-joins, all on the shrinking undecided set
-    * ([[greedyRounds]]); the edge list persists hashed on src once.
-    * Fails loudly past `maxIter`. */
+    * ([[greedyRounds]]); the edge list persists hashed on src once and
+    * is released before returning: the MIS reads only the rounds'
+    * materialized winners. Fails loudly past `maxIter`. */
   def maximalIndependentSet(canon: DataFrame, salt: String = "mis",
                             maxIter: Int = 20): DataFrame = {
     // one-pass symmetrization (r14 — Tables.symmetrize rationale)
     val sym = Tables.symmetrize(canon.select("src", "dst"), Seq("src", "dst"))
       .repartition(col("src")).persist()
-    sym.count()
-    val prio = concat(md5(concat(lit(salt + "|"), col("id").cast("string"))),
-      lpad(col("id").cast("string"), 10, "0"))
-    greedyRounds(sym.select(col("src").as("id")).distinct().withColumn("p", prio),
-        Seq("id"), maxIter,
-        s"maximalIndependentSet did not decide all vertices within maxIter=$maxIter rounds")(
-      pick = undecided => {
-        // min undecided-neighbor priority per vertex; vertices whose
-        // neighbors are all decided get no row and win by default
-        val nmin = sym
-          .join(undecided.select(col("id").as("src"), col("p").as("sp")), "src")
-          .groupBy(col("dst").as("id")).agg(min("sp").as("np"))
-        undecided.join(nmin, Seq("id"), "left_outer")
-          .filter(col("np").isNull || col("p") < col("np"))
-          .select("id")
-      },
-      retire = (undecided, winners) => {
-        val excluded = winners.unionByName(
-          sym.join(winners.withColumnRenamed("id", "src"), "src")
-            .select(col("dst").as("id"))).distinct()
-        undecided.join(excluded, Seq("id"), "left_anti")
-      }).select("id")
+    try {
+      sym.count()
+      val prio = concat(md5(concat(lit(salt + "|"), col("id").cast("string"))),
+        lpad(col("id").cast("string"), 10, "0"))
+      greedyRounds(sym.select(col("src").as("id")).distinct().withColumn("p", prio),
+          Seq("id"), maxIter,
+          s"maximalIndependentSet did not decide all vertices within maxIter=$maxIter rounds")(
+        pick = undecided => {
+          // min undecided-neighbor priority per vertex; vertices whose
+          // neighbors are all decided get no row and win by default
+          val nmin = sym
+            .join(undecided.select(col("id").as("src"), col("p").as("sp")), "src")
+            .groupBy(col("dst").as("id")).agg(min("sp").as("np"))
+          undecided.join(nmin, Seq("id"), "left_outer")
+            .filter(col("np").isNull || col("p") < col("np"))
+            .select("id")
+        },
+        retire = (undecided, winners) => {
+          val excluded = winners.unionByName(
+            sym.join(winners.withColumnRenamed("id", "src"), "src")
+              .select(col("dst").as("id"))).distinct()
+          undecided.join(excluded, Seq("id"), "left_anti")
+        }).select("id")
+    } finally sym.unpersist()
   }
 
-  /** G14: strongly connected components of a DIRECTED graph by iterative
-    * (forward-min, backward-min) class refinement — the Orzan/FW-BW
-    * family reshaped for keyed dataflow (no recursion, no pivot BFS
-    * per call stack frame):
-    *
-    *   class₀ = one class for everything; each round computes, WITHIN
-    *   each class, F(v) = min vertex reaching v and B(v) = min vertex
-    *   reachable from v (two CC-shaped min-label fixpoints over the
-    *   intra-class edge sets), then splits classes by the (F, B) pair.
-    *
-    * Invariants: members of one SCC always share (F, B), so they are
-    * never separated; a class whose members all have F = B = m is
-    * exactly SCC(m) (m reaches everyone, everyone reaches m); and each
-    * round finalizes at least every current class minimum's SCC, so the
-    * fixpoint — every vertex with F = B — IS the SCC decomposition,
-    * labels = per-SCC minimum vertex id. The result is unique, so the
-    * mutual-closure oracle agrees exactly.
-    *
-    * Scale shape: per outer round, the intra-class edge restriction is
-    * two hash joins, persisted hashed on src/dst so both direction
-    * fixpoints rerun CC's one-combine-per-superstep shape; no driver
-    * data, no per-SCC recursion. Fails loudly past `maxOuter` (like
-    * [[kCore]]) rather than returning a non-fixpoint. */
-  /** Intra-class edge rows below which [[sccLabels]] finishes the
-    * remaining subproblem with one driver Tarjan pass (2^18 edges ≈ 4 MB
-    * of longs; the boxed adjacency/index maps behind them cost tens of
-    * MB — see [[LocalContractRows]]'s honest-footprint note, ADVICE r8).
-    * The distributed FW/BW refinement above the gate and a
-    * local solve below it is the published hybrid shape for parallel
-    * SCC (Hong, Rodia, Olukotun PPoPP'13: trim + FW-BW until the
-    * pieces fit, then Tarjan each piece locally) — the class
-    * restriction guarantees no edge crosses classes, so one local pass
-    * over the survivor edges solves every remaining class at once. */
-  private[graft] val LocalSccRows = 1L << 18
+  /** Edge rows at or below which one driver pass ([[localSccLabels]])
+    * labels components instead of a distributed fixpoint: the rest of
+    * [[sccLabels]]' refinement, each round's contraction in
+    * [[msfBoruvka]], and [[connectedComponentsAuto]]. 2^18 edge rows
+    * collect as ~4 MB of longs, but the boxed adjacency/index maps behind
+    * them cost ~50-100 B/entry — tens of MB on the driver, safe on any
+    * plausible heap (ADVICE r8: the old 2^20 default reached hundreds of
+    * MB, not the "~16 MB" it claimed). */
+  private[graft] val LocalSolveRows = 1L << 18
 
-  /** Driver Tarjan over a collected intra-class edge list: (id, label)
-    * with label = min vertex id of the SCC, for every edge endpoint.
-    * Iterative (explicit work stack) — a 1M-edge chain must not blow the
-    * JVM stack. */
+  /** The driver component solver: Tarjan over a collected (src, dst)
+    * edge list, returning (id, label) with label = min vertex id of the
+    * strongly connected component, for every edge endpoint. On a
+    * symmetric list each strongly connected component is a connected
+    * component, so the CC callers pass symmetrized edges. Iterative
+    * (explicit work stack) — a 1M-edge chain must not blow the JVM
+    * stack. */
   private def localSccLabels(ec: DataFrame): DataFrame = {
     val sp = ec.sparkSession
     import sp.implicits._
@@ -1193,54 +1166,46 @@ object Traversals {
     label.toSeq.toDF("id", "label")
   }
 
-  // maxOuter 14 (was 12): the 2^20 → 2^18 local-gate cut (ADVICE r8) can
-  // cost 1-2 extra FW-BW refinement rounds before the survivor edges fit
-  // the driver Tarjan pass — same widening as msfBoruvka's maxRounds
+  /** G14: strongly connected components of a DIRECTED graph by iterative
+    * (forward-min, backward-min) class refinement — the Orzan/FW-BW
+    * family reshaped for keyed dataflow (no recursion, no pivot BFS
+    * per call stack frame):
+    *
+    *   class₀ = one class for everything; each round computes, WITHIN
+    *   each class, F(v) = min vertex reaching v and B(v) = min vertex
+    *   reachable from v (two CC-shaped min-label fixpoints over the
+    *   intra-class edge sets), then splits classes by the (F, B) pair.
+    *
+    * Invariants: members of one SCC always share (F, B), so they are
+    * never separated; a class whose members all have F = B = m is
+    * exactly SCC(m) (m reaches everyone, everyone reaches m); and each
+    * round finalizes at least every current class minimum's SCC, so the
+    * fixpoint — every vertex with F = B — IS the SCC decomposition,
+    * labels = per-SCC minimum vertex id. The result is unique, so the
+    * mutual-closure oracle agrees exactly.
+    *
+    * Scale shape: per outer round, the intra-class edge restriction is
+    * two hash joins, persisted hashed on src/dst; both directions then
+    * run as the two sides of ONE [[minLabelFixpoint]] (CC's
+    * one-combine-per-superstep shape, lock-stepped), which throws past
+    * `maxInner`. At or below `localGate` intra-class edge rows the driver
+    * solver [[localSccLabels]] finishes every remaining class in one
+    * pass — the published hybrid shape for parallel SCC (Hong, Rodia,
+    * Olukotun PPoPP'13: trim + FW-BW until the pieces fit, then Tarjan
+    * each piece locally); the class restriction guarantees no edge
+    * crosses classes. Fails loudly past `maxOuter` (like [[kCore]])
+    * rather than returning a non-fixpoint.
+    *
+    * maxOuter 14 (was 12): the 2^20 → 2^18 local-gate cut (ADVICE r8) can
+    * cost 1-2 extra FW-BW refinement rounds before the survivor edges fit
+    * the driver Tarjan pass — same widening as msfBoruvka's maxRounds. */
   def sccLabels(edges: DataFrame, maxOuter: Int = 14,
                 maxInner: Int = 60,
-                localGate: Long = LocalSccRows): DataFrame = {
+                localGate: Long = LocalSolveRows): DataFrame = {
     val e0 = edges.select("src", "dst").filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(true)
     var lab = e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
       .distinct().withColumn("cls", lit(0L)).localCheckpoint(true)
-
-    // forward AND backward min-label propagation within classes, in
-    // LOCK-STEP: one label frame carries both fixpoints (f along
-    // src->dst, b along dst->src), so a round-pair costs ONE checkpoint
-    // + ONE convergence count instead of two — the superstep count per
-    // outer round is max(diam_f, diam_b), not their sum (VERDICT r7
-    // next #7: checkpoints report UnknownPartitioning under AQE, so
-    // cross-round partition reuse is unavailable; job-count halving is
-    // the structural lever that remains). The two propagations are
-    // independent, so lock-stepping changes no fixpoint.
-    def minPropBoth(ec: DataFrame, ecR: DataFrame): DataFrame = {
-      var f = lab.withColumn("f", col("id")).withColumn("b", col("id"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var it = 0
-      while (changed > 0 && it < maxInner) {
-        it += 1
-        val msgF = ec.join(f.select(col("id").as("src"), col("f")), "src")
-          .groupBy(col("dst").as("id")).agg(min("f").as("mf"))
-        val msgB = ecR.join(f.select(col("id").as("src"), col("b")), "src")
-          .groupBy(col("dst").as("id")).agg(min("b").as("mb"))
-        // lazy checkpoint + fused changed-count (r14): one action per
-        // lock-step round materializes the frame and counts movers
-        val next = f.join(msgF, Seq("id"), "left_outer")
-          .join(msgB, Seq("id"), "left_outer")
-          .select(col("id"), col("cls"),
-            least(col("f"), coalesce(col("mf"), col("f"))).as("f"),
-            least(col("b"), coalesce(col("mb"), col("b"))).as("b"),
-            (coalesce(col("mf") < col("f"), lit(false)) ||
-              coalesce(col("mb") < col("b"), lit(false))).as("_chg"))
-          .localCheckpoint(false)
-        changed = next.filter(col("_chg")).queryExecution.toRdd.count()
-        f = next.select("id", "cls", "f", "b")
-      }
-      if (changed > 0) throw new IllegalStateException(
-        s"sccLabels: min-label fixpoint not reached within maxInner=$maxInner")
-      f
-    }
 
     var outer = 0
     var result: DataFrame = null
@@ -1277,7 +1242,11 @@ object Traversals {
           .repartition(col("src")).persist()
         ecR.count()
         val refined =
-          try minPropBoth(ec, ecR).select("id", "f", "b").localCheckpoint(false)
+          try minLabelFixpoint(
+              lab.withColumn("f", col("id")).withColumn("b", col("id")).localCheckpoint(true),
+              Seq(ec -> "f", ecR -> "b"), maxInner,
+              Some(s"sccLabels: min-label fixpoint not reached within maxInner=$maxInner"))
+            .select("id", "f", "b").localCheckpoint(false)
           catch { case t: Throwable =>
             // a maxInner abort must not leak persisted edge frames into a
             // long-lived session (ADVICE r8): this round's pair AND the

@@ -57,6 +57,22 @@ class DurableStoreSpec extends AnyFunSuite {
     assert(new DurableStore(spark, st.root).currentVersion == v4)
   }
 
+  test("a manifest without its schema line refuses to open, naming the file") {
+    val st = fresh(base: _*)
+    val copy = Files.createTempDirectory("graft-ds-noschema")
+    val from = java.nio.file.Paths.get(st.root)
+    val walk = Files.walk(from)
+    try walk.iterator().forEachRemaining { p =>
+      val to = copy.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally walk.close()
+    val mf = copy.resolve("manifest").resolve("v1.tsv")
+    Files.write(mf, new String(Files.readAllBytes(mf)).split("\n")
+      .filterNot(_.startsWith("schema\t")).mkString("\n").getBytes)
+    val e = intercept[IllegalStateException](new DurableStore(spark, copy.toString).read(1))
+    assert(e.getMessage.contains(mf.toString), e.getMessage)
+  }
+
   test("linearHistory store rejects commits built on a stale base; default branches") {
     // ADVICE r5: in the multi-driver scenario the CommitProtocol seam
     // exists for, a commit built from a superseded snapshot must surface

@@ -69,6 +69,9 @@ class SccSpec extends AnyFunSuite {
   }
 
   test("msfBoruvka: local union-find contraction == distributed ccBigStar") {
+    // the local contraction is the driver solver localSccLabels over the
+    // symmetrized selected edges; localGate = 0 forces ccBigStar every
+    // round
     val s = spark; import s.implicits._
     val w = (0 until 400).map { i =>
       val a = (i * 7919L) % 120

@@ -75,6 +75,17 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `f`'s value and the RDDs `f` left persisted: those in the context's
+    * persistent-RDD map after `f` that were not in it before. A cached
+    * Dataset persists an RDD of column batches, a local checkpoint an
+    * RDD of rows. */
+  def pinnedDuring[A](spark: SparkSession)(f: => A): (A, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val a = f
+    (a, sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.toSeq)
+  }
+
   /** Vertex side-table rows (id, name, score). */
   def props(rows: (Long, String, Long)*): DataFrame = {
     val s = spark

@@ -423,6 +423,8 @@ class TraversalsSpec extends AnyFunSuite {
   def canon(df: org.apache.spark.sql.DataFrame) =
     df.select(least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst")).distinct()
+  /** `twoComps` canonical with unique integer weights, for msfBoruvka. */
+  lazy val weighted = canon(twoComps).withColumn("w", col("src") * 100 + col("dst"))
 
   test("each superstep loop runs a pinned number of Spark jobs") {
     val s = spark; import s.implicits._
@@ -458,31 +460,74 @@ class TraversalsSpec extends AnyFunSuite {
         Seq(0L).toDF("id"), Seq(4L).toDF("tid"), 10).collect()),
       "pathTo" -> jobs(Traversals.pathTo(tree, 0L, 4L)),
       "MultiBFSPacked.run" -> jobs(
-        MultiBFSPacked.run(spark, sym(twoComps), Seq(0L, 10L), 5).collect()))
+        MultiBFSPacked.run(spark, sym(twoComps), Seq(0L, 10L), 5).collect()),
+      "connectedComponents" -> jobs(Traversals.connectedComponents(sym(twoComps)).collect()),
+      "connectedComponentsScan" -> jobs(
+        Traversals.connectedComponentsScan(sym(twoComps)).collect()),
+      "ccBigStar" -> jobs(Traversals.ccBigStar(sym(twoComps)).collect()),
+      "sccLabels" -> jobs(Traversals.sccLabels(twoComps).collect()),
+      "sccLabels(localGate = 0)" -> jobs(Traversals.sccLabels(twoComps, localGate = 0).collect()),
+      "msfBoruvka" -> jobs(Traversals.msfBoruvka(weighted).collect()),
+      "msfBoruvka(localGate = 0)" -> jobs(
+        Traversals.msfBoruvka(weighted, localGate = 0).collect()))
     finally spark.conf.set(aqe, aqeWas)
     // MultiBFSPacked.run's 8 includes the fused count that materializes
     // its state before it releases the edge copy
     assert(got == Seq("bfsDistances" -> 17, "bfsSigma" -> 9, "expandUntil" -> 16,
       "weightedSSSP" -> 16, "temporalReachFrom" -> 14, "kCore" -> 18, "kTruss" -> 54,
       "maximalIndependentSet" -> 13, "maximalMatching" -> 7, "shortestPathNodes" -> 27,
-      "pathTo" -> 8, "MultiBFSPacked.run" -> 8), got.mkString(", "))
+      "pathTo" -> 8, "MultiBFSPacked.run" -> 8,
+      "connectedComponents" -> 13, "connectedComponentsScan" -> 12, "ccBigStar" -> 19,
+      "sccLabels" -> 8, "sccLabels(localGate = 0)" -> 66,
+      "msfBoruvka" -> 11, "msfBoruvka(localGate = 0)" -> 16), got.mkString(", "))
   }
 
   test("MultiBFSPacked.run releases its resident edge copy and matches bfsDistances") {
     val s = spark; import s.implicits._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val g = sym(twoComps)
-    val packed = MultiBFSPacked.run(spark, g, Seq(0L, 10L), maxDepth = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val (packed, left) = TestSpark.pinnedDuring(spark)(
+      MultiBFSPacked.run(spark, g, Seq(0L, 10L), maxDepth = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
     // what the run leaves persisted is its per-depth vertex state: none of
     // it holds the 16 rows of the edge copy
-    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
     assert(left.nonEmpty && left.forall(_.count() < g.count()),
       s"an edge-sized RDD is still persisted: ${left.map(_.count())}")
     val rows = Traversals.bfsDistances(g, Seq((0L, 0L), (10L, 10L)).toDF("source", "id"), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(packed == rows)
+  }
+
+  test("msfBoruvka and maximalIndependentSet release their pinned edge frames; " +
+    "a repeat call runs the same jobs and gives the same answer") {
+    val s = spark; import s.implicits._
+    // K5 on 0..4 plus a triangle on 10..12: 13 edges over 8 vertices, so
+    // every vertex- or forest-sized frame holds fewer rows than the edges
+    val k5 = for (a <- 0L to 4L; b <- a + 1 to 4L) yield (a, b)
+    val canonE = (k5 ++ Seq((10L, 11L), (10L, 12L), (11L, 12L))).toDF("src", "dst")
+    val nE = canonE.count()
+    // rows an RDD holds: a cached Dataset's RDD holds column batches
+    def rows(r: org.apache.spark.rdd.RDD[_]): Long = r.asInstanceOf[org.apache.spark.rdd.RDD[Any]]
+      .map {
+        case b: org.apache.spark.sql.columnar.CachedBatch => b.numRows.toLong
+        case _ => 1L
+      }.fold(0L)(_ + _)
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try Seq[(String, () => Set[Seq[Any]])](
+        "msfBoruvka" -> (() => Traversals.msfBoruvka(
+          canonE.withColumn("w", col("src") * 100 + col("dst"))).collect().map(_.toSeq).toSet),
+        "maximalIndependentSet" -> (() =>
+          Traversals.maximalIndependentSet(canonE).collect().map(_.toSeq).toSet)
+      ).foreach { case (name, run) =>
+        val ((first, second), left) = TestSpark.pinnedDuring(spark)(
+          (TestSpark.jobsDuring(spark)(run()), TestSpark.jobsDuring(spark)(run())))
+        assert(first._1.nonEmpty && first._1 == second._1, s"$name: answers differ")
+        assert(first._2 == second._2, s"$name: ${first._2} jobs, then ${second._2}")
+        val edgeSized = left.map(rows).filter(_ >= nE)
+        assert(edgeSized.isEmpty, s"$name left edge-sized RDDs persisted: $edgeSized")
+      }
+    finally spark.conf.set(aqe, aqeWas)
   }
 
   test("kCore throws past maxIter with its own message") {
