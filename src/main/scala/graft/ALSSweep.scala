@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * user/item sides.
   *
   * Spark shape: ratings are hash-partitioned ONCE per side (a user-keyed
-  * and an item-keyed persisted frame — at 100 TB, the bucketed-table
+  * and an item-keyed pinned frame — at 100 TB, the bucketed-table
   * layout); each half-sweep BROADCASTS the fixed side's factors as a
   * packed flat array ([[graft.functions.PackedFactors]], vertex-sized)
   * and aggregates each vertex's (XtX, Xty, deg) IN PLACE with the
@@ -139,7 +139,7 @@ object ALSSweep {
   /** Full fit: `iters` alternating sweeps (items first, like the
     * reference's vertex-ordering over the bipartite graph). The ratings
     * are shuffled ONCE per side up front (user-keyed and item-keyed
-    * persisted frames — the two clusterings every sweep reuses); at
+    * pinned frames — the two clusterings every sweep reuses); at
     * 100 TB this is the bucketed-table layout a production fit would
     * read directly.
     *
@@ -159,45 +159,45 @@ object ALSSweep {
     // the 128 default — still exchange-free, just sorted). Callers that
     // want the hash-in-place fit must bind their rating frames under a
     // raised-threshold clone, as [[rmse]] does via [[sweepSession]].
-    val (userF, itemF, byUser, byItem) = fitFrames(spark, ratings, iters)
-    byUser.unpersist()
-    byItem.unpersist()
-    (userF, itemF)
+    Traversals.pinned { pins =>
+      val (userF, itemF, _) = fitFrames(pins, spark, ratings, iters)
+      (userF, itemF)
+    }
   }
 
-  /** [[fit]] plus the persisted per-side rating frames, still cached, so
-    * [[rmse]] can score against the user-clustered frame instead of
+  /** [[fit]] in the caller's pin scope, plus the user-clustered rating
+    * frame it pinned there, so [[rmse]] can score against it instead of
     * re-deriving the ratings from source a third time (measured: the
     * scoring phase was 5.2 s of c6b's sf1 cost, most of it a repeated
-    * lineitem⋈orders build + a fresh user-side shuffle). Caller owns the
-    * unpersist. */
-  private def fitFrames(spark: SparkSession, ratings: DataFrame,
-                        iters: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // cache the source ratings ONCE (columnar, compressed — NOT
-    // localCheckpoint, whose deserialized on-heap rows measured ~1 GB of
-    // small objects at sf1 and tipped the shared bench session into GC
-    // collapse): both per-side repartitions consume `typed`, and uncached
-    // each re-ran the whole upstream derivation (for c6b, a 6M-row
-    // lineitem⋈orders build — ~3 s at sf1, paid twice)
-    val typed = ratings.select(col("user").cast("int").as("user"),
-      col("item").cast("int").as("item"), col("rating").cast("double").as("rating"))
-      .persist()
-    // persist the per-side frames, NOT localCheckpoint: checkpointed
-    // frames report UnknownPartitioning (pinned by PlanShapeSpec; see
-    // PERF_ARCHIVE.md's round-8 log), which would put the per-sweep
-    // exchange right back
-    val byUser = typed.repartition(col("user")).persist()
-    val byItem = typed.repartition(col("item")).persist()
-    byUser.count() // materialize both clusterings off one cached build,
-    byItem.count() // then drop the source cache right away
-    typed.unpersist()
+    * lineitem⋈orders build + a fresh user-side shuffle). */
+  private def fitFrames(pins: Traversals.Pins, spark: SparkSession, ratings: DataFrame,
+                        iters: Int): (DataFrame, DataFrame, DataFrame) = {
+    val (byUser, byItem) = Traversals.pinned { source =>
+      // pin the source ratings ONCE, for this inner scope only (columnar,
+      // compressed — NOT localCheckpoint, whose deserialized on-heap rows
+      // measured ~1 GB of small objects at sf1 and tipped the shared bench
+      // session into GC collapse): both per-side repartitions consume
+      // `typed`, and unpinned each re-ran the whole upstream derivation
+      // (for c6b, a 6M-row lineitem⋈orders build — ~3 s at sf1, paid twice)
+      val typed = source(ratings.select(col("user").cast("int").as("user"),
+        col("item").cast("int").as("item"), col("rating").cast("double").as("rating")))
+      // pin the per-side frames, NOT localCheckpoint: checkpointed
+      // frames report UnknownPartitioning (pinned by PlanShapeSpec; see
+      // PERF_ARCHIVE.md's round-8 log), which would put the per-sweep
+      // exchange right back
+      val byUser = pins(typed.repartition(col("user")))
+      val byItem = pins(typed.repartition(col("item")))
+      byUser.count() // materialize both clusterings off one pinned build;
+      byItem.count() // the source is released when this scope ends
+      (byUser, byItem)
+    }
     var userF = initFactors(spark, byUser.select("user").distinct(), "u")
     var itemF = initFactors(spark, byItem.select("item").distinct(), "i")
     for (_ <- 1 to iters) {
       userF = solveSide(byUser, itemF, "user", "item")
       itemF = solveSide(byItem, userF, "item", "user")
     }
-    (userF, itemF, byUser, byItem)
+    (userF, itemF, byUser)
   }
 
   /** A CLONED session with the ObjectHashAggregate fallback threshold
@@ -230,15 +230,16 @@ object ALSSweep {
     // Fixture caches are keyed by applicationId, shared with the clone.
     val fs = sweepSession(spark)
     val r = ALSRec.ratings(fs, dir)
-    val (userF, itemF, byUser, byItem) = fitFrames(fs, r, iters)
-    val dotUD = {
+    // the score materializes before the scope releases the rating frames
+    Traversals.pinned { pins =>
+      val (userF, itemF, byUser) = fitFrames(pins, fs, r, iters)
       // No broadcast hint: the factor tables are vertex-sized, and at the
       // 100 TB scale contract a vertex-sized broadcast blows Spark's 8 GB
       // broadcast / driver-memory limits. Let Catalyst/AQE pick — at
       // bench SFs the tables are under the autoBroadcast threshold so the
       // plan is identical; at scale it degrades gracefully to a shuffle
       // join on the rating side's natural key — and scoring against the
-      // still-cached user-clustered frame means the rating side never
+      // still-pinned user-clustered frame means the rating side never
       // reshuffles for the user join.
       val u = userF.select(col("id").as("uid"), col("f").as("uf"))
       val it = itemF.select(col("id").as("iid"), col("f").as("if_"))
@@ -251,13 +252,8 @@ object ALSSweep {
       byUser.join(u, col("user") === col("uid"))
         .join(it, col("item") === col("iid"))
         .select(col("rating").as("r"), dot.as("p"))
+        .agg(sqrt(avg(pow(col("r") - col("p"), 2))).as("rmse"), count(lit(1)).as("n"))
     }
-    val out = dotUD
-      .agg(sqrt(avg(pow(col("r") - col("p"), 2))).as("rmse"), count(lit(1)).as("n"))
-      .localCheckpoint(true) // score eagerly, then free the rating caches
-    byUser.unpersist()
-    byItem.unpersist()
-    out
   }
 
   /** c6b gate: same integer-claim pattern as [[ALSRec.rmseChecked]] —

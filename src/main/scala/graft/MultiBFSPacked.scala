@@ -60,7 +60,8 @@ object MultiBFSPacked {
   /** K simultaneous BFS from `sources` (ordered seed list, K ≤ 127 depth
     * levels). Returns (source, id, dist) rows equal to
     * [[Traversals.bfsDistances]]. */
-  def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long], maxDepth: Int): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
+          maxDepth: Int): DataFrame = Traversals.pinned { pins =>
     require(maxDepth <= Byte.MaxValue, s"byte-packed distance overflows at depth $maxDepth")
     import spark.implicits._
     val k = sources.length
@@ -69,14 +70,11 @@ object MultiBFSPacked {
         VState(s, Array.tabulate(k)(j => if (j == i) 0: Byte else -1: Byte))
       })
     val agg = new MinVec(k)
-    // materialize the 2-column edge projection once: the per-depth join
-    // otherwise re-plans and re-scans the full derivation every round
-    // (r14 — the bfsDistances discipline). Size-gated (r15,
-    // Traversals.residentEdges): past the gate the projection streams
-    // per depth instead of pinning an edge-sized resident copy.
-    val (e2, release) = Traversals.residentEdges(
-      edges.select(col("src").cast("long").as("s"),
-        col("dst").cast("long").as("t")))
+    // the 2-column edge projection, resident below the gate for the call
+    // (Traversals.Pins.resident): the per-depth join otherwise re-scans
+    // the full derivation every round (r14 — the bfsDistances discipline)
+    val e2 = pins.resident(edges.select(col("src").cast("long").as("s"),
+      col("dst").cast("long").as("t")), Traversals.EdgeResidencyMaxBytes)
 
     for (depth <- 1 to maxDepth) {
       val d = depth.toByte
@@ -92,7 +90,7 @@ object MultiBFSPacked {
         }
       // gather: pointwise-min merge of proposals into the state
       // lazy: lineage truncates at plan level; the next round's (or the
-      // final count's) action materializes the persisted state (r14 —
+      // scope's final count) action materializes the persisted state (r14 —
       // drops one full vertex-state pass per superstep)
       state = state.union(proposals)
         .groupByKey(_.id)
@@ -100,11 +98,8 @@ object MultiBFSPacked {
         .map { case (id, dist) => VState(id, dist) }
         .localCheckpoint(false)
     }
-    // the state is a chain of lazy checkpoints: one fused count
-    // materializes every depth's, after which nothing reads the edge copy
-    // and the returned frame reads checkpointed blocks only
-    state.queryExecution.toRdd.count()
-    release()
+    // the state is a chain of lazy checkpoints that reads the edge copy:
+    // the scope materializes the rows in one fused count before it goes
     state.flatMap(vs => vs.dist.zipWithIndex.collect {
       case (dist, i) if dist >= 0 => (sources(i), vs.id, dist.toLong)
     }).toDF("source", "id", "dist")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** C3 PageRank replicating the reference's exact update rule
@@ -23,65 +23,12 @@ object PageRank {
   val Base  = 150000000L // 0.15 scaled
 
   /** `iters` fixed iterations over a directed edge list; returns
-    * (id, rank_scaled) for the top-20 by (rank desc, id).
-    *
-    * ==One shuffle per superstep==
-    * Contributions only ever read the rank of a SOURCE vertex, so the
-    * loop state is restricted to `deg`'s vertices (sinks are
-    * reconstructed in the final full-vertex update — same numbers, the
-    * update rule never feeds a sink's rank back). Partitioning is then
-    * reused end-to-end: `deg` and `ed` are hash-partitioned on src at
-    * build time; `acc` comes out of its groupBy hashed on dst, and the
-    * alias dst→src rewrites the partitioning expression with it, so the
-    * rank-update join `deg ⋈ acc` and the next superstep's `ed ⋈ ranks`
-    * both see their clustering satisfied — the ONLY exchange per
-    * superstep is the |E|-row contribution combine (map-side partial
-    * sums, so a hub dst costs a combiner cell, not a straggler). 3→1
-    * shuffles per iteration vs. the naive full-vertex loop. */
-  def top20(edges: DataFrame, iters: Int): DataFrame = {
-    val e = edges.select("src", "dst")
-    // loop invariants, materialized once, all hashed on src. persist(),
-    // not localCheckpoint(): under AQE a checkpoint's LogicalRDD reports
-    // UnknownPartitioning, so every superstep would re-Exchange both join
-    // sides — InMemoryRelation preserves the child's hash partitioning
-    // and the downstream joins see their clustering satisfied
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val ed = e.join(deg, "src").persist()
-    ed.count()
-    // verts derives from the CACHED ed, not the raw edge frame: ed is an
-    // inner join on src against per-src degrees, so it holds every edge
-    // row — deriving vertices from e would re-run the full fact-table
-    // derivation a second time per entry (r14; guide §2.4)
-    val verts = ed.select(col("src").as("id")).union(ed.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    val n = verts.agg(count(lit(1)).as("n")).localCheckpoint(true)
-    var ranksS = deg.select(col("src"), lit(0L).as("r"))
-    var lastAcc: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib = ed.join(ranksS, "src")
-        .select(col("dst"), expr("greatest(r, 150000000L) div outdeg").as("c"))
-      val acc = contrib.groupBy(col("dst")).agg(sum("c").as("acc"))
-      lastAcc = acc
-      if (i < iters) {
-        ranksS = deg
-          .join(acc.withColumnRenamed("dst", "src"), Seq("src"), "left_outer")
-          .crossJoin(broadcast(n))
-          .select(col("src"),
-            expr("150000000L div n + (17 * coalesce(acc, 0L)) div 20").as("r"))
-        // truncate lineage every few supersteps — otherwise the plan
-        // deepens linearly and convergence-length runs (50+ iters)
-        // re-analyze an ever-growing DAG
-        if (i % 5 == 0) ranksS = ranksS.localCheckpoint(true)
-      }
+    * (id, rank_scaled) for the top-20 by (rank desc, id). */
+  def top20(edges: DataFrame, iters: Int): DataFrame =
+    supersteps(edges, iters, "greatest(r, 150000000L) div outdeg") { (_, n) =>
+      val teleport = lit(if (n > 0) Base / n else 0L) // no vertex, no rank
+      (lit(0L), _ => teleport)
     }
-    verts
-      .join(lastAcc.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
-      .crossJoin(broadcast(n))
-      .select(col("id"),
-        expr("150000000L div n + (17 * coalesce(acc, 0L)) div 20").as("rank_scaled"))
-      .orderBy(col("rank_scaled").desc, col("id")).limit(20)
-  }
 
   /** C9: PERSONALIZED PageRank (random walk with restart): the teleport
     * mass returns to the single seed vertex instead of spreading
@@ -95,50 +42,73 @@ object PageRank {
     *   contrib  = r(src) div outdeg(src)
     *   r'(v)    = (0.15 if v = seed else 0) + 0.85 · acc(v)
     *
-    * Same scaled-integer arithmetic and loop shape as [[top20]]: the
-    * edge list, degrees, vertices and the one-row seed are materialized
-    * loop-invariants; each superstep is one keyed shuffle with partial
-    * sum combine (a hub key costs a combiner cell, not a straggler),
-    * and the seed joins broadcast. */
-  def personalizedTop20(edges: DataFrame, iters: Int): DataFrame = {
-    // same src-only / partitioning-reuse loop shape as [[top20]]: one
-    // |E|-row combine per superstep is the only exchange
+    * Same scaled-integer arithmetic and superstep loop as [[top20]]; the
+    * seed is read once and enters every superstep as a literal. */
+  def personalizedTop20(edges: DataFrame, iters: Int): DataFrame =
+    supersteps(edges, iters, "r div outdeg") { (ed, _) =>
+      val seed = lit(ed.agg(min("src")).head().get(0))
+      (when(col("src") === seed, lit(Scale)).otherwise(lit(0L)),
+        id => when(id === seed, lit(Base)).otherwise(lit(0L)))
+    }
+
+  /** The superstep loop of [[top20]] and [[personalizedTop20]]: `iters`
+    * updates r'(v) = teleport(v) + (17 · acc(v)) div 20, acc(v) summing
+    * `contrib` over v's in-edges; `terms(ed, n)` gives the start rank
+    * (over `src`) and the teleport term (of an id column).
+    *
+    * ==One shuffle per superstep==
+    * Contributions only ever read the rank of a SOURCE vertex, so the
+    * loop state is restricted to `deg`'s vertices (sinks are
+    * reconstructed in the final full-vertex update — same numbers, the
+    * update rule never feeds a sink's rank back). Partitioning is then
+    * reused end-to-end: `deg` and `ed` are pinned hash-partitioned on src
+    * (persisted, not checkpointed: under AQE a checkpoint's LogicalRDD
+    * reports UnknownPartitioning, so every superstep would re-Exchange
+    * both join sides — InMemoryRelation preserves the child's hash
+    * partitioning); `acc` comes out of its groupBy hashed on dst, and the
+    * alias dst→src rewrites the partitioning expression with it, so the
+    * rank-update join `deg ⋈ acc` and the next superstep's `ed ⋈ ranks`
+    * both see their clustering satisfied — the ONLY exchange per
+    * superstep is the |E|-row contribution combine (map-side partial
+    * sums, so a hub dst costs a combiner cell, not a straggler). 3→1
+    * shuffles per iteration vs. the naive full-vertex loop.
+    *
+    * The vertex checkpoint's fused count, the first action, builds both
+    * pinned frames and counts the vertices. */
+  private def supersteps(edges: DataFrame, iters: Int, contrib: String)
+                        (terms: (DataFrame, Long) => (Column, Column => Column))
+      : DataFrame = Traversals.pinned { pins =>
     val e = edges.select("src", "dst")
-    // persist(), not localCheckpoint — see [[top20]] (AQE checkpoint
-    // loses partitioning; the cache keeps it)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val ed = e.join(deg, "src").persist()
-    ed.count()
-    // verts/seed derive from the CACHED ed (see [[top20]], r14)
-    val verts = ed.select(col("src").as("id")).union(ed.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    val seed = ed.agg(min("src").as("seed")).localCheckpoint(true)
-    var ranksS = deg.crossJoin(broadcast(seed))
-      .select(col("src"),
-        when(col("src") === col("seed"), lit(Scale)).otherwise(lit(0L)).as("r"))
+    val deg = pins(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+    val ed = pins(e.join(deg, "src"))
+    // verts derives from the pinned ed, not the raw edge frame: ed is an
+    // inner join on src against per-src degrees, so it holds every edge
+    // row — deriving vertices from e would re-run the full fact-table
+    // derivation a second time per entry (r14; guide §2.4)
+    val (verts, n) = Traversals.checkpointCount(
+      ed.select(col("src").as("id")).union(ed.select(col("dst").as("id"))).distinct())
+    val (start, teleport) = terms(ed, n)
+    def rank(id: Column) = teleport(id) + expr("(17 * coalesce(acc, 0L)) div 20")
+    var ranksS = deg.select(col("src"), start.as("r"))
     var lastAcc: DataFrame = null
     for (i <- 1 to iters) {
-      val contrib = ed.join(ranksS, "src")
-        .select(col("dst"), expr("r div outdeg").as("c"))
-      val acc = contrib.groupBy(col("dst")).agg(sum("c").as("acc"))
+      val acc = ed.join(ranksS, "src")
+        .select(col("dst"), expr(contrib).as("c"))
+        .groupBy(col("dst")).agg(sum("c").as("acc"))
       lastAcc = acc
       if (i < iters) {
         ranksS = deg
           .join(acc.withColumnRenamed("dst", "src"), Seq("src"), "left_outer")
-          .crossJoin(broadcast(seed))
-          .select(col("src"),
-            (when(col("src") === col("seed"), lit(Base)).otherwise(lit(0L)) +
-              expr("(17 * coalesce(acc, 0L)) div 20")).as("r"))
+          .select(col("src"), rank(col("src")).as("r"))
+        // truncate lineage every few supersteps — otherwise the plan
+        // deepens linearly and convergence-length runs (50+ iters)
+        // re-analyze an ever-growing DAG
         if (i % 5 == 0) ranksS = ranksS.localCheckpoint(true)
       }
     }
     verts
       .join(lastAcc.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
-      .crossJoin(broadcast(seed))
-      .select(col("id"),
-        (when(col("id") === col("seed"), lit(Base)).otherwise(lit(0L)) +
-          expr("(17 * coalesce(acc, 0L)) div 20")).as("rank_scaled"))
+      .select(col("id"), rank(col("id")).as("rank_scaled"))
       .orderBy(col("rank_scaled").desc, col("id")).limit(20)
   }
 
@@ -146,52 +116,46 @@ object PageRank {
     * the seed as a one-row CTE cross-joined everywhere the Spark side
     * broadcasts it. */
   def personalizedOracleSql(iters: Int, fragment: String = Oracle.EDGES,
-                            table: String = "edges"): String = {
-    val sb = new StringBuilder
-    sb.append(fragment).append(",\n")
-    sb.append(s"deg AS (SELECT src AS id, count(*) AS outdeg FROM $table GROUP BY src),\n")
-    sb.append(s"verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM $table UNION ALL SELECT dst AS id FROM $table)),\n")
-    sb.append(s"sd AS (SELECT min(src) AS seed FROM $table),\n")
-    sb.append("r0 AS (SELECT v.id, CAST(CASE WHEN v.id = sd.seed THEN 1000000000 ELSE 0 END AS BIGINT) AS r FROM verts v CROSS JOIN sd)")
-    for (i <- 1 to iters) {
-      sb.append(s""",
-        |acc$i AS (
-        |  SELECT e.dst AS id, CAST(sum(r.r // d.outdeg) AS BIGINT) AS acc
-        |  FROM $table e JOIN r${i - 1} r ON e.src = r.id JOIN deg d ON e.src = d.id
-        |  GROUP BY e.dst),
-        |r$i AS (
-        |  SELECT v.id,
+                            table: String = "edges"): String =
+    unrolledSql(iters, fragment, table, s"sd AS (SELECT min(src) AS seed FROM $table)",
+      "r0 AS (SELECT v.id, CAST(CASE WHEN v.id = sd.seed THEN 1000000000 ELSE 0 END AS BIGINT) AS r FROM verts v CROSS JOIN sd)",
+      " CAST(sum(r.r // d.outdeg) AS BIGINT)", "sd",
+      """
         |         CASE WHEN v.id = sd.seed THEN 150000000 ELSE 0 END
-        |           + (17 * COALESCE(a.acc, 0)) // 20 AS r
-        |  FROM verts v CROSS JOIN sd LEFT JOIN acc$i a ON v.id = a.id)""".stripMargin)
-    }
-    sb.append(s"\nSELECT id, CAST(r AS BIGINT) AS rank_scaled FROM r$iters ORDER BY rank_scaled DESC, id LIMIT 20")
-    Oracle.withSql(sb.toString, "")
-  }
+        |           + (17 * COALESCE(a.acc, 0)) // 20""".stripMargin)
 
   /** DuckDB oracle: the same fixed iterations unrolled as chained CTEs.
     * Defaults to the [[Oracle.EDGES]] graph; callers may supply any other
     * edge-table CTE fragment + its name (e.g. the zipf skew fixture). */
   def oracleSql(iters: Int, fragment: String = Oracle.EDGES,
-                table: String = "edges"): String = {
+                table: String = "edges"): String =
+    unrolledSql(iters, fragment, table, "nn AS (SELECT count(*) AS n FROM verts)",
+      "r0 AS (SELECT id, CAST(0 AS BIGINT) AS r FROM verts)",
+      """
+        |         CAST(sum((CASE WHEN r.r > 150000000 THEN r.r ELSE 150000000 END) // d.outdeg) AS BIGINT)""".stripMargin,
+      "nn", " 150000000 // nn.n + (17 * COALESCE(a.acc, 0)) // 20")
+
+  /** The unrolled oracle both PageRanks share: `one` is the one-row CTE
+    * (named `oneName`) the rank update cross-joins, `r0` the start
+    * ranks, `acc` the summed contribution and `r` the rank update. */
+  private def unrolledSql(iters: Int, fragment: String, table: String, one: String,
+                          r0: String, acc: String, oneName: String, r: String): String = {
     val sb = new StringBuilder
     sb.append(fragment).append(",\n")
     sb.append(s"deg AS (SELECT src AS id, count(*) AS outdeg FROM $table GROUP BY src),\n")
     // NOTE: no top-level UNION inside a CTE here — under WITH RECURSIVE,
     // DuckDB 1.0 does not deduplicate a multiply-referenced UNION CTE.
     sb.append(s"verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM $table UNION ALL SELECT dst AS id FROM $table)),\n")
-    sb.append("nn AS (SELECT count(*) AS n FROM verts),\n")
-    sb.append("r0 AS (SELECT id, CAST(0 AS BIGINT) AS r FROM verts)")
+    sb.append(one).append(",\n").append(r0)
     for (i <- 1 to iters) {
       sb.append(s""",
         |acc$i AS (
-        |  SELECT e.dst AS id,
-        |         CAST(sum((CASE WHEN r.r > 150000000 THEN r.r ELSE 150000000 END) // d.outdeg) AS BIGINT) AS acc
+        |  SELECT e.dst AS id,$acc AS acc
         |  FROM $table e JOIN r${i - 1} r ON e.src = r.id JOIN deg d ON e.src = d.id
         |  GROUP BY e.dst),
         |r$i AS (
-        |  SELECT v.id, 150000000 // nn.n + (17 * COALESCE(a.acc, 0)) // 20 AS r
-        |  FROM verts v CROSS JOIN nn LEFT JOIN acc$i a ON v.id = a.id)""".stripMargin)
+        |  SELECT v.id,$r AS r
+        |  FROM verts v CROSS JOIN $oneName LEFT JOIN acc$i a ON v.id = a.id)""".stripMargin)
     }
     sb.append(s"\nSELECT id, CAST(r AS BIGINT) AS rank_scaled FROM r$iters ORDER BY rank_scaled DESC, id LIMIT 20")
     Oracle.withSql(sb.toString, "")

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.graftdev.PinState
+import org.apache.spark.graphx.Graph
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Iterative frontier traversals (SURVEY.md §2.5 Q5/Q6, §2.7 C4/C5): a
@@ -12,20 +16,16 @@ import org.apache.spark.sql.functions._
   * the role of the reference's materialized per-iteration vertex state. */
 object Traversals {
 
-  /** Superstep job fusion (r14, guide §1.2/§5): materialize `df` as a
+  /** Superstep job fusion (r14, guide §1.2/§5): materialize `ds` as a
     * LAZY local checkpoint and count its rows in one fused action. The
-    * returned Dataset's logical plan is already the truncated LogicalRDD
-    * (lineage stays O(1) across supersteps exactly as with the eager
-    * form); the internal-row count is the action that both persists the
-    * checkpoint blocks and returns the cardinality the loop's
-    * convergence test needs. Replaces the eager `localCheckpoint(true)`
-    * + `isEmpty`/`count` pair — two to three driver actions per
-    * superstep — with one. Under AQE the checkpoint's execute() still
-    * materializes each intermediate shuffle stage as its own job
-    * (ADVICE r14 #2); what the fusion removes is the extra full-pass
-    * RESULT-stage job per superstep. Row-identical. */
-  private[graft] def checkpointCount(df: DataFrame): (DataFrame, Long) = {
-    val c = df.localCheckpoint(false)
+    * returned Dataset's plan is already the truncated LogicalRDD
+    * (lineage stays O(1) across supersteps as with the eager form); the
+    * internal-row count both stores the checkpoint blocks and returns
+    * the cardinality a loop's convergence test needs — one action where
+    * an eager checkpoint plus a count took two (under AQE each
+    * intermediate shuffle stage is still its own job, ADVICE r14 #2). */
+  private[graft] def checkpointCount[T](ds: Dataset[T]): (Dataset[T], Long) = {
+    val c = ds.localCheckpoint(false)
     (c, c.queryExecution.toRdd.count())
   }
 
@@ -45,54 +45,100 @@ object Traversals {
     if (round > 0 && round % AccumFoldEvery == 0) df.localCheckpoint(false)
     else df
 
-  /** Edge-projection residency with the out-of-core honesty gate
-    * (VERDICT r14 wrong #3): below the gate the 2-column projection
-    * localCheckpoints once per sweep — the bfsSigma discipline that
-    * keeps per-round plans from re-analyzing and RE-SCANNING the full
-    * derivation (6 parquet scans a round on the sym graphs, r14). Past
-    * the gate a full resident copy of the edge set is exactly the
-    * executor-storage footprint the streamed CC path
-    * ([[connectedComponentsScan]]) exists to avoid — and localCheckpoint
-    * is not fault-tolerant, so at cluster scale one lost executor would
-    * kill the sweep — so the PLAIN projection is returned and every
-    * round re-scans storage instead.
-    *
-    * The gate is the summed FILE-SOURCE leaf size of the projection's
-    * plan — DSv1 file relations and DSv2 file scans alike (the file
-    * bytes on disk — free and deterministic, unlike
-    * join-output row estimates, which are multiplicative guesses), conf
-    * `spark.graft.bfs.edgeResidencyMaxBytes`, default 16 GiB. Non-file
-    * leaves (already-resident checkpoints) contribute nothing: their
-    * residency cost is bounded by blocks that already exist.
-    *
-    * Returns the frame plus a release thunk that frees the checkpoint's
-    * executor blocks (ADVICE r14 #4) — call it ONLY once every consumer
-    * of the frame has materialized (an unpersisted local checkpoint
-    * cannot be recomputed); the per-round frontier checkpoints a sweep
-    * returns never reference the edge copy, so end-of-loop is safe. */
-  private[graft] def residentEdges(proj: DataFrame): (DataFrame, () => Unit) = {
-    val gate = BigInt(proj.sparkSession.conf
-      .get("spark.graft.bfs.edgeResidencyMaxBytes", (16L << 30).toString))
-    val fileBytes = proj.queryExecution.optimizedPlan.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.sizeInBytes
-      case org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
-          _, f: org.apache.spark.sql.execution.datasources.v2.FileScan, _, _, _) =>
-        f.fileIndex.sizeInBytes
-    }.map(BigInt(_)).sum
-    if (fileBytes <= gate) {
-      val c = proj.localCheckpoint(true)
-      val rdd = c.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+  /** [[Pins.resident]]'s gate in file bytes: 16 GiB. */
+  private[graft] val EdgeResidencyMaxBytes = 16L << 30
+
+  /** What one [[pinned]] scope holds, each released when it ends: the
+    * frames an algorithm persists, its resident edges, GraphX's caches. */
+  private[graft] final class Pins private[Traversals] () {
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, AnyRef)]
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    /** `df`, persisted: unlike a checkpoint's LogicalRDD it keeps its
+      * hash partitioning (PlanShapeSpec), so a frame joined on its key
+      * every superstep is pinned here. */
+    def apply(df: DataFrame): DataFrame = { frames += df.persist() -> PinState.cacheOf(df); df }
+
+    /** Edge-projection residency with the out-of-core honesty gate
+      * (VERDICT r14 wrong #3): at or below `gate` (callers pass
+      * [[EdgeResidencyMaxBytes]]) the projection localCheckpoints once —
+      * the bfsSigma discipline that keeps per-round plans from
+      * RE-SCANNING the full derivation (6 parquet scans a round on the
+      * sym graphs, r14). Past it a resident copy is exactly the footprint
+      * the streamed CC path ([[connectedComponentsScan]]) avoids, and a
+      * local checkpoint is not fault-tolerant, so the PLAIN projection is
+      * returned and every round re-scans storage. The gate weighs the
+      * projection's file-source leaves (DSv1 relations and DSv2 file
+      * scans: bytes on disk, free and deterministic); non-file leaves,
+      * already resident, weigh nothing. */
+    def resident(proj: DataFrame, gate: Long): DataFrame = {
+      val fileBytes = proj.queryExecution.optimizedPlan.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          lr.relation.sizeInBytes
+        case org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
+            _, f: org.apache.spark.sql.execution.datasources.v2.FileScan, _, _, _) =>
+          f.fileIndex.sizeInBytes
+      }.map(BigInt(_)).sum
+      if (fileBytes <= gate) {
+        val c = proj.localCheckpoint(true)
+        rdds ++= c.queryExecution.analyzed.collectFirst {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        }
+        c
+      } else {
+        System.err.println(s"[graft.Traversals] edge projection scans " +
+          s"$fileBytes file bytes > residency gate $gate — streaming the " +
+          "projection per superstep (no resident copy past " +
+          "Traversals.EdgeResidencyMaxBytes)")
+        proj
       }
-      (c, () => rdd.foreach(_.unpersist(false)))
-    } else {
-      System.err.println(s"[graft.Traversals] edge projection scans " +
-        s"$fileBytes file bytes > residency gate $gate — streaming the " +
-        "projection per superstep (no resident copy; raise " +
-        "spark.graft.bfs.edgeResidencyMaxBytes to pin it)")
-      (proj, () => ())
     }
+
+    /** `f(g)` with `g` cached. Every RDD persisted while `g` is built or
+      * `f` runs is pinned too: GraphX caches a new graph's edges, each
+      * superstep's vertex RDD, and Pregel leaves its last graph cached. */
+    def graph[V, E, B](g: => Graph[V, E])(f: Graph[V, E] => B): B = {
+      val sc = SparkContext.getOrCreate()
+      val before = sc.getPersistentRDDs.keySet
+      try f(g.cache())
+      finally rdds ++= sc.getPersistentRDDs.collect { case (id, r) if !before(id) => r }
+    }
+
+    /** Whether computing `ds` would read a pin: its plan scans a pinned
+      * frame, or an RDD it scans has one in its lineage short of an RDD
+      * that is all stored blocks (a round an earlier action computed). */
+    private[Traversals] def readBy(ds: Dataset[_]): Boolean = {
+      val caches = frames.map(_._2)
+      val pinnedIds = (rdds ++ caches.flatMap(PinState.builtRdd)).map(_.id).toSet
+      val seen = scala.collection.mutable.Set.empty[Int]
+      def reaches(r: RDD[_]): Boolean = pinnedIds(r.id) || (seen.add(r.id) &&
+        !(r.getStorageLevel.isValid && PinState.stored(r)) &&
+        r.dependencies.exists(d => reaches(d.rdd)))
+      ds.queryExecution.withCachedData.exists {
+        case l: org.apache.spark.sql.execution.LogicalRDD => reaches(l.rdd)
+        case x: org.apache.spark.sql.execution.ExternalRDD[_] => reaches(x.rdd)
+        case node => PinState.cacheRead(node).exists(c => caches.exists(_ eq c))
+      }
+    }
+
+    private[Traversals] def release(): Unit = {
+      frames.foreach(_._1.unpersist())
+      rdds.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  /** The pin scope, the one place a frame is persisted or kept resident
+    * (the reference holds nothing across queries, GraphChiDatabase.scala:
+    * 2124-2255): `body` pins through [[Pins]]; a Dataset result that
+    * still reads a pin is materialized ([[checkpointCount]]), any other
+    * result must read none; every pin goes when the scope ends, also on
+    * a throw, so a repeat call runs the same jobs as the first. */
+  private[graft] def pinned[A](body: Pins => A): A = {
+    val pins = new Pins
+    try body(pins) match {
+      case ds: Dataset[_] if pins.readBy(ds) => checkpointCount(ds)._1.asInstanceOf[A]
+      case a => a
+    } finally pins.release()
   }
 
   // ---- superstep loops, one per stopping rule: each owns its rounds'
@@ -110,7 +156,7 @@ object Traversals {
     * frontier (`until` is also asked once of the seed).
     * `step(e, frontier, visited, depth)` is the level's new frontier.
     *
-    * The edge projection is resident below the gate ([[residentEdges]]):
+    * The edge projection is resident below the gate ([[Pins.resident]]):
     * every level joins it, and an un-checkpointed frame re-analyzes and
     * RE-SCANS the full derivation per superstep — 6 parquet scans a round
     * on the sym graphs (r14; guide §2.4). The seed is checkpointed
@@ -121,8 +167,9 @@ object Traversals {
     * would be and never re-materialized. */
   private def frontierSweep(edgeProj: DataFrame, seed: DataFrame, maxDepth: Int,
                             until: DataFrame => Boolean = _ => false)
-                           (step: (DataFrame, DataFrame, DataFrame, Int) => DataFrame): Expansion = {
-    val (e, release) = residentEdges(edgeProj)
+                           (step: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)
+      : Expansion = pinned { pins =>
+    val e = pins.resident(edgeProj, EdgeResidencyMaxBytes)
     var frontier = seed.localCheckpoint(true)
     var visited = frontier
     var fN = -1L // unknown; the first level always runs
@@ -136,7 +183,7 @@ object Traversals {
       fN = n
       hit = n > 0 && until(frontier)
     }
-    release() // frontier parts are materialized; the edge copy is not referenced
+    // frontier parts are materialized; the edge copy is not referenced
     Expansion(frontier, visited, depth, hit)
   }
 
@@ -559,12 +606,10 @@ object Traversals {
     * contract (c4). Input must be symmetrized, like
     * [[connectedComponents]]. */
   def connectedComponentsAuto(sym: DataFrame,
-                              localGate: Long = LocalSolveRows): DataFrame = {
-    val e = sym.select("src", "dst").persist()
-    try {
-      if (e.count() <= localGate) localSccLabels(e)
-      else connectedComponents(e)
-    } finally e.unpersist()
+                              localGate: Long = LocalSolveRows): DataFrame = pinned { pins =>
+    val e = pins(sym.select("src", "dst"))
+    if (e.count() <= localGate) localSccLabels(e)
+    else connectedComponents(e)
   }
 
   /** C4 connected components by min-label propagation to fixpoint
@@ -579,15 +624,15 @@ object Traversals {
     * the fixpoint (not the per-iteration trace) is what parity checks,
     * per SURVEY §7.3.
     *
-    * The edge list is joined on src EVERY superstep, so it persists hashed
-    * on src (a checkpoint under AQE reports UnknownPartitioning) and the
-    * |E|-row side never re-exchanges: per superstep only the |V|-row label
-    * table shuffles into the join, plus the one min-combine. The frame
-    * stays cached after the call returns, and a later call over the same
-    * plan reuses it. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e = edges.select("src", "dst").repartition(col("src")).persist()
-    e.count()
+    * The edge list is joined on src EVERY superstep, so it is pinned
+    * hashed on src (a checkpoint under AQE reports UnknownPartitioning)
+    * and the |E|-row side never re-exchanges: per superstep only the
+    * |V|-row label table shuffles into the join, plus the one min-combine.
+    * The initial labels' eager checkpoint builds the pinned frame, and the
+    * frame is released before the call returns: the labels it returns are
+    * the last round's materialized checkpoint. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = pinned { pins =>
+    val e = pins(edges.select("src", "dst").repartition(col("src")))
     val labels0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
       .distinct().withColumn("label", col("id")).localCheckpoint(true)
     minLabelFixpoint(labels0, Seq(e -> "label"), maxIter)
@@ -754,23 +799,6 @@ object Traversals {
     }.select("id", "d")
   }
 
-  /** G5: HITS hubs & authorities (Kleinberg, JACM '99) over a directed
-    * edge list — the other classic iterative ranking next to [[PageRank]],
-    * and like it SCALED-INTEGER bit-exact: float power iteration is
-    * accumulation-order-dependent, so each half-step renormalizes by the
-    * round's MAXIMUM via exact integer division instead of an L2 norm:
-    *
-    *   a_i(v) = Σ_{(u,v)∈E} h_{i-1}(u);   a'_i = (a_i · 1e5) div max a_i
-    *   h_i(u) = Σ_{(u,v)∈E} a'_i(v);      h'_i = (h_i · 1e5) div max h_i
-    *
-    * Scale 1e5 bounds the pre-division accumulator by |E|·1e10 — safe in
-    * a BIGINT to ~9×10⁸ edges; beyond that, renormalize every half-step
-    * in two stages. Parallel edges count with multiplicity (the fixture
-    * is a multigraph, like the reference's edge log). The max() scalars
-    * are 1-row broadcasts, NOT driver collects — each superstep is two
-    * keyed partial-combining shuffles, the same shape that scales
-    * PageRank. Returns top-20 by (authority desc, id).
-    */
   /** G9: synchronous label-propagation community detection (Raghavan et
     * al. '07), deterministic variant: labels start as own id; each round
     * every vertex adopts the most frequent label among its in-neighbors,
@@ -890,6 +918,23 @@ object Traversals {
     }
   }
 
+  /** G5: HITS hubs & authorities (Kleinberg, JACM '99) over a directed
+    * edge list — the other classic iterative ranking next to [[PageRank]],
+    * and like it SCALED-INTEGER bit-exact: float power iteration is
+    * accumulation-order-dependent, so each half-step renormalizes by the
+    * round's MAXIMUM via exact integer division instead of an L2 norm:
+    *
+    *   a_i(v) = Σ_{(u,v)∈E} h_{i-1}(u);   a'_i = (a_i · 1e5) div max a_i
+    *   h_i(u) = Σ_{(u,v)∈E} a'_i(v);      h'_i = (h_i · 1e5) div max h_i
+    *
+    * Scale 1e5 bounds the pre-division accumulator by |E|·1e10 — safe in
+    * a BIGINT to ~9×10⁸ edges; beyond that, renormalize every half-step
+    * in two stages. Parallel edges count with multiplicity (the fixture
+    * is a multigraph, like the reference's edge log). The max() scalars
+    * are 1-row broadcasts, NOT driver collects — each superstep is two
+    * keyed partial-combining shuffles, the same shape that scales
+    * PageRank. Returns top-20 by (authority desc, id).
+    */
   def hitsTop20(edges: DataFrame, iters: Int = 3): DataFrame = {
     val Scale = 100000L
     val e = edges.select("src", "dst").localCheckpoint(true)
@@ -970,7 +1015,7 @@ object Traversals {
     * the CONTRACTED component graph; its components come from the driver
     * solver [[localSccLabels]] at or below `localGate` selected edges
     * (symmetrized, so each strongly connected component is a connected
-    * one) and from [[ccBigStar]] above it. The edge list persists hashed
+    * one) and from [[ccBigStar]] above it. The edge list is pinned hashed
     * once and is released before returning: the forest reads only the
     * rounds' materialized selections. Fails loudly past `maxRounds`.
     *
@@ -981,68 +1026,65 @@ object Traversals {
     * the gate, and the old bound could now throw on inputs it used to
     * hand to the driver solver (r9 review finding). */
   def msfBoruvka(canonWeighted: DataFrame, maxRounds: Int = 12,
-                 localGate: Long = LocalSolveRows): DataFrame = {
-    val e = canonWeighted.select("src", "dst", "w")
-      .repartition(col("src")).persist()
-    try {
-      e.count()
-      var lab = e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      var forest = e.limit(0).localCheckpoint(true)
-      var done = false
-      var round = 0
-      while (!done && round < maxRounds) {
-        round += 1
-        val cross = e
-          .join(lab.select(col("id").as("src"), col("label").as("la")), "src")
-          .join(lab.select(col("id").as("dst"), col("label").as("lb")), "dst")
-          .filter(col("la") =!= col("lb"))
-        // per-component argmin carries (la, lb) through the struct (they
-        // sort AFTER dst, so the (w, src, dst) order is untouched) — the
-        // selected edges double as the CONTRACTED component graph below
-        // fused materialize+count (r14): one action selects the round's
-        // edges; the forest accumulates as a lazy union of checkpointed
-        // selections (≤ maxRounds parts, linear plan growth)
-        val (sel, nSel) = checkpointCount(cross
-          .select(explode(array(col("la"), col("lb"))).as("c"),
-            struct(col("w"), col("src"), col("dst"), col("la"), col("lb")).as("k"))
-          .groupBy("c").agg(min("k").as("k"))
-          .select(col("k.src").as("src"), col("k.dst").as("dst"),
-            col("k.w").as("w"), col("k.la").as("la"), col("k.lb").as("lb"))
-          .distinct())
-        if (nSel == 0L) done = true
-        else {
-          forest = foldAccum(forest.unionByName(sel.select("src", "dst", "w")), round)
-          // contract in LABEL space: CC over the selected component graph
-          // (components-sized, halving each round — never the whole
-          // forest), then compose onto the vertex labels. min-label CC of
-          // label-space ids keeps labels = component-min original ids.
-          //
-          // SIZE-GATED local solve (the AQE re-plan philosophy): the
-          // contracted graph is ≤ one edge per component and halves every
-          // round, so past the first round(s) it is provably tiny however
-          // big the input; below the gate the driver solver replaces the
-          // nested ccBigStar fixpoint (each distributed CC round is
-          // several shuffle+checkpoint jobs — at bench scale the nested
-          // fixpoint WAS g16's cost). Above the gate (early rounds of a
-          // 100 TB forest) the distributed path runs unchanged. nSel is
-          // already on the driver — the gate costs nothing.
-          val pairs = sel.select(col("la").as("src"), col("lb").as("dst"))
-          val ccc =
-            (if (nSel <= localGate) localSccLabels(Tables.symmetrize(pairs, Seq("src", "dst")))
-             else ccBigStar(pairs))
-              .select(col("id").as("label"), col("label").as("nl"))
-          // lazy: materialized by the next round's selection action (r14)
-          lab = lab.join(ccc, Seq("label"), "left")
-            .select(col("id"), coalesce(col("nl"), col("label")).as("label"))
-            .localCheckpoint(false)
-        }
+                 localGate: Long = LocalSolveRows): DataFrame = pinned { pins =>
+    val e = pins(canonWeighted.select("src", "dst", "w").repartition(col("src")))
+    e.count()
+    var lab = e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct()
+      .withColumn("label", col("id")).localCheckpoint(true)
+    var forest = e.limit(0).localCheckpoint(true)
+    var done = false
+    var round = 0
+    while (!done && round < maxRounds) {
+      round += 1
+      val cross = e
+        .join(lab.select(col("id").as("src"), col("label").as("la")), "src")
+        .join(lab.select(col("id").as("dst"), col("label").as("lb")), "dst")
+        .filter(col("la") =!= col("lb"))
+      // per-component argmin carries (la, lb) through the struct (they
+      // sort AFTER dst, so the (w, src, dst) order is untouched) — the
+      // selected edges double as the CONTRACTED component graph below
+      // fused materialize+count (r14): one action selects the round's
+      // edges; the forest accumulates as a lazy union of checkpointed
+      // selections (≤ maxRounds parts, linear plan growth)
+      val (sel, nSel) = checkpointCount(cross
+        .select(explode(array(col("la"), col("lb"))).as("c"),
+          struct(col("w"), col("src"), col("dst"), col("la"), col("lb")).as("k"))
+        .groupBy("c").agg(min("k").as("k"))
+        .select(col("k.src").as("src"), col("k.dst").as("dst"),
+          col("k.w").as("w"), col("k.la").as("la"), col("k.lb").as("lb"))
+        .distinct())
+      if (nSel == 0L) done = true
+      else {
+        forest = foldAccum(forest.unionByName(sel.select("src", "dst", "w")), round)
+        // contract in LABEL space: CC over the selected component graph
+        // (components-sized, halving each round — never the whole
+        // forest), then compose onto the vertex labels. min-label CC of
+        // label-space ids keeps labels = component-min original ids.
+        //
+        // SIZE-GATED local solve (the AQE re-plan philosophy): the
+        // contracted graph is ≤ one edge per component and halves every
+        // round, so past the first round(s) it is provably tiny however
+        // big the input; below the gate the driver solver replaces the
+        // nested ccBigStar fixpoint (each distributed CC round is
+        // several shuffle+checkpoint jobs — at bench scale the nested
+        // fixpoint WAS g16's cost). Above the gate (early rounds of a
+        // 100 TB forest) the distributed path runs unchanged. nSel is
+        // already on the driver — the gate costs nothing.
+        val pairs = sel.select(col("la").as("src"), col("lb").as("dst"))
+        val ccc =
+          (if (nSel <= localGate) localSccLabels(Tables.symmetrize(pairs, Seq("src", "dst")))
+           else ccBigStar(pairs))
+            .select(col("id").as("label"), col("label").as("nl"))
+        // lazy: materialized by the next round's selection action (r14)
+        lab = lab.join(ccc, Seq("label"), "left")
+          .select(col("id"), coalesce(col("nl"), col("label")).as("label"))
+          .localCheckpoint(false)
       }
-      if (!done) throw new IllegalStateException(
-        s"msfBoruvka did not contract to a spanning forest within maxRounds=$maxRounds")
-      forest
-    } finally e.unpersist()
+    }
+    if (!done) throw new IllegalStateException(
+      s"msfBoruvka did not contract to a spanning forest within maxRounds=$maxRounds")
+    forest
   }
 
   /** G15: maximal independent set by Luby's algorithm (Luby '86), made
@@ -1061,38 +1103,36 @@ object Traversals {
     * Scale shape: per round one keyed min-combine over the undecided
     * edge frontier (partial combine — the hub costs a combiner cell)
     * plus two anti-joins, all on the shrinking undecided set
-    * ([[greedyRounds]]); the edge list persists hashed on src once and
+    * ([[greedyRounds]]); the edge list is pinned hashed on src once and
     * is released before returning: the MIS reads only the rounds'
     * materialized winners. Fails loudly past `maxIter`. */
   def maximalIndependentSet(canon: DataFrame, salt: String = "mis",
-                            maxIter: Int = 20): DataFrame = {
+                            maxIter: Int = 20): DataFrame = pinned { pins =>
     // one-pass symmetrization (r14 — Tables.symmetrize rationale)
-    val sym = Tables.symmetrize(canon.select("src", "dst"), Seq("src", "dst"))
-      .repartition(col("src")).persist()
-    try {
-      sym.count()
-      val prio = concat(md5(concat(lit(salt + "|"), col("id").cast("string"))),
-        lpad(col("id").cast("string"), 10, "0"))
-      greedyRounds(sym.select(col("src").as("id")).distinct().withColumn("p", prio),
-          Seq("id"), maxIter,
-          s"maximalIndependentSet did not decide all vertices within maxIter=$maxIter rounds")(
-        pick = undecided => {
-          // min undecided-neighbor priority per vertex; vertices whose
-          // neighbors are all decided get no row and win by default
-          val nmin = sym
-            .join(undecided.select(col("id").as("src"), col("p").as("sp")), "src")
-            .groupBy(col("dst").as("id")).agg(min("sp").as("np"))
-          undecided.join(nmin, Seq("id"), "left_outer")
-            .filter(col("np").isNull || col("p") < col("np"))
-            .select("id")
-        },
-        retire = (undecided, winners) => {
-          val excluded = winners.unionByName(
-            sym.join(winners.withColumnRenamed("id", "src"), "src")
-              .select(col("dst").as("id"))).distinct()
-          undecided.join(excluded, Seq("id"), "left_anti")
-        }).select("id")
-    } finally sym.unpersist()
+    val sym = pins(Tables.symmetrize(canon.select("src", "dst"), Seq("src", "dst"))
+      .repartition(col("src")))
+    sym.count()
+    val prio = concat(md5(concat(lit(salt + "|"), col("id").cast("string"))),
+      lpad(col("id").cast("string"), 10, "0"))
+    greedyRounds(sym.select(col("src").as("id")).distinct().withColumn("p", prio),
+        Seq("id"), maxIter,
+        s"maximalIndependentSet did not decide all vertices within maxIter=$maxIter rounds")(
+      pick = undecided => {
+        // min undecided-neighbor priority per vertex; vertices whose
+        // neighbors are all decided get no row and win by default
+        val nmin = sym
+          .join(undecided.select(col("id").as("src"), col("p").as("sp")), "src")
+          .groupBy(col("dst").as("id")).agg(min("sp").as("np"))
+        undecided.join(nmin, Seq("id"), "left_outer")
+          .filter(col("np").isNull || col("p") < col("np"))
+          .select("id")
+      },
+      retire = (undecided, winners) => {
+        val excluded = winners.unionByName(
+          sym.join(winners.withColumnRenamed("id", "src"), "src")
+            .select(col("dst").as("id"))).distinct()
+        undecided.join(excluded, Seq("id"), "left_anti")
+      }).select("id")
   }
 
   /** Edge rows at or below which one driver pass ([[localSccLabels]])
@@ -1184,8 +1224,10 @@ object Traversals {
     * labels = per-SCC minimum vertex id. The result is unique, so the
     * mutual-closure oracle agrees exactly.
     *
-    * Scale shape: per outer round, the intra-class edge restriction is
-    * two hash joins, persisted hashed on src/dst; both directions then
+    * Scale shape: the self-loop-free edge list is resident below the
+    * gate ([[Pins.resident]]). Per outer round, the intra-class edge
+    * restriction is two hash joins of it, pinned hashed on src/dst for
+    * that round only; both directions then
     * run as the two sides of ONE [[minLabelFixpoint]] (CC's
     * one-combine-per-superstep shape, lock-stepped), which throws past
     * `maxInner`. At or below `localGate` intra-class edge rows the driver
@@ -1201,74 +1243,51 @@ object Traversals {
     * the driver Tarjan pass — same widening as msfBoruvka's maxRounds. */
   def sccLabels(edges: DataFrame, maxOuter: Int = 14,
                 maxInner: Int = 60,
-                localGate: Long = LocalSolveRows): DataFrame = {
-    val e0 = edges.select("src", "dst").filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
+                localGate: Long = LocalSolveRows): DataFrame = pinned { pins =>
+    val e0 = pins.resident(edges.select("src", "dst").filter(col("src") =!= col("dst"))
+      .distinct(), EdgeResidencyMaxBytes)
     var lab = e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
       .distinct().withColumn("cls", lit(0L)).localCheckpoint(true)
-
     var outer = 0
     var result: DataFrame = null
-    // classes only REFINE, so an edge that leaves the intra-class set
-    // never re-enters — each round restricts the PREVIOUS round's
-    // survivors, not the full edge list. Round 1 pays |E|; the frame
-    // then shrinks monotonically (on DAG-ish graphs to near-empty after
-    // one refinement), so later rounds are survivor-sized.
-    var ecur = e0
     while (result == null && outer < maxOuter) {
       outer += 1
-      // restrict edges to same-class endpoints once per round; both
-      // directions persist hashed on their join key so the edge side
-      // never re-exchanges inside the fixpoint
-      val ec = ecur
-        .join(lab.select(col("id").as("src"), col("cls").as("scls")), "src")
-        .join(lab.select(col("id").as("dst"), col("cls").as("dcls")), "dst")
-        .filter(col("scls") === col("dcls"))
-        .select("src", "dst")
-        .repartition(col("src")).persist()
-      val nEc = ec.count()
-      if (nEc <= localGate) {
-        // below the gate: no intra-class edge crosses classes, so one
-        // local Tarjan over the survivors labels every remaining class;
-        // vertices with no surviving intra-class edge are singleton SCCs
-        val comp = localSccLabels(ec)
-        result = lab.select("id").join(comp, Seq("id"), "left")
-          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        if (ecur ne e0) ecur.unpersist()
-        ecur = e0
-        ec.unpersist()
-      } else {
-        val ecR = ec.select(col("dst").as("src"), col("src").as("dst"))
-          .repartition(col("src")).persist()
-        ecR.count()
-        val refined =
-          try minLabelFixpoint(
+      // the round's intra-class edges, pinned hashed on src in both
+      // directions for this round only; classes only REFINE, so this
+      // keeps exactly the previous round's survivors
+      result = pinned { round =>
+        val ec = round(e0
+          .join(lab.select(col("id").as("src"), col("cls").as("scls")), "src")
+          .join(lab.select(col("id").as("dst"), col("cls").as("dcls")), "dst")
+          .filter(col("scls") === col("dcls"))
+          .select("src", "dst")
+          .repartition(col("src")))
+        if (ec.count() <= localGate) {
+          // below the gate: no intra-class edge crosses classes, so one
+          // local Tarjan over the survivors labels every remaining class;
+          // vertices with no surviving intra-class edge are singleton SCCs
+          lab.select("id").join(localSccLabels(ec), Seq("id"), "left")
+            .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+        } else {
+          val ecR = round(ec.select(col("dst").as("src"), col("src").as("dst"))
+            .repartition(col("src")))
+          ecR.count()
+          val refined = minLabelFixpoint(
               lab.withColumn("f", col("id")).withColumn("b", col("id")).localCheckpoint(true),
               Seq(ec -> "f", ecR -> "b"), maxInner,
               Some(s"sccLabels: min-label fixpoint not reached within maxInner=$maxInner"))
             .select("id", "f", "b").localCheckpoint(false)
-          catch { case t: Throwable =>
-            // a maxInner abort must not leak persisted edge frames into a
-            // long-lived session (ADVICE r8): this round's pair AND the
-            // previous round's frame still held in ecur (r9 review
-            // finding — the first cut of this cleanup missed ecur)
-            ec.unpersist(); ecR.unpersist()
-            if (ecur ne e0) ecur.unpersist()
-            throw t
+          if (refined.filter(col("f") =!= col("b")).queryExecution.toRdd.count() == 0L)
+            refined.select(col("id"), col("f").as("label"))
+          else {
+            lab = refined.select(col("id"),
+              (col("f") * lit(1000000L) + col("b")).as("cls"))
+              .localCheckpoint(false)
+            null
           }
-        if (ecur ne e0) ecur.unpersist()
-        ecur = ec
-        ecR.unpersist()
-        if (refined.filter(col("f") =!= col("b"))
-              .queryExecution.toRdd.count() == 0L)
-          result = refined.select(col("id"), col("f").as("label"))
-        else
-          lab = refined.select(col("id"),
-            (col("f") * lit(1000000L) + col("b")).as("cls"))
-            .localCheckpoint(false)
+        }
       }
     }
-    if (ecur ne e0) ecur.unpersist()
     if (result == null) throw new IllegalStateException(
       s"sccLabels did not reach the SCC fixpoint within maxOuter=$maxOuter rounds")
     result
@@ -1336,45 +1355,44 @@ object Traversals {
                      exact: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // ONE exchange keyed on dst up front (the hop join's key), persisted —
-    // NOT checkpointed, which would erase the partitioning (PlanShapeSpec
-    // pins this; measured in PERF_ARCHIVE.md's round-8 log) and put an
-    // E-sized reshuffle back into every hop. distinct() after the repartition plans exchange-free:
-    // HashPartitioning(dst) satisfies the dedup's {src,dst} clustering.
-    val e = edges.select("src", "dst").repartition(col("dst")).distinct()
-      .persist()
-    val verts = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct()
-    val roots = verts
-      .orderBy(md5(concat(lit(salt + "|"), col("id").cast("string"))), col("id"))
-      .limit(nRoots).localCheckpoint(true)
-    var sk = verts.groupBy("id")
-      .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")).localCheckpoint(false)
-    def total(s: DataFrame): Long = {
-      val r = s.join(broadcast(roots), "id")
-        .agg(sum(hll_sketch_estimate(col("sk")))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0) // empty graph: sum is null
+    val est = pinned { pins =>
+      // ONE exchange keyed on dst up front (the hop join's key), pinned —
+      // NOT checkpointed, which would erase the partitioning (PlanShapeSpec
+      // pins this; measured in PERF_ARCHIVE.md's round-8 log) and put an
+      // E-sized reshuffle back into every hop. distinct() after the repartition plans exchange-free:
+      // HashPartitioning(dst) satisfies the dedup's {src,dst} clustering.
+      val e = pins(edges.select("src", "dst").repartition(col("dst")).distinct())
+      val verts = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+        .distinct()
+      val roots = verts
+        .orderBy(md5(concat(lit(salt + "|"), col("id").cast("string"))), col("id"))
+        .limit(nRoots).localCheckpoint(true)
+      var sk = verts.groupBy("id")
+        .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")).localCheckpoint(false)
+      def total(s: DataFrame): Long = {
+        val r = s.join(broadcast(roots), "id")
+          .agg(sum(hll_sketch_estimate(col("sk")))).head()
+        if (r.isNullAt(0)) 0L else r.getLong(0) // empty graph: sum is null
+      }
+      val est = scala.collection.mutable.ArrayBuffer[(Int, Long)]((0, total(sk)))
+      for (h <- 1 to maxH) {
+        // ball(v) ∪= ball(out-neighbor): route each dst's sketch to its
+        // in-neighbors, then one union-agg per vertex (self rides along)
+        val fromNbr = e.join(sk.withColumnRenamed("id", "dst"), "dst")
+          .select(col("src").as("id"), col("sk"))
+        // lazy: each hop's total() aggregate is the action that
+        // materializes the round's sketches (r14 — 2 jobs/hop → 1)
+        sk = sk.unionByName(fromNbr).groupBy("id")
+          .agg(hll_union_agg(col("sk")).as("sk")).localCheckpoint(false)
+        est += ((h, total(sk)))
+      }
+      est.toSeq
     }
-    val est = scala.collection.mutable.ArrayBuffer[(Int, Long)]((0, total(sk)))
-    for (h <- 1 to maxH) {
-      // ball(v) ∪= ball(out-neighbor): route each dst's sketch to its
-      // in-neighbors, then one union-agg per vertex (self rides along)
-      val fromNbr = e.join(sk.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("sk"))
-      // lazy: each hop's total() aggregate is the action that
-      // materializes the round's sketches (r14 — 2 jobs/hop → 1)
-      sk = sk.unionByName(fromNbr).groupBy("id")
-        .agg(hll_union_agg(col("sk")).as("sk")).localCheckpoint(false)
-      est += ((h, total(sk)))
-    }
-    // every consumer of e has materialized (each hop's total() action
-    // computed and persisted that hop's sketches) — release the cache
-    e.unpersist()
     // the exact sampled counts can be injected (e.g. the registry shares
     // one computation between the g18 and g18b entries) so this
     // function's own cost is the sketch path it exists to measure
     val ex = exact.getOrElse(neighborhoodFunction(edges, maxH, nRoots, salt))
-    ex.join(est.toSeq.toDF("h", "est"), "h")
+    ex.join(est.toDF("h", "est"), "h")
       .select(col("h"), col("n_pairs"),
         (abs(col("est") - col("n_pairs")) <= col("n_pairs") * tol).as("est_ok"))
   }
@@ -1504,13 +1522,12 @@ object Traversals {
     * are id % 10 == 0 with class id % 3 (the deterministic fixture
     * stand-in for human labels). Unreached vertices report -1.
     *
-    * Scale shape: per round, one hash join of the edge list against the
-    * labeled vertex set and two keyed partial-combining aggregations —
-    * the [[lpaCommunities]] cost model with a clamp. */
-  def semiSupervisedLabels(edges: DataFrame, rounds: Int = 3): DataFrame = {
-    val adj = edges.select("src", "dst").distinct()
-      .repartition(col("src")).persist()
-    adj.count()
+    * Scale shape: per round, one hash join of the edge list (pinned
+    * hashed on src; the initial labels' eager checkpoint builds it)
+    * against the labeled vertex set and two keyed partial-combining
+    * aggregations — the [[lpaCommunities]] cost model with a clamp. */
+  def semiSupervisedLabels(edges: DataFrame, rounds: Int = 3): DataFrame = pinned { pins =>
+    val adj = pins(edges.select("src", "dst").distinct().repartition(col("src")))
     val seedLbl = when(col("id") % 10 === 0, col("id") % 3)
     var lab = adj.select(col("src").as("id"))
       .unionByName(adj.select(col("dst").as("id"))).distinct()
@@ -1593,12 +1610,13 @@ object Traversals {
     * Scale shape: walks_{k+1} is ONE hash join of the edge list against
     * the previous vertex-sized count vector plus a partial-combining sum
     * keyed on dst (hub vertices combine map-side); the final blend is a
-    * tagged union + one keyed sum — the r9 single-shuffle trick. Edge
-    * list persists hashed on src once, like [[ccLabelProp]]. */
-  def katzCentrality(edges: DataFrame, k: Int = 20): DataFrame = {
+    * tagged union + one keyed sum — the r9 single-shuffle trick. The
+    * edge list is pinned hashed on src for the call, like
+    * [[connectedComponents]]; the top-k materializes before it goes. */
+  def katzCentrality(edges: DataFrame, k: Int = 20): DataFrame = pinned { pins =>
     // no eager count: the cache materializes inside w1's stage job, and
     // lazy checkpoints skip the per-term full-pass count jobs (r14)
-    val e = edges.select("src", "dst").repartition(col("src")).persist()
+    val e = pins(edges.select("src", "dst").repartition(col("src")))
     val w1 = e.groupBy("dst").agg(count(lit(1)).as("w")).localCheckpoint(false)
     def step(prev: DataFrame): DataFrame =
       e.join(prev.select(col("dst").as("src"), col("w")), "src")

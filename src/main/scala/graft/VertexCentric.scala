@@ -22,46 +22,39 @@ object VertexCentric {
     Graph.fromEdges(es, defaultValue = 0L)
   }
 
-  /** Thin Pregel adapter with the reference Computation-trait shape:
-    * `update` ≈ vprog, `scatter` ≈ sendMsg, `gather` ≈ mergeMsg. */
-  def run[S: ClassTag, M: ClassTag](
-      edges: DataFrame, init: S, firstMsg: M, maxIter: Int,
-      update: (VertexId, S, M) => S,
-      scatter: EdgeTriplet[S, Byte] => Iterator[(VertexId, M)],
-      gather: (M, M) => M): Graph[S, Byte] = {
-    val g = toGraph(edges).mapVertices((_, _) => init)
-    Pregel(g, firstMsg, maxIter, EdgeDirection.Out)(update, scatter, gather)
-  }
-
   /** C4 via Pregel: min-label propagation to fixpoint on an edge list
     * (pass a symmetrized edge list for undirected components) — the GraphX
-    * execution of ConnectedComponentsLabelProp.scala:38-85. */
-  def pregelCC(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val g = toGraph(edges).cache().mapVertices((id, _) => id.toLong)
-    val res = Pregel(g, Long.MaxValue, Int.MaxValue, EdgeDirection.Out)(
-      (id, label, msg) => math.min(id, math.min(label, msg)),
-      t => if (t.srcAttr < t.dstAttr) Iterator((t.dstId, t.srcAttr)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    spark.createDataFrame(res.vertices.map(v => (v._1, v._2))).toDF("id", "label")
-  }
+    * execution of ConnectedComponentsLabelProp.scala:38-85. The graph and
+    * what Pregel caches are pinned for the call ([[Traversals.pinned]]);
+    * the labels materialize before they are released. */
+  def pregelCC(spark: SparkSession, edges: DataFrame): DataFrame =
+    Traversals.pinned(_.graph(toGraph(edges)) { base =>
+      val res = Pregel(base.mapVertices((id, _) => id.toLong), Long.MaxValue, Int.MaxValue,
+          EdgeDirection.Out)(
+        (id, label, msg) => math.min(id, math.min(label, msg)),
+        t => if (t.srcAttr < t.dstAttr) Iterator((t.dstId, t.srcAttr)) else Iterator.empty,
+        (a, b) => math.min(a, b))
+      spark.createDataFrame(res.vertices.map(v => (v._1, v._2))).toDF("id", "label")
+    })
 
   /** C3 via Pregel with the reference's exact scaled-integer update rule
-    * (see [[PageRank]]) — fixed iteration count, bit-exact. */
-  def pregelPageRank(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    val base = toGraph(edges).cache()
-    val outDeg = base.outDegrees
-    // state = (rank_scaled, outdeg); messages = partial acc sums
-    val g = base.outerJoinVertices(outDeg)((_, _, d) => (0L, d.getOrElse(0)))
-    var cur = g
-    val n = cur.numVertices
-    for (_ <- 1 to iters) {
-      val acc = cur.aggregateMessages[Long](
-        ctx => ctx.sendToDst(math.max(150000000L, ctx.srcAttr._1) / ctx.srcAttr._2),
-        _ + _)
-      cur = cur.outerJoinVertices(acc)((_, s, a) =>
-        (150000000L / n + (17L * a.getOrElse(0L)) / 20L, s._2))
-    }
-    spark.createDataFrame(cur.vertices.map(v => (v._1, v._2._1))).toDF("id", "rank_scaled")
-      .orderBy(col("rank_scaled").desc, col("id")).limit(20)
-  }
+    * (see [[PageRank]]) — fixed iteration count, bit-exact. Pinned like
+    * [[pregelCC]]: each superstep's vertex RDD is cached by GraphX. */
+  def pregelPageRank(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame =
+    Traversals.pinned(_.graph(toGraph(edges)) { base =>
+      val outDeg = base.outDegrees
+      // state = (rank_scaled, outdeg); messages = partial acc sums
+      val g = base.outerJoinVertices(outDeg)((_, _, d) => (0L, d.getOrElse(0)))
+      var cur = g
+      val n = cur.numVertices
+      for (_ <- 1 to iters) {
+        val acc = cur.aggregateMessages[Long](
+          ctx => ctx.sendToDst(math.max(150000000L, ctx.srcAttr._1) / ctx.srcAttr._2),
+          _ + _)
+        cur = cur.outerJoinVertices(acc)((_, s, a) =>
+          (150000000L / n + (17L * a.getOrElse(0L)) / 20L, s._2))
+      }
+      spark.createDataFrame(cur.vertices.map(v => (v._1, v._2._1))).toDF("id", "rank_scaled")
+        .orderBy(col("rank_scaled").desc, col("id")).limit(20)
+    })
 }

@@ -59,19 +59,33 @@ object TestSpark {
     * the listener is added (so no earlier job's event lands in the
     * count) and after `f` (so every event of `f`'s jobs has). */
   def jobsDuring[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val (a, jobs, _) = startsDuring(spark)(f)
+    (a, jobs)
+  }
+
+  /** `f`'s value and the number of Spark tasks started while it ran,
+    * counted like [[jobsDuring]]. */
+  def tasksDuring[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val (a, _, tasks) = startsDuring(spark)(f)
+    (a, tasks)
+  }
+
+  private def startsDuring[A](spark: SparkSession)(f: => A): (A, Int, Int) = {
     import org.apache.spark.graftdev.ListenerDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(t: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     }
     ListenerDrain.drain(sc)
     sc.addSparkListener(listener)
     try {
       val a = f
       ListenerDrain.drain(sc)
-      (a, jobs.get())
+      (a, jobs.get(), tasks.get())
     } finally sc.removeSparkListener(listener)
   }
 

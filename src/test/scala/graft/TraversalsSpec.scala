@@ -378,15 +378,19 @@ class TraversalsSpec extends AnyFunSuite {
     (0L until 20L).map(i => (i, i + 1)).toDF("src", "dst")
       .write.mode("overwrite").parquet(s"$dir/e")
     val proj = s.read.parquet(s"$dir/e").select(col("src"), col("dst"))
-    val key = "spark.graft.bfs.edgeResidencyMaxBytes"
-    // default gate (16 GiB): a KB-scale parquet goes resident
-    val (resident, release) = Traversals.residentEdges(proj)
-    assert(logicalRddLeaves(resident) == 1, "below the gate: expected a checkpoint")
-    release()
-    try {
-      s.conf.set(key, "0")
-      val (streamed, _) = Traversals.residentEdges(proj)
-      assert(logicalRddLeaves(streamed) == 0,
+    // the fixed gate (16 GiB): a KB-scale parquet goes resident, and the
+    // scope releases the resident copy when it ends
+    val residentId = Traversals.pinned { pins =>
+      val resident = pins.resident(proj, Traversals.EdgeResidencyMaxBytes)
+      assert(logicalRddLeaves(resident) == 1, "below the gate: expected a checkpoint")
+      resident.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.get
+    }
+    assert(!spark.sparkContext.getPersistentRDDs.contains(residentId),
+      "the scope left the resident copy persisted")
+    Traversals.pinned { pins =>
+      assert(pins.resident(proj, gate = 0) eq proj,
         "above the gate: expected the plain projection (per-round re-scan)")
       // a DSv2 parquet scan counts its file bytes as well: streamed too
       val v1Sources = "spark.sql.sources.useV1SourceList"
@@ -395,18 +399,15 @@ class TraversalsSpec extends AnyFunSuite {
         val v2proj = s.read.parquet(s"$dir/e").select(col("src"), col("dst"))
         assert(v2proj.queryExecution.optimizedPlan.collectLeaves().exists(_.isInstanceOf[
           org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]))
-        assert(logicalRddLeaves(Traversals.residentEdges(v2proj)._1) == 0,
+        assert(pins.resident(v2proj, gate = 0) eq v2proj,
           "DSv2 scan above the gate: expected the plain projection")
       } finally s.conf.unset(v1Sources)
-      // end-to-end: the streamed sweep returns identical rows
-      val src = Seq((0L, 0L)).toDF("source", "id")
-      val dStreamed = Traversals.bfsDistances(proj, src, maxDepth = 30)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-      s.conf.unset(key)
-      val dResident = Traversals.bfsDistances(proj, src, maxDepth = 30)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-      assert(dStreamed == dResident && dResident.size == 21)
-    } finally s.conf.unset(key)
+    }
+    // end-to-end: the resident sweep returns the exact distances
+    val src = Seq((0L, 0L)).toDF("source", "id")
+    val d = Traversals.bfsDistances(proj, src, maxDepth = 30)
+      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+    assert(d == (0L to 20L).map(i => (i, i)).toSet)
   }
 
   test("foldAccum is identity off the fold cadence and folds on it") {
@@ -477,8 +478,8 @@ class TraversalsSpec extends AnyFunSuite {
       "weightedSSSP" -> 16, "temporalReachFrom" -> 14, "kCore" -> 18, "kTruss" -> 54,
       "maximalIndependentSet" -> 13, "maximalMatching" -> 7, "shortestPathNodes" -> 27,
       "pathTo" -> 8, "MultiBFSPacked.run" -> 8,
-      "connectedComponents" -> 13, "connectedComponentsScan" -> 12, "ccBigStar" -> 19,
-      "sccLabels" -> 8, "sccLabels(localGate = 0)" -> 66,
+      "connectedComponents" -> 12, "connectedComponentsScan" -> 12, "ccBigStar" -> 19,
+      "sccLabels" -> 8, "sccLabels(localGate = 0)" -> 56,
       "msfBoruvka" -> 11, "msfBoruvka(localGate = 0)" -> 16), got.mkString(", "))
   }
 
@@ -497,37 +498,81 @@ class TraversalsSpec extends AnyFunSuite {
     assert(packed == rows)
   }
 
-  test("msfBoruvka and maximalIndependentSet release their pinned edge frames; " +
-    "a repeat call runs the same jobs and gives the same answer") {
+  // K5 on 0..4 plus a triangle on 10..12: 13 edges over 8 vertices, so
+  // every vertex- or forest-sized frame holds fewer rows than the edges
+  lazy val k5Tri = {
     val s = spark; import s.implicits._
-    // K5 on 0..4 plus a triangle on 10..12: 13 edges over 8 vertices, so
-    // every vertex- or forest-sized frame holds fewer rows than the edges
     val k5 = for (a <- 0L to 4L; b <- a + 1 to 4L) yield (a, b)
-    val canonE = (k5 ++ Seq((10L, 11L), (10L, 12L), (11L, 12L))).toDF("src", "dst")
-    val nE = canonE.count()
-    // rows an RDD holds: a cached Dataset's RDD holds column batches
+    (k5 ++ Seq((10L, 11L), (10L, 12L), (11L, 12L))).toDF("src", "dst")
+  }
+
+  /** Runs each case twice with AQE off (so job and task counts repeat
+    * exactly) and asserts the pin-release contract: both calls give the
+    * same non-empty answer and run the same jobs and tasks, and nothing
+    * the two calls leave persisted holds as many rows as `k5Tri` has
+    * edges. */
+  def assertReleased(cases: (String, () => Set[Seq[Any]])*): Unit = {
+    val nE = k5Tri.count()
+    // rows an RDD holds: a cached Dataset's RDD holds column batches,
+    // a GraphX edge RDD (partition id, edge partition) pairs
     def rows(r: org.apache.spark.rdd.RDD[_]): Long = r.asInstanceOf[org.apache.spark.rdd.RDD[Any]]
       .map {
         case b: org.apache.spark.sql.columnar.CachedBatch => b.numRows.toLong
+        case (_, p) if p.getClass.getSimpleName == "EdgePartition" =>
+          p.getClass.getMethod("size").invoke(p).asInstanceOf[Int].toLong
         case _ => 1L
       }.fold(0L)(_ + _)
+    def counted(run: () => Set[Seq[Any]]) = {
+      val ((answer, tasks), jobs) =
+        TestSpark.jobsDuring(spark)(TestSpark.tasksDuring(spark)(run()))
+      (answer, jobs, tasks)
+    }
     val aqe = "spark.sql.adaptive.enabled"
     val aqeWas = spark.conf.get(aqe)
     spark.conf.set(aqe, "false")
-    try Seq[(String, () => Set[Seq[Any]])](
-        "msfBoruvka" -> (() => Traversals.msfBoruvka(
-          canonE.withColumn("w", col("src") * 100 + col("dst"))).collect().map(_.toSeq).toSet),
-        "maximalIndependentSet" -> (() =>
-          Traversals.maximalIndependentSet(canonE).collect().map(_.toSeq).toSet)
-      ).foreach { case (name, run) =>
-        val ((first, second), left) = TestSpark.pinnedDuring(spark)(
-          (TestSpark.jobsDuring(spark)(run()), TestSpark.jobsDuring(spark)(run())))
+    try cases.foreach { case (name, run) =>
+        val ((first, second), left) =
+          TestSpark.pinnedDuring(spark)((counted(run), counted(run)))
         assert(first._1.nonEmpty && first._1 == second._1, s"$name: answers differ")
         assert(first._2 == second._2, s"$name: ${first._2} jobs, then ${second._2}")
+        assert(first._3 == second._3, s"$name: ${first._3} tasks, then ${second._3}")
         val edgeSized = left.map(rows).filter(_ >= nE)
         assert(edgeSized.isEmpty, s"$name left edge-sized RDDs persisted: $edgeSized")
       }
     finally spark.conf.set(aqe, aqeWas)
+  }
+
+  def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  test("msfBoruvka and maximalIndependentSet release their pinned edge frames; " +
+    "a repeat call runs the same jobs and gives the same answer") {
+    assertReleased(
+      "msfBoruvka" -> (() =>
+        rowSet(Traversals.msfBoruvka(k5Tri.withColumn("w", col("src") * 100 + col("dst"))))),
+      "maximalIndependentSet" -> (() => rowSet(Traversals.maximalIndependentSet(k5Tri))))
+  }
+
+  test("every pinning algorithm releases what it pins before it returns; " +
+    "a repeat call runs the same jobs and tasks and gives the same answer") {
+    val symE = sym(k5Tri.withColumn("etype", lit(0)))
+    // the exact neighborhood counts are injected, as the registry does,
+    // so the call runs only its own sketch path
+    val anfExact = Traversals.neighborhoodFunction(k5Tri, maxH = 3, nRoots = 200)
+    assertReleased(
+      "connectedComponents" -> (() => rowSet(Traversals.connectedComponents(symE))),
+      "connectedComponentsAuto(localGate = 0)" -> (() =>
+        rowSet(Traversals.connectedComponentsAuto(symE, localGate = 0))),
+      "semiSupervisedLabels" -> (() => rowSet(Traversals.semiSupervisedLabels(symE))),
+      "katzCentrality" -> (() => rowSet(Traversals.katzCentrality(k5Tri))),
+      "anfHyperLogLog" -> (() =>
+        rowSet(Traversals.anfHyperLogLog(k5Tri, exact = Some(anfExact)))),
+      "sccLabels(localGate = 0)" -> (() =>
+        rowSet(Traversals.sccLabels(symE, localGate = 0))),
+      "PageRank.top20" -> (() => rowSet(PageRank.top20(k5Tri, 6))),
+      "PageRank.personalizedTop20" -> (() => rowSet(PageRank.personalizedTop20(k5Tri, 6))),
+      "VertexCentric.pregelCC" -> (() => rowSet(VertexCentric.pregelCC(spark, symE))),
+      "VertexCentric.pregelPageRank" -> (() =>
+        rowSet(VertexCentric.pregelPageRank(spark, k5Tri, 6))))
   }
 
   test("kCore throws past maxIter with its own message") {
