@@ -172,25 +172,21 @@ object ALSSweep {
     * lineitem⋈orders build + a fresh user-side shuffle). */
   private def fitFrames(pins: Traversals.Pins, spark: SparkSession, ratings: DataFrame,
                         iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    val (byUser, byItem) = Traversals.pinned { source =>
-      // pin the source ratings ONCE, for this inner scope only (columnar,
-      // compressed — NOT localCheckpoint, whose deserialized on-heap rows
-      // measured ~1 GB of small objects at sf1 and tipped the shared bench
-      // session into GC collapse): both per-side repartitions consume
-      // `typed`, and unpinned each re-ran the whole upstream derivation
-      // (for c6b, a 6M-row lineitem⋈orders build — ~3 s at sf1, paid twice)
-      val typed = source(ratings.select(col("user").cast("int").as("user"),
-        col("item").cast("int").as("item"), col("rating").cast("double").as("rating")))
-      // pin the per-side frames, NOT localCheckpoint: checkpointed
-      // frames report UnknownPartitioning (pinned by PlanShapeSpec; see
-      // PERF_ARCHIVE.md's round-8 log), which would put the per-sweep
-      // exchange right back
-      val byUser = pins(typed.repartition(col("user")))
-      val byItem = pins(typed.repartition(col("item")))
-      byUser.count() // materialize both clusterings off one pinned build;
-      byItem.count() // the source is released when this scope ends
-      (byUser, byItem)
-    }
+    // pin the source ratings ONCE, until both sides are built (columnar,
+    // compressed — NOT localCheckpoint, whose deserialized on-heap rows
+    // measured ~1 GB of small objects at sf1 and tipped the shared bench
+    // session into GC collapse): both per-side repartitions consume
+    // `typed`, and unpinned each re-ran the whole upstream derivation
+    // (for c6b, a 6M-row lineitem⋈orders build — ~3 s at sf1, paid twice)
+    val typed = pins(ratings.select(col("user").cast("int").as("user"),
+      col("item").cast("int").as("item"), col("rating").cast("double").as("rating")))
+    // pin the per-side frames, NOT localCheckpoint: checkpointed
+    // frames report UnknownPartitioning (pinned by PlanShapeSpec; see
+    // PERF_ARCHIVE.md's round-8 log), which would put the per-sweep
+    // exchange right back
+    val byUser = pins(typed.repartition(col("user")))
+    byUser.count() // materialize both clusterings off one pinned build;
+    val (byItem, _) = pins.roll(typed.repartition(col("item")), typed) // then drop it
     var userF = initFactors(spark, byUser.select("user").distinct(), "u")
     var itemF = initFactors(spark, byItem.select("item").distinct(), "i")
     for (_ <- 1 to iters) {

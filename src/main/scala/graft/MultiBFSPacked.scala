@@ -70,11 +70,10 @@ object MultiBFSPacked {
         VState(s, Array.tabulate(k)(j => if (j == i) 0: Byte else -1: Byte))
       })
     val agg = new MinVec(k)
-    // the 2-column edge projection, resident below the gate for the call
-    // (Traversals.Pins.resident): the per-depth join otherwise re-scans
-    // the full derivation every round (r14 — the bfsDistances discipline)
+    // the 2-column edge projection, resident below the gate (Pins.resident):
+    // the per-depth join otherwise re-scans its derivation every round (r14)
     val e2 = pins.resident(edges.select(col("src").cast("long").as("s"),
-      col("dst").cast("long").as("t")), Traversals.EdgeResidencyMaxBytes)
+      col("dst").cast("long").as("t")))
 
     for (depth <- 1 to maxDepth) {
       val d = depth.toByte
@@ -90,7 +89,7 @@ object MultiBFSPacked {
         }
       // gather: pointwise-min merge of proposals into the state
       // lazy: lineage truncates at plan level; the next round's (or the
-      // scope's final count) action materializes the persisted state (r14 —
+      // final count's) action materializes the persisted state (r14 —
       // drops one full vertex-state pass per superstep)
       state = state.union(proposals)
         .groupByKey(_.id)
@@ -98,8 +97,10 @@ object MultiBFSPacked {
         .map { case (id, dist) => VState(id, dist) }
         .localCheckpoint(false)
     }
-    // the state is a chain of lazy checkpoints that reads the edge copy:
-    // the scope materializes the rows in one fused count before it goes
+    // the state is a chain of lazy checkpoints: one fused count
+    // materializes every depth's, after which nothing reads the edge copy
+    // and the returned frame reads checkpointed blocks only
+    state.queryExecution.toRdd.count()
     state.flatMap(vs => vs.dist.zipWithIndex.collect {
       case (dist, i) if dist >= 0 => (sources(i), vs.id, dist.toLong)
     }).toDF("source", "id", "dist")

@@ -59,19 +59,24 @@ object Traversals {
       * every superstep is pinned here. */
     def apply(df: DataFrame): DataFrame = { frames += df.persist() -> PinState.cacheOf(df); df }
 
+    /** `df` pinned and counted; `prev`, if pinned here, is released once
+      * `df` is built from it: [[sccLabels]]' survivors hold one round's
+      * copy, `ALSSweep`'s rating source goes once its last side is built. */
+    def roll(df: DataFrame, prev: DataFrame): (DataFrame, Long) = {
+      val n = apply(df).count()
+      frames.find(_._1 eq prev).foreach { p => frames -= p; prev.unpersist() }
+      (df, n)
+    }
+
     /** Edge-projection residency with the out-of-core honesty gate
-      * (VERDICT r14 wrong #3): at or below `gate` (callers pass
-      * [[EdgeResidencyMaxBytes]]) the projection localCheckpoints once —
-      * the bfsSigma discipline that keeps per-round plans from
-      * RE-SCANNING the full derivation (6 parquet scans a round on the
-      * sym graphs, r14). Past it a resident copy is exactly the footprint
-      * the streamed CC path ([[connectedComponentsScan]]) avoids, and a
-      * local checkpoint is not fault-tolerant, so the PLAIN projection is
-      * returned and every round re-scans storage. The gate weighs the
-      * projection's file-source leaves (DSv1 relations and DSv2 file
-      * scans: bytes on disk, free and deterministic); non-file leaves,
-      * already resident, weigh nothing. */
-    def resident(proj: DataFrame, gate: Long): DataFrame = {
+      * (VERDICT r14 wrong #3): at or below `gate` file bytes the
+      * projection localCheckpoints once, so per-round plans stop
+      * re-scanning its derivation. Past it a resident copy is the
+      * footprint the streamed CC path ([[connectedComponentsScan]])
+      * avoids, and a local checkpoint is not fault-tolerant, so the PLAIN
+      * projection is returned and every round re-scans storage. Only
+      * file-source leaves (DSv1 relations, DSv2 file scans) weigh. */
+    def resident(proj: DataFrame, gate: Long = EdgeResidencyMaxBytes): DataFrame = {
       val fileBytes = proj.queryExecution.optimizedPlan.collectLeaves().collect {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           lr.relation.sizeInBytes
@@ -86,10 +91,9 @@ object Traversals {
         }
         c
       } else {
-        System.err.println(s"[graft.Traversals] edge projection scans " +
-          s"$fileBytes file bytes > residency gate $gate — streaming the " +
-          "projection per superstep (no resident copy past " +
-          "Traversals.EdgeResidencyMaxBytes)")
+        System.err.println(s"[graft.Traversals] edge projection scans $fileBytes " +
+          s"file bytes > residency gate $gate (Traversals.EdgeResidencyMaxBytes) — " +
+          "streaming the projection per superstep, no resident copy")
         proj
       }
     }
@@ -165,11 +169,10 @@ object Traversals {
     * per-level checkpointed frontiers (each part a flat LogicalRDD),
     * scanned by the step's anti-join exactly as a materialized union
     * would be and never re-materialized. */
-  private def frontierSweep(edgeProj: DataFrame, seed: DataFrame, maxDepth: Int,
-                            until: DataFrame => Boolean = _ => false)
-                           (step: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)
-      : Expansion = pinned { pins =>
-    val e = pins.resident(edgeProj, EdgeResidencyMaxBytes)
+  private[graft] def frontierSweep(edgeProj: DataFrame, seed: DataFrame, maxDepth: Int,
+      until: DataFrame => Boolean = _ => false, gate: Long = EdgeResidencyMaxBytes)(
+      step: (DataFrame, DataFrame, DataFrame, Int) => DataFrame): Expansion = pinned { pins =>
+    val e = pins.resident(edgeProj, gate)
     var frontier = seed.localCheckpoint(true)
     var visited = frontier
     var fN = -1L // unknown; the first level always runs
@@ -183,7 +186,6 @@ object Traversals {
       fN = n
       hit = n > 0 && until(frontier)
     }
-    // frontier parts are materialized; the edge copy is not referenced
     Expansion(frontier, visited, depth, hit)
   }
 
@@ -360,14 +362,16 @@ object Traversals {
     * [[frontierSweep]] level per superstep. */
   def bfsDistances(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame =
     frontierSweep(edges.select(col("src"), col("dst")),
-        sources.select(col("source"), col("id"), lit(0L).as("dist")), maxDepth) {
-      (e, frontier, visited, depth) =>
-        frontier.join(e, frontier("id") === e("src"))
-          .select(col("source"), col("dst").as("id"), lit(depth.toLong).as("dist"))
-          .distinct()
-          .join(visited.select(col("source").as("vsource"), col("id").as("vid")),
-            col("id") === col("vid") && col("source") === col("vsource"), "left_anti")
-    }.visited
+        sources.select(col("source"), col("id"), lit(0L).as("dist")), maxDepth)(bfsStep).visited
+
+  /** [[bfsDistances]]' level: the frontier's unvisited out-neighbors. */
+  private[graft] def bfsStep(e: DataFrame, frontier: DataFrame, visited: DataFrame,
+                             depth: Int): DataFrame =
+    frontier.join(e, frontier("id") === e("src"))
+      .select(col("source"), col("dst").as("id"), lit(depth.toLong).as("dist"))
+      .distinct()
+      .join(visited.select(col("source").as("vsource"), col("id").as("vid")),
+        col("id") === col("vid") && col("source") === col("vsource"), "left_anti")
 
   /** [[bfsDistances]] extended with shortest-path COUNTING (the forward
     * half of Brandes' betweenness algorithm): σ(s,v) at depth d is the sum
@@ -628,9 +632,8 @@ object Traversals {
     * hashed on src (a checkpoint under AQE reports UnknownPartitioning)
     * and the |E|-row side never re-exchanges: per superstep only the
     * |V|-row label table shuffles into the join, plus the one min-combine.
-    * The initial labels' eager checkpoint builds the pinned frame, and the
-    * frame is released before the call returns: the labels it returns are
-    * the last round's materialized checkpoint. */
+    * The initial labels' eager checkpoint builds the frame; it is released
+    * before the call returns the last round's materialized labels. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = pinned { pins =>
     val e = pins(edges.select("src", "dst").repartition(col("src")))
     val labels0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
@@ -1226,13 +1229,12 @@ object Traversals {
     *
     * Scale shape: the self-loop-free edge list is resident below the
     * gate ([[Pins.resident]]). Per outer round, the intra-class edge
-    * restriction is two hash joins of it, pinned hashed on src/dst for
-    * that round only; both directions then
-    * run as the two sides of ONE [[minLabelFixpoint]] (CC's
-    * one-combine-per-superstep shape, lock-stepped), which throws past
-    * `maxInner`. At or below `localGate` intra-class edge rows the driver
-    * solver [[localSccLabels]] finishes every remaining class in one
-    * pass — the published hybrid shape for parallel SCC (Hong, Rodia,
+    * restriction is two hash joins, pinned hashed on src/dst; both
+    * directions then run as the two sides of ONE [[minLabelFixpoint]]
+    * (CC's one-combine-per-superstep shape, lock-stepped), which throws
+    * past `maxInner`. At or below `localGate` intra-class edge rows the
+    * driver solver [[localSccLabels]] finishes every remaining class in
+    * one pass — the published hybrid shape for parallel SCC (Hong, Rodia,
     * Olukotun PPoPP'13: trim + FW-BW until the pieces fit, then Tarjan
     * each piece locally); the class restriction guarantees no edge
     * crosses classes. Fails loudly past `maxOuter` (like [[kCore]])
@@ -1245,47 +1247,51 @@ object Traversals {
                 maxInner: Int = 60,
                 localGate: Long = LocalSolveRows): DataFrame = pinned { pins =>
     val e0 = pins.resident(edges.select("src", "dst").filter(col("src") =!= col("dst"))
-      .distinct(), EdgeResidencyMaxBytes)
+      .distinct())
     var lab = e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
       .distinct().withColumn("cls", lit(0L)).localCheckpoint(true)
     var outer = 0
     var result: DataFrame = null
+    // classes only REFINE, so an edge that leaves the intra-class set
+    // never re-enters — each round restricts the PREVIOUS round's
+    // survivors, not the full edge list. Round 1 pays |E|; the frame
+    // then shrinks monotonically (on DAG-ish graphs to near-empty after
+    // one refinement), so later rounds are survivor-sized
+    var ecur = e0
     while (result == null && outer < maxOuter) {
       outer += 1
-      // the round's intra-class edges, pinned hashed on src in both
-      // directions for this round only; classes only REFINE, so this
-      // keeps exactly the previous round's survivors
-      result = pinned { round =>
-        val ec = round(e0
-          .join(lab.select(col("id").as("src"), col("cls").as("scls")), "src")
-          .join(lab.select(col("id").as("dst"), col("cls").as("dcls")), "dst")
-          .filter(col("scls") === col("dcls"))
-          .select("src", "dst")
-          .repartition(col("src")))
-        if (ec.count() <= localGate) {
-          // below the gate: no intra-class edge crosses classes, so one
-          // local Tarjan over the survivors labels every remaining class;
-          // vertices with no surviving intra-class edge are singleton SCCs
-          lab.select("id").join(localSccLabels(ec), Seq("id"), "left")
-            .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        } else {
+      // survivors pinned hashed on src: no edge re-exchange in the fixpoint
+      val (ec, nEc) = pins.roll(ecur
+        .join(lab.select(col("id").as("src"), col("cls").as("scls")), "src")
+        .join(lab.select(col("id").as("dst"), col("cls").as("dcls")), "dst")
+        .filter(col("scls") === col("dcls"))
+        .select("src", "dst")
+        .repartition(col("src")), ecur)
+      ecur = ec
+      if (nEc <= localGate) {
+        // below the gate: no intra-class edge crosses classes, so one
+        // local Tarjan over the survivors labels every remaining class;
+        // vertices with no surviving intra-class edge are singleton SCCs
+        result = lab.select("id").join(localSccLabels(ec), Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+      } else {
+        // the reversed survivors, pinned hashed on src for this round only
+        val refined = pinned { round =>
           val ecR = round(ec.select(col("dst").as("src"), col("src").as("dst"))
             .repartition(col("src")))
           ecR.count()
-          val refined = minLabelFixpoint(
+          minLabelFixpoint(
               lab.withColumn("f", col("id")).withColumn("b", col("id")).localCheckpoint(true),
               Seq(ec -> "f", ecR -> "b"), maxInner,
               Some(s"sccLabels: min-label fixpoint not reached within maxInner=$maxInner"))
-            .select("id", "f", "b").localCheckpoint(false)
-          if (refined.filter(col("f") =!= col("b")).queryExecution.toRdd.count() == 0L)
-            refined.select(col("id"), col("f").as("label"))
-          else {
-            lab = refined.select(col("id"),
-              (col("f") * lit(1000000L) + col("b")).as("cls"))
-              .localCheckpoint(false)
-            null
-          }
+            .select("id", "f", "b")
         }
+        if (refined.filter(col("f") =!= col("b")).queryExecution.toRdd.count() == 0L)
+          result = refined.select(col("id"), col("f").as("label"))
+        else
+          lab = refined.select(col("id"),
+            (col("f") * lit(1000000L) + col("b")).as("cls"))
+            .localCheckpoint(false)
       }
     }
     if (result == null) throw new IllegalStateException(
@@ -1610,9 +1616,8 @@ object Traversals {
     * Scale shape: walks_{k+1} is ONE hash join of the edge list against
     * the previous vertex-sized count vector plus a partial-combining sum
     * keyed on dst (hub vertices combine map-side); the final blend is a
-    * tagged union + one keyed sum — the r9 single-shuffle trick. The
-    * edge list is pinned hashed on src for the call, like
-    * [[connectedComponents]]; the top-k materializes before it goes. */
+    * tagged union + one keyed sum — the r9 single-shuffle trick. The edge
+    * list is pinned hashed on src for the call, like [[connectedComponents]]. */
   def katzCentrality(edges: DataFrame, k: Int = 20): DataFrame = pinned { pins =>
     // no eager count: the cache materializes inside w1's stage job, and
     // lazy checkpoints skip the per-term full-pass count jobs (r14)

@@ -44,8 +44,7 @@ object VertexCentric {
     Traversals.pinned(_.graph(toGraph(edges)) { base =>
       val outDeg = base.outDegrees
       // state = (rank_scaled, outdeg); messages = partial acc sums
-      val g = base.outerJoinVertices(outDeg)((_, _, d) => (0L, d.getOrElse(0)))
-      var cur = g
+      var cur = base.outerJoinVertices(outDeg)((_, _, d) => (0L, d.getOrElse(0)))
       val n = cur.numVertices
       for (_ <- 1 to iters) {
         val acc = cur.aggregateMessages[Long](

@@ -381,7 +381,7 @@ class TraversalsSpec extends AnyFunSuite {
     // the fixed gate (16 GiB): a KB-scale parquet goes resident, and the
     // scope releases the resident copy when it ends
     val residentId = Traversals.pinned { pins =>
-      val resident = pins.resident(proj, Traversals.EdgeResidencyMaxBytes)
+      val resident = pins.resident(proj)
       assert(logicalRddLeaves(resident) == 1, "below the gate: expected a checkpoint")
       resident.queryExecution.analyzed.collectFirst {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
@@ -403,11 +403,32 @@ class TraversalsSpec extends AnyFunSuite {
           "DSv2 scan above the gate: expected the plain projection")
       } finally s.conf.unset(v1Sources)
     }
-    // end-to-end: the resident sweep returns the exact distances
-    val src = Seq((0L, 0L)).toDF("source", "id")
-    val d = Traversals.bfsDistances(proj, src, maxDepth = 30)
-      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    assert(d == (0L to 20L).map(i => (i, i)).toSet)
+    // end-to-end: bfsDistances' sweep streamed (gate 0) and resident
+    // (the fixed gate) returns identical rows
+    val seed = Seq((0L, 0L)).toDF("source", "id").withColumn("dist", lit(0L))
+    def dists(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+    val dStreamed = dists(Traversals.frontierSweep(proj, seed, maxDepth = 30, gate = 0)(
+      Traversals.bfsStep).visited)
+    val dResident = dists(Traversals.frontierSweep(proj, seed, maxDepth = 30)(
+      Traversals.bfsStep).visited)
+    assert(dStreamed == dResident && dResident == (0L to 20L).map(i => (i, i)).toSet)
+  }
+
+  test("Pins.roll releases the frame it replaces once the new one is built") {
+    val s = spark; import s.implicits._
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val outside = (1L to 4L).toDF("id")
+    val (a, b, survivors) = Traversals.pinned { pins =>
+      val a = pins((1L to 6L).toDF("id"))
+      val (b, n) = pins.roll(a.filter($"id" > 2), a)
+      assert(n == 4 && !cached(a) && cached(b), "roll kept the frame it replaced")
+      // a frame the scope did not pin is left alone
+      val (c, _) = pins.roll(outside.filter($"id" > 1), outside)
+      (a, b, c.count())
+    }
+    assert(survivors == 3 && !cached(a) && !cached(b), "the scope left the rolled frame pinned")
   }
 
   test("foldAccum is identity off the fold cadence and folds on it") {
@@ -479,7 +500,7 @@ class TraversalsSpec extends AnyFunSuite {
       "maximalIndependentSet" -> 13, "maximalMatching" -> 7, "shortestPathNodes" -> 27,
       "pathTo" -> 8, "MultiBFSPacked.run" -> 8,
       "connectedComponents" -> 12, "connectedComponentsScan" -> 12, "ccBigStar" -> 19,
-      "sccLabels" -> 8, "sccLabels(localGate = 0)" -> 56,
+      "sccLabels" -> 8, "sccLabels(localGate = 0)" -> 66,
       "msfBoruvka" -> 11, "msfBoruvka(localGate = 0)" -> 16), got.mkString(", "))
   }
 
@@ -496,6 +517,25 @@ class TraversalsSpec extends AnyFunSuite {
     val rows = Traversals.bfsDistances(g, Seq((0L, 0L), (10L, 10L)).toDF("source", "id"), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(packed == rows)
+  }
+
+  test("MultiBFSPacked.run stores its packed state only: the expanded rows stay lazy") {
+    // no AQE and no broadcast joins, so each superstep's state stays
+    // lazy until an action and its lineage reads the edge copy
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val was = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (n, left) = try TestSpark.pinnedDuring(spark)(
+      MultiBFSPacked.run(spark, sym(twoComps), Seq(0L, 10L), maxDepth = 5).count())
+    finally was.foreach { case (k, v) => spark.conf.set(k, v) }
+    // what the run leaves persisted is (id, dist) state rows, one byte
+    // per source each: the (source, id, dist) expansion is never stored
+    val widths = left.flatMap(_.asInstanceOf[org.apache.spark.rdd.RDD[Any]].map {
+      case r: org.apache.spark.sql.catalyst.InternalRow => r.numFields
+      case _ => -1
+    }.distinct().collect()).toSet
+    assert(n > 0 && widths == Set(2), s"persisted row widths $widths, expected the state's 2")
   }
 
   // K5 on 0..4 plus a triangle on 10..12: 13 edges over 8 vertices, so
@@ -567,7 +607,7 @@ class TraversalsSpec extends AnyFunSuite {
       "anfHyperLogLog" -> (() =>
         rowSet(Traversals.anfHyperLogLog(k5Tri, exact = Some(anfExact)))),
       "sccLabels(localGate = 0)" -> (() =>
-        rowSet(Traversals.sccLabels(symE, localGate = 0))),
+        rowSet(Traversals.sccLabels(k5Tri, localGate = 0))),
       "PageRank.top20" -> (() => rowSet(PageRank.top20(k5Tri, 6))),
       "PageRank.personalizedTop20" -> (() => rowSet(PageRank.personalizedTop20(k5Tri, 6))),
       "VertexCentric.pregelCC" -> (() => rowSet(VertexCentric.pregelCC(spark, symE))),
