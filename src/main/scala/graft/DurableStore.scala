@@ -20,8 +20,8 @@ import org.apache.hadoop.mapreduce.TaskAttemptContext
   *  - `v<N>/_b=<i>/part-*.parquet`  bucket files: range-bucketed by `src`,
   *    each FILE a (src, dst)-sorted run covering a disjoint src sub-range
   *    of its bucket, so parquet row-group stats prune point/range reads —
-  *    the sorted shard of the reference. A bucket is a SET of files; big
-  *    buckets hold many, written by many tasks.
+  *    the sorted shard of the reference. A bucket is one task's sorted
+  *    run, cut into contiguous files of at most `DefaultTargetFileRows`.
   *  - `v<N>/delta…/…parquet`  delta files: raw appended micro-batches
   *    (each one a flushed EdgeBuffer), unsorted, merged away by
   *    [[compact]] — the LSM level-0.
@@ -41,16 +41,19 @@ import org.apache.hadoop.mapreduce.TaskAttemptContext
   * version it was handed, never from a shared mutable head.
   *
   * Scale shape (VERDICT r3 §wrong-1 closed): every rewrite — create,
-  * mutation COW, compaction merge — is ONE shuffled
-  * `repartitionByRange(_b, src, dst)` + `partitionBy(_b)` write covering
-  * ALL hit buckets, parallel across `ceil(rows / targetFileRows)` tasks;
-  * nothing funnels through a single task and the driver never loops
-  * buckets. Compaction additionally SPLITS any bucket whose merged size
-  * exceeds `maxBucketRows` at its median src — the Spark form of the
-  * reference's `shardSizeLimit` upward merge (GraphChiDatabase.scala:
-  * 189-192) and per-shard hard cap (FastSharder.java:66-69) — so a year
-  * of appends grows the bucket COUNT, not the bucket SIZE, and per-bucket
-  * compaction cost stays bounded.
+  * mutation COW, compaction merge — is ONE write covering ALL hit
+  * buckets, shuffled on the bucket index it computes (no range sample),
+  * one task per bucket; the driver never loops buckets. So no task holds
+  * two buckets, and the bounds alone size a task: `create`, the mirror
+  * build and `setVertexTable` cut `numBuckets` quantile buckets,
+  * [[DurableStore.adopt]] groups files into buckets of at most
+  * `DefaultMaxBucketRows` rows, and compaction SPLITS any bucket whose
+  * merged size exceeds `maxBucketRows` at its median src — the Spark form
+  * of the reference's `shardSizeLimit` upward merge (GraphChiDatabase.
+  * scala:189-192) and per-shard hard cap (FastSharder.java:66-69). A
+  * bucket then holds at most `maxBucketRows` rows until the compaction
+  * that splits it, and a year of appends grows the bucket COUNT, not the
+  * bucket SIZE, so per-bucket compaction cost stays bounded.
   *
   * The manifest/pointer commit is driver-side local-fs here; on a cluster
   * the same two-phase shape (write immutable files, then atomically swing
@@ -998,8 +1001,7 @@ class DurableStore(val spark: SparkSession, val root: String,
   /** Index an existing store online: one shuffled write of the current
     * sorted files into the dst-bucketed mirror layout, committed as a new
     * version. No-op (returns `fromV`) if the index already exists. */
-  def buildInEdgeIndex(fromV: Int, numBuckets: Int = 8,
-                       targetFileRows: Long = DefaultTargetFileRows): Int =
+  def buildInEdgeIndex(fromV: Int, numBuckets: Int = 8): Int =
     commitOpt(fromV) { (m, nv) =>
       if (m.mbounds.nonEmpty) None
       else {
@@ -1015,8 +1017,7 @@ class DurableStore(val spark: SparkSession, val root: String,
         val mf =
           if (sortedF.isEmpty) Nil
           else writeBuckets(spark, readStore(m, sortedF), s"$root/v$nv/m", mb,
-            sortedF.map(_.rows).sum, targetFileRows, key = "dst", sec = "src")
-            .map(_.copy(seq = m.maxSeq))
+            key = "dst", sec = "src").map(_.copy(seq = m.maxSeq))
         Some(m.copy(mbounds = mb, mirror = mf))
       }
     }
@@ -1039,8 +1040,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * cells (reference Column.scala:77-78 default-value functions). */
   def setVertexTable(fromV: Int, props: DataFrame,
                      defaults: Map[String, String] = Map.empty,
-                     numBuckets: Int = 8,
-                     targetFileRows: Long = DefaultTargetFileRows): Int =
+                     numBuckets: Int = 8): Int =
     commitOpt(fromV) { (m, nv) =>
       val schema = props.schema
       require(schema.fieldNames.contains("id") &&
@@ -1053,12 +1053,11 @@ class DurableStore(val spark: SparkSession, val root: String,
       require(defaults.values.forall(e => !e.contains("\t") && !e.contains("\n")),
         "setVertexTable: default expressions must be tab/newline-free " +
           "(they serialize into the TSV manifest)")
-      // fused materialize+count (r15): the bounds and the write read the
+      // one materialization (r15): the bounds and the write read the
       // resident copy
-      val (d, n) = Traversals.checkpointCount(props)
+      val (d, _) = Traversals.checkpointCount(props)
       val vb = boundsFor(d, "id", numBuckets)
-      val vf = writeBuckets(spark, d, s"$root/v$nv/vp", vb, n, targetFileRows,
-        minParts = vb.size, key = "id", sec = "id")
+      val vf = writeBuckets(spark, d, s"$root/v$nv/vp", vb, key = "id", sec = "id")
       // a REPLACED side-table starts its batch history over: carrying the
       // old vLastBatch would silently swallow the first batches of a
       // fresh vertex stream as replays (review r13) — stream checkpoints
@@ -1298,8 +1297,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * `updateAll(f(id, old))`, Column.scala:187-190) as ONE fresh
     * id-sorted write of the resolved table; upsert deltas fold in the
     * same pass. Copy-on-write: old versions keep the old values. */
-  def updateAllVertices(fromV: Int, column: String, value: Column,
-                        targetFileRows: Long = DefaultTargetFileRows): Int =
+  def updateAllVertices(fromV: Int, column: String, value: Column): Int =
     commitOpt(fromV) { (m, nv) =>
       require(m.vschemaDDL.nonEmpty,
         s"$root: no vertex side-table (setVertexTable first)")
@@ -1310,7 +1308,6 @@ class DurableStore(val spark: SparkSession, val root: String,
         .withColumn(column, value.cast(schema(column).dataType))
         .select(schema.fieldNames.map(col).toSeq: _*)
       val vf = writeBuckets(spark, updated, s"$root/v$nv/vp", m.vbounds,
-        m.vfiles.map(_.rows).sum, targetFileRows, minParts = m.vbounds.size,
         key = "id", sec = "id").map(_.copy(seq = m.vMaxSeq))
       // the rewrite resolved (and thereby folded) any vertex-row
       // tombstones — the fresh base carries no dead rows to re-kill
@@ -1331,8 +1328,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     * churn like the edge log; a full re-shard remains available through
     * [[setVertexTable]]). A delta whose id range spans every bucket
     * degrades to the full rewrite — the pre-round-14 behavior. */
-  private def foldVertexSide(m: Manifest, nv: Int, targetFileRows: Long)
-      : Seq[StoreFile] = {
+  private def foldVertexSide(m: Manifest, nv: Int): Seq[StoreFile] = {
     val deltas = m.vfiles.filterNot(_.sorted)
     if (deltas.isEmpty && m.vtombs.isEmpty) return m.vfiles
     val bounds = m.vbounds
@@ -1348,9 +1344,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     val newFiles =
       if (fold.isEmpty) Nil
       else writeBuckets(spark, readVerticesResolved(m.copy(vfiles = fold)),
-        s"$root/v$nv/vp", bounds, fold.map(_.rows).sum, targetFileRows,
-        minParts = bounds.size, key = "id", sec = "id")
-        .map(_.copy(seq = m.vMaxSeq))
+        s"$root/v$nv/vp", bounds, key = "id", sec = "id").map(_.copy(seq = m.vMaxSeq))
     // restamp the kept files to the fold's seq — manifest metadata only.
     // Buckets partition ids disjointly and the kept buckets hold no
     // delta/tombstone-affected rows, so every id is unique across the
@@ -1605,11 +1599,10 @@ class DurableStore(val spark: SparkSession, val root: String,
     * compaction where its bound fits. The delta is
     * read and tombstone-applied once, as one lazy checkpoint both sides
     * consume. Per side that leaves the sorted write ([[writeBuckets]]:
-    * its range sample and its shuffle) plus the tombstone broadcasts of
-    * the rows it reads; a side nothing routes to runs no job. */
-  def compact(fromV: Int,
-              maxBucketRows: Long = DefaultMaxBucketRows,
-              targetFileRows: Long = DefaultTargetFileRows): Int = {
+    * one shuffle on the bucket index, no sample) plus the tombstone
+    * broadcasts of the rows it reads; a side nothing routes to runs no
+    * job. */
+  def compact(fromV: Int, maxBucketRows: Long = DefaultMaxBucketRows): Int = {
     val m0 = manifest(fromV)
     // nothing to do only when there are no deltas, no live tombstones to
     // reclaim, AND no side has an underfull adjacent run to merge
@@ -1631,16 +1624,16 @@ class DurableStore(val spark: SparkSession, val root: String,
       val delta =
         if (deltas.isEmpty) None else Some(readStore(m, deltas).localCheckpoint(false))
       val (bounds, outFiles) = mergeSide(m, delta, m.files.filter(_.sorted),
-        m.bounds, "src", "dst", s"$root/v$nv", maxBucketRows, targetFileRows)
+        m.bounds, "src", "dst", s"$root/v$nv", maxBucketRows)
       val (mb, mf) =
         if (m.mbounds.isEmpty) (m.mbounds, m.mirror)
         else mergeSide(m, delta, m.mirror, m.mbounds, "dst", "src",
-          s"$root/v$nv/m", maxBucketRows, targetFileRows)
+          s"$root/v$nv/m", maxBucketRows)
       // vertex side: fold upsert deltas / row tombstones into fresh
       // id-sorted files — PER HIT BUCKET (round 14), the same discipline
       // as the edge side's mergeSide: untouched buckets keep their files
       Some(Manifest(nv, bounds, outFiles, m.lastBatch, m.schemaDDL, mb, mf,
-        Nil, m.vbounds, foldVertexSide(m, nv, targetFileRows), m.vschemaDDL,
+        Nil, m.vbounds, foldVertexSide(m, nv), m.vschemaDDL,
         m.vdefaults, m.vLastBatch))
     }
   }
@@ -1706,8 +1699,7 @@ class DurableStore(val spark: SparkSession, val root: String,
   private def mergeSide(m: Manifest, delta: Option[DataFrame],
                         sortedFiles: Seq[StoreFile], bounds0: Seq[Long],
                         key: String, sec: String, dir: String,
-                        maxBucketRows: Long, targetFileRows: Long)
-      : (Seq[Long], Seq[StoreFile]) = {
+                        maxBucketRows: Long): (Seq[Long], Seq[StoreFile]) = {
     val deltas = m.files.filterNot(_.sorted)
     val deltaCover = deltas.map(f =>
       f.rows -> (if (key == "src") cover(bounds0, f.srcMin, f.srcMax)
@@ -1757,9 +1749,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     val rewrite = hit ++ pulled
     val out =
       if (rewrite.isEmpty && delta.isEmpty) Nil
-      else writeBuckets(spark, frame(rewrite), dir, bounds,
-        rewrite.map(_.rows).sum + deltas.map(_.rows).sum, targetFileRows,
-        key = key, sec = sec).map(_.copy(seq = m.maxSeq))
+      else writeBuckets(spark, frame(rewrite), dir, bounds, key = key, sec = sec)
+        .map(_.copy(seq = m.maxSeq))
     (bounds, reIdx ++ out)
   }
 
@@ -1833,8 +1824,8 @@ class DurableStore(val spark: SparkSession, val root: String,
     val sq = m.maxSeq
     val outSorted =
       if (hitSorted.isEmpty) Nil
-      else writeBuckets(spark, f(readStore(m, hitSorted)), s"$root/v$nv", m.bounds,
-        hitSorted.map(_.rows).sum, DefaultTargetFileRows).map(_.copy(seq = sq))
+      else writeBuckets(spark, f(readStore(m, hitSorted)), s"$root/v$nv", m.bounds)
+        .map(_.copy(seq = sq))
     val outDelta =
       if (hitDelta.isEmpty) Nil
       else writeDelta(f(readStore(m, hitDelta)), s"$root/v$nv/delta")
@@ -1843,8 +1834,7 @@ class DurableStore(val spark: SparkSession, val root: String,
     val outMirror =
       if (mHit.isEmpty) Nil
       else writeBuckets(spark, f(readStore(m, mHit)), s"$root/v$nv/m", m.mbounds,
-        mHit.map(_.rows).sum, DefaultTargetFileRows, key = "dst", sec = "src")
-        .map(_.copy(seq = sq))
+        key = "dst", sec = "src").map(_.copy(seq = sq))
     Some(m.copy(files = keep ++ outSorted ++ outDelta, mirror = mKeep ++ outMirror))
   }
 
@@ -2002,15 +1992,7 @@ object DurableStore {
         try f finally lock.release()
       } finally ch.close()
     }
-    def casPointer(root: String, expect: Int, v: Int): Unit = {
-      val p = Paths.get(root, "VERSION")
-      val cur =
-        if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toInt else 0
-      if (cur != expect)
-        throw new CommitConflictException(
-          s"$root: pointer moved to v$cur while committing v$v (expected v$expect)")
-      setPointer(root, v)
-    }
+    def casPointer(root: String, expect: Int, v: Int): Unit = swapPointer(root, expect, v)
   }
 
   /** Object-store commit protocol (VERDICT r13 missing #1): the
@@ -2057,14 +2039,23 @@ object DurableStore {
     }
     def casPointer(root: String, expect: Int, v: Int): Unit =
       monitors.computeIfAbsent(root, _ => new Object).synchronized {
-        val p = Paths.get(root, "VERSION")
-        val cur =
-          if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toInt else 0
-        if (cur != expect)
-          throw new CommitConflictException(
-            s"$root: pointer moved to v$cur while committing v$v (expected v$expect)")
-        setPointer(root, v)
+        swapPointer(root, expect, v)
       }
+  }
+
+  /** The pointer swap of both protocols, run under the caller's lock:
+    * throw [[CommitConflictException]] unless `root`'s pointer reads
+    * `expect` (0 = none yet), else publish `v` atomically — written
+    * aside, renamed over. */
+  private def swapPointer(root: String, expect: Int, v: Int): Unit = {
+    val p = Paths.get(root, "VERSION")
+    val cur = if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toInt else 0
+    if (cur != expect)
+      throw new CommitConflictException(
+        s"$root: pointer moved to v$cur while committing v$v (expected v$expect)")
+    val tmp = Paths.get(root, "VERSION.tmp")
+    Files.write(tmp, v.toString.getBytes)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** One immutable parquet file (or delta file set) plus the stats that
@@ -2127,7 +2118,8 @@ object DurableStore {
     * would size it to the shard budget (the reference's 128 MB/edge-size
     * shardSizeLimit, GraphChiDatabase.scala:189-192). */
   val DefaultMaxBucketRows: Long = 4L << 20
-  /** Target rows per written file: rewrite parallelism = rows / this. */
+  /** Most rows per sorted file: [[writeBuckets]]' `maxRecordsPerFile`, so
+    * a bucket of n rows is ceil(n / this) contiguous files. */
   val DefaultTargetFileRows: Long = 1L << 20
   /** Rows per parquet page of every sorted file [[writeBuckets]] writes
     * (parquet's own limit is 20,000): the unit a served read decodes per
@@ -2434,8 +2426,8 @@ object DurableStore {
     * populating the footer cache the serving reads then hit warm), the
     * bucket bounds are derived on file boundaries, and commit is one
     * manifest + pointer write. The caller asserts each file is a
-    * (src, dst)-sorted run (any `repartitionByRange(src) +
-    * sortWithinPartitions(src, dst)` write qualifies); a mis-declared
+    * (src, dst)-sorted run (any write range-partitioned on src and
+    * sorted within partitions by (src, dst) qualifies); a mis-declared
     * file degrades only PRUNING (column-index page stats are true
     * statistics whether or not the file is sorted, and the record-level
     * filter is exact), never correctness. `mirrorDir`, when given, is
@@ -2487,18 +2479,6 @@ object DurableStore {
         StoreFile(0, p, s0, s1, d0, d1, sorted = assumeSorted, n)
       }
     }
-    // bounds on FILE boundaries (files arrive range-partitioned, so the
-    // boundary of every numBuckets-th file is a natural bucket edge);
-    // file → bucket via the same `key > bound` rule bucketCol uses
-    def boundsOn(fs: Seq[StoreFile], lo: StoreFile => Long,
-                 hi: StoreFile => Long): (Seq[Long], Seq[StoreFile]) = {
-      val sortedF = fs.sortBy(f => (lo(f), hi(f)))
-      val per = math.max(1, math.ceil(sortedF.size.toDouble / numBuckets).toInt)
-      val bs = (sortedF.grouped(per).map(g => g.map(hi).max).toSeq
-        .dropRight(1) :+ Long.MaxValue).distinct.sorted
-      (bs, sortedF.map(f =>
-        f.copy(bucket = bs.dropRight(1).count(b => lo(f) > b))))
-    }
     // unsorted adoption (`assumeSorted = false`): the files enter as
     // DELTA entries — reads and serving are correct immediately (deltas
     // serve both directions, budgeted by rows), and the first compact()
@@ -2509,7 +2489,8 @@ object DurableStore {
     require(assumeSorted || mirrorDir.isEmpty,
       "adopt: a mirror needs sorted adoption (unsorted files already " +
         "serve both directions as deltas; compact() to index them)")
-    val (bounds, files0) = boundsOn(stats(edgesDir), _.srcMin, _.srcMax)
+    val (bounds, files0) =
+      fileBounds(stats(edgesDir), numBuckets, DefaultMaxBucketRows, _.srcMin, _.srcMax)
     // delta entries carry bucket = -1 (writeDelta's convention)
     val files = if (assumeSorted) files0 else files0.map(_.copy(bucket = -1))
     val ddl = spark.read.parquet(edgesDir).schema.toDDL
@@ -2536,13 +2517,35 @@ object DurableStore {
         require(env(mstats) == env(files0),
           s"adopt: mirror endpoint envelope ${env(mstats)} != edge " +
             s"envelope ${env(files0)} — mirrorDir holds different rows")
-        boundsOn(mstats, _.dstMin, _.dstMax)
+        fileBounds(mstats, numBuckets, DefaultMaxBucketRows, _.dstMin, _.dstMax)
     }
     Files.createDirectories(Paths.get(root, "manifest"))
     writeManifest(root, Manifest(1, bounds, files, schemaDDL = ddl,
       mbounds = mb, mirror = mf))
     DurableStore.synchronized { commit.withCommitLock(root) { commit.casPointer(root, 0, 1) } }
     new DurableStore(spark, root, commit)
+  }
+
+  /** [[adopt]]'s bucket bounds, on FILE boundaries: the files, ordered by
+    * key range, group consecutively into runs of at most
+    * ceil(files / numBuckets) files and `maxRows` rows (a single file over
+    * `maxRows` is its own bucket), so a rewrite's one task per bucket
+    * stays bounded; each run's largest `hi` is its upper bound. File →
+    * bucket by the `key > bound` rule bucketCol uses. */
+  private[graft] def fileBounds(fs: Seq[StoreFile], numBuckets: Int, maxRows: Long,
+                                lo: StoreFile => Long, hi: StoreFile => Long)
+      : (Seq[Long], Seq[StoreFile]) = {
+    val sortedF = fs.sortBy(f => (lo(f), hi(f)))
+    val per = math.max(1, math.ceil(sortedF.size.toDouble / numBuckets).toInt)
+    val runs = sortedF.foldLeft(Vector.empty[Vector[StoreFile]]) { (rs, f) =>
+      rs.lastOption match {
+        case Some(r) if r.size < per && r.map(_.rows).sum + f.rows <= maxRows =>
+          rs.init :+ (r :+ f)
+        case _ => rs :+ Vector(f)
+      }
+    }
+    val bs = (runs.map(_.map(hi).max).dropRight(1) :+ Long.MaxValue).distinct.sorted
+    (bs, sortedF.map(f => f.copy(bucket = bs.dropRight(1).count(b => lo(f) > b))))
   }
 
   /** Expand a StoreFile path to its parquet part files: bucket entries
@@ -2647,14 +2650,14 @@ object DurableStore {
   }
 
   /** Create version 1 from a full edge table: range-bucket by src (bounds
-    * from quantiles, deduplicated), a sorted multi-file set per bucket.
-    * ONE shuffled write plus one stats aggregation — not a scan per
-    * bucket; this is the full-table path, it must scale like a bulk load.
+    * from quantiles, deduplicated), one task's sorted run per bucket.
+    * ONE shuffled write, its stats from the written footers — not a scan
+    * per bucket; this is the full-table path, it must scale like a bulk
+    * load.
     * `withInEdgeIndex` also writes the dst-bucketed mirror (a second
     * shuffled write) so [[DurableStore.readForDsts]] prunes from birth. */
   def create(spark: SparkSession, edges: DataFrame, root: String,
              numBuckets: Int = 8,
-             targetFileRows: Long = DefaultTargetFileRows,
              withInEdgeIndex: Boolean = false,
              commit: CommitProtocol = LocalFsCommit): DurableStore = {
     // the served reads and the footer stats decode INT64 endpoints: a
@@ -2669,14 +2672,12 @@ object DurableStore {
     val (e, nE) = Traversals.checkpointCount(edges)
     require(nE > 0, "DurableStore.create needs a non-empty edge table")
     val bounds = boundsFor(e, "src", numBuckets)
-    val files = writeBuckets(spark, e, s"$root/v1", bounds, nE, targetFileRows,
-      minParts = bounds.size)
+    val files = writeBuckets(spark, e, s"$root/v1", bounds)
     val (mb, mf) =
       if (!withInEdgeIndex) (Nil, Nil)
       else {
         val mbounds = boundsFor(e, "dst", numBuckets)
-        (mbounds, writeBuckets(spark, e, s"$root/v1/m", mbounds, nE,
-          targetFileRows, minParts = mbounds.size, key = "dst", sec = "src"))
+        (mbounds, writeBuckets(spark, e, s"$root/v1/m", mbounds, key = "dst", sec = "src"))
       }
     Files.createDirectories(Paths.get(root, "manifest"))
     writeManifest(root, Manifest(1, bounds, files, schemaDDL = e.schema.toDDL,
@@ -2687,69 +2688,48 @@ object DurableStore {
 
   /** THE sorted writer, behind every bucket write (create, compaction,
     * copy-on-write, the mirror build, the vertex side-table): bucket the
-    * rows under `bounds` (`_b`), range-shuffle them by (_b, key, sec)
-    * across `max(minParts, rows/targetFileRows)` tasks, sort within each
-    * task, write hive-partitioned by bucket. Each task's slice of a bucket
-    * lands as one (key, sec)-sorted file covering a disjoint key sub-range
-    * — a multi-file sorted bucket — in pages of [[PageRows]] rows, and
-    * per-file stats come back from
-    * [[statsForDir]]. (key, sec) = ("src", "dst") for the primary,
-    * ("dst", "src") for the in-edge mirror, both with (src, dst) stats;
-    * ("id", "id") for the vertex side-table, with the id range as both
-    * stats pairs. `rows` is the caller's upper bound on the frame's rows
-    * (manifest stats, or `create`'s exact count): it sizes the task count
-    * only. The writer runs no count and keeps no copy of the frame; a
-    * frame with no rows writes no data file and returns Nil. */
+    * rows under `bounds` (`_b`), shuffle each bucket to its own task on
+    * that index (no range sample: the bounds are the only partitioning
+    * decision), sort within each task by (_b, key, sec), write
+    * hive-partitioned by bucket. A bucket lands as ceil(rows /
+    * [[DefaultTargetFileRows]]) contiguous (key, sec)-sorted files, each
+    * covering a disjoint key sub-range, in pages of [[PageRows]] rows;
+    * per-file stats come back from [[statsForDir]]. (key, sec) =
+    * ("src", "dst") for the primary, ("dst", "src") for the in-edge
+    * mirror, both with (src, dst) stats; ("id", "id") for the vertex
+    * side-table, with the id range as both stats pairs. The writer runs
+    * no count and keeps no copy of the frame; a frame with no rows writes
+    * no data file and returns Nil. */
   private def writeBuckets(spark: SparkSession, df: DataFrame, dir: String,
-                           bounds: Seq[Long], rows: Long, targetFileRows: Long,
-                           minParts: Int = 1, key: String = "src",
+                           bounds: Seq[Long], key: String = "src",
                            sec: String = "dst"): Seq[StoreFile] = {
-    val nParts = math.max(minParts,
-      ((rows + targetFileRows - 1) / targetFileRows).toInt)
-    val order = "_b" +: Seq(key, sec).distinct
+    val order = ("_b" +: Seq(key, sec).distinct).map(col)
     df.withColumn("_b", bucketCol(key, bounds))
-      .repartitionByRange(nParts, order.map(col): _*)
-      .sortWithinPartitions(order.map(col): _*)
+      .repartitionById(bounds.size, col("_b"))
+      .sortWithinPartitions(order: _*)
       .write.mode(SaveMode.Overwrite)
       .option(org.apache.parquet.hadoop.ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT, PageRows)
+      .option("maxRecordsPerFile", DefaultTargetFileRows)
       .partitionBy("_b").parquet(dir)
     if (key == sec) statsForDir(spark, dir, key, key) else statsForDir(spark, dir)
   }
 
-  /** Per-file stats of a freshly written dir: the (c0, c1) min/max and
-    * row count of every data file, as StoreFile (src*, dst*) ranges —
-    * sorted bucket files of a `_b=N`-partitioned dir, or (`bucketed =
-    * false`) the unsorted part files of a delta dir, bucket -1. From the
-    * parquet FOOTERS ([[statsFromFooters]], r15 — a driver-side metadata
-    * read replacing a full Spark read-back scan of the output), or from
-    * one grouped scan when the footers cannot answer. */
+  /** Per-file stats of a freshly written dir, read on the driver (no
+    * Spark job): per `_b=N` partition dir, or `dir` itself when not
+    * `bucketed` (the unsorted part files of a delta, bucket -1), per data
+    * file, its rows and (c0, c1) min/max as StoreFile (src*, dst*)
+    * ranges; files holding no rows are dropped. The stats come from the
+    * parquet FOOTERS ([[footerStats]]); a file whose footer records none
+    * (a write with parquet statistics off) has its two key columns read
+    * ([[keyStats]]). A `dir` this JVM's filesystem cannot list (a
+    * non-local URI), or a data file with no row holding both c0 and c1
+    * (say, every c0 null), is refused by name — never committed as a
+    * manifest with no files. Paths are emitted as `file:` URIs. */
   private[graft] def statsForDir(spark: SparkSession, dir: String,
                                  c0: String = "src", c1: String = "dst",
-                                 bucketed: Boolean = true): Seq[StoreFile] =
-    statsFromFooters(spark, dir, c0, c1, bucketed).getOrElse(
-      spark.read.parquet(dir)
-        .groupBy((if (bucketed) col("_b").cast("int") else lit(-1)).as("b"),
-          input_file_name().as("path"))
-        .agg(min(c0), max(c0), min(c1), max(c1), count(lit(1)))
-        .collect().toSeq
-        .map(r => StoreFile(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), sorted = bucketed, r.getLong(6)))
-        .sortBy(f => (f.bucket, f.srcMin)))
-
-  /** The footer form of [[statsForDir]]: per `_b=N` partition dir (or
-    * `dir` itself when not `bucketed`), per data file, [[footerStats]];
-    * files holding no rows are dropped. None when a file lacks a usable
-    * statistic, or when `dir` is not a directory this JVM's filesystem
-    * sees (a non-local URI) —
-    * the caller's scan then reads it through Hadoop, or fails loudly,
-    * instead of committing a manifest with no files. Paths are emitted
-    * as `file:` URIs — the same scheme input_file_name produces, so
-    * manifests stay consumable by the same readers either way. */
-  private def statsFromFooters(spark: SparkSession, dir: String, c0: String,
-                               c1: String, bucketed: Boolean): Option[Seq[StoreFile]] = {
+                                 bucketed: Boolean = true): Seq[StoreFile] = {
     val rootP = Paths.get(dir)
-    if (!Files.isDirectory(rootP)) return None
-    val conf = spark.sessionState.newHadoopConf()
+    require(Files.isDirectory(rootP), s"$dir is not a directory this JVM can list")
     val partDirs =
       if (!bucketed) Seq(rootP -> -1)
       else {
@@ -2762,15 +2742,31 @@ object DurableStore {
     val parts = partDirs.flatMap { case (pd, b) =>
       partPaths(pd.toString).map(fp => (Paths.get(fp).toUri.toString, b))
     }
-    val stats = footerStats(conf, parts.map(_._1), c0, c1)
-    if (stats.exists(_.isEmpty)) None
-    else Some(parts.zip(stats.flatten).collect {
-      case ((p, b), (rows, a0, a1, b0, b1)) if rows > 0 =>
-        StoreFile(b, p, a0, a1, b0, b1, sorted = bucketed, rows)
-    }.sortBy(f => (f.bucket, f.srcMin)))
+    val conf = spark.sessionState.newHadoopConf()
+    parts.zip(footerStats(conf, parts.map(_._1), c0, c1)).flatMap { case ((p, b), st) =>
+      val (rows, a0, a1, b0, b1) = st.orElse(keyStats(conf, p, c0, c1)).getOrElse(
+        throw new IllegalArgumentException(s"$p holds no row with both $c0 and $c1 non-null"))
+      if (rows == 0) None else Some(StoreFile(b, p, a0, a1, b0, b1, sorted = bucketed, rows))
+    }.sortBy(f => (f.bucket, f.srcMin))
   }
 
-  /** THE footer-statistics walk of [[adopt]] and [[statsFromFooters]]:
+  /** [[footerStats]]' answer for the file at `p` from its (c0, c1)
+    * columns, decoded on the driver by the served scan's long sink: the
+    * footer's rows, the min/max over the rows holding both; None when no
+    * row does. */
+  private def keyStats(conf: Configuration, p: String, c0: String,
+                       c1: String): Option[(Long, Long, Long, Long, Long)] = {
+    val f = new ScanFile(conf, p, c0, null)
+    val requested = new org.apache.parquet.schema.MessageType("graft_stats",
+      Seq(c0, c1).distinct.map(c => f.schema.getType(f.schema.getFieldIndex(c))): _*)
+    val mat = new LongsMaterializer(requested, c0, c1, null, null, pairs = true)
+    f.foreach(requested, mat)(_ => ())
+    val (xs, ys) = mat.result()
+    if (xs.isEmpty) None
+    else Some((f.footer.getBlocks.asScala.map(_.getRowCount).sum, xs.min, xs.max, ys.min, ys.max))
+  }
+
+  /** THE footer-statistics walk of [[adopt]] and [[statsForDir]]:
     * per file of `paths`, concurrently on [[serveEc]] via [[cachedFooter]],
     * its rows and (c0, c1) min/max over its populated row groups, from the
     * INT64 statistics parquet-mr records; None when one lacks a usable
@@ -2935,13 +2931,5 @@ object DurableStore {
         .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally walk.close()
     } else Files.deleteIfExists(path)
-  }
-
-  /** Atomic pointer flip: write aside, rename over. */
-  private def setPointer(root: String, v: Int): Unit = {
-    val tmp = Paths.get(root, "VERSION.tmp")
-    Files.write(tmp, v.toString.getBytes)
-    Files.move(tmp, Paths.get(root, "VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -73,13 +73,7 @@ object DurableQueries {
 
   def mirrorVersion(s: SparkSession, d: String): Int =
     mirrored.computeIfAbsent(s"${s.sparkContext.applicationId}|$d",
-      // mirror files sized for SERVING (256k rows vs the 1M write-side
-      // default): a driver-local hop decodes hit files concurrently, so
-      // its wall time is the LARGEST file — a 1M-row file is one row
-      // group, serial by construction. The reference sizes its shards
-      // for lookup latency the same way (shardSizeLimit). Write cost is
-      // unchanged (same one shuffled write, 4× the output files).
-      _ => baseStore(s, d).buildInEdgeIndex(1, targetFileRows = 256L << 10))
+      _ => baseStore(s, d).buildInEdgeIndex(1))
 
   /** Base store (version 1) for a fixture dir, created once per JVM. */
   def baseStore(s: SparkSession, d: String): DurableStore =

@@ -819,20 +819,33 @@ class DurableStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("statsForDir: a dir java.nio cannot see takes the scan fallback, never an empty file list") {
+  test("statsForDir: a dir java.nio cannot see is refused by name, never an empty file list") {
     // a freshly written bucket dir named by a `file:` URI is not a
     // directory to java.nio. Reporting no files for it would commit a
-    // manifest that silently drops every row; the Spark scan must report
-    // the same stats as the footer walk does for the plain path.
+    // manifest that silently drops every row, and no Spark scan
+    // re-derives it: it is refused, the dir named
     val dir = Files.createTempDirectory("graft-stats").toString + "/out"
     edges(base: _*).withColumn("_b", (col("src") % 2).cast("int"))
       .write.partitionBy("_b").parquet(dir)
-    def stats(fs: Seq[DurableStore.StoreFile]) = fs.map(f =>
-      (f.bucket, new java.net.URI(f.path).getPath, f.srcMin, f.srcMax, f.dstMin,
-        f.dstMax, f.rows)).toSet
-    val local = DurableStore.statsForDir(spark, dir)
-    assert(local.map(_.rows).sum == base.size)
-    assert(stats(DurableStore.statsForDir(spark, "file://" + dir)) == stats(local))
+    assert(DurableStore.statsForDir(spark, dir).map(_.rows).sum == base.size)
+    val e = intercept[IllegalArgumentException](DurableStore.statsForDir(spark, "file://" + dir))
+    assert(e.getMessage.contains("file://" + dir), e.getMessage)
+  }
+
+  test("an append whose rows all have a null src is refused, naming the written file") {
+    // no row of the delta holds a src, so it has no src range: the
+    // commit is refused with the file named, instead of failing on a
+    // null inside a Spark re-scan
+    val s = spark; import s.implicits._
+    val st = fresh(base: _*)
+    val nulls = Seq[(Option[Long], Long)]((None, 10L), (None, 11L)).toDF("src", "dst")
+      .select(col("src"), col("dst"), lit(0).as("etype"), lit(1L).as("w"))
+    val e = intercept[IllegalArgumentException](st.append(1, nulls))
+    val delta = java.nio.file.Paths.get(st.root, "v2", "delta").toString
+    assert(e.getMessage.contains(delta) && e.getMessage.contains(".parquet") &&
+      e.getMessage.contains("src"), e.getMessage)
+    assert(st.currentVersion == 1)
+    assert(rowSet(st.read(1)) == rowSet(edges(base: _*)))
   }
 
   test("degenerate creates: empty table rejected; all-equal srcs collapse to one bucket") {
@@ -1659,5 +1672,84 @@ class DurableStoreSpec extends AnyFunSuite {
     val v4 = st.append(v3, spread)
     assert(parts(v3, v4) >= 2, "4-partition distributed append")
     assert(st.read(v4).count() == base.size + 16 + 64)
+  }
+
+  test("each bucket is one task's sorted run: every file inside its bucket's " +
+       "bounds, ceil(rows / DefaultTargetFileRows) files per bucket, the same " +
+       "layout after unrelated Spark jobs") {
+    import DurableStore.StoreFile
+    val s = spark; import s.implicits._
+    val e = spreadEdges(28000, 3000, 11L)
+    def create() = DurableStore.create(spark, e,
+      Files.createTempDirectory("graft-layout").toString, numBuckets = 2,
+      withInEdgeIndex = true)
+    // AQE off: the create's job count is its actions alone, every run
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    val (st, jobs) = try TestSpark.jobsDuring(spark)(create()) finally spark.conf.set(aqe, aqeWas)
+    // materialize, two quantile bounds, two sorted writes
+    assert(jobs == 5, s"create launched $jobs Spark jobs")
+    // each side's sorted files with their key range: primary by src,
+    // mirror by dst, vertex side-table by id (its src* stats)
+    def sides(m: DurableStore.Manifest): Seq[(String, Seq[Long], Seq[(StoreFile, Long, Long)])] = Seq(
+      ("primary", m.bounds, m.files.filter(_.sorted).map(f => (f, f.srcMin, f.srcMax))),
+      ("mirror", m.mbounds, m.mirror.map(f => (f, f.dstMin, f.dstMax))),
+      ("vertex", m.vbounds, m.vfiles.filter(_.sorted).map(f => (f, f.srcMin, f.srcMax))))
+    def checkLayout(m: DurableStore.Manifest): Unit = sides(m).foreach { case (side, bounds, fs) =>
+      fs.foreach { case (f, lo, hi) =>
+        val floor = if (f.bucket == 0) Long.MinValue else bounds(f.bucket - 1)
+        assert(lo > floor && hi <= bounds(f.bucket),
+          s"v${m.version} $side file [$lo, $hi] crosses bucket ${f.bucket} of $bounds")
+        // a part file is named by the write task that wrote it
+        assert(f.path.contains(f"/_b=${f.bucket}/part-${f.bucket}%05d-"),
+          s"v${m.version} $side bucket ${f.bucket} written by another task: ${f.path}")
+      }
+      fs.map(_._1).groupBy(_.bucket).foreach { case (b, bf) =>
+        val rows = bf.map(_.rows).sum
+        assert(bf.size == (rows + DurableStore.DefaultTargetFileRows - 1) /
+            DurableStore.DefaultTargetFileRows,
+          s"v${m.version} $side bucket $b: ${bf.size} files for $rows rows")
+      }
+    }
+    val m1 = st.manifest(1)
+    assert(m1.bounds.size == 2 && m1.mbounds.size == 2)
+    assert(m1.files.size == 2 && m1.mirror.size == 2,
+      s"${m1.files.size} primary and ${m1.mirror.size} mirror files")
+    checkLayout(m1)
+    val v2 = st.setVertexTable(1, (0L until 9000L).map(i => (i, i * 3)).toDF("id", "score"),
+      numBuckets = 2)
+    val v3 = st.append(v2, edges((2L, 4L), (6L, 8L), (10L, 12L)))
+    val v4 = st.compact(v3)
+    Seq(v2, v4).map(st.manifest).foreach(checkLayout)
+    assert(st.manifest(v4).files.forall(_.sorted))
+    // determinism: the same rows after other Spark work (new RDD and
+    // shuffle ids) write the same files, byte for byte
+    (1 to 3).foreach(i => spark.range(0, 5000, 1, 3 + i).repartition(5).count())
+    def layout(st: DurableStore) = {
+      val m = st.manifest(1)
+      (m.files ++ m.mirror).map(f => (f.bucket, f.srcMin, f.srcMax, f.dstMin, f.dstMax,
+        f.rows, Files.size(java.nio.file.Paths.get(new java.net.URI(f.path)))))
+    }
+    assert(layout(create()) == layout(st))
+  }
+
+  test("adopt's file-boundary buckets hold at most ceil(files / numBuckets) " +
+       "files and maxRows rows; a larger file is its own bucket") {
+    def file(i: Int, rows: Long) =
+      DurableStore.StoreFile(0, s"f$i", 10L * i, 10L * i + 9, 0L, 1L, sorted = true, rows)
+    def buckets(fs: Seq[DurableStore.StoreFile], numBuckets: Int, maxRows: Long) = {
+      val (bounds, out) = DurableStore.fileBounds(fs, numBuckets, maxRows, _.srcMin, _.srcMax)
+      assert(bounds.last == Long.MaxValue && bounds.size == out.map(_.bucket).distinct.size)
+      out.groupBy(_.bucket).toSeq.sortBy(_._1).map(_._2.map(_.path).mkString(","))
+    }
+    val eight = (0 until 8).map(file(_, 10L))
+    // no cap reached: the file-count grouping alone
+    assert(buckets(eight, 4, 100L) == Seq("f0,f1", "f2,f3", "f4,f5", "f6,f7"))
+    // a row cap of 15 splits every pair: one file per bucket
+    assert(buckets(eight, 4, 15L).size == 8)
+    // a file over the cap is alone; its neighbours still pair up
+    val big = eight.updated(2, file(2, 50L))
+    assert(buckets(big, 4, 30L) == Seq("f0,f1", "f2", "f3,f4", "f5,f6", "f7"))
   }
 }
